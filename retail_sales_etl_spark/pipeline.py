@@ -9,6 +9,13 @@ fail-fast with the failing stage recorded.
 
 Row counts are the only driver-side materialization per stage — each
 ``df.count()`` is a cheap aggregate. The data plane never leaves Spark.
+
+The T1 output is the one persisted boundary: ``run_cleaning``'s frame is
+persisted and its TRANSFORM_P1 ``count()`` fills the cache, so the T2
+modeler, the T2 integrity gate and the load (its count and its write)
+read the cleaned rows from memory instead of re-running the source scan
+and the dedup shuffle once per action. The cache is released in a
+``finally``, on success and on every failure path alike.
 """
 
 from __future__ import annotations
@@ -153,6 +160,7 @@ def run_pipeline(
     tlog = get_logger(run_id, pipeline_name, os.path.join(control, "logs"))
     tlog.info("Pipeline started (sf_dir=%s warehouse=%s)", sf_dir, warehouse_dir)
     stage = None
+    cleaned = None
     try:
         # EXTRACT
         stage = log.insert_stage(run_id, "EXTRACT", "STARTED", None)
@@ -173,7 +181,7 @@ def run_pipeline(
             primary_key=spec.primary_key,
             defaults=spec.defaults,
             dedupe_order=spec.dedupe_order,
-        )
+        ).persist()
         n_cleaned = cleaned.count()
         log.update_stage(stage, "SUCCESS", n_sourced, n_cleaned, None)
         tlog.info("TRANSFORM_P1 ok: %d -> %d rows", n_sourced, n_cleaned)
@@ -248,6 +256,9 @@ def run_pipeline(
             log.update_stage(stage, "FAILED", None, None, str(err))
         log.update_run(run, "FAILED", str(err))
         raise
+    finally:
+        if cleaned is not None:
+            cleaned.unpersist()
 
 
 def main() -> None:

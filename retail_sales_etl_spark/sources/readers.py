@@ -6,8 +6,9 @@ distributed sanity checks -> raw-but-validated DataFrame.
 
 The reference reads whole CSVs into pandas and checks them in memory;
 here the read is a lazy distributed scan and every check is either
-metadata-only (schema) or a single aggregate job (null %, duplicate
-detection) — nothing proportional to data size ever reaches the driver.
+metadata-only (schema) or part of ONE aggregate job (row count, null %
+and full-row duplicates together) — nothing proportional to data size
+is ever collected.
 """
 
 from __future__ import annotations
@@ -71,28 +72,40 @@ def sanity_check(
     - per-column NULL percentage below threshold
     - full-row duplicate detection (fail-fast, like the reference)
 
-    One aggregate job computes row count + all null counts; the
-    duplicate check is a second (hash-agg) job. Returns the stats dict
-    so callers can log it.
+    One job computes all three: group by every column with a per-group
+    count, then aggregate the groups — ``n = sum(cnt)``, ``distinct =
+    count(*)`` and each column's NULLs as ``sum(cnt)`` over the groups
+    where it is NULL. This is the aggregate Spark itself plans for
+    ``distinct()``, so duplicates compare NULLs equal, exactly as
+    ``df.distinct().count()`` does. The checks still raise in the order
+    above. Returns the stats dict so callers can log it.
     """
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__null_{i}")
-        for i, c in enumerate(df.columns)
-    ]
-    row = df.agg(*aggs).first()
-    n = row["__n"]
+    cols = df.columns
+    cnt = F.col("__sanity_cnt")
+    row = (
+        df.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("__sanity_cnt"))
+        .agg(
+            F.sum(cnt).alias("__n"),
+            F.count(F.lit(1)).alias("__distinct"),
+            *[
+                F.sum(F.when(F.col(c).isNull(), cnt)).alias(f"__null_{i}")
+                for i, c in enumerate(cols)
+            ],
+        )
+        .first()
+    )
+    # sum() over no groups is NULL: an empty source has n = 0
+    n = row["__n"] or 0
     if n == 0:
         raise ValueError("Source data is empty")
 
-    null_pct = {
-        c: 100.0 * (row[f"__null_{i}"] or 0) / n for i, c in enumerate(df.columns)
-    }
+    null_pct = {c: 100.0 * (row[f"__null_{i}"] or 0) / n for i, c in enumerate(cols)}
     for c, pct in null_pct.items():
         if pct > null_threshold_pct:
             raise ValueError(f"Column '{c}' has {pct:.2f}% NULL values")
 
-    n_distinct = df.distinct().count()
-    dup_count = n - n_distinct
+    dup_count = n - row["__distinct"]
     if dup_count > 0 and fail_on_duplicates:
         raise ValueError(f"Duplicate rows found in source data: {dup_count}")
 

@@ -174,3 +174,39 @@ def test_bootstrap_metadata_idempotent(tmp_path):
     assert [t["table_name"] for t in log.list_tables_for_pipeline("customer")] == [
         "customer_dim"
     ]
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pipeline_releases_t1_cache_on_every_exit(spark, sf_dir, tmp_path, monkeypatch):
+    """The persisted T1 frame is released whether the run succeeds or a
+    later stage fails: no cached DataFrame outlives ``run_pipeline``."""
+    import dataclasses
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from retail_sales_etl_spark import pipeline
+
+    spark.catalog.clearCache()
+    wh = str(tmp_path / "wh")
+    assert run_pipeline(spark, "customer", sf_dir, wh)["status"] == "SUCCESS"
+    assert _cache_is_empty(spark)
+
+    def drop_one_row(s, df, sf):
+        first = df.agg(F.min("c_custkey")).first()[0]
+        return pipeline._model_customer(s, df, sf).filter(F.col("customer_id") != first)
+
+    spec = dataclasses.replace(pipeline.PIPELINES["customer"], modeler=drop_one_row)
+    monkeypatch.setitem(pipeline.PIPELINES, "customer", spec)
+    with pytest.raises(ValueError, match="Row count changed during T2"):
+        run_pipeline(spark, "customer", sf_dir, wh)
+    assert _cache_is_empty(spark)
+
+    log = ControlLog(os.path.join(wh, "_control"))
+    failed = [r for r in log.runs() if r["status"] == "FAILED"]
+    assert len(failed) == 1
+    stages = log.stages(failed[0]["run_id"])
+    assert ("TRANSFORM_P2", "FAILED") in [(s["stage_name"], s["status"]) for s in stages]

@@ -58,6 +58,40 @@ def test_sales_fact_prunes_unused_columns(spark, sf_dir):
     assert "l_linestatus" not in read_schema
 
 
+# Spark jobs one `lineitem` run_pipeline starts at the test scale (the
+# test session: local[4], 4 shuffle partitions). Re-evaluating the T1
+# result for any action after its count raises this figure.
+LINEITEM_PIPELINE_JOBS = 27
+
+
+def test_lineitem_pipeline_evaluates_t1_once(spark, sf_dir, tmp_path, monkeypatch):
+    """The T1 output is computed once: the T2 integrity gate reads it
+    from the cache (its plan's only leaf is an InMemoryTableScan, not
+    the parquet source), and the whole pipeline starts a pinned number
+    of Spark jobs, counted by the DAG scheduler's job counter."""
+    from retail_sales_etl_spark import pipeline
+    from retail_sales_etl_spark.operators import modeling
+
+    leaves = []
+    orig = modeling.validate_integrity
+
+    def spy(df, *args, **kwargs):
+        plan_leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+        leaves.extend(plan_leaves.apply(i).nodeName() for i in range(plan_leaves.size()))
+        return orig(df, *args, **kwargs)
+
+    monkeypatch.setattr(modeling, "validate_integrity", spy)
+    # load_table memoizes its frame per session, and its first read of
+    # a table infers the schema in a job of its own: warm `orders` (read
+    # for date_dim) so the count does not depend on the test order
+    load_table(spark, sf_dir, "orders")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs0 = dag.numTotalJobs()
+    pipeline.run_pipeline(spark, "lineitem", sf_dir, str(tmp_path / "wh"))
+    assert dag.numTotalJobs() - jobs0 == LINEITEM_PIPELINE_JOBS
+    assert leaves == ["InMemoryTableScan"]
+
+
 def test_whole_stage_codegen_and_aqe_active(spark, sf_dir):
     df = q_pricing_summary(spark, sf_dir)
     df.collect()  # AQE finalizes the plan at execution
@@ -1474,6 +1508,82 @@ def test_session_tails_probe_reads_file_pruned(spark, tmp_path, monkeypatch):
     through stats-pruned read_where_in and OPEN strictly fewer files
     than the state holds (the user_gaps file-open bound applied to the
     session-tail state)."""
+    from retail_sales_etl_spark.load import lakehouse as lh
+    from retail_sales_etl_spark.streaming import events as streaming_events
+
+    # pin the prune path: the 160-row tails table is metadata-scale, so
+    # the small-index shortcut would (correctly) skip the key collect —
+    # this test verifies the PRUNED path specifically
+    monkeypatch.setattr(streaming_events, "_PROBE_SMALL_INDEX_ROWS", -1)
+    tails, grid, live = _zordered_session_tails(spark, tmp_path)
+
+    opened = []
+    orig = lh.LakehouseTable.read_where_in
+
+    def spy(self, column, values, version=None):
+        df = orig(self, column, values, version=version)
+        opened.append((column, len(df.inputFiles())))
+        return df
+
+    monkeypatch.setattr(lh.LakehouseTable, "read_where_in", spy)
+    assert streaming_events.session_tails_sink(
+        _next_tails_batch(spark), 4, tails, grid
+    ) is True
+    probes = [o for o in opened if o[0] == "user_id"]
+    assert probes, "prior-tail probe did not go through read_where_in"
+    assert probes[0][1] <= 4 < len(live), (probes[0][1], len(live))
+
+
+def test_session_tails_small_index_reads_pinned_snapshot_whole(
+    spark, tmp_path, monkeypatch
+):
+    """Twin of the pruned-probe test at the default threshold: the
+    160-row tails table is under ``_PROBE_SMALL_INDEX_ROWS``, so the
+    next batch's prior-tail read is ONE full read of the pinned
+    snapshot and the probe path (``read_where_in``) is never taken.
+    (The tails MERGE that follows reads its own pinned target; those
+    reads are not the prior-tail read and are not counted.)"""
+    from retail_sales_etl_spark.load import lakehouse as lh
+    from retail_sales_etl_spark.streaming import events as streaming_events
+
+    tails, grid, _ = _zordered_session_tails(spark, tmp_path)
+    pinned = lh.LakehouseTable(spark, tails).latest_version()
+
+    reads, probes, in_merge = [], [], []
+    orig_read = lh.LakehouseTable.read
+    orig_where_in = lh.LakehouseTable.read_where_in
+    orig_merge = lh.LakehouseTable.merge
+
+    def spy_read(self, version=None):
+        if self.path == tails and not in_merge:
+            reads.append(version)
+        return orig_read(self, version=version)
+
+    def spy_where_in(self, column, values, version=None):
+        probes.append(self.path)
+        return orig_where_in(self, column, values, version=version)
+
+    def spy_merge(self, *args, **kwargs):
+        in_merge.append(True)
+        try:
+            return orig_merge(self, *args, **kwargs)
+        finally:
+            in_merge.pop()
+
+    monkeypatch.setattr(lh.LakehouseTable, "read", spy_read)
+    monkeypatch.setattr(lh.LakehouseTable, "read_where_in", spy_where_in)
+    monkeypatch.setattr(lh.LakehouseTable, "merge", spy_merge)
+    assert streaming_events.session_tails_sink(
+        _next_tails_batch(spark), 4, tails, grid
+    ) is True
+    assert reads == [pinned]
+    assert probes == []
+
+
+def _zordered_session_tails(spark, tmp_path):
+    """Four session-tail batches over 160 users, then a Z-order by
+    user_id into many narrow-range files. Returns (tails, grid, live
+    files)."""
     from pyspark.sql import functions as F
 
     from retail_sales_etl_spark.load import lakehouse as lh
@@ -1495,23 +1605,15 @@ def test_session_tails_probe_reads_file_pruned(spark, tmp_path, monkeypatch):
     )
     live = lh.LakehouseTable(spark, tails).read().inputFiles()
     assert len(live) >= 20  # clustered into many narrow-range files
+    return tails, grid, live
 
-    opened = []
-    orig = lh.LakehouseTable.read_where_in
 
-    def spy(self, column, values, version=None):
-        df = orig(self, column, values, version=version)
-        opened.append((column, len(df.inputFiles())))
-        return df
+def _next_tails_batch(spark):
+    from pyspark.sql import functions as F
 
-    monkeypatch.setattr(lh.LakehouseTable, "read_where_in", spy)
-    nxt = spark.createDataFrame(
+    return spark.createDataFrame(
         [(3, 10_000), (1000, 10_001)], "user_id bigint, s bigint"
     ).select("user_id", F.timestamp_seconds(F.col("s")).alias("ts"))
-    assert streaming_events.session_tails_sink(nxt, 4, tails, grid) is True
-    probes = [o for o in opened if o[0] == "user_id"]
-    assert probes, "prior-tail probe did not go through read_where_in"
-    assert probes[0][1] <= 4 < len(live), (probes[0][1], len(live))
 
 
 def test_jpeg_exif_pipeline_is_shuffle_free_and_column_pruned(spark, sf_dir):

@@ -47,23 +47,45 @@ def test_json_reader(spark, tmp_path):
 
 
 def test_sanity_check_empty_raises(spark):
-    df = spark.createDataFrame([], "id INT, v STRING")
-    with pytest.raises(ValueError, match="empty"):
-        readers.sanity_check(df)
+    created = spark.createDataFrame([], "id INT, v STRING")
+    # empty after a filter: the fused aggregate sums over no groups
+    filtered = spark.createDataFrame([(1, "a")], "id INT, v STRING").filter("id < 0")
+    for df in (created, filtered):
+        with pytest.raises(ValueError, match="Source data is empty"):
+            readers.sanity_check(df)
 
 
 def test_sanity_check_null_threshold(spark):
     df = spark.createDataFrame([(1, None), (2, None)], "id INT, v STRING")
     with pytest.raises(ValueError, match="NULL values"):
         readers.sanity_check(df, null_threshold_pct=50.0)
+    # an all-NULL column is exactly 100%, and passes a 100% threshold
+    with pytest.raises(ValueError, match="'v' has 100.00% NULL values"):
+        readers.sanity_check(df)
+    stats = readers.sanity_check(df, null_threshold_pct=100.0)
+    assert stats["null_pct"] == {"id": 0.0, "v": 100.0}
 
 
 def test_sanity_check_duplicates(spark):
-    df = spark.createDataFrame([(1, "a"), (1, "a")], ["id", "v"])
-    with pytest.raises(ValueError, match="Duplicate rows"):
-        readers.sanity_check(df)
-    stats = readers.sanity_check(df, fail_on_duplicates=False)
-    assert stats["duplicate_rows"] == 1
+    cases = [
+        ([(1, "a"), (1, "a")], 1),
+        # NULLs compare equal, as in df.distinct()
+        ([(1, None), (1, None), (None, None), (None, None), (None, None)], 3),
+        ([(1, None), (1, "a"), (None, "a"), (2, "b")], 0),
+    ]
+    for rows, expected_dups in cases:
+        df = spark.createDataFrame(rows, "id INT, v STRING")
+        if expected_dups:
+            with pytest.raises(
+                ValueError, match=f"Duplicate rows found in source data: {expected_dups}"
+            ):
+                readers.sanity_check(df, null_threshold_pct=100.0)
+        stats = readers.sanity_check(
+            df, null_threshold_pct=100.0, fail_on_duplicates=False
+        )
+        # parity with the two-job form: count() minus distinct().count()
+        assert stats["duplicate_rows"] == df.count() - df.distinct().count() == expected_dups
+        assert stats["row_count"] == len(rows)
 
 
 def test_load_roundtrip_and_validation(spark, sf_dir, tmp_path):
