@@ -43,9 +43,10 @@ COSINE_THRESHOLD = 0.3
 MAX_SHINGLE_DF = 100
 
 
-def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc (map-side explode)."""
-    d = docs.select("doc_id", F.split("text", " ").alias("w")).filter(
+def _shingles(docs: DataFrame, n: int = 3, keep: tuple = ()) -> DataFrame:
+    """Distinct word n-gram shingles per doc (map-side explode).
+    ``keep`` names per-doc columns carried onto every shingle row."""
+    d = docs.select("doc_id", *keep, F.split("text", " ").alias("w")).filter(
         F.size("w") >= n
     )
     idx = F.sequence(F.lit(0), F.size("w") - n)
@@ -55,7 +56,9 @@ def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
             " ", *[F.element_at("w", (i + k + 1).cast("int")) for k in range(n)]
         ),
     )
-    return d.select("doc_id", F.explode(F.array_distinct(gram)).alias("shingle"))
+    return d.select(
+        "doc_id", *keep, F.explode(F.array_distinct(gram)).alias("shingle")
+    )
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,7 +125,13 @@ def _mh_expr_sql(j: int) -> str:
 
 
 def _minhash_signatures(docs: DataFrame) -> DataFrame:
-    """Per-doc minhash signature: string-min over seeded hash slices.
+    """Per-doc minhash signature: string-min over seeded hash slices."""
+    return _minhash_by(_shingles(docs), "doc_id")
+
+
+def _minhash_by(sh: DataFrame, key: str) -> DataFrame:
+    """MinHash of the shingle rows ``sh`` per ``key`` (a doc, or a
+    whole source): string-min over seeded hash slices.
 
     The two seeded digests are STAGED in a projection below the
     aggregate (h0/h1 computed once per shingle row); the 8 min()
@@ -131,9 +140,8 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
     function children, so the inlined form (``_mh_expr_sql``, kept
     for the DuckDB oracle text) digests every shingle 8 times — 4x
     the hash work per row for identical values."""
-    sh = _shingles(docs)
     staged = sh.select(
-        "doc_id",
+        key,
         *[
             F.md5(F.concat(F.lit(f"{seed}|"), F.col("shingle"))).alias(
                 f"h{seed}"
@@ -147,7 +155,7 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
         ).alias(f"mh{s}")
         for s in range(N_MINHASH)
     ]
-    return staged.groupBy("doc_id").agg(*aggs)
+    return staged.groupBy(key).agg(*aggs)
 
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,8 +7,11 @@ counts into the control plane, the fact pipeline additionally builds
 and loads the date dimension (like the reference's sales pipeline),
 fail-fast with the failing stage recorded.
 
-Row counts are the only driver-side materialization per stage — each
-``df.count()`` is a cheap aggregate. The data plane never leaves Spark.
+Row counts are the only driver-side materialization per stage. The
+EXTRACT count is the ``row_count`` that ``run_extract``'s one-job sanity
+check already computed, so the source is scanned once in that stage;
+the later stages each run one cheap ``count()`` aggregate. The data
+plane never leaves Spark.
 
 The T1 output is the one persisted boundary: ``run_cleaning``'s frame is
 persisted and its TRANSFORM_P1 ``count()`` fills the cache, so the T2
@@ -164,13 +167,13 @@ def run_pipeline(
     try:
         # EXTRACT
         stage = log.insert_stage(run_id, "EXTRACT", "STARTED", None)
-        sourced = readers.run_extract(
+        sourced, extract_stats = readers.run_extract(
             spark,
             spec.source_table,
             table_path(sf_dir, spec.source_table),
             spec.expected_columns,
         )
-        n_sourced = sourced.count()
+        n_sourced = extract_stats["row_count"]
         log.update_stage(stage, "SUCCESS", n_sourced, n_sourced, None)
         tlog.info("EXTRACT ok: %d rows", n_sourced)
 

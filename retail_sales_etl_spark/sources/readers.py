@@ -119,9 +119,12 @@ def run_extract(
     expected_columns: Sequence[str],
     fmt: str = "parquet",
     schema: StructType | None = None,
-) -> DataFrame:
-    """Full Extract phase (reference extract.py:138): read + validate."""
+) -> tuple[DataFrame, dict]:
+    """Full Extract phase (reference extract.py:138): read + validate.
+
+    Returns ``(df, stats)``: the validated frame and ``sanity_check``'s
+    stats, whose ``row_count`` is the source's row count — callers log
+    it instead of scanning the source again with ``df.count()``."""
     df = read_source(spark, path, fmt=fmt, schema=schema)
     validate_schema(df, expected_columns)
-    sanity_check(df)
-    return df
+    return df, sanity_check(df)

@@ -708,11 +708,12 @@ def _landed_on(table, batch_id: int, read_version, hwm) -> bool:
     when an out-of-order batch lands).
 
     Scope note: the sibling single-table sinks (``lakehouse_batch_sink``,
-    heavy-hitter / IVM / CDC-apply / source-sketch) keep the bare
-    ``batch_id <= hwm`` check. That is SOUND under their contract —
-    one logical writer per table (one checkpoint lineage, zombie
-    instances included), where a rival that advanced the watermark
-    necessarily processed every earlier batch first, so at-or-below
+    heavy-hitter, the event-rollup IVM via ``_additive_grid_sink``,
+    CDC-apply) keep the bare ``batch_id <= hwm`` check. That is SOUND
+    under their contract — one logical writer per table (one
+    checkpoint lineage, zombie instances included), where a rival
+    that advanced the watermark necessarily processed every earlier
+    batch first, so at-or-below
     the watermark always means landed. The dedup sinks harden beyond
     that contract because their maintained INDEX tables are long-lived
     shared artifacts where independent distinct-batch writers are a
@@ -1296,14 +1297,22 @@ def _delta_grid_sink(
     partial: DataFrame,
     name: str,
 ) -> bool:
-    """DELTA-APPEND exactly-once commit of one batch's additive grid
-    partial — the pmi/rake/bm25 pattern factored out: no prior-grid
-    read, no MERGE rewrite, O(batch partial) write volume; totals fold
-    on read and the maintenance cycle's aggregating compaction
-    (``_aggregate_compact``) re-bounds live rows to one per key.
-    Replay/rival discipline identical to ``_additive_grid_sink``:
-    ``_landed_on`` + ``conflict_on="batch_id"`` + the monotone hwm
-    stamp, three attempts, then fail loud. Returns False on replay."""
+    """DELTA-APPEND exactly-once commit of one batch's grid partial
+    for any commutative-monoid grid (sum, count, min, max) — the
+    pmi/rake/bm25 pattern factored out: no prior-grid read, no MERGE
+    rewrite, O(batch partial) write volume; totals fold on read
+    (``_fold_grid``) and the maintenance cycle's aggregating
+    compaction (``_aggregate_compact``) re-bounds live rows to one per
+    key. Replay/rival discipline: pin the version, read the ``hwm_key``
+    watermark at the pin, and ask ``_landed_on`` — above the watermark
+    the batch is new (O(1)); at or below it the surviving history is
+    scanned for this batch_id, so a batch a rival skipped past still
+    lands (unlike ``_additive_grid_sink``'s bare ``batch_id <= hwm``).
+    The append commits with ``conflict_on="batch_id"`` (a rival that
+    landed the same batch first wins, this one returns False) and
+    ``monotone_max`` on the watermark. A compaction landing mid-attempt
+    aborts the append; three attempts, then fail loud. Returns False
+    on replay."""
     from ..load.lakehouse import (
         ConcurrentWriteError,
         DuplicateCommitError,
@@ -1351,9 +1360,14 @@ def _additive_grid_sink(
     combine,
     name: str,
 ) -> bool:
-    """The exactly-once protocol shared by every single-table grid-IVM
-    sink (event rollup, source sketch, corpus health, daily revenue) —
-    written once so its invariants cannot drift across sinks: pin the
+    """The read-modify-write MERGE protocol of the event-rollup IVM
+    (``ivm_lakehouse_sink``, its only caller; every other grid sink
+    delta-appends through ``_delta_grid_sink``). The rollup stays
+    here because its replay check answers from the watermark alone
+    and never reads ``history()``, which ``_landed_on`` does for any
+    batch at or below the watermark
+    (``test_ivm_replay_check_reads_only_latest_entry`` pins this).
+    The protocol: pin the
     snapshot version BEFORE the replay check and the view read (the
     commit below is conditional on that exact version, so an
     interloper aborts and the sink re-pins and re-folds instead of
@@ -2288,54 +2302,49 @@ def source_sketch_sink(
     batch_df: DataFrame, batch_id: int, table_path: str
 ) -> bool:
     """Fold one micro-batch of documents into the maintained per-source
-    MinHash sketch table — the streaming twin of the batch sketch stage
+    MinHash sketch grid — the streaming twin of the batch sketch stage
     behind ``source_minhash_jaccard``, and the cleanest possible
     demonstration of MERGEABLE-sketch incremental view maintenance:
     the per-source sketch is a component-wise MIN, min is associative,
     commutative and idempotent, so folding batches in ANY order (or
     re-folding a partially-seen source) converges to exactly the batch
-    recompute — the maintained table is hash-identical to running the
-    corpus through the batch operator, which is what the driver entry
-    proves against the batch SQL oracle.
+    recompute.
 
     Per batch: shingle + hash ONLY the batch's docs (the corpus is
-    never re-read), one map-combinable min-agg to a |batch sources|-row
-    partial, then a full-outer ``least()`` merge with the tiny current
-    table, committed via MERGE. Exactly-once and multi-writer safety
-    follow the ``ivm_lakehouse_sink`` contract verbatim: snapshot
-    version PINNED before the hwm check and read, every commit
-    conditional on that version, ``sketch_batch_hwm`` watermark makes
-    the replay check O(1). Returns False on replay.
+    never re-read; ``source`` rides on the shingle rows, so the batch
+    is scanned once and never joined back), one map-combinable min-agg
+    over the staged digests (``_minhash_by``) to a |batch sources|-row
+    partial, and a DELTA-APPEND of that partial through
+    ``_delta_grid_sink`` (``sketch_batch_hwm`` watermark) — no read of
+    the prior grid, no join, no MERGE. ``_sketch_grid_totals`` folds
+    the per-batch partials (min per ``mh{j}``) on read, and
+    ``maintain_source_sketch(optimize_every=N)`` compacts them with the
+    same min. Returns False on replay.
     """
-    from ..operators.dedup import N_MINHASH, _mh_expr_sql, _shingles
+    from ..operators.dedup import _minhash_by, _shingles
 
-    sh = _shingles(batch_df).join(
-        batch_df.select("doc_id", "source"), "doc_id"
+    partial = _minhash_by(_shingles(batch_df, keep=("source",)), "source")
+    return _delta_grid_sink(
+        batch_df.sparkSession, batch_id, table_path, "sketch_batch_hwm",
+        partial, "source_sketch_sink",
     )
-    aggs = [F.expr(f"{_mh_expr_sql(s)} AS mh{s}") for s in range(N_MINHASH)]
-    partial = sh.groupBy("source").agg(*aggs)
-    mh_cols = [f"mh{j}" for j in range(N_MINHASH)]
 
-    def combine(p: DataFrame, c: DataFrame) -> DataFrame:
-        # full-outer least(): NULL-skipping min, so a source new to
-        # the batch keeps its partial and an untouched source keeps
-        # its current sketch
-        return (
-            p.alias("p")
-            .join(c.alias("c"), "source", "full_outer")
-            .select(
-                "source",
-                *[
-                    F.least(F.col(f"p.{col}"), F.col(f"c.{col}")).alias(col)
-                    for col in mh_cols
-                ],
-            )
-        )
 
-    return _additive_grid_sink(
-        batch_df, batch_id, table_path, "sketch_batch_hwm",
-        ["source"], partial, combine, "source_sketch_sink",
-    )
+def _sketch_fold() -> tuple[list[str], list]:
+    """The sketch grid's (keys, aggregates): min per ``mh{j}`` by
+    source — shared by the read-side fold and the compaction."""
+    from ..operators.dedup import N_MINHASH
+
+    return ["source"], [
+        F.min(f"mh{j}").alias(f"mh{j}") for j in range(N_MINHASH)
+    ]
+
+
+def _sketch_grid_totals(spark: SparkSession, table_path: str) -> DataFrame:
+    """The per-source sketch folded from the delta-append grid — the
+    read-side half of the delta contract, shared by the serve entry
+    and the pytests."""
+    return _fold_grid(spark, table_path, *_sketch_fold())
 
 
 def maintain_source_sketch(
@@ -2343,12 +2352,18 @@ def maintain_source_sketch(
     table_path: str,
     checkpoint: str,
     log_retention: int | None = None,
+    optimize_every: int | None = None,
 ):
-    """Run the streaming sketch sink under foreachBatch (availableNow)."""
+    """Run the streaming sketch sink under foreachBatch (availableNow).
+    ``optimize_every=N`` runs the aggregating compaction every N
+    batches (one row per source again, sketch invariant)."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
         source_sketch_sink(batch_df, batch_id, table_path)
-        _maybe_clean_log(batch_df.sparkSession, table_path, log_retention)
+        if optimize_every and (batch_id + 1) % optimize_every == 0:
+            _aggregate_compact(spark, table_path, *_sketch_fold())
+        _maybe_clean_log(spark, table_path, log_retention)
 
     return _run_foreach_batch(stream, _sink, checkpoint)
 
@@ -2358,19 +2373,17 @@ def q_streaming_source_sketch(
 ) -> DataFrame:
     """Driver-contract entry for the streaming sketch sink: replay the
     documents table in 4 doc_id-range micro-batches through
-    ``maintain_source_sketch``, then return the maintained table. Min
-    is order-insensitive, so the maintained sketch equals the batch
-    per-source sketch EXACTLY — the oracle is the batch stage's SQL
-    twin, proving mergeable-sketch IVM end-to-end through the
+    ``maintain_source_sketch``, then return the sketch folded from the
+    maintained grid. Min is order-insensitive, so the fold equals the
+    batch per-source sketch EXACTLY — the oracle is the batch stage's
+    SQL twin, proving mergeable-sketch IVM end-to-end through the
     lakehouse commit log.
     """
     import tempfile
 
     from ..catalog import load_table
-    from ..load.lakehouse import LakehouseTable
+    from ..operators.dedup import N_MINHASH
 
-    work = tempfile.mkdtemp(prefix="sketch_stream_")
-    src = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
@@ -2378,9 +2391,11 @@ def q_streaming_source_sketch(
     if hi is None:  # empty corpus: the batch twin returns empty
         return spark.createDataFrame(
             [],
-            "source string, rank int, phrase string, n_words bigint, "
-            "freq bigint, score double",
+            "source string, "
+            + ", ".join(f"mh{j} string" for j in range(N_MINHASH)),
         )
+    work = tempfile.mkdtemp(prefix="sketch_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(
@@ -2394,11 +2409,7 @@ def q_streaming_source_sketch(
     maintain_source_sketch(
         stream, f"{work}/sketch", f"{work}/ckpt"
     ).awaitTermination()
-    from ..operators.dedup import N_MINHASH
-
-    return LakehouseTable(spark, f"{work}/sketch").read().select(
-        "source", *[f"mh{j}" for j in range(N_MINHASH)]
-    )
+    return _sketch_grid_totals(spark, f"{work}/sketch")
 
 
 QUERIES["streaming_source_sketch"] = q_streaming_source_sketch
@@ -3274,64 +3285,44 @@ def corpus_health_sink(
     (source, lang) corpus-health grid — the IVM form of ``doc_stats``
     + per-source mean ``text_entropy``: a 100 TB ingest keeps the data
     card current per batch instead of re-scanning the corpus (text is
-    read once, at arrival; the maintained grid is bounded by
+    read once, at arrival; the folded grid is bounded by
     sources x langs at any corpus size).
 
-    Exactly-once protocol = ``ivm_lakehouse_sink`` verbatim: pin the
-    snapshot, ``health_batch_hwm`` replay check against the pinned
-    version, fold the batch partial into the touched grid keys, and
-    MERGE conditionally on the pinned version (first batch:
-    conditional overwrite) — an interloper aborts the commit and the
-    sink re-pins and re-folds. Additive/lattice columns make the
-    maintained grid bit-identical to a from-scratch aggregate of
-    everything delivered, in any delivery order. Returns False when
-    the batch was a replay."""
-    keys = ["source", "lang"]
-
-    def combine(p: DataFrame, c: DataFrame) -> DataFrame:
-        return (
-            p.alias("p")
-            .join(c.alias("c"), keys, "left")
-            .select(
-                *keys,
-                (
-                    F.col("p.n_docs")
-                    + F.coalesce(F.col("c.n_docs"), F.lit(0))
-                ).cast("bigint").alias("n_docs"),
-                (
-                    F.col("p.total_chars")
-                    + F.coalesce(F.col("c.total_chars"), F.lit(0))
-                ).cast("bigint").alias("total_chars"),
-                F.least(
-                    F.col("p.min_chars"),
-                    F.coalesce(F.col("c.min_chars"), F.col("p.min_chars")),
-                ).cast("bigint").alias("min_chars"),
-                F.greatest(
-                    F.col("p.max_chars"),
-                    F.coalesce(F.col("c.max_chars"), F.col("p.max_chars")),
-                ).cast("bigint").alias("max_chars"),
-                (
-                    F.col("p.total_words")
-                    + F.coalesce(F.col("c.total_words"), F.lit(0))
-                ).cast("bigint").alias("total_words"),
-                (
-                    F.col("p.total_distinct")
-                    + F.coalesce(F.col("c.total_distinct"), F.lit(0))
-                ).cast("bigint").alias("total_distinct"),
-                (
-                    F.col("p.entropy_sum")
-                    + F.coalesce(
-                        F.col("c.entropy_sum"), F.lit(0).cast(_IVM_DEC)
-                    )
-                ).cast(_IVM_DEC).alias("entropy_sum"),
-            )
-        )
-
-    return _additive_grid_sink(
-        batch_df, batch_id, table_path, "health_batch_hwm",
-        keys, _corpus_health_partial(batch_df), combine,
-        "corpus_health_sink",
+    Per batch: DELTA-APPEND the batch partial through
+    ``_delta_grid_sink`` (``health_batch_hwm`` watermark) — no read of
+    the prior grid, no join, no MERGE. ``_health_grid_totals`` folds
+    the partials on read (sum / min / max), and
+    ``maintain_corpus_health(optimize_every=N)`` compacts them with the
+    same aggregates. Additive/lattice columns make the fold
+    bit-identical to a from-scratch aggregate of everything delivered,
+    in any delivery order. Returns False when the batch was a
+    replay."""
+    return _delta_grid_sink(
+        batch_df.sparkSession, batch_id, table_path, "health_batch_hwm",
+        _corpus_health_partial(batch_df), "corpus_health_sink",
     )
+
+
+def _health_fold() -> tuple[list[str], list]:
+    """The corpus-health grid's (keys, aggregates): sums for the
+    counters, min/max for the char extrema, with the partial's
+    ``bigint`` / ``_IVM_DEC`` result types."""
+    return ["source", "lang"], [
+        F.sum("n_docs").cast("bigint").alias("n_docs"),
+        F.sum("total_chars").cast("bigint").alias("total_chars"),
+        F.min("min_chars").cast("bigint").alias("min_chars"),
+        F.max("max_chars").cast("bigint").alias("max_chars"),
+        F.sum("total_words").cast("bigint").alias("total_words"),
+        F.sum("total_distinct").cast("bigint").alias("total_distinct"),
+        F.sum("entropy_sum").cast(_IVM_DEC).alias("entropy_sum"),
+    ]
+
+
+def _health_grid_totals(spark: SparkSession, table_path: str) -> DataFrame:
+    """The (source, lang) corpus-health grid folded from its
+    delta-append partials — shared by the serve entry and the
+    pytests."""
+    return _fold_grid(spark, table_path, *_health_fold())
 
 
 def maintain_corpus_health(
@@ -3339,13 +3330,19 @@ def maintain_corpus_health(
     table_path: str,
     checkpoint: str,
     log_retention: int | None = None,
+    optimize_every: int | None = None,
 ):
     """Run the corpus-health IVM sink under foreachBatch
-    (availableNow)."""
+    (availableNow). ``optimize_every=N`` runs the aggregating
+    compaction every N batches (one row per (source, lang) again,
+    totals invariant)."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
         corpus_health_sink(batch_df, batch_id, table_path)
-        _maybe_clean_log(batch_df.sparkSession, table_path, log_retention)
+        if optimize_every and (batch_id + 1) % optimize_every == 0:
+            _aggregate_compact(spark, table_path, *_health_fold())
+        _maybe_clean_log(spark, table_path, log_retention)
 
     return _run_foreach_batch(stream, _sink, checkpoint)
 
@@ -3353,17 +3350,18 @@ def maintain_corpus_health(
 def q_streaming_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the corpus-health IVM sink: replay
     the documents table in 4 doc_id-range micro-batches through
-    ``maintain_corpus_health``, then read the maintained grid and
-    publish the data-card surface (avg chars, char extrema, word
-    totals, mean per-doc entropy per source x lang). Additive/lattice
-    maintenance makes the grid equal a from-scratch pass over
-    everything delivered, so the oracle is one batch SQL aggregate
-    over documents — proving text-QC IVM end-to-end through the
-    lakehouse commit log."""
+    ``maintain_corpus_health`` (with a mid-stream
+    aggregating-compaction cycle, so the fold reads compacted and
+    delta rows), then fold the maintained grid
+    (``_health_grid_totals``) and publish the data-card surface (avg
+    chars, char extrema, word totals, mean per-doc entropy per source
+    x lang). Additive/lattice maintenance makes the grid equal a
+    from-scratch pass over everything delivered, so the oracle is one
+    batch SQL aggregate over documents — proving text-QC IVM
+    end-to-end through the lakehouse commit log."""
     import tempfile
 
     from ..catalog import load_table
-    from ..load.lakehouse import LakehouseTable
 
     work = tempfile.mkdtemp(prefix="health_stream_")
     src = f"{work}/src"
@@ -3384,9 +3382,9 @@ def q_streaming_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     maintain_corpus_health(
-        stream, f"{work}/health", f"{work}/ckpt"
+        stream, f"{work}/health", f"{work}/ckpt", optimize_every=3
     ).awaitTermination()
-    grid = LakehouseTable(spark, f"{work}/health").read()
+    grid = _health_grid_totals(spark, f"{work}/health")
     return grid.select(
         "source",
         "lang",
@@ -3465,30 +3463,32 @@ def daily_revenue_sink(
     operator (theil_sen, changepoint, Holt, periodogram) reads from:
     at 100 TB the fact is never re-scanned; each batch collapses
     map-side to its touched days (exact integer cents, so addition in
-    any order equals the from-scratch grid bit-exactly) and MERGEs
-    into the calendar-bounded grid. Exactly-once protocol =
-    ``ivm_lakehouse_sink`` verbatim (pinned read_version,
-    daily_batch_hwm replay check, conditional first-batch overwrite /
-    MERGE). Returns False when the batch was a replay."""
+    any order equals the from-scratch grid bit-exactly) and
+    DELTA-APPENDS that partial through ``_delta_grid_sink``
+    (``daily_batch_hwm`` watermark) — no prior-grid read, no MERGE.
+    ``_day_grid_totals(..., "v")`` sums the partials on read. Returns
+    False when the batch was a replay."""
     from ..operators.profiling import _daily_revenue_cents
 
-    def combine(p: DataFrame, c: DataFrame) -> DataFrame:
-        return (
-            p.alias("p")
-            .join(c.alias("c"), "d", "left")
-            .select(
-                "d",
-                (
-                    F.col("p.v") + F.coalesce(F.col("c.v"), F.lit(0))
-                ).cast("bigint").alias("v"),
-            )
-        )
-
-    return _additive_grid_sink(
-        batch_df, batch_id, table_path, "daily_batch_hwm",
-        ["d"], _daily_revenue_cents(batch_df), combine,
-        "daily_revenue_sink",
+    return _delta_grid_sink(
+        batch_df.sparkSession, batch_id, table_path, "daily_batch_hwm",
+        _daily_revenue_cents(batch_df), "daily_revenue_sink",
     )
+
+
+def _day_grid_fold(value_col: str) -> tuple[list[str], list]:
+    """A day grid's (keys, aggregates): the exact ``bigint`` sum of
+    ``value_col`` per day ``d`` — shared by the daily-revenue (``v``)
+    and events-daily (``c``) grids' read-side fold and compaction."""
+    return ["d"], [F.sum(value_col).cast("bigint").alias(value_col)]
+
+
+def _day_grid_totals(
+    spark: SparkSession, table_path: str, value_col: str
+) -> DataFrame:
+    """The (d, ``value_col``) day grid summed from its delta-append
+    partials — shared by the serve entries and the pytests."""
+    return _fold_grid(spark, table_path, *_day_grid_fold(value_col))
 
 
 def maintain_daily_revenue(
@@ -3496,23 +3496,30 @@ def maintain_daily_revenue(
     table_path: str,
     checkpoint: str,
     log_retention: int | None = None,
+    optimize_every: int | None = None,
 ):
     """Run the daily-revenue-grid IVM sink under foreachBatch
-    (availableNow)."""
+    (availableNow). ``optimize_every=N`` runs the aggregating
+    compaction every N batches (one row per day again, totals
+    invariant)."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
         daily_revenue_sink(batch_df, batch_id, table_path)
-        _maybe_clean_log(batch_df.sparkSession, table_path, log_retention)
+        if optimize_every and (batch_id + 1) % optimize_every == 0:
+            _aggregate_compact(spark, table_path, *_day_grid_fold("v"))
+        _maybe_clean_log(spark, table_path, log_retention)
 
     return _run_foreach_batch(stream, _sink, checkpoint)
 
 
 def q_streaming_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the day-grid IVM: replay orders in 4
-    micro-batches through ``maintain_daily_revenue`` (exact integer
-    cents fold additively, so the maintained grid bit-equals the batch
-    ``_daily_revenue_cents``), then derive the epoch-folding spectrum
-    from the MAINTAINED grid via the shared
+    micro-batches through ``maintain_daily_revenue`` (mid-stream
+    aggregating-compaction cycle; exact integer cents fold additively,
+    so the grid summed on read by ``_day_grid_totals`` bit-equals the
+    batch ``_daily_revenue_cents``), then derive the epoch-folding
+    spectrum from that MAINTAINED grid via the shared
     ``_periodogram_spectrum`` — hash-checked against the SAME oracle
     as the batch ``revenue_periodogram``, proving a 100 TB pipeline
     can serve the spectrum (and every other day-grid operator) without
@@ -3520,7 +3527,6 @@ def q_streaming_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..catalog import load_table
-    from ..load.lakehouse import LakehouseTable
     from ..operators.profiling import _periodogram_spectrum
 
     work = tempfile.mkdtemp(prefix="perio_stream_")
@@ -3543,9 +3549,9 @@ def q_streaming_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     maintain_daily_revenue(
-        stream, f"{work}/daily", f"{work}/ckpt"
+        stream, f"{work}/daily", f"{work}/ckpt", optimize_every=3
     ).awaitTermination()
-    daily = LakehouseTable(spark, f"{work}/daily").read()
+    daily = _day_grid_totals(spark, f"{work}/daily", "v")
     return _periodogram_spectrum(daily)
 
 
@@ -4399,29 +4405,17 @@ def events_daily_sink(
     daily-count grid — exact integer counts, so addition in any order
     bit-equals the from-scratch daily aggregate; the grid every
     event-side day operator (daily peaks, autocorr-style diagnostics)
-    can read without re-scanning the stream. Exactly-once protocol =
-    ``ivm_lakehouse_sink`` verbatim via ``_additive_grid_sink``
-    (pinned read_version, events_daily_hwm replay check, conditional
-    first-batch overwrite / MERGE). Returns False on replay."""
+    can read without re-scanning the stream. The batch's per-day
+    partial DELTA-APPENDS through ``_delta_grid_sink``
+    (``events_daily_hwm`` watermark) — no prior-grid read, no MERGE;
+    ``_day_grid_totals(..., "c")`` sums the partials on read. Returns
+    False on replay."""
     partial = batch_df.groupBy(F.to_date("ts").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-
-    def combine(p: DataFrame, c: DataFrame) -> DataFrame:
-        return (
-            p.alias("p")
-            .join(c.alias("c"), "d", "left")
-            .select(
-                "d",
-                (
-                    F.col("p.c") + F.coalesce(F.col("c.c"), F.lit(0))
-                ).cast("bigint").alias("c"),
-            )
-        )
-
-    return _additive_grid_sink(
-        batch_df, batch_id, table_path, "events_daily_hwm",
-        ["d"], partial, combine, "events_daily_sink",
+    return _delta_grid_sink(
+        batch_df.sparkSession, batch_id, table_path, "events_daily_hwm",
+        partial, "events_daily_sink",
     )
 
 
@@ -4430,13 +4424,19 @@ def maintain_events_daily(
     table_path: str,
     checkpoint: str,
     log_retention: int | None = None,
+    optimize_every: int | None = None,
 ):
     """Run the events-day-grid IVM sink under foreachBatch
-    (availableNow)."""
+    (availableNow). ``optimize_every=N`` runs the aggregating
+    compaction every N batches (one row per day again, totals
+    invariant)."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
         events_daily_sink(batch_df, batch_id, table_path)
-        _maybe_clean_log(batch_df.sparkSession, table_path, log_retention)
+        if optimize_every and (batch_id + 1) % optimize_every == 0:
+            _aggregate_compact(spark, table_path, *_day_grid_fold("c"))
+        _maybe_clean_log(spark, table_path, log_retention)
 
     return _run_foreach_batch(stream, _sink, checkpoint)
 
@@ -4444,16 +4444,16 @@ def maintain_events_daily(
 def q_streaming_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the events day-grid IVM: replay the
     events table in 4 micro-batches through ``maintain_events_daily``
-    (exact integer counts fold additively, ANY delivery order
-    bit-equals the batch daily aggregate), then derive peak detection
-    from the MAINTAINED grid via the shared ``_daily_peaks`` — hash-
-    checked against the SAME oracle as the batch
-    ``events_daily_peaks``, proving the event-side day-grid family is
-    servable without ever re-scanning the stream."""
+    (mid-stream aggregating-compaction cycle; exact integer counts
+    fold additively, ANY delivery order bit-equals the batch daily
+    aggregate), then derive peak detection from the MAINTAINED grid,
+    summed on read by ``_day_grid_totals``, via the shared
+    ``_daily_peaks`` — hash- checked against the SAME oracle as the
+    batch ``events_daily_peaks``, proving the event-side day-grid
+    family is servable without ever re-scanning the stream."""
     import tempfile
 
     from ..catalog import load_table
-    from ..load.lakehouse import LakehouseTable
     from ..operators.events import _daily_peaks
 
     work = tempfile.mkdtemp(prefix="evdaily_stream_")
@@ -4478,9 +4478,9 @@ def q_streaming_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     maintain_events_daily(
-        stream, f"{work}/daily", f"{work}/ckpt"
+        stream, f"{work}/daily", f"{work}/ckpt", optimize_every=3
     ).awaitTermination()
-    daily = LakehouseTable(spark, f"{work}/daily").read()
+    daily = _day_grid_totals(spark, f"{work}/daily", "c")
     return _daily_peaks(daily)
 
 
@@ -4833,15 +4833,15 @@ def drift_moments_sink(
     batch_df: DataFrame, batch_id: int, table_path: str
 ) -> bool:
     """Fold one micro-batch of EMBEDDINGS (label, v array<double>)
-    into the maintained (label, i, j, s) moment grid — the IVM base
-    of ``embedding_drift_mmd``: counts, 9-dp-staged first-moment sums
-    and 12-dp-staged second-moment sums as exact DECIMAL(38,12)
-    cells, added cell-wise (any delivery order bit-equals the
-    from-scratch grid — addition is the whole protocol). Exactly-once
-    = ``_additive_grid_sink`` (pinned read_version, drift_batch_hwm
-    replay check, conditional first-batch overwrite / MERGE on the
-    grid key). The grid is labels x (d+1)^2 rows regardless of corpus
-    size; each batch collapses to it map-side."""
+    into the maintained (label, i, j, s) moment grid — the IVM base of
+    ``embedding_drift_mmd``: counts, 9-dp-staged first-moment sums and
+    12-dp-staged second-moment sums as exact DECIMAL(38,12) cells,
+    added cell-wise (any delivery order bit-equals the from-scratch
+    grid — addition is the whole protocol). Exactly-once =
+    ``_delta_grid_sink`` (drift_batch_hwm watermark, append-only;
+    ``_drift_grid_totals`` sums the partials on read). The grid is
+    labels x (d+1)^2 rows regardless of corpus size; each batch
+    collapses to it map-side."""
     from ..operators.similarity import _drift_moment_grid
 
     # DELTA-APPEND (was a per-batch MERGE): every batch touches every
@@ -4956,19 +4956,19 @@ ORACLE["streaming_drift_mmd"] = _SIMILARITY_ORACLE["embedding_drift_mmd"]
 
 
 def q_streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-contract entry completing the day-grid IVM family on
-    the TEST side: replay orders in 4 micro-batches through
-    ``maintain_daily_revenue`` (exact integer cents fold additively,
-    so the maintained grid bit-equals the batch day grid), then
-    derive the Mann-Kendall trend test from the MAINTAINED grid via
-    the shared ``_mann_kendall_from_daily`` — hash-checked against
-    the SAME oracle as the batch ``revenue_mann_kendall``, proving a
-    100 TB pipeline serves trend significance per batch without
+    """Driver-contract entry completing the day-grid IVM family on the
+    TEST side: replay orders in 4 micro-batches through
+    ``maintain_daily_revenue`` (mid-stream aggregating-compaction
+    cycle; exact integer cents fold additively, so the grid summed on
+    read by ``_day_grid_totals`` bit-equals the batch day grid), then
+    derive the Mann-Kendall trend test from that MAINTAINED grid via
+    the shared ``_mann_kendall_from_daily`` — hash-checked against the
+    SAME oracle as the batch ``revenue_mann_kendall``, proving a 100
+    TB pipeline serves trend significance per batch without
     re-scanning the fact."""
     import tempfile
 
     from ..catalog import load_table
-    from ..load.lakehouse import LakehouseTable
     from ..operators.profiling import _mann_kendall_from_daily
 
     work = tempfile.mkdtemp(prefix="mk_stream_")
@@ -4997,9 +4997,9 @@ def q_streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     maintain_daily_revenue(
-        stream, f"{work}/daily", f"{work}/ckpt"
+        stream, f"{work}/daily", f"{work}/ckpt", optimize_every=3
     ).awaitTermination()
-    daily = LakehouseTable(spark, f"{work}/daily").read()
+    daily = _day_grid_totals(spark, f"{work}/daily", "v")
     return _mann_kendall_from_daily(daily)
 
 
@@ -5032,12 +5032,13 @@ def ivf_index_sink(
     conditionally (replay-guarded; each batch's rows land exactly
     once), and the centroid grid — (label, dim_idx) -> (s, n) with s
     the exact DECIMAL(38,6) sum of the batch-staged decimal(25,6)
-    values — folds through ``_additive_grid_sink``. Because decimal
-    addition is associative, the maintained s/n derive the SAME
-    centroid doubles as the batch ``_centroids_long`` over everything
-    delivered, in any delivery order. The two commits carry
-    independent replay guards (no cross-table delta exists, so no
-    rewind protocol is needed — unlike the cohort/novelty sinks)."""
+    values — delta-appends through ``_delta_grid_sink`` and is summed
+    on read by ``_cent_grid_totals``. Because decimal addition is
+    associative, the maintained s/n derive the SAME centroid doubles
+    as the batch ``_centroids_long`` over everything delivered, in any
+    delivery order. The two commits carry independent replay guards
+    (no cross-table delta exists, so no rewind protocol is needed —
+    unlike the cohort/novelty sinks)."""
     from ..load.lakehouse import (
         ConcurrentWriteError,
         DuplicateCommitError,
@@ -5592,14 +5593,15 @@ def bm25_index_sink(
     """Fold one micro-batch of DOCUMENTS into the maintained BM25
     index: the FULL-vocabulary posting grid of the batch (shared
     ``_bm25_doc_terms`` builder — doc length stored inline so serving
-    never joins a second doc-keyed table) appends conditionally
-    (docs arrive once, so (w, doc) rows are disjoint across batches),
-    and the stats grid — ("df", w) -> docs-containing count plus one
-    ("corpus", "") row carrying (n_docs, sum_dl) — folds through
-    ``_additive_grid_sink`` (all counts additive over disjoint doc
-    sets, so any delivery order bit-equals the from-scratch corpus
-    stats). Independent replay guards per table (no cross-table
-    delta, so no rewind protocol — the ``ivf_index_sink`` shape)."""
+    never joins a second doc-keyed table) appends conditionally (docs
+    arrive once, so (w, doc) rows are disjoint across batches), and
+    the stats grid — ("df", w) -> docs-containing count plus one
+    ("corpus", "") row carrying (n_docs, sum_dl) — delta-appends
+    through ``_delta_grid_sink`` and is summed on read (all counts
+    additive over disjoint doc sets, so any delivery order bit-equals
+    the from-scratch corpus stats). Independent replay guards per
+    table (no cross-table delta, so no rewind protocol — the
+    ``ivf_index_sink`` shape)."""
     from ..load.lakehouse import (
         ConcurrentWriteError,
         DuplicateCommitError,
@@ -7471,6 +7473,24 @@ def _aggregate_compact(
     except ConcurrentWriteError:
         return False  # a batch landed mid-rewrite; the next cycle retries
     return True
+
+
+def _fold_grid(
+    spark: SparkSession, table_path: str, key_cols: list, agg_exprs: list
+) -> DataFrame:
+    """Fold a delta-append grid's per-batch partials to one row per
+    key — the read-side half of the delta contract. ``agg_exprs`` are
+    the grid's monoid aggregates, the same ones ``_aggregate_compact``
+    commits, so the fold reads the same relation before and after a
+    compaction."""
+    from ..load.lakehouse import LakehouseTable
+
+    return (
+        LakehouseTable(spark, table_path)
+        .read()
+        .groupBy(*key_cols)
+        .agg(*agg_exprs)
+    )
 
 
 def _pmi_grid_totals(

@@ -1,29 +1,38 @@
-"""Dump the plans of every Spark action one ``run_pipeline`` call runs.
+"""Dump the plans of every Spark action one pipeline run or one registry
+entry runs.
 
-Usage: python scripts/dump_etl_plans.py SF_DIR OUT_FILE [PIPELINE]
-(PIPELINE defaults to ``lineitem``; SF_DIR holds the source tables.)
+Usage: python scripts/dump_etl_plans.py SF_DIR OUT_FILE [NAME]
+(NAME is a ``run_pipeline`` pipeline or a ``registry.all_queries()``
+entry and defaults to ``lineitem``; SF_DIR holds the source tables.)
 
-The pipeline runs for real into a temporary warehouse. Each action's
-input frame (``count``, ``first`` and the table writes) is recorded
-with the stage it ran in, and the ``formatted`` plan it has as the
-action starts (with the pipeline's cache still in place) is written to
-OUT_FILE in run order. SF_DIR and the warehouse are written as
-``<sf_dir>`` and ``<warehouse>``, so plans from two checkouts diff
-cleanly. Run it in a checkout before and after a plan-changing edit to
-record what each action re-evaluates.
+A pipeline runs for real into a temporary warehouse; an entry runs and
+its result is collected. Each action's input frame (``count``,
+``first``, ``collect`` and the file writes) is recorded with where it
+ran, and the ``formatted`` plan it has as the action starts (with any
+cache still in place) is written to OUT_FILE in run order. For a
+pipeline, "where" is the control-log stage; for an entry, it is
+``entry`` on the calling thread and ``stream`` inside a foreachBatch
+sink. SF_DIR, the warehouse and temporary directories are written as
+``<sf_dir>``, ``<warehouse>`` and ``<tmp>``, and lakehouse file tokens
+as ``<token>``, so plans from two checkouts diff cleanly. Run it in a
+checkout before and after a plan-changing edit to record what each
+action re-evaluates.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 import tempfile
+import threading
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from retail_sales_etl_spark import pipeline  # noqa: E402
 from retail_sales_etl_spark.control.runlog import ControlLog  # noqa: E402
+from retail_sales_etl_spark.plans import registry  # noqa: E402
 from retail_sales_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -32,6 +41,9 @@ def main() -> None:
         raise SystemExit(__doc__)
     sf_dir, out_file = sys.argv[1], sys.argv[2]
     name = sys.argv[3] if len(sys.argv) == 4 else "lineitem"
+    entries = registry.all_queries()
+    if name not in pipeline.PIPELINES and name not in entries:
+        raise SystemExit(f"{name!r} is neither a pipeline nor a registry entry")
     spark = get_spark(app_name="dump-etl-plans")
     spark.sparkContext.setLogLevel("ERROR")
     # the session's concrete classes (PySpark 4 splits classic from the
@@ -47,38 +59,63 @@ def main() -> None:
         stage[0] = stage_name
         return insert_stage(self, run_id, stage_name, *args)
 
+    def where() -> str:
+        if name in pipeline.PIPELINES:
+            return stage[0]
+        main_thread = threading.current_thread() is threading.main_thread()
+        return "entry" if main_thread else "stream"
+
+    inside = threading.local()  # first() runs collect(): record it once
+
     def recording(action, get_df):
         def wrapped(self, *args, **kwargs):
+            if getattr(inside, "action", False):
+                return orig[action](self, *args, **kwargs)
             df = get_df(self)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            actions.append((stage[0], action, plan))
-            return orig[action](self, *args, **kwargs)
+            actions.append((where(), action, plan))
+            inside.action = True
+            try:
+                return orig[action](self, *args, **kwargs)
+            finally:
+                inside.action = False
 
         return wrapped
 
     orig = {
         "count": frame_cls.count,
         "first": frame_cls.first,
+        "collect": frame_cls.collect,
         "save": writer_cls.save,
+        "parquet": writer_cls.parquet,
     }
+    writer_actions = ("save", "parquet")
     ControlLog.insert_stage = tracking_insert_stage
-    frame_cls.count = recording("count", lambda df: df)
-    frame_cls.first = recording("first", lambda df: df)
-    writer_cls.save = recording("save", lambda w: w._df)
+    for action in orig:
+        if action in writer_actions:
+            setattr(writer_cls, action, recording(action, lambda w: w._df))
+        else:
+            setattr(frame_cls, action, recording(action, lambda df: df))
     with tempfile.TemporaryDirectory() as wh:
         try:
-            pipeline.run_pipeline(spark, name, sf_dir, wh)
+            if name in pipeline.PIPELINES:
+                pipeline.run_pipeline(spark, name, sf_dir, wh)
+            else:
+                entries[name](spark, sf_dir).collect()
         finally:
             ControlLog.insert_stage = insert_stage
             for action, fn in orig.items():
-                setattr(writer_cls if action == "save" else frame_cls, action, fn)
+                setattr(writer_cls if action in writer_actions else frame_cls, action, fn)
+        tmp = re.escape(tempfile.gettempdir())
         parts = []
-        for i, (stage_name, action, plan) in enumerate(actions, 1):
+        for i, (at, action, plan) in enumerate(actions, 1):
             plan = plan.replace(os.path.realpath(wh), "<warehouse>").replace(wh, "<warehouse>")
             plan = plan.replace(os.path.realpath(sf_dir), "<sf_dir>").replace(sf_dir, "<sf_dir>")
-            parts.append(f"#### action {i}: {action}() in {stage_name}\n{plan}")
+            plan = re.sub(tmp + r"/[^/\s,\]\)]+", "<tmp>", plan)
+            plan = re.sub(r"(_staging_|part-)[0-9a-f]{12}", r"\1<token>", plan)
+            parts.append(f"#### action {i}: {action}() in {at}\n{plan}")
     os.makedirs(os.path.dirname(os.path.abspath(out_file)), exist_ok=True)
     with open(out_file, "w", encoding="utf-8") as f:
         f.write("\n".join(parts))

@@ -60,8 +60,9 @@ def test_sales_fact_prunes_unused_columns(spark, sf_dir):
 
 # Spark jobs one `lineitem` run_pipeline starts at the test scale (the
 # test session: local[4], 4 shuffle partitions). Re-evaluating the T1
-# result for any action after its count raises this figure.
-LINEITEM_PIPELINE_JOBS = 27
+# result for any action after its count, or scanning the source again
+# for the EXTRACT row count, raises this figure.
+LINEITEM_PIPELINE_JOBS = 25
 
 
 def test_lineitem_pipeline_evaluates_t1_once(spark, sf_dir, tmp_path, monkeypatch):
@@ -1719,6 +1720,96 @@ def test_copurchase_sink_appends_deltas_without_prior_grid_probe(
     assert {
         (r.a_part, r.b_part): r.n_orders for r in pair_tot2.collect()
     } == got
+
+
+# Spark jobs one source_sketch_sink batch starts on a non-empty grid at
+# the test scale (local[4], 4 shuffle partitions), counted by the DAG
+# scheduler. A prior-grid read, join or MERGE raises this figure.
+SOURCE_SKETCH_SINK_JOBS = 2
+
+
+def test_source_sketch_sink_appends_without_prior_grid_read(
+    spark, tmp_path, monkeypatch
+):
+    """Delta-append contract for the per-source MinHash sketch: every
+    batch lands its partial as an append-only commit; after the first
+    batch the sink neither reads the grid nor merges into it, and
+    starts a pinned number of Spark jobs; the fold on read equals the
+    sketch of all docs; the aggregating compaction leaves one row per
+    source and the same fold."""
+    import duckdb
+
+    from retail_sales_etl_spark.load import lakehouse as lh
+    from retail_sales_etl_spark.streaming import events as streaming_events
+
+    words = ["ant", "bee", "cat", "dog", "eel", "fox", "gnu", "hen"]
+    rows = [
+        (
+            i,
+            " ".join(words[(i * k + i // 3) % len(words)] for k in range(1, 7)),
+            f"src{i % 3}",
+        )
+        for i in range(48)
+    ]
+    src = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(
+        rows, "doc_id bigint, text string, source string"
+    ).write.parquet(src)
+    docs = spark.read.parquet(src)
+    sketch = str(tmp_path / "sketch")
+
+    calls = []
+    orig_read = lh.LakehouseTable.read
+    orig_merge = lh.LakehouseTable.merge
+
+    def spy_read(self, *args, **kwargs):
+        calls.append(("read", self.path))
+        return orig_read(self, *args, **kwargs)
+
+    def spy_merge(self, *args, **kwargs):
+        calls.append(("merge", self.path))
+        return orig_merge(self, *args, **kwargs)
+
+    monkeypatch.setattr(lh.LakehouseTable, "read", spy_read)
+    monkeypatch.setattr(lh.LakehouseTable, "merge", spy_merge)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = []
+    for b in range(4):
+        batch = docs.filter(f"doc_id % 4 = {b}")
+        jobs0 = dag.numTotalJobs()
+        assert streaming_events.source_sketch_sink(batch, b, sketch) is True
+        jobs.append(dag.numTotalJobs() - jobs0)
+    assert calls == [], calls
+    assert jobs[1:] == [SOURCE_SKETCH_SINK_JOBS] * 3, jobs
+    monkeypatch.undo()
+
+    ops = [e["operation"] for e in lh.LakehouseTable(spark, sketch).history()]
+    assert ops == ["append"] * 4, ops
+
+    def fold():
+        return sorted(
+            tuple(r) for r in streaming_events._sketch_grid_totals(
+                spark, sketch
+            ).collect()
+        )
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{src}/*.parquet')")
+    res = con.execute(streaming_events.ORACLE["streaming_source_sketch"])
+    cols = [d[0] for d in res.description]
+    order = [cols.index(c) for c in ["source"] + [f"mh{j}" for j in range(8)]]
+    want = sorted(tuple(r[i] for i in order) for r in res.fetchall())
+    got = fold()
+    assert len(got) == 3 and got == want
+
+    raw = lh.LakehouseTable(spark, sketch).read()
+    assert raw.count() > 3  # one partial row per (batch, source)
+    assert streaming_events._aggregate_compact(
+        spark, sketch, *streaming_events._sketch_fold()
+    ) is True
+    compacted = lh.LakehouseTable(spark, sketch).read()
+    assert compacted.count() == compacted.select("source").distinct().count() == 3
+    assert fold() == got
 
 
 def test_flac_fixed_pipeline_is_shuffle_free_and_column_pruned(spark, sf_dir):

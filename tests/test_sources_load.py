@@ -13,13 +13,15 @@ from retail_sales_etl_spark.sources import readers
 
 
 def test_read_parquet_with_validation(spark, sf_dir):
-    df = readers.run_extract(
+    df, stats = readers.run_extract(
         spark,
         "region",
         table_path(sf_dir, "region"),
         ["r_regionkey", "r_name"],
     )
     assert df.count() == 5
+    assert stats["row_count"] == 5
+    assert stats["duplicate_rows"] == 0
 
 
 def test_schema_mismatch_raises(spark, sf_dir):

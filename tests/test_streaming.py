@@ -1079,8 +1079,10 @@ def test_source_sketch_sink_replay_and_order_insensitive(spark, sf_dir, tmp_path
     from pyspark.sql import functions as F
 
     from retail_sales_etl_spark.catalog import load_table
-    from retail_sales_etl_spark.load.lakehouse import LakehouseTable
-    from retail_sales_etl_spark.streaming.events import source_sketch_sink
+    from retail_sales_etl_spark.streaming.events import (
+        _sketch_grid_totals,
+        source_sketch_sink,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
@@ -1100,7 +1102,7 @@ def test_source_sketch_sink_replay_and_order_insensitive(spark, sf_dir, tmp_path
     def snap(path):
         return {
             r["source"]: tuple(r[f"mh{j}"] for j in range(8))
-            for r in LakehouseTable(spark, path).read().collect()
+            for r in _sketch_grid_totals(spark, path).collect()
         }
 
     assert snap(fwd) == snap(rev)
@@ -1111,6 +1113,52 @@ def test_source_sketch_sink_replay_and_order_insensitive(spark, sf_dir, tmp_path
     before = snap(fwd)
     assert source_sketch_sink(halves[0], 2, fwd) is True
     assert snap(fwd) == before
+
+
+def test_maintain_source_sketch_compacts_mid_stream(spark, sf_dir, tmp_path):
+    """``optimize_every`` runs the aggregating compaction inside the
+    stream: after batches 1 and 3 the grid is overwritten with one row
+    per source, and the fold over compacted plus delta rows equals the
+    sketch of all docs landed as one batch."""
+    from pyspark.sql import functions as F
+
+    from retail_sales_etl_spark.catalog import load_table
+    from retail_sales_etl_spark.load.lakehouse import LakehouseTable
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "source"
+    )
+    hi = docs.agg(F.max("doc_id")).first()[0] + 1
+    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
+    src = str(tmp_path / "src")
+    streaming_events._stage_ordered_batches(
+        docs, src, streaming_events._range_batch_expr("doc_id", cuts), 4
+    )
+    stream = (
+        spark.readStream.schema("doc_id long, text string, source string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    sketch = str(tmp_path / "sketch")
+    streaming_events.maintain_source_sketch(
+        stream, sketch, str(tmp_path / "ckpt"), optimize_every=2
+    ).awaitTermination()
+
+    table = LakehouseTable(spark, sketch)
+    ops = [e["operation"] for e in table.history()]
+    assert ops == ["append", "append", "overwrite"] * 2, ops
+    raw = table.read()
+    assert raw.count() == raw.select("source").distinct().count()
+    one = str(tmp_path / "one")
+    assert streaming_events.source_sketch_sink(docs, 0, one) is True
+
+    def snap(path):
+        return sorted(
+            tuple(r)
+            for r in streaming_events._sketch_grid_totals(spark, path).collect()
+        )
+
+    assert snap(sketch) == snap(one)
 
 
 def test_dedupe_stream_first_writer_wins_on_mutated_replay(spark, sf_dir, tmp_path):
@@ -1565,7 +1613,10 @@ def test_corpus_health_sink_additive_order_insensitive_replay(
     from retail_sales_etl_spark.catalog import load_table
     from retail_sales_etl_spark.load.lakehouse import LakehouseTable
     from retail_sales_etl_spark.streaming.events import (
+        _aggregate_compact,
         _corpus_health_partial,
+        _health_fold,
+        _health_grid_totals,
         corpus_health_sink,
     )
 
@@ -1581,7 +1632,7 @@ def test_corpus_health_sink_additive_order_insensitive_replay(
                 r.n_docs, r.total_chars, r.min_chars, r.max_chars,
                 r.total_words, r.total_distinct, r.entropy_sum,
             )
-            for r in LakehouseTable(spark, path).read().collect()
+            for r in _health_grid_totals(spark, path).collect()
         }
 
     fwd = str(tmp_path / "fwd")
@@ -1606,6 +1657,12 @@ def test_corpus_health_sink_additive_order_insensitive_replay(
     assert corpus_health_sink(hi, 1, fwd) is False
     assert LakehouseTable(spark, fwd).latest_version() == v
     assert _grid(fwd) == want
+    # replay after the aggregating compaction: still a no-op
+    assert _aggregate_compact(spark, fwd, *_health_fold()) is True
+    v = LakehouseTable(spark, fwd).latest_version()
+    assert corpus_health_sink(hi, 1, fwd) is False
+    assert LakehouseTable(spark, fwd).latest_version() == v
+    assert _grid(fwd) == want
 
 
 def test_daily_revenue_sink_additive_and_replay(spark, sf_dir, tmp_path):
@@ -1619,7 +1676,12 @@ def test_daily_revenue_sink_additive_and_replay(spark, sf_dir, tmp_path):
     from retail_sales_etl_spark.operators.profiling import (
         _daily_revenue_cents,
     )
-    from retail_sales_etl_spark.streaming.events import daily_revenue_sink
+    from retail_sales_etl_spark.streaming.events import (
+        _aggregate_compact,
+        _day_grid_fold,
+        _day_grid_totals,
+        daily_revenue_sink,
+    )
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
@@ -1630,7 +1692,7 @@ def test_daily_revenue_sink_additive_and_replay(spark, sf_dir, tmp_path):
 
     def _grid(path):
         return {
-            r.d: r.v for r in LakehouseTable(spark, path).read().collect()
+            r.d: r.v for r in _day_grid_totals(spark, path, "v").collect()
         }
 
     fwd = str(tmp_path / "fwd")
@@ -1644,6 +1706,12 @@ def test_daily_revenue_sink_additive_and_replay(spark, sf_dir, tmp_path):
     v = LakehouseTable(spark, fwd).latest_version()
     assert daily_revenue_sink(lo, 0, fwd) is False
     assert LakehouseTable(spark, fwd).latest_version() == v
+    # replay after the aggregating compaction: still a no-op
+    assert _aggregate_compact(spark, fwd, *_day_grid_fold("v")) is True
+    v = LakehouseTable(spark, fwd).latest_version()
+    assert daily_revenue_sink(hi, 1, fwd) is False
+    assert LakehouseTable(spark, fwd).latest_version() == v
+    assert _grid(fwd) == want
 
 
 def test_user_gaps_sink_folds_boundary_gap_and_skips_replay(spark, tmp_path):
@@ -2352,12 +2420,23 @@ def test_events_daily_sink_additive_order_insensitive_replay(
             assert streaming_events.events_daily_sink(batch, bid, path)
         got = {
             r.d: r.c
-            for r in LakehouseTable(spark, path).read().collect()
+            for r in streaming_events._day_grid_totals(
+                spark, path, "c"
+            ).collect()
         }
         assert got == want
         v = LakehouseTable(spark, path).latest_version()
         assert streaming_events.events_daily_sink(
             order[0][0], order[0][1], path
+        ) is False
+        assert LakehouseTable(spark, path).latest_version() == v
+        # replay after the aggregating compaction: still a no-op
+        assert streaming_events._aggregate_compact(
+            spark, path, *streaming_events._day_grid_fold("c")
+        ) is True
+        v = LakehouseTable(spark, path).latest_version()
+        assert streaming_events.events_daily_sink(
+            order[1][0], order[1][1], path
         ) is False
         assert LakehouseTable(spark, path).latest_version() == v
 
@@ -3741,3 +3820,23 @@ def test_streaming_ann_recall_member_recount(spark, sf_dir):
     # both are bounded by the shortlist size
     pq = report["pq"]
     assert 0 <= pq.n_hits <= pq.n_retrieved
+
+
+def test_streaming_source_sketch_empty_corpus_keeps_schema(
+    spark, sf_dir, tmp_path
+):
+    """An empty documents table yields an empty sketch with the SAME
+    columns and types as the non-empty entry: source plus mh0..mh7
+    strings."""
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [], "doc_id long, text string, lang string, source string, "
+            "n_chars bigint"
+    ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+
+    empty = streaming_events.q_streaming_source_sketch(spark, d)
+    full = streaming_events.q_streaming_source_sketch(spark, sf_dir)
+    assert empty.count() == 0
+    assert full.count() > 0
+    assert empty.dtypes == full.dtypes
+    assert empty.columns == ["source"] + [f"mh{j}" for j in range(8)]
