@@ -24,6 +24,7 @@ import logging
 import os
 
 from collections.abc import Iterable
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -466,72 +467,22 @@ def write_batches_to_parquet(
 
 
 def lakehouse_batch_sink(batch_df: DataFrame, batch_id: int, table_path: str) -> bool:
-    """One micro-batch -> one lakehouse commit, keyed by batch_id.
+    """One micro-batch -> one lakehouse append, keyed by batch_id.
     Returns False (and writes nothing) when the batch already landed —
     the replay-skip half of the exactly-once contract.
 
-    Replay detection is a committed-batch WATERMARK, not a history
-    scan: every sink commit stamps ``batch_hwm`` (its batch_id —
-    foreachBatch ids are monotone per checkpoint, so the newest stamp
-    IS the high-water mark), and the check reads the log backward only
-    until the first stamped entry — O(commits by other writers since
-    the sink last ran), O(1) in steady state, instead of O(all
-    commits) per micro-batch. The concurrent-duplicate half is the
-    commit itself: ``conflict_on="batch_id"`` makes landing the same
-    batch twice a log-level conflict, so of two racing writers that
-    both passed the watermark check exactly one commits and the loser
-    sees DuplicateCommitError and reports the batch as a replay.
-
-    The snapshot version is PINNED before the watermark check and the
-    commit validates against that exact version: without the pin, a
-    rival commit of the SAME batch_id landing between the check and the
-    write's own (later) version capture would be <= the effective
-    read_version and escape the conflict scan — both writers would
-    append the batch. Appends by OTHER batch_ids still commute past the
-    pin; a non-append interloper (OPTIMIZE, an overwrite) aborts the
-    attempt and the sink re-pins and re-checks from fresh state.
+    The commit goes through ``_commit_batch`` (pin, replay check,
+    ``conflict_on="batch_id"`` commit, retry) with the watermark-only
+    replay check ``_hwm_landed``: every commit stamps ``batch_hwm``, and
+    the check reads the log backward only to the newest stamp — O(1)
+    log reads in steady state, never a history scan. That check is
+    sound under this sink's one-logical-writer contract (see
+    ``_landed_on``'s scope note); a rival racing the same batch loses
+    the commit-time conflict scan and reports a replay.
     """
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
-    table = LakehouseTable(batch_df.sparkSession, table_path)
-    for _ in range(3):
-        read_version = table.latest_version()
-        hwm = table.latest_value("batch_hwm", as_of=read_version)
-        if hwm is None:
-            # Pre-watermark table (or other writers only): one fallback
-            # scan over entries (<= the pinned version) that carry a
-            # bare batch_id.
-            hwm = max(
-                (
-                    e["batch_id"]
-                    for e in table.history()
-                    if "batch_id" in e
-                    and (read_version is None or e["version"] <= read_version)
-                ),
-                default=None,
-            )
-        if hwm is not None and batch_id <= hwm:
-            return False
-        try:
-            table.write(
-                batch_df,
-                mode="append",
-                extra={"batch_id": batch_id, "batch_hwm": batch_id},
-                conflict_on="batch_id",
-                read_version=read_version,
-            )
-            return True
-        except DuplicateCommitError:
-            return False
-        except ConcurrentWriteError:
-            continue  # non-append interloper advanced the table; re-check
-    raise RuntimeError(
-        f"lakehouse_batch_sink: could not commit batch {batch_id} after 3 "
-        f"attempts (concurrent non-append writers kept advancing {table_path})"
+    return _commit_batch(
+        batch_df.sparkSession, batch_id, "lakehouse_batch_sink",
+        [table_path], lambda _: [_append(batch_df)], check=_hwm_landed,
     )
 
 
@@ -596,19 +547,12 @@ def heavy_hitter_sink(
     stream so far: counters undercount by at most n/(HH_DENOM+1), so
     every key with true share >= 1/HH_DENOM has a positive counter —
     the streaming candidates are a superset of the true heavy hitters
-    at every point in the stream's life. Exactly-once: same
-    batch-watermark + conditional-commit contract as
-    ``lakehouse_batch_sink``.
+    at every point in the stream's life. Exactly-once: ``_commit_batch``
+    with the watermark-only check, as ``lakehouse_batch_sink``.
     """
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
     from ..operators.profiling import HH_DENOM, _mg_summaries, mg_merge
 
     spark = batch_df.sparkSession
-    table = LakehouseTable(spark, table_path)
     # One scan of the micro-batch: summaries + per-partition row counts.
     part_summaries = (
         batch_df.select(F.col(key_col).cast("string").alias("key"))
@@ -616,24 +560,20 @@ def heavy_hitter_sink(
         .collect()
     )
     n_batch = sum(r["part_rows"] for r in part_summaries)
-    for _ in range(3):
-        # Pin the snapshot BEFORE reading: the overwrite below commits
-        # against this exact version, so a commit landing between the
-        # read and the write aborts instead of being clobbered (the
-        # zombie-instance failover case).
-        read_version = table.latest_version()
-        hwm = table.latest_value("batch_hwm", as_of=read_version)
-        if hwm is not None and batch_id <= hwm:
-            return False
+
+    def stage(pin):
+        # the overwrite commits against this pin, so a commit landing
+        # between the read and the write aborts instead of being
+        # clobbered (the zombie-instance failover case)
         counters: dict = {}
         n_seen = 0
-        if read_version is not None:
+        if pin.version is not None:
             # as-of backward scan: a maintenance commit without the
             # stamp (e.g. OPTIMIZE) must not reset the lifetime count
-            n_seen = table.latest_value("hh_rows_seen", as_of=read_version) or 0
+            n_seen = pin.table.latest_value("hh_rows_seen", as_of=pin.version) or 0
             counters = {
                 r["key"]: r["cnt"]
-                for r in table.read(version=read_version).collect()
+                for r in pin.table.read(version=pin.version).collect()
             }
         merged = mg_merge(
             counters, ((r["key"], r["cnt"]) for r in part_summaries), HH_DENOM
@@ -641,26 +581,11 @@ def heavy_hitter_sink(
         summary = spark.createDataFrame(
             [(k, int(v)) for k, v in merged.items()], "key string, cnt long"
         )
-        try:
-            table.write(
-                summary,
-                mode="overwrite",
-                extra={
-                    "batch_id": batch_id,
-                    "batch_hwm": batch_id,
-                    "hh_rows_seen": n_seen + n_batch,
-                },
-                conflict_on="batch_id",
-                read_version=read_version,
-            )
-            return True
-        except DuplicateCommitError:
-            return False
-        except ConcurrentWriteError:
-            continue  # someone else advanced the table; re-fold fresh
-    raise RuntimeError(
-        f"heavy_hitter_sink: could not commit batch {batch_id} after 3 "
-        f"attempts (concurrent writers kept advancing {table_path})"
+        return [_overwrite(summary, hh_rows_seen=n_seen + n_batch)]
+
+    return _commit_batch(
+        spark, batch_id, "heavy_hitter_sink", [table_path], stage,
+        check=_hwm_landed,
     )
 
 
@@ -681,9 +606,11 @@ def maintain_heavy_hitters(
     return _run_foreach_batch(stream, _sink, checkpoint)
 
 
-def _landed_on(table, batch_id: int, read_version, hwm) -> bool:
+def _landed_on(table, batch_id: int, read_version, hwm) -> tuple[bool, int | None]:
     """Has ``batch_id`` already committed to ``table`` (at or below the
-    pinned ``read_version``)?
+    pinned ``read_version``)? Returns ``(landed, version)``: the
+    version is the commit that carries the batch, or None when it is
+    not in the surviving log.
 
     Fast path: the ``batch_hwm`` stamp — a batch ABOVE the newest
     watermark has certainly not landed (foreachBatch ids are monotone
@@ -692,41 +619,35 @@ def _landed_on(table, batch_id: int, read_version, hwm) -> bool:
     instance that committed a LATER batch first would make a bare
     ``batch_id <= hwm`` check silently drop this batch's rows, so the
     suspect path confirms by an exact scan of the surviving history
-    for this very batch_id (the ``lakehouse_batch_sink`` fallback,
-    scoped to one id). The scan runs only on replay-suspect batches —
-    restarts, never steady state. When ``clean_log`` has truncated the
-    history (oldest surviving commit > 1), entries below the replay
-    base are gone and the watermark — which survives via checkpoint
-    key_values — is the only evidence; batches at or below it are
-    treated as landed, which is exactly the long-landed ancient-replay
-    case the watermark exists for. The commit-time
-    ``conflict_on="batch_id"`` scan remains the final same-batch guard
-    either way. ``hwm`` is the caller-read ``batch_hwm`` at
-    ``read_version`` (read once per attempt — the caller also folds it
-    into its commit stamp, and ``monotone_max`` folds rival stamps
-    landing in the pin-to-commit gap, so the watermark never regresses
-    when an out-of-order batch lands).
+    for this very batch_id. The scan runs only on replay-suspect
+    batches — restarts, never steady state. When ``clean_log`` has
+    truncated the history (oldest surviving commit > 1), entries below
+    the replay base are gone and the watermark — which survives via
+    checkpoint key_values — is the only evidence; batches at or below
+    it are treated as landed (with no version), which is exactly the
+    long-landed ancient-replay case the watermark exists for. The
+    commit-time ``conflict_on="batch_id"`` scan remains the final
+    same-batch guard either way.
 
-    Scope note: the sibling single-table sinks (``lakehouse_batch_sink``,
-    heavy-hitter, the event-rollup IVM via ``_additive_grid_sink``,
-    CDC-apply) keep the bare ``batch_id <= hwm`` check. That is SOUND
-    under their contract — one logical writer per table (one
-    checkpoint lineage, zombie instances included), where a rival
-    that advanced the watermark necessarily processed every earlier
-    batch first, so at-or-below
-    the watermark always means landed. The dedup sinks harden beyond
-    that contract because their maintained INDEX tables are long-lived
-    shared artifacts where independent distinct-batch writers are a
-    plausible deployment (the r12 judge-advice scenario)."""
+    Scope note: ``_commit_batch`` runs this check for every sink
+    except the four whose contract is one logical writer per table —
+    ``lakehouse_batch_sink``, ``heavy_hitter_sink``, ``cdc_apply_sink``
+    and ``ivm_lakehouse_sink``. Those use ``_hwm_landed``, which never
+    reads ``history()``: under one checkpoint lineage (zombie instances
+    included) a rival that advanced the watermark necessarily processed
+    every earlier batch first, so at-or-below the watermark always
+    means landed. Every other sink's tables are long-lived shared
+    artifacts (indexes, grids, per-key state) where independent
+    distinct-batch writers are a plausible deployment, so they pay the
+    exact scan on suspect batches."""
     if hwm is None or batch_id > hwm:
-        return False
+        return False, None
     entries = table.history()
-    if any(
-        e.get("batch_id") == batch_id
-        and (read_version is None or e["version"] <= read_version)
-        for e in entries
-    ):
-        return True
+    for e in entries:
+        if e.get("batch_id") == batch_id and (
+            read_version is None or e["version"] <= read_version
+        ):
+            return True, e["version"]
     # Not in surviving history: only a truncated log (clean_log ran;
     # commits number from 1) can hide a genuinely-landed batch.
     truncated = not entries or entries[0]["version"] > 1
@@ -753,21 +674,166 @@ def _landed_on(table, batch_id: int, read_version, hwm) -> bool:
             hwm,
             entries[0]["version"] if entries else None,
         )
-    return truncated
+    return truncated, None
+
+
+def _hwm_landed(table, batch_id: int, read_version, hwm) -> tuple[bool, None]:
+    """The watermark-only replay check of the one-logical-writer sinks
+    (see ``_landed_on``'s scope note): ``batch_id <= hwm`` means landed.
+    O(1) log reads, no ``history()`` — except on a pre-watermark table
+    (no stamp at or below the pin), which falls back to one scan for
+    the newest bare ``batch_id``."""
+    if hwm is None and read_version is not None:
+        hwm = max(
+            (
+                e["batch_id"]
+                for e in table.history()
+                if "batch_id" in e and e["version"] <= read_version
+            ),
+            default=None,
+        )
+    return hwm is not None and batch_id <= hwm, None
+
+
+class _Pin(NamedTuple):
+    """One table pinned for one ``_commit_batch`` attempt."""
+
+    table: "LakehouseTable"
+    version: int | None  # the pinned read version; None = empty table
+    hwm: int | None  # the table's watermark at the pin
+    landed: bool  # the batch already committed to this table
+    landed_at: int | None  # the version it committed at, if still logged
+
+
+class _Part(NamedTuple):
+    """What one table commits for the batch (see ``_commit_batch``)."""
+
+    mode: str  # append | overwrite | merge
+    df: DataFrame
+    stamp: dict  # extra log keys beside batch_id and the watermark
+    merge_kw: dict  # merge(): primary_key, deletes, prune_keys
+
+
+def _append(df: DataFrame, **stamp) -> _Part:
+    return _Part("append", df, stamp, {})
+
+
+def _overwrite(df: DataFrame, **stamp) -> _Part:
+    return _Part("overwrite", df, stamp, {})
+
+
+def _merge(df: DataFrame, primary_key: list, **merge_kw) -> _Part:
+    return _Part("merge", df, {}, {"primary_key": primary_key, **merge_kw})
+
+
+def _commit_batch(
+    spark: SparkSession,
+    batch_id: int,
+    name: str,
+    paths: list[str],
+    stage,
+    hwm_key: str = "batch_hwm",
+    check=_landed_on,
+) -> bool:
+    """The one exactly-once commit protocol of the streaming sinks: land
+    ``batch_id`` on the lakehouse tables at ``paths`` in order, the
+    LAST one being the marker (it commits last, so a marker hit means
+    the batch fully landed). Returns False on a full replay.
+
+    Per attempt: pin the marker and read its ``hwm_key`` watermark at
+    the pin; if ``check`` says the batch landed there, stop. Otherwise
+    pin the other tables the same way and call ``stage(*pins)`` ONCE
+    (one ``_Pin`` per path, in order) — the sink's staging callback
+    reads whatever prior state it needs at those pins and returns one
+    ``_Part`` per table (``_append`` / ``_overwrite`` / ``_merge``) or
+    None for nothing. Then commit the parts in order, each conditional
+    on its table's pin with ``conflict_on="batch_id"``; a non-marker
+    table that already holds the batch is skipped, and a
+    ``DuplicateCommitError`` there means a rival landed that table's
+    part. A ``DuplicateCommitError`` on the marker means a rival landed
+    the batch (False). A ``ConcurrentWriteError`` anywhere (a
+    non-append interloper such as OPTIMIZE or a compaction landed after
+    a pin) starts the next attempt from fresh pins; three attempts,
+    then fail loud. The pin comes BEFORE the replay check so a rival
+    commit of this same batch landing between check and commit is
+    above the pin, where the commit's conflict scan sees it.
+
+    Every commit stamps ``batch_id`` and ``hwm_key`` = max(batch_id,
+    the table's watermark at the pin), so an out-of-order batch never
+    regresses the watermark; an append also folds rival stamps landing
+    in the pin-to-commit gap (``monotone_max`` over every ``*_hwm``
+    stamp, the part's own included). A MERGE or overwrite aborts on any
+    commit after its pin, so it has no rival stamps to fold.
+
+    ``check`` is the sink's replay rule, fixed by its writer contract:
+    ``_landed_on`` (exact history scan on replay-suspect batches) or
+    ``_hwm_landed`` (watermark only) — see ``_landed_on``'s scope note.
+    A pin carries the version the batch landed at, so a sink whose
+    marker delta reads another table can rewind that read to the
+    pre-batch snapshot (cohort, novelty)."""
+    from ..load.lakehouse import (
+        ConcurrentWriteError,
+        DuplicateCommitError,
+        LakehouseTable,
+    )
+
+    tables = [LakehouseTable(spark, p) for p in paths]
+
+    def pin(t) -> _Pin:
+        v = t.latest_version()
+        hwm = t.latest_value(hwm_key, as_of=v)
+        return _Pin(t, v, hwm, *check(t, batch_id, v, hwm))
+
+    for _ in range(3):
+        marker = pin(tables[-1])
+        if marker.landed:
+            return False
+        pins = [pin(t) for t in tables[:-1]] + [marker]
+        try:
+            for p, part in zip(pins, stage(*pins)):
+                if part is None or p.landed:
+                    continue
+                extra = {
+                    "batch_id": batch_id,
+                    hwm_key: batch_id if p.hwm is None else max(batch_id, p.hwm),
+                    **part.stamp,
+                }
+                try:
+                    if part.mode == "merge":
+                        p.table.merge(
+                            part.df, extra=extra, read_version=p.version,
+                            conflict_on="batch_id", **part.merge_kw,
+                        )
+                    else:
+                        p.table.write(
+                            part.df, mode=part.mode, extra=extra,
+                            conflict_on="batch_id", read_version=p.version,
+                            monotone_max=tuple(
+                                k for k in extra if k.endswith("_hwm")
+                            ) if part.mode == "append" else (),
+                        )
+                except DuplicateCommitError:
+                    if p is marker:
+                        return False  # a rival landed this batch
+            return True
+        except ConcurrentWriteError:
+            continue  # an interloper advanced a pinned table; re-pin
+    raise RuntimeError(
+        f"{name}: could not commit batch {batch_id} after 3 attempts "
+        f"(concurrent writers kept advancing {paths[-1]})"
+    )
 
 
 _PROBE_PRUNE_CAP = 200_000
-"""Max distinct probe keys a dedup sink will collect for file-level
-data skipping. The keys are the SAME rows the probe join already
+"""Max distinct probe keys a sink will collect for file-level data
+skipping. The keys are the SAME rows the probe join already
 broadcasts (the bounded-batch invariant), so collecting them to the
 driver adds no new scale assumption — but a pathological mega-batch
 above this cap falls back to the full pinned read rather than build an
 oversized IN-list plan."""
 
 
-_PROBE_SMALL_INDEX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_PROBE_SMALL_INDEX_ROWS", 100_000)
-)
+_PROBE_SMALL_INDEX_ROWS = 100_000
 """Below this many live index rows (manifest ``__nrows__`` count —
 pure log arithmetic, no job), a sink's prior-state read skips the
 probe-key collection and reads the pinned table whole: file pruning
@@ -779,23 +845,13 @@ As the index grows past the threshold the collect+prune path resumes
 automatically — the scale story is unchanged."""
 
 
-def _skip_probe_collect(table, version) -> bool:
-    """True when the pinned index is small enough (see
-    ``_PROBE_SMALL_INDEX_ROWS``) that one full read beats collecting
-    the batch's probe keys. Unknown row counts (pre-manifest commits)
-    keep the probe path — never guess small."""
-    n = table.live_rows(version=version)
-    return n is not None and n <= _PROBE_SMALL_INDEX_ROWS
-
-
 def _probe_keys_or_warn(probe_keys: DataFrame, batch_id: int, name: str,
                         column: str) -> list | None:
     """Collect a batch's distinct probe keys for file-level data
     skipping, or None above ``_PROBE_PRUNE_CAP`` — LOUDLY (the
     ``_landed_on`` loudness standard): the fallback is correct but
     reintroduces the O(corpus) full-index scan for the batch, and a
-    silent one reads as "pruned". One helper so the dedup sinks and
-    the cohort sink can never drift on the cap semantics."""
+    silent one reads as "pruned"."""
     collected = probe_keys.distinct().limit(_PROBE_PRUNE_CAP + 1).collect()
     if len(collected) <= _PROBE_PRUNE_CAP:
         return [r[0] for r in collected]
@@ -811,6 +867,51 @@ def _probe_keys_or_warn(probe_keys: DataFrame, batch_id: int, name: str,
     return None
 
 
+class _ProbeRead:
+    """A sink's prior-state reads restricted to one batch's probe keys
+    (``keys``: a one-column frame of the batch's values in ``column``).
+
+    ``read(table, version, empty_schema)`` reads the pinned snapshot —
+    an empty frame of ``empty_schema`` when there is none (version None
+    or 0) — through the file-pruned ``read_where_in`` on the batch's
+    distinct keys, so on a table the maintenance cycle keeps Z-ordered
+    by ``column`` a batch opens only the files whose [min, max] can
+    hold a probe key plus the not-yet-compacted recent appends, not the
+    ENTIRE maintained state. The keys are collected lazily, on the
+    first read that can use them (a first batch or a full replay never
+    pays the collection job), and kept across commit attempts. Two
+    fallbacks read the pinned table whole: a metadata-scale table
+    (``_PROBE_SMALL_INDEX_ROWS``; unknown row counts keep the probe
+    path — never guess small) and a batch over ``_PROBE_PRUNE_CAP``
+    keys (LOUD). ``prune_keys`` hands the same key set to a MERGE's
+    touched-file detection."""
+
+    def __init__(self, keys: DataFrame, column: str, batch_id: int, name: str):
+        self._keys_df, self.column = keys, column
+        self._batch_id, self._name = batch_id, name
+        self.keys = ()  # () = not collected yet; None = read whole
+
+    def read(self, table, version, empty_schema: str) -> DataFrame:
+        if not version:
+            return table.spark.createDataFrame([], empty_schema)
+        if self.keys == ():
+            n = table.live_rows(version=version)
+            self.keys = (
+                None
+                if n is not None and n <= _PROBE_SMALL_INDEX_ROWS
+                else _probe_keys_or_warn(
+                    self._keys_df, self._batch_id, self._name, self.column
+                )
+            )
+        if self.keys is None:
+            return table.read(version=version)
+        return table.read_where_in(self.column, self.keys, version=version)
+
+    @property
+    def prune_keys(self) -> tuple:
+        return self.column, self.keys or None
+
+
 def _dedup_sink_commit(
     spark,
     batch_id: int,
@@ -821,75 +922,24 @@ def _dedup_sink_commit(
     batch_doc_ids: DataFrame,
     partner_pairs,
     name: str,
-    probe_column: str | None = None,
-    probe_keys: DataFrame | None = None,
+    probe_column: str,
+    probe_keys: DataFrame,
 ) -> bool:
-    """The exactly-once two-table commit protocol shared by the
-    incremental dedup sinks (``lsh_dedup_sink`` / ``phash_dedup_sink``)
-    — extracted so the contract is written (and fixed) once.
+    """The two-table commit shared by the incremental dedup sinks
+    (``lsh_dedup_sink`` / ``phash_dedup_sink``) through
+    ``_commit_batch``: verdicts first, the batch's index rows last (the
+    index is the marker). Verdicts are computed from the pinned
+    PRE-batch index — read through ``_ProbeRead`` on the batch's
+    ``probe_column`` keys — by the sink-specific ``partner_pairs``
+    callback (``seen -> (doc_id, partner)`` candidate pairs). A crash
+    between the two commits replays into a verdict skip + index append
+    — never a double verdict or a doc judged against itself. The
+    residual IN filter of the pruned read only drops rows the
+    equi-join would drop anyway, so verdicts are unchanged."""
+    probe = _ProbeRead(probe_keys, probe_column, batch_id, name)
 
-    Per attempt: pin the index snapshot, replay-check BOTH tables via
-    ``_landed_on`` (index first — it commits last, so an index hit
-    means the batch fully landed), compute per-doc verdicts from the
-    pinned pre-batch index through the sink-specific ``partner_pairs``
-    callback (``seen -> (doc_id, partner)`` candidate pairs), then
-    commit verdicts FIRST and the batch's index rows SECOND, both
-    ``conflict_on="batch_id"`` conditional against their pinned
-    versions. A crash between the two commits replays into a verdict
-    skip + index append — never a double verdict or a doc judged
-    against itself. ``ConcurrentWriteError`` (a non-append interloper
-    advanced a table) re-pins both tables and retries; a rival landing
-    this same batch surfaces as ``DuplicateCommitError`` and is
-    reported as a replay.
-
-    ``probe_column``/``probe_keys`` turn the per-batch index read into
-    a FILE-PRUNED read: the batch's distinct probe keys (one narrow
-    column, bounded by the same invariant that makes the probe join's
-    broadcast pin sound) are collected once and the pinned snapshot is
-    read through ``read_where_in`` — stats-manifest data skipping, so
-    on an index the maintenance cycle keeps Z-ordered by the probe
-    column (``maintain_*`` passes ``zorder_by``), the probe opens only
-    the files whose [min, max] can contain a probe key plus any
-    not-yet-compacted recent appends, instead of scanning the ENTIRE
-    maintained index every micro-batch (O(corpus) rows — the one term
-    a 100 TB ingest can't pay). Statless legacy files are
-    conservatively kept; above ``_PROBE_PRUNE_CAP`` distinct keys the
-    sink falls back to the full pinned read. The residual IN filter
-    only drops rows the equi-join would drop anyway, so verdicts are
-    unchanged."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
-    idx = LakehouseTable(spark, index_path)
-    verd = LakehouseTable(spark, verdicts_path)
-    keys = ()  # () = not collected yet; None = collected, over cap
-    for _ in range(3):
-        rv_i = idx.latest_version()
-        hwm_i = idx.latest_value("batch_hwm", as_of=rv_i)
-        if _landed_on(idx, batch_id, rv_i, hwm_i):
-            return False  # fully landed (the index commits last)
-        if rv_i is None:
-            seen = spark.createDataFrame([], empty_index_schema)
-        else:
-            if keys == () and probe_column is not None and probe_keys is not None:
-                # collected lazily: the very first batch has no index
-                # to probe, so it never pays the key-collection job —
-                # and a metadata-scale index skips the collection
-                # outright (one full read beats the driver round-trip)
-                keys = (
-                    None
-                    if _skip_probe_collect(idx, rv_i)
-                    else _probe_keys_or_warn(
-                        probe_keys, batch_id, name, probe_column
-                    )
-                )
-            if keys:
-                seen = idx.read_where_in(probe_column, keys, version=rv_i)
-            else:
-                seen = idx.read(version=rv_i)
+    def stage(verd, idx):
+        seen = probe.read(idx.table, idx.version, empty_index_schema)
         partners = (
             partner_pairs(seen)
             .groupBy("doc_id")
@@ -906,56 +956,10 @@ def _dedup_sink_commit(
             .cast("bigint")
             .alias("n_dup_sources"),
         )
-        # The stamp is max(batch_id, table hwm): an out-of-order batch
-        # landing after a rival's later one must not REGRESS the
-        # watermark — replay detection of the later batch depends on it
-        # (the conflict_on scan only covers commits above read_version).
-        # This max folds every stamp at or below the pinned version;
-        # monotone_max=("batch_hwm",) below makes the commit's rebase
-        # scan fold stamps landing IN the pin-to-commit gap, so the
-        # newest stamp is the true high-water mark even when a rival's
-        # blind append slips into that window.
-        rv_v = verd.latest_version()
-        hwm_v = verd.latest_value("batch_hwm", as_of=rv_v)
-        if not _landed_on(verd, batch_id, rv_v, hwm_v):
-            marker_v = {
-                "batch_id": batch_id,
-                "batch_hwm": max(batch_id, hwm_v if hwm_v is not None else batch_id),
-            }
-            try:
-                verd.write(
-                    verdicts,
-                    mode="append",
-                    extra=marker_v,
-                    conflict_on="batch_id",
-                    read_version=rv_v,
-                    monotone_max=("batch_hwm",),
-                )
-            except DuplicateCommitError:
-                pass  # a rival landed this batch's verdicts
-            except ConcurrentWriteError:
-                continue  # re-pin both tables and retry
-        marker_i = {
-            "batch_id": batch_id,
-            "batch_hwm": max(batch_id, hwm_i if hwm_i is not None else batch_id),
-        }
-        try:
-            idx.write(
-                index_rows,
-                mode="append",
-                extra=marker_i,
-                conflict_on="batch_id",
-                read_version=rv_i,
-                monotone_max=("batch_hwm",),
-            )
-            return True
-        except DuplicateCommitError:
-            return False
-        except ConcurrentWriteError:
-            continue
-    raise RuntimeError(
-        f"{name}: could not commit batch {batch_id} after 3 "
-        f"attempts (concurrent writers kept advancing {index_path})"
+        return [_append(verdicts), _append(index_rows)]
+
+    return _commit_batch(
+        spark, batch_id, name, [verdicts_path, index_path], stage
     )
 
 
@@ -1026,14 +1030,10 @@ def lsh_dedup_sink(
     equi-join of the (small) batch band set against the index on
     (band_idx, band_key) — the batch side carries an explicit
     broadcast PIN (``_lsh_partner_pairs``) so the index never
-    shuffles — plus an intra-batch self-join. Both tables follow the
-    shared exactly-once contract (``_dedup_sink_commit``): pinned
-    read_version, exact replay detection (``_landed_on``),
-    ``conflict_on="batch_id"`` conditional commits; verdicts commit
-    FIRST (computed from the pinned pre-batch index), then the batch's
-    band rows append — a crash between the two replays into a verdict
-    skip + index append, never a double verdict or a doc judged
-    against itself.
+    shuffles — plus an intra-batch self-join. Exactly-once through
+    ``_dedup_sink_commit`` (``_commit_batch``): verdicts FIRST
+    (computed from the pinned pre-batch index), then the batch's band
+    rows.
     """
     from ..operators.dedup import band_rows
 
@@ -1193,12 +1193,8 @@ def phash_dedup_sink(
     one equi-join of the (small) 13x batch probe set against the
     index on the hash value — the probe side carries an explicit
     broadcast PIN (``_phash_partner_pairs``) so the index never
-    shuffles. Shared exactly-once contract (``_dedup_sink_commit``,
-    as lsh_dedup_sink): pinned read_version, exact replay detection
-    (``_landed_on``), ``conflict_on="batch_id"`` conditional commits,
-    verdicts first then index (a crash between the two replays into a
-    verdict skip + index append, never a double verdict or
-    self-judgement).
+    shuffles. Exactly-once through ``_dedup_sink_commit``, as
+    ``lsh_dedup_sink``.
     """
     from ..operators.multimodal import (
         PHASH_H,
@@ -1289,135 +1285,26 @@ def maintain_phash_dedup(
 _IVM_DEC = "decimal(25,6)"
 
 
-def _delta_grid_sink(
+def _append_batch(
     spark: SparkSession,
     batch_id: int,
     table_path: str,
     hwm_key: str,
-    partial: DataFrame,
+    df: DataFrame,
     name: str,
 ) -> bool:
-    """DELTA-APPEND exactly-once commit of one batch's grid partial
-    for any commutative-monoid grid (sum, count, min, max) — the
-    pmi/rake/bm25 pattern factored out: no prior-grid read, no MERGE
-    rewrite, O(batch partial) write volume; totals fold on read
-    (``_fold_grid``) and the maintenance cycle's aggregating
-    compaction (``_aggregate_compact``) re-bounds live rows to one per
-    key. Replay/rival discipline: pin the version, read the ``hwm_key``
-    watermark at the pin, and ask ``_landed_on`` — above the watermark
-    the batch is new (O(1)); at or below it the surviving history is
-    scanned for this batch_id, so a batch a rival skipped past still
-    lands (unlike ``_additive_grid_sink``'s bare ``batch_id <= hwm``).
-    The append commits with ``conflict_on="batch_id"`` (a rival that
-    landed the same batch first wins, this one returns False) and
-    ``monotone_max`` on the watermark. A compaction landing mid-attempt
-    aborts the append; three attempts, then fail loud. Returns False
-    on replay."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
-    table = LakehouseTable(spark, table_path)
-    for _ in range(3):
-        rv = table.latest_version()
-        hwm = table.latest_value(hwm_key, as_of=rv)
-        if _landed_on(table, batch_id, rv, hwm):
-            return False
-        try:
-            table.write(
-                partial,
-                mode="append",
-                extra={
-                    "batch_id": batch_id,
-                    hwm_key: max(
-                        batch_id, hwm if hwm is not None else batch_id
-                    ),
-                },
-                conflict_on="batch_id",
-                read_version=rv,
-                monotone_max=(hwm_key,),
-            )
-            return True
-        except DuplicateCommitError:
-            return False  # a rival landed this batch's partial
-        except ConcurrentWriteError:
-            continue  # a compaction landed mid-attempt; re-pin
-    raise RuntimeError(
-        f"{name}: could not append batch {batch_id} after 3 attempts "
-        f"(concurrent writers kept advancing {table_path})"
-    )
-
-
-def _additive_grid_sink(
-    batch_df: DataFrame,
-    batch_id: int,
-    table_path: str,
-    hwm_key: str,
-    keys: list[str],
-    partial: DataFrame,
-    combine,
-    name: str,
-) -> bool:
-    """The read-modify-write MERGE protocol of the event-rollup IVM
-    (``ivm_lakehouse_sink``, its only caller; every other grid sink
-    delta-appends through ``_delta_grid_sink``). The rollup stays
-    here because its replay check answers from the watermark alone
-    and never reads ``history()``, which ``_landed_on`` does for any
-    batch at or below the watermark
-    (``test_ivm_replay_check_reads_only_latest_entry`` pins this).
-    The protocol: pin the
-    snapshot version BEFORE the replay check and the view read (the
-    commit below is conditional on that exact version, so an
-    interloper aborts and the sink re-pins and re-folds instead of
-    clobbering); ``batch_id <= hwm`` at the pinned version means
-    replay (foreachBatch ids are monotone under the one-logical-writer
-    contract — see ``_landed_on``'s scope note; pre-watermark tables
-    fall back to one full history scan); the first batch commits a
-    conditional overwrite (creates the table, double-create aborts);
-    later batches MERGE ``combine(partial, current)`` on ``keys``
-    conditionally. Three attempts, then fail loud. Returns False when
-    the batch was a replay (nothing written)."""
-    from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
-
-    table = LakehouseTable(batch_df.sparkSession, table_path)
-
-    def _hwm(as_of) -> int:
-        hwm = table.latest_value(hwm_key, as_of=as_of)
-        if hwm is not None:
-            return hwm
-        return max(
-            (e["batch_id"] for e in table.history() if "batch_id" in e),
-            default=-1,
-        )
-
-    marker = {"batch_id": batch_id, hwm_key: batch_id}
-    for _ in range(3):
-        read_version = table.latest_version()
-        if batch_id <= _hwm(read_version):
-            return False
-        if read_version is None:
-            try:
-                table.write(
-                    partial, mode="overwrite", extra=marker,
-                    read_version=read_version,
-                )
-                return True
-            except ConcurrentWriteError:
-                continue
-        current = table.read(version=read_version)
-        try:
-            table.merge(
-                combine(partial, current), keys, extra=marker,
-                read_version=read_version,
-            )
-            return True
-        except ConcurrentWriteError:
-            continue
-    raise RuntimeError(
-        f"{name}: could not commit batch {batch_id} after 3 "
-        f"attempts (concurrent writers kept advancing {table_path})"
+    """Exactly-once single-table APPEND of one batch's rows through
+    ``_commit_batch`` (``_landed_on`` replay check, ``hwm_key``
+    watermark). The delta-append grids land their batch partial here —
+    no prior-grid read, no MERGE rewrite, O(batch partial) write
+    volume; totals fold on read (``_fold_grid``) and the maintenance
+    cycle's aggregating compaction (``_aggregate_compact``) re-bounds
+    live rows to one per key. Append-only row tables (ivf vectors and
+    codes, bm25 postings) land the same way. Returns False on
+    replay."""
+    return _commit_batch(
+        spark, batch_id, name, [table_path], lambda _: [_append(df)],
+        hwm_key=hwm_key,
     )
 
 
@@ -1430,22 +1317,18 @@ def ivm_lakehouse_sink(
     ``ivm_priority_revenue``'s base+delta refresh.
 
     Per batch: aggregate the batch (map-side partial over at most
-    |batch| rows), read the tiny current view, add the partial to the
-    touched groups, and MERGE — one atomic commit that rewrites only
-    files containing touched keys. The raw stream is never re-read and
-    the view is never recomputed from scratch. Exactly-once: every
-    commit carries ``ivm_batch_hwm``, the high-water batch_id, so the
-    replay check is a backward scan to the newest stamp (O(1) on a
-    sink-only table, robust to interleaved maintenance commits) —
-    foreachBatch batch_ids are monotone, so ``batch_id <= hwm`` means
-    replay. Multi-writer safety: the snapshot version is PINNED before
-    the hwm check and view read, and both the first-batch ``overwrite``
-    and every later MERGE commit conditionally against that exact
-    version — an interloping commit (a zombie instance, a duplicate
-    batch) aborts with ConcurrentWriteError and the sink re-checks and
-    re-folds from fresh state instead of clobbering it. Sums are
-    DECIMAL so the maintained view is bit-identical to a from-scratch
-    aggregate of everything delivered.
+    |batch| rows), read the tiny current view at the pin, add the
+    partial to the touched groups, and MERGE — one atomic commit that
+    rewrites only files containing touched keys (the first batch
+    creates the view with a conditional overwrite). The raw stream is
+    never re-read and the view is never recomputed from scratch.
+    Exactly-once: ``_commit_batch`` with the watermark-only check
+    (``ivm_batch_hwm``; one logical writer per view — see
+    ``_landed_on``'s scope note), so a replay costs O(1) log reads and
+    never scans ``history()``. An interloping commit aborts the MERGE
+    and the sink re-pins and re-folds from fresh state instead of
+    clobbering it. Sums are DECIMAL so the maintained view is
+    bit-identical to a from-scratch aggregate of everything delivered.
 
     Returns False when the batch was a replay (nothing written).
     """
@@ -1456,10 +1339,13 @@ def ivm_lakehouse_sink(
         ),
     )
 
-    def combine(p: DataFrame, c: DataFrame) -> DataFrame:
-        return (
-            p.alias("p")
-            .join(c.alias("c"), "event_type", "left")
+    def stage(view):
+        if view.version is None:
+            return [_overwrite(partial)]
+        current = view.table.read(version=view.version)
+        combined = (
+            partial.alias("p")
+            .join(current.alias("c"), "event_type", "left")
             .select(
                 "event_type",
                 (
@@ -1474,10 +1360,11 @@ def ivm_lakehouse_sink(
                 ).cast(_IVM_DEC).alias("total_value"),
             )
         )
+        return [_merge(combined, ["event_type"])]
 
-    return _additive_grid_sink(
-        batch_df, batch_id, table_path, "ivm_batch_hwm",
-        ["event_type"], partial, combine, "ivm_lakehouse_sink",
+    return _commit_batch(
+        batch_df.sparkSession, batch_id, "ivm_lakehouse_sink", [table_path],
+        stage, hwm_key="ivm_batch_hwm", check=_hwm_landed,
     )
 
 
@@ -1508,9 +1395,9 @@ def cdc_apply_sink(
     values) into a lakehouse table — the standard Delta CDC-apply
     pattern, composed from the existing pieces: ``merge`` with a
     deletes set (one commit rewrites only the files containing changed
-    keys), the ``cdc_batch_hwm`` replay watermark, the pinned
-    read_version, and ``conflict_on="batch_id"`` so two racing writers
-    of the same batch land it exactly once. Upserts take the batch's
+    keys) committed through ``_commit_batch`` with the watermark-only
+    ``cdc_batch_hwm`` replay check (one logical writer per table), so
+    two racing writers of the same batch land it exactly once. Upserts take the batch's
     row for the key; deletes drop it. Returns False on replay.
 
     A micro-batch may carry SEVERAL events for one key; applying them
@@ -1522,13 +1409,6 @@ def cdc_apply_sink(
     REFUSES a batch containing duplicate keys rather than corrupt the
     table.
     """
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
-    table = LakehouseTable(batch_df.sparkSession, table_path)
     keys = list(primary_key)
     if sequence_by is not None:
         from pyspark.sql import Window
@@ -1552,51 +1432,16 @@ def cdc_apply_sink(
                 "cdc_apply_sink: batch carries multiple change events for "
                 "one key; pass sequence_by to apply each key's latest event"
             )
-    marker = {"batch_id": batch_id, "cdc_batch_hwm": batch_id}
     ups = batch_df.filter(F.col("op").isin("insert", "update")).drop("op")
     dels = batch_df.filter(F.col("op") == "delete").select(*keys)
-    for _ in range(3):
-        read_version = table.latest_version()
-        hwm = table.latest_value("cdc_batch_hwm", as_of=read_version)
-        if hwm is None:
-            hwm = max(
-                (
-                    e["batch_id"]
-                    for e in table.history()
-                    if "batch_id" in e
-                    and (read_version is None or e["version"] <= read_version)
-                ),
-                default=None,
-            )
-        if hwm is not None and batch_id <= hwm:
-            return False
-        try:
-            if read_version is None:
-                # first batch: deletes against an empty table are no-ops
-                table.write(
-                    ups,
-                    mode="overwrite",
-                    extra=marker,
-                    conflict_on="batch_id",
-                    read_version=None,
-                )
-            else:
-                table.merge(
-                    ups,
-                    keys,
-                    deletes=dels,
-                    extra=marker,
-                    conflict_on="batch_id",
-                    read_version=read_version,
-                )
-            return True
-        except DuplicateCommitError:
-            return False
-        except ConcurrentWriteError:
-            continue  # rival advanced the table; re-pin and re-check
-    raise RuntimeError(
-        f"cdc_apply_sink: could not commit batch {batch_id} after 3 "
-        f"attempts (concurrent writers kept advancing {table_path})"
+    return _commit_batch(
+        batch_df.sparkSession, batch_id, "cdc_apply_sink", [table_path],
+        # first batch: deletes against an empty table are no-ops
+        lambda pin: [
+            _overwrite(ups) if pin.version is None
+            else _merge(ups, keys, deletes=dels)
+        ],
+        hwm_key="cdc_batch_hwm", check=_hwm_landed,
     )
 
 
@@ -2315,7 +2160,7 @@ def source_sketch_sink(
     is scanned once and never joined back), one map-combinable min-agg
     over the staged digests (``_minhash_by``) to a |batch sources|-row
     partial, and a DELTA-APPEND of that partial through
-    ``_delta_grid_sink`` (``sketch_batch_hwm`` watermark) — no read of
+    ``_append_batch`` (``sketch_batch_hwm`` watermark) — no read of
     the prior grid, no join, no MERGE. ``_sketch_grid_totals`` folds
     the per-batch partials (min per ``mh{j}``) on read, and
     ``maintain_source_sketch(optimize_every=N)`` compacts them with the
@@ -2324,7 +2169,7 @@ def source_sketch_sink(
     from ..operators.dedup import _minhash_by, _shingles
 
     partial = _minhash_by(_shingles(batch_df, keep=("source",)), "source")
-    return _delta_grid_sink(
+    return _append_batch(
         batch_df.sparkSession, batch_id, table_path, "sketch_batch_hwm",
         partial, "source_sketch_sink",
     )
@@ -2685,24 +2530,6 @@ _COHORT_FIRSTS_SCHEMA = "o_custkey bigint, cohort_m bigint"
 _COHORT_STATE_SCHEMA = f"o_custkey bigint, mkey bigint, rev {_IVM_DEC}"
 
 
-def _version_landed(table, batch_id: int, read_version, hwm):
-    """The commit VERSION at which ``batch_id`` landed on ``table`` (at
-    or below ``read_version``), or None — the exact-scan sibling of
-    ``_landed_on`` for callers that must read the PRE-batch snapshot on
-    a replay (version - 1), not merely detect the replay. Same O(1)
-    steady-state fast path: a batch ABOVE the watermark has certainly
-    not landed, so the full history scan runs only on replay-suspect
-    batches (restarts), never per hot-path batch."""
-    if hwm is None or batch_id > hwm:
-        return None
-    for e in table.history():
-        if e.get("batch_id") == batch_id and (
-            read_version is None or e["version"] <= read_version
-        ):
-            return e["version"]
-    return None
-
-
 def cohort_ltv_sink(
     batch_df: DataFrame,
     batch_id: int,
@@ -2734,31 +2561,20 @@ def cohort_ltv_sink(
 
     Scale shape: the batch collapses MAP-SIDE to (customer, month)
     partials; both customer-keyed state reads go through the
-    file-pruned ``read_where_in`` on the batch's bounded customer set
-    (the dedup sinks' probe discipline — Z-ordered by o_custkey via
+    file-pruned ``_ProbeRead`` on the batch's bounded customer set
+    (Z-ordered by o_custkey via
     ``maintain_cohort_ltv``'s optimize cycle, so a batch reads O(batch
-    customers) files, not O(all customers ever)); the matrix read is
-    the bounded (cohort, months_since) grid (~84x84/2 rows at any
-    corpus size); MERGE rewrites only files holding touched keys.
+    customers) files, not O(all customers ever)); all three tables
+    delta-append, so no commit reads or rewrites the grids.
 
-    Exactly-once across THREE tables (the two-table dedup-sink
-    protocol extended): per attempt pin all three versions, replay-
-    check the MATRIX first (it commits last — a matrix hit means the
-    batch fully landed), compute the delta from the PRE-batch state,
-    then commit firsts -> state -> matrix, each individually
-    replay-guarded by ``_landed_on`` and ``conflict_on="batch_id"``.
-    A crash between state and matrix replays into: firsts/state
-    skipped, and the delta recomputed against the state AS OF the
-    version BEFORE the batch's own state commit (``_version_landed``
-    - 1) — without that rewind the replayed n_active delta would see
-    its own pairs as pre-existing and undercount. Returns False when
+    Exactly-once across THREE tables through ``_commit_batch``: firsts
+    -> state -> matrix, the matrix last (the marker). A crash between
+    state and matrix replays into: firsts/state skipped, and the delta
+    recomputed against the state AS OF the version BEFORE the batch's
+    own state commit (the state pin's ``landed_at`` - 1) — without that
+    rewind the replayed n_active delta would see its own pairs as
+    pre-existing and undercount. Returns False when
     the batch was a full replay."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
     spark = batch_df.sparkSession
     od = F.to_date("o_orderdate")
     partial = (
@@ -2773,215 +2589,122 @@ def cohort_ltv_sink(
         .agg(F.sum("price").cast(_IVM_DEC).alias("rev"))
         .cache()
     )
-    cust_keys = ()  # () = not collected yet; None = collected, over cap
-    firsts = LakehouseTable(spark, firsts_path)
-    state = LakehouseTable(spark, state_path)
-    matrix = LakehouseTable(spark, matrix_path)
-
-    def _read_custs(table, schema: str, version):
-        # keys collected lazily, on the first read that can use them —
-        # batch 0 (no tables yet) and fully-landed replays never pay
-        # the collection job (the _dedup_sink_commit discipline)
-        nonlocal cust_keys
-        if version is None:
-            return spark.createDataFrame([], schema)
-        if cust_keys == ():
-            cust_keys = (
-                None
-                if _skip_probe_collect(table, version)
-                else _probe_keys_or_warn(
-                    partial.select("o_custkey"), batch_id,
-                    "cohort_ltv_sink", "o_custkey",
-                )
-            )
-        if cust_keys is not None:
-            return table.read_where_in(
-                "o_custkey", cust_keys, version=version
-            )
-        return table.read(version=version)
-
-    def _stamp(b: int, hwm) -> dict:
-        return {
-            "batch_id": b,
-            "batch_hwm": max(b, hwm if hwm is not None else b),
-        }
-
+    # one customer-key set serves both customer-keyed reads
+    probe = _ProbeRead(
+        partial.select("o_custkey"), "o_custkey", batch_id, "cohort_ltv_sink"
+    )
     cached = [partial]
+
+    def stage(firsts, state, matrix):
+        # Replay rewind: if this batch's STATE append already landed
+        # (crash between state and matrix), the delta must be computed
+        # against the snapshot BEFORE it — at the current snapshot the
+        # batch's own pairs would read as pre-existing and the replayed
+        # n_active delta would be 0.
+        if state.landed and state.landed_at is None:
+            # LOUD on the undecidable rewind (the _landed_on loudness
+            # standard): the watermark says this batch's state append
+            # may have landed, but clean_log pruned the commit that
+            # would locate it — the rewind cannot run, so if this IS a
+            # replay of a crash between the state and matrix commits,
+            # the batch's own pairs read as pre-existing and the
+            # matrix delta permanently undercounts n_active. Size
+            # clean_log retain_versions above the worst-case
+            # replay/batch lag (see maintain_cohort_ltv).
+            logging.getLogger(__name__).warning(
+                "cohort_ltv_sink(%s): batch_id=%s is at or below the "
+                "state watermark (%s) but its commit is not in the "
+                "TRUNCATED state log — cannot rewind to the pre-batch "
+                "snapshot; a replay of a state-then-crash batch will "
+                "undercount n_active. Size clean_log retain_versions "
+                "above the worst-case replay lag.",
+                state_path,
+                batch_id,
+                state.hwm,
+            )
+        # known and joined are each consumed by several downstream
+        # plans (anti-join + cohort union; state pair rows + the
+        # matrix delta) — cache them so the probe reads against the
+        # maintained tables run ONCE per attempt, not once per
+        # consumer (both are bounded by the batch's customers).
+        known = (
+            probe.read(firsts.table, firsts.version, _COHORT_FIRSTS_SCHEMA)
+            .select("o_custkey", "cohort_m")
+            .cache()
+        )
+        cached.append(known)
+        # existence probe only: a pair is NEW exactly when absent from
+        # the pre-batch state — the delta-append layout keeps several
+        # rows per pair, so probe DISTINCT pairs
+        prior = (
+            probe.read(
+                state.table,
+                state.landed_at - 1 if state.landed_at else state.version,
+                _COHORT_STATE_SCHEMA,
+            )
+            .select("o_custkey", "mkey")
+            .distinct()
+            .withColumn("prior_seen", F.lit(1))
+        )
+        new_firsts = (
+            partial.join(known, "o_custkey", "left_anti")
+            .groupBy("o_custkey")
+            .agg(F.min("mkey").alias("cohort_m"))
+        )
+        cohorts = known.unionAll(new_firsts)
+        joined = partial.join(prior, ["o_custkey", "mkey"], "left").cache()
+        cached.append(joined)
+        enriched = joined.join(F.broadcast(cohorts), "o_custkey")
+        delta = enriched.groupBy(
+            "cohort_m",
+            (F.col("mkey") - F.col("cohort_m")).cast("int").alias("months_since"),
+        ).agg(
+            F.sum("rev").cast(_IVM_DEC).alias("d_rev"),
+            F.sum(F.when(F.col("prior_seen").isNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("d_active"),
+        )
+        # all three DELTA-APPEND: the per-(customer, month) revenue
+        # grid and the published matrix are additive in every measure,
+        # so totals fold on read (_cohort_matrix_totals) and the
+        # maintenance cycle's aggregating compaction re-bounds them
+        mdelta = delta.select(
+            "cohort_m",
+            "months_since",
+            F.col("d_active").cast("bigint").alias("n_active"),
+            F.col("d_rev").cast(_IVM_DEC).alias("rev"),
+        )
+        return [
+            _append(new_firsts),
+            _append(partial.select("o_custkey", "mkey", "rev")),
+            _append(mdelta),
+        ]
+
     try:
-        for _ in range(3):
-            rv_m = matrix.latest_version()
-            hwm_m = matrix.latest_value("batch_hwm", as_of=rv_m)
-            if _landed_on(matrix, batch_id, rv_m, hwm_m):
-                return False  # the matrix commits last: fully landed
-            rv_f = firsts.latest_version()
-            hwm_f = firsts.latest_value("batch_hwm", as_of=rv_f)
-            rv_s = state.latest_version()
-            hwm_s = state.latest_value("batch_hwm", as_of=rv_s)
-            # Replay rewind: if this batch's STATE merge already
-            # landed (crash between state and matrix), the delta must
-            # be computed against the snapshot BEFORE it — at the
-            # current snapshot the batch's own pairs would read as
-            # pre-existing and the replayed n_active delta would be 0.
-            v_s_landed = _version_landed(state, batch_id, rv_s, hwm_s)
-            state_pin = (
-                v_s_landed - 1 if v_s_landed is not None else rv_s
-            )
-            if v_s_landed is None and hwm_s is not None and batch_id <= hwm_s:
-                svs = state._versions()
-                if svs and svs[0] > 1:
-                    # LOUD on the undecidable rewind (the _landed_on
-                    # loudness standard): the watermark says this
-                    # batch's state merge may have landed, but
-                    # clean_log pruned the commit that would locate
-                    # it — the rewind cannot run, so if this IS a
-                    # replay of a crash between the state and matrix
-                    # commits, the batch's own pairs read as
-                    # pre-existing and the merged matrix delta
-                    # permanently undercounts n_active. Size
-                    # clean_log retain_versions above the worst-case
-                    # replay/batch lag (see maintain_cohort_ltv).
-                    logging.getLogger(__name__).warning(
-                        "cohort_ltv_sink(%s): batch_id=%s is at or "
-                        "below the state watermark (%s) but its "
-                        "commit is not in the TRUNCATED state log "
-                        "(oldest surviving commit=%s) — cannot "
-                        "rewind to the pre-batch snapshot; a replay "
-                        "of a state-then-crash batch will undercount "
-                        "n_active. Size clean_log retain_versions "
-                        "above the worst-case replay lag.",
-                        state_path,
-                        batch_id,
-                        hwm_s,
-                        svs[0],
-                    )
-            # known and joined are each consumed by several downstream
-            # plans (anti-join + cohort union; state pair rows + the
-            # matrix delta) — cache them so the probe reads against
-            # the maintained tables run ONCE per attempt, not once per
-            # consumer (both are bounded by the batch's customers).
-            known = (
-                _read_custs(firsts, _COHORT_FIRSTS_SCHEMA, rv_f)
-                .select("o_custkey", "cohort_m")
-                .cache()
-            )
-            cached.append(known)
-            # existence probe only: a pair is NEW exactly when absent
-            # from the pre-batch state — the delta-append layout keeps
-            # several rows per pair, so probe DISTINCT pairs
-            prior = (
-                _read_custs(
-                    state,
-                    _COHORT_STATE_SCHEMA,
-                    state_pin if state_pin != 0 else None,
-                )
-                .select("o_custkey", "mkey")
-                .distinct()
-                .withColumn("prior_seen", F.lit(1))
-            )
-            new_firsts = (
-                partial.join(known, "o_custkey", "left_anti")
-                .groupBy("o_custkey")
-                .agg(F.min("mkey").alias("cohort_m"))
-            )
-            cohorts = known.unionAll(new_firsts)
-            joined = partial.join(
-                prior, ["o_custkey", "mkey"], "left"
-            ).cache()
-            cached.append(joined)
-            enriched = joined.join(F.broadcast(cohorts), "o_custkey")
-            delta = enriched.groupBy(
-                "cohort_m",
-                (F.col("mkey") - F.col("cohort_m"))
-                .cast("int")
-                .alias("months_since"),
-            ).agg(
-                F.sum("rev").cast(_IVM_DEC).alias("d_rev"),
-                F.sum(
-                    F.when(F.col("prior_seen").isNull(), 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("d_active"),
-            )
-            try:
-                if not _landed_on(firsts, batch_id, rv_f, hwm_f):
-                    try:
-                        firsts.write(
-                            new_firsts,
-                            mode="append",
-                            extra=_stamp(batch_id, hwm_f),
-                            conflict_on="batch_id",
-                            read_version=rv_f,
-                            monotone_max=("batch_hwm",),
-                        )
-                    except DuplicateCommitError:
-                        pass  # a rival landed this batch's firsts
-                if not _landed_on(state, batch_id, rv_s, hwm_s):
-                    # DELTA-APPEND (was MERGE): the per-(customer,
-                    # month) revenue grid is purely additive, so the
-                    # batch partial lands as delta rows — no prior
-                    # fold, no touched-file rewrite; totals fold on
-                    # read and the maintenance cycle's aggregating
-                    # compaction re-bounds live rows to one per pair.
-                    try:
-                        state.write(
-                            partial.select("o_custkey", "mkey", "rev"),
-                            mode="append",
-                            extra=_stamp(batch_id, hwm_s),
-                            conflict_on="batch_id",
-                            read_version=rv_s,
-                            monotone_max=("batch_hwm",),
-                        )
-                    except DuplicateCommitError:
-                        pass  # a rival landed this batch's state
-                # DELTA-APPEND matrix (was read-current + MERGE): the
-                # published rollup is additive in both measures, so
-                # the batch's (d_active, d_rev) delta lands as-is and
-                # totals fold on read (_cohort_matrix_totals); the
-                # current-grid read per batch is gone.
-                mdelta = delta.select(
-                    "cohort_m",
-                    "months_since",
-                    F.col("d_active").cast("bigint").alias("n_active"),
-                    F.col("d_rev").cast(_IVM_DEC).alias("rev"),
-                )
-                matrix.write(
-                    mdelta,
-                    mode="append",
-                    extra=_stamp(batch_id, hwm_m),
-                    conflict_on="batch_id",
-                    read_version=rv_m,
-                    monotone_max=("batch_hwm",),
-                )
-                return True
-            except DuplicateCommitError:
-                return False  # a rival landed this batch's matrix
-            except ConcurrentWriteError:
-                continue  # re-pin all three tables and retry
-        raise RuntimeError(
-            f"cohort_ltv_sink: could not commit batch {batch_id} after 3 "
-            f"attempts (concurrent writers kept advancing {matrix_path})"
+        return _commit_batch(
+            spark, batch_id, "cohort_ltv_sink",
+            [firsts_path, state_path, matrix_path], stage,
         )
     finally:
         for c in cached:
             c.unpersist()
 
 
-def _cohort_matrix_totals(spark: SparkSession, matrix_path: str) -> DataFrame:
-    """The published cohort matrix TOTALS relation summed from the
-    delta-append grid (cohort_m, months_since, n_active, rev) — the
-    read-side half of the delta contract, shared by the serve entry
-    and the pytests."""
-    from ..load.lakehouse import LakehouseTable
-
+def _cohort_folds() -> tuple:
+    """The (state, matrix) grids' (keys, aggregates): exact revenue
+    sums per (customer, month); n_active/rev sums per (cohort,
+    months_since) — shared by the read-side fold and the compaction."""
     return (
-        LakehouseTable(spark, matrix_path)
-        .read()
-        .groupBy("cohort_m", "months_since")
-        .agg(
-            F.sum("n_active").cast("bigint").alias("n_active"),
-            F.sum("rev").cast(_IVM_DEC).alias("rev"),
-        )
+        (["o_custkey", "mkey"], [_sum("rev", _IVM_DEC)]),
+        (["cohort_m", "months_since"], [_sum("n_active"), _sum("rev", _IVM_DEC)]),
     )
+
+
+def _cohort_matrix_totals(spark: SparkSession, matrix_path: str) -> DataFrame:
+    """The published cohort matrix TOTALS relation folded from the
+    delta-append grid (cohort_m, months_since, n_active, rev) — shared
+    by the serve entry and the pytests."""
+    return _fold_grid(spark, matrix_path, *_cohort_folds()[1])
 
 
 def maintain_cohort_ltv(
@@ -3111,17 +2834,8 @@ def maintain_cohort_ltv(
             # aggregating compactions FIRST (re-bound the delta-append
             # grids to one row per key), then the incremental Z-order
             # clusters the freshly folded state files by customer
-            _aggregate_compact(
-                spark, state_path, ["o_custkey", "mkey"],
-                [F.sum("rev").cast(_IVM_DEC).alias("rev")],
-            )
-            _aggregate_compact(
-                spark, matrix_path, ["cohort_m", "months_since"],
-                [
-                    F.sum("n_active").cast("bigint").alias("n_active"),
-                    F.sum("rev").cast(_IVM_DEC).alias("rev"),
-                ],
-            )
+            for path, fold in zip((state_path, matrix_path), _cohort_folds()):
+                _aggregate_compact(spark, path, *fold)
             for path in (firsts_path, state_path):
                 try:
                     LakehouseTable(spark, path).optimize(
@@ -3289,7 +3003,7 @@ def corpus_health_sink(
     sources x langs at any corpus size).
 
     Per batch: DELTA-APPEND the batch partial through
-    ``_delta_grid_sink`` (``health_batch_hwm`` watermark) — no read of
+    ``_append_batch`` (``health_batch_hwm`` watermark) — no read of
     the prior grid, no join, no MERGE. ``_health_grid_totals`` folds
     the partials on read (sum / min / max), and
     ``maintain_corpus_health(optimize_every=N)`` compacts them with the
@@ -3297,7 +3011,7 @@ def corpus_health_sink(
     bit-identical to a from-scratch aggregate of everything delivered,
     in any delivery order. Returns False when the batch was a
     replay."""
-    return _delta_grid_sink(
+    return _append_batch(
         batch_df.sparkSession, batch_id, table_path, "health_batch_hwm",
         _corpus_health_partial(batch_df), "corpus_health_sink",
     )
@@ -3308,13 +3022,13 @@ def _health_fold() -> tuple[list[str], list]:
     counters, min/max for the char extrema, with the partial's
     ``bigint`` / ``_IVM_DEC`` result types."""
     return ["source", "lang"], [
-        F.sum("n_docs").cast("bigint").alias("n_docs"),
-        F.sum("total_chars").cast("bigint").alias("total_chars"),
+        _sum("n_docs"),
+        _sum("total_chars"),
         F.min("min_chars").cast("bigint").alias("min_chars"),
         F.max("max_chars").cast("bigint").alias("max_chars"),
-        F.sum("total_words").cast("bigint").alias("total_words"),
-        F.sum("total_distinct").cast("bigint").alias("total_distinct"),
-        F.sum("entropy_sum").cast(_IVM_DEC).alias("entropy_sum"),
+        _sum("total_words"),
+        _sum("total_distinct"),
+        _sum("entropy_sum", _IVM_DEC),
     ]
 
 
@@ -3464,13 +3178,13 @@ def daily_revenue_sink(
     at 100 TB the fact is never re-scanned; each batch collapses
     map-side to its touched days (exact integer cents, so addition in
     any order equals the from-scratch grid bit-exactly) and
-    DELTA-APPENDS that partial through ``_delta_grid_sink``
+    DELTA-APPENDS that partial through ``_append_batch``
     (``daily_batch_hwm`` watermark) — no prior-grid read, no MERGE.
     ``_day_grid_totals(..., "v")`` sums the partials on read. Returns
     False when the batch was a replay."""
     from ..operators.profiling import _daily_revenue_cents
 
-    return _delta_grid_sink(
+    return _append_batch(
         batch_df.sparkSession, batch_id, table_path, "daily_batch_hwm",
         _daily_revenue_cents(batch_df), "daily_revenue_sink",
     )
@@ -3480,7 +3194,7 @@ def _day_grid_fold(value_col: str) -> tuple[list[str], list]:
     """A day grid's (keys, aggregates): the exact ``bigint`` sum of
     ``value_col`` per day ``d`` — shared by the daily-revenue (``v``)
     and events-daily (``c``) grids' read-side fold and compaction."""
-    return ["d"], [F.sum(value_col).cast("bigint").alias(value_col)]
+    return ["d"], [_sum(value_col)]
 
 
 def _day_grid_totals(
@@ -3638,138 +3352,91 @@ def user_gaps_sink(
     everything delivered regardless of where the seams fall.
 
     Scale shape: the batch collapses map-side to one row per user;
-    the prior-state read goes through the file-pruned
-    ``read_where_in`` on the batch's bounded user set (Z-ordered by
-    user_id via ``maintain_user_gaps``'s incremental optimize cycle,
-    so a batch reads O(batch users) files, not O(all users ever) —
-    the dedup sinks' probe discipline); MERGE rewrites only files
-    holding touched users.
+    the prior-state read goes through the file-pruned ``_ProbeRead``
+    on the batch's bounded user set (Z-ordered by user_id via
+    ``maintain_user_gaps``'s incremental optimize cycle, so a batch
+    reads O(batch users) files, not O(all users ever)); MERGE rewrites
+    only files holding touched users.
 
-    Exactly-once: pin the snapshot version, ``_landed_on`` replay
-    check against the pinned ``gaps_batch_hwm`` (the hardened exact
-    scan on replay-suspect batches — the maintained state is a
-    long-lived shared artifact like the dedup indexes), conditional
-    first-batch create / MERGE with ``conflict_on="batch_id"``; an
-    interloper aborts the commit and the sink re-pins and re-folds.
-    Three attempts, then fail loud. Returns False on replay."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
+    Exactly-once: ``_commit_batch`` on the ``gaps_batch_hwm``
+    watermark (first batch creates the table, later batches MERGE);
+    an interloper aborts the commit and the sink re-pins and re-folds.
+    Returns False on replay."""
     spark = batch_df.sparkSession
     partial = _gap_stats_partial(batch_df).cache()
-    user_keys = ()  # () = not collected yet; None = collected, over cap
-    state = LakehouseTable(spark, state_path)
+    probe = _ProbeRead(
+        partial.select("user_id"), "user_id", batch_id, "user_gaps_sink"
+    )
+
+    def stage(state):
+        prior = probe.read(state.table, state.version, _GAP_STATE_SCHEMA)
+        # the seam gap exists only for users with prior state; the
+        # in-order contract makes p.first_us >= c.last_us — and a
+        # violation must fail LOUD here, not silently poison
+        # sum_g/sum_g2 with a negative seam gap (the state table
+        # is long-lived; a corrupt moment is unrecoverable)
+        g0 = F.when(
+            F.col("p.first_us") < F.col("c.last_us"),
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        "user_gaps_sink: out-of-order micro-batch "
+                        f"{batch_id} — events for user_id="
+                    ),
+                    F.col("user_id").cast("string"),
+                    F.lit(" precede the stored last_us ("),
+                    F.col("p.first_us").cast("string"),
+                    F.lit(" < "),
+                    F.col("c.last_us").cast("string"),
+                    F.lit(
+                        "); the in-order delivery contract is "
+                        "broken — refusing to fold"
+                    ),
+                )
+            ).cast("bigint"),
+        ).otherwise(
+            F.floor(
+                (F.col("p.first_us") - F.col("c.last_us"))
+                / F.lit(1_000_000)
+            ).cast("bigint")
+        )
+        upd = (
+            partial.alias("p")
+            .join(prior.alias("c"), "user_id", "left")
+            .select(
+                "user_id",
+                (
+                    F.col("p.n_events")
+                    + F.coalesce(F.col("c.n_events"), F.lit(0))
+                ).cast("bigint").alias("n_events"),
+                F.coalesce(F.col("c.first_us"), F.col("p.first_us"))
+                .cast("bigint")
+                .alias("first_us"),
+                F.greatest(
+                    F.col("p.last_us"),
+                    F.coalesce(F.col("c.last_us"), F.col("p.last_us")),
+                ).cast("bigint").alias("last_us"),
+                (
+                    F.col("p.sum_g")
+                    + F.coalesce(F.col("c.sum_g"), F.lit(0))
+                    + F.coalesce(g0, F.lit(0))
+                ).cast("bigint").alias("sum_g"),
+                (
+                    F.col("p.sum_g2")
+                    + F.coalesce(F.col("c.sum_g2"), F.lit(0))
+                    + F.coalesce(g0 * g0, F.lit(0))
+                ).cast("bigint").alias("sum_g2"),
+            )
+        )
+        return [
+            _append(upd) if state.version is None  # first commit creates it
+            else _merge(upd, ["user_id"], prune_keys=probe.prune_keys)
+        ]
+
     try:
-        for _ in range(3):
-            rv = state.latest_version()
-            hwm = state.latest_value("gaps_batch_hwm", as_of=rv)
-            if _landed_on(state, batch_id, rv, hwm):
-                return False
-            if rv is None:
-                prior = spark.createDataFrame([], _GAP_STATE_SCHEMA)
-            else:
-                if user_keys == ():
-                    user_keys = (
-                        None
-                        if _skip_probe_collect(state, rv)
-                        else _probe_keys_or_warn(
-                            partial.select("user_id"), batch_id,
-                            "user_gaps_sink", "user_id",
-                        )
-                    )
-                prior = (
-                    state.read_where_in("user_id", user_keys, version=rv)
-                    if user_keys is not None
-                    else state.read(version=rv)
-                )
-            # the seam gap exists only for users with prior state; the
-            # in-order contract makes p.first_us >= c.last_us — and a
-            # violation must fail LOUD here, not silently poison
-            # sum_g/sum_g2 with a negative seam gap (the state table
-            # is long-lived; a corrupt moment is unrecoverable)
-            g0 = F.when(
-                F.col("p.first_us") < F.col("c.last_us"),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "user_gaps_sink: out-of-order micro-batch "
-                            f"{batch_id} — events for user_id="
-                        ),
-                        F.col("user_id").cast("string"),
-                        F.lit(" precede the stored last_us ("),
-                        F.col("p.first_us").cast("string"),
-                        F.lit(" < "),
-                        F.col("c.last_us").cast("string"),
-                        F.lit(
-                            "); the in-order delivery contract is "
-                            "broken — refusing to fold"
-                        ),
-                    )
-                ).cast("bigint"),
-            ).otherwise(
-                F.floor(
-                    (F.col("p.first_us") - F.col("c.last_us"))
-                    / F.lit(1_000_000)
-                ).cast("bigint")
-            )
-            upd = (
-                partial.alias("p")
-                .join(prior.alias("c"), "user_id", "left")
-                .select(
-                    "user_id",
-                    (
-                        F.col("p.n_events")
-                        + F.coalesce(F.col("c.n_events"), F.lit(0))
-                    ).cast("bigint").alias("n_events"),
-                    F.coalesce(F.col("c.first_us"), F.col("p.first_us"))
-                    .cast("bigint")
-                    .alias("first_us"),
-                    F.greatest(
-                        F.col("p.last_us"),
-                        F.coalesce(F.col("c.last_us"), F.col("p.last_us")),
-                    ).cast("bigint").alias("last_us"),
-                    (
-                        F.col("p.sum_g")
-                        + F.coalesce(F.col("c.sum_g"), F.lit(0))
-                        + F.coalesce(g0, F.lit(0))
-                    ).cast("bigint").alias("sum_g"),
-                    (
-                        F.col("p.sum_g2")
-                        + F.coalesce(F.col("c.sum_g2"), F.lit(0))
-                        + F.coalesce(g0 * g0, F.lit(0))
-                    ).cast("bigint").alias("sum_g2"),
-                )
-            )
-            stamp = {
-                "batch_id": batch_id,
-                "gaps_batch_hwm": max(
-                    batch_id, hwm if hwm is not None else batch_id
-                ),
-            }
-            try:
-                if rv is None:  # first commit creates the table
-                    state.write(
-                        upd, mode="append", extra=stamp,
-                        conflict_on="batch_id", read_version=rv,
-                        monotone_max=("gaps_batch_hwm",),
-                    )
-                else:
-                    state.merge(
-                        upd, ["user_id"], extra=stamp,
-                        read_version=rv, conflict_on="batch_id",
-                        prune_keys=("user_id", user_keys or None),
-                    )
-                return True
-            except DuplicateCommitError:
-                return False  # a rival landed this very batch
-            except ConcurrentWriteError:
-                continue  # re-pin and re-fold from fresh state
-        raise RuntimeError(
-            f"user_gaps_sink: could not commit batch {batch_id} after 3 "
-            f"attempts (concurrent writers kept advancing {state_path})"
+        return _commit_batch(
+            spark, batch_id, "user_gaps_sink", [state_path], stage,
+            hwm_key="gaps_batch_hwm",
         )
     finally:
         partial.unpersist()
@@ -3861,8 +3528,6 @@ def q_streaming_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
 
-    work = tempfile.mkdtemp(prefix="gaps_stream_")
-    src = f"{work}/src"
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
     t_lo, t_hi = ev.agg(F.min("ts"), F.max("ts")).first()
     if t_lo is None:  # empty stream: the batch twin returns empty
@@ -3871,6 +3536,8 @@ def q_streaming_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id bigint, n_gaps bigint, mean_gap_s double, "
             "std_gap_s double, burstiness double",
         )
+    work = tempfile.mkdtemp(prefix="gaps_stream_")
+    src = f"{work}/src"
     cuts = [t_lo + (t_hi - t_lo) * i // 4 for i in range(5)]
     _stage_ordered_batches(
         ev, src, _range_batch_expr_closed("ts", cuts, t_hi), 4
@@ -3958,103 +3625,50 @@ def rake_source_sink(
     key again. ANY delivery order bit-equals the batch aggregate — no
     in-order contract needed.
 
-    Exactly-once across TWO tables (the dedup-sink protocol): per
-    attempt pin both versions, replay-check the PHRASES table first
-    (it commits last — a phrases hit means the batch fully landed),
-    then commit words -> phrases, each individually replay-guarded by
-    ``_landed_on`` and ``conflict_on="batch_id"``. A crash between the
-    two commits replays into: words skipped, phrases re-appended —
-    no cross-table rewind exists because neither grid's delta reads
-    the other table. Returns False when the batch was a full
-    replay."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
+    Exactly-once across TWO tables through ``_commit_batch``: words,
+    then phrases (the marker). A crash between the two commits replays
+    into: words skipped, phrases appended — no cross-table rewind
+    exists because neither grid's delta reads the other table.
+    Returns False when the batch was a full replay."""
     from ..operators.text import (
         _rake_occ,
         _rake_phrase_grid,
         _rake_word_grid,
     )
 
-    spark = batch_df.sparkSession
     occ = _rake_occ(batch_df, ("source",))
     p_words = _rake_word_grid(occ, ("source",))
     p_phrases = _rake_phrase_grid(occ, ("source",))
-    words = LakehouseTable(spark, words_path)
-    phrases = LakehouseTable(spark, phrases_path)
+    return _commit_batch(
+        batch_df.sparkSession, batch_id, "rake_source_sink",
+        [words_path, phrases_path],
+        lambda words, phrases: [_append(p_words), _append(p_phrases)],
+    )
 
-    def _stamp(b: int, hwm) -> dict:
-        return {
-            "batch_id": b,
-            "batch_hwm": max(b, hwm if hwm is not None else b),
-        }
 
-    for _ in range(3):
-        rv_p = phrases.latest_version()
-        hwm_p = phrases.latest_value("batch_hwm", as_of=rv_p)
-        if _landed_on(phrases, batch_id, rv_p, hwm_p):
-            return False  # phrases commits last: fully landed
-        rv_w = words.latest_version()
-        hwm_w = words.latest_value("batch_hwm", as_of=rv_w)
-        try:
-            if not _landed_on(words, batch_id, rv_w, hwm_w):
-                try:
-                    words.write(
-                        p_words, mode="append",
-                        extra=_stamp(batch_id, hwm_w),
-                        conflict_on="batch_id", read_version=rv_w,
-                        monotone_max=("batch_hwm",),
-                    )
-                except DuplicateCommitError:
-                    pass  # a rival landed this batch's words
-            phrases.write(
-                p_phrases, mode="append",
-                extra=_stamp(batch_id, hwm_p),
-                conflict_on="batch_id", read_version=rv_p,
-                monotone_max=("batch_hwm",),
-            )
-            return True
-        except DuplicateCommitError:
-            return False  # a rival landed this batch's phrases
-        except ConcurrentWriteError:
-            continue  # a compaction landed mid-attempt; re-pin, retry
-    raise RuntimeError(
-        f"rake_source_sink: could not commit batch {batch_id} after "
-        f"3 attempts (concurrent writers kept advancing {phrases_path})"
+def _rake_folds() -> tuple:
+    """The (words, phrases) grids' (keys, aggregates): freq/deg sums;
+    n_words is constant per phrase (its word count), folded with max —
+    shared by the read-side fold and the compaction."""
+    return (
+        (["source", "w"], [_sum("freq"), _sum("deg")]),
+        (
+            ["source", "phrase"],
+            [F.max("n_words").cast("bigint").alias("n_words"), _sum("freq")],
+        ),
     )
 
 
 def _rake_grid_totals(
     spark: SparkSession, words_path: str, phrases_path: str
 ) -> tuple[DataFrame, DataFrame]:
-    """The (words, phrases) TOTALS relations from the delta-append
-    RAKE grids: freq/deg sums; n_words is constant per phrase (its
-    word count), folded with max exactly as the old merge did — the
-    read-side half of the delta contract, shared by the serve entry
-    and the pytests."""
-    from ..load.lakehouse import LakehouseTable
-
-    words = (
-        LakehouseTable(spark, words_path)
-        .read()
-        .groupBy("source", "w")
-        .agg(
-            F.sum("freq").cast("bigint").alias("freq"),
-            F.sum("deg").cast("bigint").alias("deg"),
-        )
+    """The (words, phrases) TOTALS relations folded from the
+    delta-append RAKE grids — shared by the serve entry and the
+    pytests."""
+    return tuple(
+        _fold_grid(spark, path, *fold)
+        for path, fold in zip((words_path, phrases_path), _rake_folds())
     )
-    phrases = (
-        LakehouseTable(spark, phrases_path)
-        .read()
-        .groupBy("source", "phrase")
-        .agg(
-            F.max("n_words").cast("bigint").alias("n_words"),
-            F.sum("freq").cast("bigint").alias("freq"),
-        )
-    )
-    return words, phrases
 
 
 def maintain_rake_by_source(
@@ -4077,20 +3691,8 @@ def maintain_rake_by_source(
         spark = batch_df.sparkSession
         rake_source_sink(batch_df, batch_id, words_path, phrases_path)
         if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(
-                spark, words_path, ["source", "w"],
-                [
-                    F.sum("freq").cast("bigint").alias("freq"),
-                    F.sum("deg").cast("bigint").alias("deg"),
-                ],
-            )
-            _aggregate_compact(
-                spark, phrases_path, ["source", "phrase"],
-                [
-                    F.max("n_words").cast("bigint").alias("n_words"),
-                    F.sum("freq").cast("bigint").alias("freq"),
-                ],
-            )
+            for path, fold in zip((words_path, phrases_path), _rake_folds()):
+                _aggregate_compact(spark, path, *fold)
         for path in (words_path, phrases_path):
             _maybe_clean_log(spark, path, log_retention)
 
@@ -4119,8 +3721,6 @@ def q_streaming_rake_by_source(
         _rake_score_phrases,
     )
 
-    work = tempfile.mkdtemp(prefix="rake_stream_")
-    src = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
@@ -4131,6 +3731,8 @@ def q_streaming_rake_by_source(
             "source string, rank int, phrase string, n_words bigint, "
             "freq bigint, score double",
         )
+    work = tempfile.mkdtemp(prefix="rake_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(
@@ -4195,15 +3797,8 @@ def rfm_state_sink(
     (``_rfm_state_totals``); ``maintain_rfm``'s cycle compacts by
     aggregation (and compacts BEFORE a retirement cycle so the
     whole-customer TTL semantics are preserved — see there).
-    Exactly-once: ``_landed_on``-hardened replay check + pinned
-    read_version + conflict_on batch_id. Returns False on replay."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
-    spark = batch_df.sparkSession
+    Exactly-once: ``_append_batch`` on the ``rfm_batch_hwm``
+    watermark. Returns False on replay."""
     partial = (
         batch_df.groupBy(F.col("o_custkey").alias("customer_id"))
         .agg(
@@ -4215,55 +3810,30 @@ def rfm_state_sink(
         )
         .cache()
     )
-    state = LakehouseTable(spark, state_path)
     try:
-        for _ in range(3):
-            rv = state.latest_version()
-            hwm = state.latest_value("rfm_batch_hwm", as_of=rv)
-            if _landed_on(state, batch_id, rv, hwm):
-                return False
-            stamp = {
-                "batch_id": batch_id,
-                "rfm_batch_hwm": max(
-                    batch_id, hwm if hwm is not None else batch_id
-                ),
-            }
-            try:
-                state.write(
-                    partial, mode="append", extra=stamp,
-                    conflict_on="batch_id", read_version=rv,
-                    monotone_max=("rfm_batch_hwm",),
-                )
-                return True
-            except DuplicateCommitError:
-                return False  # a rival landed this very batch
-            except ConcurrentWriteError:
-                continue  # a compaction landed mid-attempt; re-pin, retry
-        raise RuntimeError(
-            f"rfm_state_sink: could not commit batch {batch_id} after 3 "
-            f"attempts (concurrent writers kept advancing {state_path})"
+        return _append_batch(
+            batch_df.sparkSession, batch_id, state_path, "rfm_batch_hwm",
+            partial, "rfm_state_sink",
         )
     finally:
         partial.unpersist()
 
 
+def _rfm_fold() -> tuple[list[str], list]:
+    """The RFM state's (keys, aggregates): max recency, summed
+    frequency/monetary — shared by the read-side fold and the
+    compaction."""
+    return ["customer_id"], [
+        F.max("last_order_date").alias("last_order_date"),
+        _sum("frequency"),
+        _sum("monetary_dec", _IVM_DEC),
+    ]
+
+
 def _rfm_state_totals(spark: SparkSession, state_path: str) -> DataFrame:
     """The per-customer TOTALS relation folded from the delta-append
-    RFM state (max recency, summed frequency/monetary) — the
-    read-side half of the delta contract, shared by the serve entry
-    and the pytests."""
-    from ..load.lakehouse import LakehouseTable
-
-    return (
-        LakehouseTable(spark, state_path)
-        .read()
-        .groupBy("customer_id")
-        .agg(
-            F.max("last_order_date").alias("last_order_date"),
-            F.sum("frequency").cast("bigint").alias("frequency"),
-            F.sum("monetary_dec").cast(_IVM_DEC).alias("monetary_dec"),
-        )
-    )
+    RFM state — shared by the serve entry and the pytests."""
+    return _fold_grid(spark, state_path, *_rfm_fold())
 
 
 def maintain_rfm(
@@ -4292,12 +3862,6 @@ def maintain_rfm(
     documented); off by default — the driver entry keeps exact
     forever-semantics (see ``maintain_user_gaps``)."""
 
-    _rfm_aggs = [
-        F.max("last_order_date").alias("last_order_date"),
-        F.sum("frequency").cast("bigint").alias("frequency"),
-        F.sum("monetary_dec").cast(_IVM_DEC).alias("monetary_dec"),
-    ]
-
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         import datetime as dt
 
@@ -4318,9 +3882,7 @@ def maintain_rfm(
                 # so if the fold lost its commit race, DEFER the
                 # retirement to the next cycle too (a per-delta-row
                 # cutoff would drop an active customer's old rows)
-                if _aggregate_compact(
-                    spark, state_path, ["customer_id"], _rfm_aggs
-                ):
+                if _aggregate_compact(spark, state_path, *_rfm_fold()):
                     try:
                         LakehouseTable(spark, state_path).retire_below(
                             "last_order_date",
@@ -4330,9 +3892,7 @@ def maintain_rfm(
                     except ConcurrentWriteError:
                         pass  # best-effort; the next cycle retries
         if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(
-                spark, state_path, ["customer_id"], _rfm_aggs
-            )
+            _aggregate_compact(spark, state_path, *_rfm_fold())
         _maybe_clean_log(spark, state_path, log_retention)
 
     return _run_foreach_batch(stream, _sink, checkpoint)
@@ -4353,14 +3913,14 @@ def q_streaming_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
     from ..plans.behavioral import _rfm_rank
 
-    work = tempfile.mkdtemp(prefix="rfm_stream_")
-    src = f"{work}/src"
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
     hi = orders.agg(F.max("o_custkey")).first()[0]
     if hi is None:  # empty fact: the batch twin returns an empty frame
         return _rfm_rank(spark.createDataFrame([], _RFM_STATE_SCHEMA))
+    work = tempfile.mkdtemp(prefix="rfm_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(
@@ -4406,14 +3966,14 @@ def events_daily_sink(
     bit-equals the from-scratch daily aggregate; the grid every
     event-side day operator (daily peaks, autocorr-style diagnostics)
     can read without re-scanning the stream. The batch's per-day
-    partial DELTA-APPENDS through ``_delta_grid_sink``
+    partial DELTA-APPENDS through ``_append_batch``
     (``events_daily_hwm`` watermark) — no prior-grid read, no MERGE;
     ``_day_grid_totals(..., "c")`` sums the partials on read. Returns
     False on replay."""
     partial = batch_df.groupBy(F.to_date("ts").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    return _delta_grid_sink(
+    return _append_batch(
         batch_df.sparkSession, batch_id, table_path, "events_daily_hwm",
         partial, "events_daily_sink",
     )
@@ -4456,8 +4016,6 @@ def q_streaming_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
     from ..operators.events import _daily_peaks
 
-    work = tempfile.mkdtemp(prefix="evdaily_stream_")
-    src = f"{work}/src"
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     hi = ev.agg(F.max("event_id")).first()[0]
     if hi is None:  # empty stream: the batch twin returns empty
@@ -4466,6 +4024,8 @@ def q_streaming_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "peak_date date, n_events bigint, prev_n bigint, "
             "next_n bigint, vs_mean double",
         )
+    work = tempfile.mkdtemp(prefix="evdaily_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(
@@ -4537,181 +4097,98 @@ def novelty_sink(
     both MERGEs rewrite only files holding touched keys. The gram
     grid is vocabulary-bounded; ``docs`` is the product itself.
 
-    Exactly-once across the two tables = the cohort sink's protocol:
-    ``docs`` commits LAST and carries the replay gate (hardened
-    ``_landed_on``); a crash between the firsts merge and the docs
-    merge replays into a REWIND — the doc deltas are recomputed
-    against the firsts snapshot BEFORE the batch's own commit
-    (``_version_landed`` - 1), else the replayed batch would see its
-    own lattice rows as pre-existing and issue spurious corrections.
-    Three attempts under rival writers, then fail loud."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
+    Exactly-once across the two tables through ``_commit_batch``:
+    ``docs`` commits LAST (the marker); a crash between the firsts
+    merge and the docs merge replays into a REWIND — the doc deltas
+    are recomputed against the firsts snapshot BEFORE the batch's own
+    commit (the firsts pin's ``landed_at`` - 1), else the replayed
+    batch would see its own lattice rows as pre-existing and issue
+    spurious corrections."""
     from ..operators.text import novelty_grams
 
-    spark = batch_df.sparkSession
     grams = novelty_grams(batch_df).cache()
     bmin = grams.groupBy("g").agg(F.min("doc_id").alias("bmin")).cache()
     ndoc = grams.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_grams")
     )
-    gram_keys = ()  # () = not collected yet; None = collected, over cap
-    firsts = LakehouseTable(spark, firsts_path)
-    docs = LakehouseTable(spark, docs_path)
+    probe = _ProbeRead(bmin.select("g"), "g", batch_id, "novelty_sink")
+    cached = [grams, bmin]
 
-    def _stamp(b: int, hwm) -> dict:
-        return {
-            "batch_id": b,
-            "batch_hwm": max(b, hwm if hwm is not None else b),
-        }
-
-    try:
-        for _ in range(3):
-            rv_d = docs.latest_version()
-            hwm_d = docs.latest_value("batch_hwm", as_of=rv_d)
-            if _landed_on(docs, batch_id, rv_d, hwm_d):
-                return False  # docs commits last: fully landed
-            rv_f = firsts.latest_version()
-            hwm_f = firsts.latest_value("batch_hwm", as_of=rv_f)
-            # Replay rewind: if this batch's firsts merge landed but
-            # the docs merge did not (crash between the commits), the
-            # doc deltas must be computed against the PRE-batch
-            # lattice snapshot.
-            v_f_landed = _version_landed(firsts, batch_id, rv_f, hwm_f)
-            firsts_pin = (
-                v_f_landed - 1 if v_f_landed is not None else rv_f
+    def stage(firsts, docs):
+        # Replay rewind: if this batch's firsts merge landed but the
+        # docs merge did not (crash between the commits), the doc
+        # deltas must be computed against the PRE-batch lattice
+        # snapshot.
+        prior = probe.read(
+            firsts.table,
+            firsts.landed_at - 1 if firsts.landed_at else firsts.version,
+            _NOV_FIRSTS_SCHEMA,
+        )
+        delta = bmin.join(prior, "g", "left").cache()
+        cached.append(delta)
+        # lattice rows to (re)write: new grams + undercut grams
+        claimed = delta.where(
+            F.col("first_doc").isNull() | (F.col("bmin") < F.col("first_doc"))
+        )
+        upd_firsts = claimed.select("g", F.col("bmin").alias("first_doc"))
+        # gains: the batch's min doc for each claimed gram
+        gains = claimed.groupBy(F.col("bmin").alias("doc_id")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("gain")
+        )
+        # corrections: the previous holder loses one per stolen gram
+        losses = (
+            delta.where(
+                F.col("first_doc").isNotNull()
+                & (F.col("bmin") < F.col("first_doc"))
             )
-            if firsts_pin is None or firsts_pin == 0:
-                prior = spark.createDataFrame([], _NOV_FIRSTS_SCHEMA)
-            else:
-                if gram_keys == ():
-                    gram_keys = (
-                        None
-                        if _skip_probe_collect(firsts, firsts_pin)
-                        else _probe_keys_or_warn(
-                            bmin.select("g"), batch_id, "novelty_sink",
-                            "g",
-                        )
-                    )
-                prior = (
-                    firsts.read_where_in("g", gram_keys, version=firsts_pin)
-                    if gram_keys is not None
-                    else firsts.read(version=firsts_pin)
-                )
-            delta = bmin.join(prior, "g", "left").cache()
-            # lattice rows to (re)write: new grams + undercut grams
-            upd_firsts = delta.where(
-                F.col("first_doc").isNull()
-                | (F.col("bmin") < F.col("first_doc"))
-            ).select("g", F.col("bmin").alias("first_doc"))
-            # gains: the batch's min doc for each claimed gram
-            gains = (
-                delta.where(
-                    F.col("first_doc").isNull()
-                    | (F.col("bmin") < F.col("first_doc"))
-                )
-                .groupBy(F.col("bmin").alias("doc_id"))
-                .agg(F.count(F.lit(1)).cast("bigint").alias("gain"))
+            .groupBy(F.col("first_doc").alias("doc_id"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("loss"))
+        )
+        new_rows = ndoc.join(gains, "doc_id", "left").select(
+            "doc_id",
+            "n_grams",
+            F.coalesce("gain", F.lit(0)).cast("bigint").alias("n_novel"),
+        )
+        # correction-holder probe under the SAME cap discipline as
+        # the gram probe: a mega-correction batch (millions of
+        # stolen grams across millions of prior holders) must fall
+        # back to the full pinned read LOUDLY, never collect an
+        # unbounded key list to the driver
+        # (no small-index shortcut here: an EMPTY collect result is
+        # what lets a no-steal batch skip the correction pass —
+        # and most batches steal nothing)
+        loss_keys = _probe_keys_or_warn(
+            losses.select("doc_id"), batch_id, "novelty_sink", "doc_id",
+        )
+        upd_docs = new_rows
+        if loss_keys is None or loss_keys:
+            prior_docs = (
+                docs.table.read_where_in("doc_id", loss_keys, version=docs.version)
+                if loss_keys is not None
+                else docs.table.read(version=docs.version)
             )
-            # corrections: the previous holder loses one per stolen gram
-            losses = (
-                delta.where(
-                    F.col("first_doc").isNotNull()
-                    & (F.col("bmin") < F.col("first_doc"))
-                )
-                .groupBy(F.col("first_doc").alias("doc_id"))
-                .agg(F.count(F.lit(1)).cast("bigint").alias("loss"))
-            )
-            new_rows = ndoc.join(gains, "doc_id", "left").select(
+            corrected = prior_docs.join(losses, "doc_id").select(
                 "doc_id",
                 "n_grams",
-                F.coalesce("gain", F.lit(0)).cast("bigint").alias("n_novel"),
+                (F.col("n_novel") - F.col("loss")).cast("bigint").alias("n_novel"),
             )
-            # correction-holder probe under the SAME cap discipline as
-            # the gram probe: a mega-correction batch (millions of
-            # stolen grams across millions of prior holders) must fall
-            # back to the full pinned read LOUDLY, never collect an
-            # unbounded key list to the driver
-            # (no small-index shortcut here: an EMPTY collect result is
-            # what lets a no-steal batch skip the correction pass —
-            # and most batches steal nothing)
-            loss_keys = _probe_keys_or_warn(
-                losses.select("doc_id"), batch_id, "novelty_sink",
-                "doc_id",
-            )
-            if loss_keys is None or loss_keys:
-                prior_docs = (
-                    docs.read_where_in("doc_id", loss_keys, version=rv_d)
-                    if loss_keys is not None
-                    else docs.read(version=rv_d)
-                )
-                corrected = prior_docs.join(losses, "doc_id").select(
-                    "doc_id",
-                    "n_grams",
-                    (F.col("n_novel") - F.col("loss"))
-                    .cast("bigint")
-                    .alias("n_novel"),
-                )
-                upd_docs = new_rows.unionByName(corrected)
-            else:
-                upd_docs = new_rows
-            try:
-                if not _landed_on(firsts, batch_id, rv_f, hwm_f):
-                    try:
-                        if rv_f is None:  # first commit creates the table
-                            firsts.write(
-                                upd_firsts,
-                                mode="append",
-                                extra=_stamp(batch_id, hwm_f),
-                                conflict_on="batch_id",
-                                read_version=rv_f,
-                                monotone_max=("batch_hwm",),
-                            )
-                        else:
-                            firsts.merge(
-                                upd_firsts,
-                                ["g"],
-                                extra=_stamp(batch_id, hwm_f),
-                                read_version=rv_f,
-                                conflict_on="batch_id",
-                                prune_keys=("g", gram_keys or None),
-                            )
-                    except DuplicateCommitError:
-                        pass  # a rival landed this batch's lattice rows
-                if rv_d is None:  # first commit creates the table
-                    docs.write(
-                        upd_docs,
-                        mode="append",
-                        extra=_stamp(batch_id, hwm_d),
-                        conflict_on="batch_id",
-                        read_version=rv_d,
-                        monotone_max=("batch_hwm",),
-                    )
-                else:
-                    docs.merge(
-                        upd_docs,
-                        ["doc_id"],
-                        extra=_stamp(batch_id, hwm_d),
-                        read_version=rv_d,
-                        conflict_on="batch_id",
-                    )
-                return True
-            except DuplicateCommitError:
-                return False  # a rival landed this batch's doc rows
-            except ConcurrentWriteError:
-                continue  # re-pin both tables and re-fold
-            finally:
-                delta.unpersist()
-        raise RuntimeError(
-            f"novelty_sink: could not commit batch {batch_id} after 3 "
-            f"attempts (concurrent writers kept advancing {docs_path})"
+            upd_docs = new_rows.unionByName(corrected)
+        # each table's first commit creates it
+        return [
+            _append(upd_firsts) if firsts.version is None
+            else _merge(upd_firsts, ["g"], prune_keys=probe.prune_keys),
+            _append(upd_docs) if docs.version is None
+            else _merge(upd_docs, ["doc_id"]),
+        ]
+
+    try:
+        return _commit_batch(
+            batch_df.sparkSession, batch_id, "novelty_sink",
+            [firsts_path, docs_path], stage,
         )
     finally:
-        grams.unpersist()
-        bmin.unpersist()
+        for c in cached:
+            c.unpersist()
 
 
 def maintain_novelty(
@@ -4770,8 +4247,6 @@ def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
 
-    work = tempfile.mkdtemp(prefix="novelty_stream_")
-    src = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hi = docs.agg(F.max("doc_id")).first()[0]
     if hi is None:  # empty corpus: the batch twin returns empty
@@ -4779,6 +4254,8 @@ def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "doc_id bigint, n_grams bigint, n_novel bigint, "
             "novelty double"
         )
+    work = tempfile.mkdtemp(prefix="novelty_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     # shuffled delivery order: range i lands in slot (2, 0, 3, 1)[i]
@@ -4838,8 +4315,8 @@ def drift_moments_sink(
     12-dp-staged second-moment sums as exact DECIMAL(38,12) cells,
     added cell-wise (any delivery order bit-equals the from-scratch
     grid — addition is the whole protocol). Exactly-once =
-    ``_delta_grid_sink`` (drift_batch_hwm watermark, append-only;
-    ``_drift_grid_totals`` sums the partials on read). The grid is
+    ``_append_batch`` (drift_batch_hwm watermark; ``_drift_grid_totals``
+    sums the partials on read). The grid is
     labels x (d+1)^2 rows regardless of corpus size; each batch
     collapses to it map-side."""
     from ..operators.similarity import _drift_moment_grid
@@ -4850,26 +4327,24 @@ def drift_moments_sink(
     # merge in a 23 s entry at sf0.1). Decimal addition is exact and
     # associative, so read-time summing of the per-batch partials
     # bit-equals the merged accumulation.
-    return _delta_grid_sink(
+    return _append_batch(
         batch_df.sparkSession, batch_id, table_path, "drift_batch_hwm",
         _drift_moment_grid(batch_df), "drift_moments_sink",
     )
 
 
-def _drift_grid_totals(spark: SparkSession, table_path: str) -> DataFrame:
-    """The maintained moment-grid TOTALS relation summed from the
-    delta-append grid — the read-side half of the delta contract,
-    shared by the serve entry and the pytests. Spark's sum over
-    decimal(38,12) keeps the 38,12 result type, so the fold is
-    bit-equal to the old merged accumulation."""
-    from ..load.lakehouse import LakehouseTable
+def _drift_fold() -> tuple[list[str], list]:
+    """The moment grid's (keys, aggregates): the exact decimal(38,12)
+    sum per (label, i, j) cell (Spark's sum over decimal(38,12) keeps
+    that type, so the fold is bit-equal to a merged accumulation) —
+    shared by the read-side fold and the compaction."""
+    return ["label", "i", "j"], [_sum("s", "decimal(38,12)")]
 
-    return (
-        LakehouseTable(spark, table_path)
-        .read()
-        .groupBy("label", "i", "j")
-        .agg(F.sum("s").cast("decimal(38,12)").alias("s"))
-    )
+
+def _drift_grid_totals(spark: SparkSession, table_path: str) -> DataFrame:
+    """The maintained moment-grid TOTALS relation folded from the
+    delta-append grid — shared by the serve entry and the pytests."""
+    return _fold_grid(spark, table_path, *_drift_fold())
 
 
 def maintain_drift_moments(
@@ -4888,10 +4363,7 @@ def maintain_drift_moments(
         spark = batch_df.sparkSession
         drift_moments_sink(batch_df, batch_id, table_path)
         if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(
-                spark, table_path, ["label", "i", "j"],
-                [F.sum("s").cast("decimal(38,12)").alias("s")],
-            )
+            _aggregate_compact(spark, table_path, *_drift_fold())
         _maybe_clean_log(spark, table_path, log_retention)
 
     return _run_foreach_batch(stream, _sink, checkpoint)
@@ -4916,8 +4388,6 @@ def q_streaming_drift_mmd(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drift_mmd_from_moments,
     )
 
-    work = tempfile.mkdtemp(prefix="drift_stream_")
-    src = f"{work}/src"
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.col("label").cast("bigint").alias("label"),
@@ -4929,6 +4399,8 @@ def q_streaming_drift_mmd(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "label_a bigint, label_b bigint, n_a bigint, "
             "n_b bigint, mmd2_linear double, mmd2_quadratic double"
         )
+    work = tempfile.mkdtemp(prefix="drift_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(
@@ -4971,8 +4443,6 @@ def q_streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
     from ..operators.profiling import _mann_kendall_from_daily
 
-    work = tempfile.mkdtemp(prefix="mk_stream_")
-    src = f"{work}/src"
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
@@ -4982,6 +4452,8 @@ def q_streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "n_days bigint, s_stat bigint, var_s double, "
             "z double, tau_b double"
         )
+    work = tempfile.mkdtemp(prefix="mk_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(
@@ -5028,57 +4500,22 @@ def ivf_index_sink(
     cents_path: str,
 ) -> bool:
     """Fold one micro-batch of EMBEDDINGS (vec_id, label, v) into the
-    maintained IVF serving index: the vector table appends
-    conditionally (replay-guarded; each batch's rows land exactly
-    once), and the centroid grid — (label, dim_idx) -> (s, n) with s
+    maintained IVF serving index: the vector table appends through
+    ``_append_batch`` (each batch's rows land exactly once), and the
+    centroid grid — (label, dim_idx) -> (s, n) with s
     the exact DECIMAL(38,6) sum of the batch-staged decimal(25,6)
-    values — delta-appends through ``_delta_grid_sink`` and is summed
+    values — delta-appends through ``_append_batch`` and is summed
     on read by ``_cent_grid_totals``. Because decimal addition is
     associative, the maintained s/n derive the SAME centroid doubles
     as the batch ``_centroids_long`` over everything delivered, in any
     delivery order. The two commits carry independent replay guards
     (no cross-table delta exists, so no rewind protocol is needed —
     unlike the cohort/novelty sinks)."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
     spark = batch_df.sparkSession
-    vectors = LakehouseTable(spark, vectors_path)
-    wrote = False
-    for _ in range(3):
-        rv = vectors.latest_version()
-        hwm = vectors.latest_value("vec_batch_hwm", as_of=rv)
-        if _landed_on(vectors, batch_id, rv, hwm):
-            break
-        try:
-            vectors.write(
-                batch_df.select("vec_id", "label", "v"),
-                mode="append",
-                extra={
-                    "batch_id": batch_id,
-                    "vec_batch_hwm": max(
-                        batch_id, hwm if hwm is not None else batch_id
-                    ),
-                },
-                conflict_on="batch_id",
-                read_version=rv,
-                monotone_max=("vec_batch_hwm",),
-            )
-            wrote = True
-            break
-        except DuplicateCommitError:
-            break  # a rival landed this batch's vectors
-        except ConcurrentWriteError:
-            continue
-    else:
-        raise RuntimeError(
-            f"ivf_index_sink: could not append batch {batch_id} after 3 "
-            f"attempts (concurrent writers kept advancing {vectors_path})"
-        )
-
+    wrote = _append_batch(
+        spark, batch_id, vectors_path, "vec_batch_hwm",
+        batch_df.select("vec_id", "label", "v"), "ivf_index_sink",
+    )
     partial = (
         batch_df.select(
             "label", F.posexplode(F.col("v")).alias("dim_idx", "val")
@@ -5091,35 +4528,29 @@ def ivf_index_sink(
             F.count(F.lit(1)).cast("bigint").alias("n"),
         )
     )
-
-    # DELTA-APPEND (was a per-batch MERGE): every batch touches every
-    # (label, dim_idx) cell, so the merge rewrote the whole grid per
-    # micro-batch (probe: ~6 s of merge per streaming-ANN entry at
-    # sf0.1). Decimal/bigint addition is exact and associative, so
-    # read-time summing (_cent_grid_totals) bit-equals the merged
-    # accumulation.
-    folded = _delta_grid_sink(
+    # DELTA-APPEND: every batch touches every (label, dim_idx) cell, so
+    # a MERGE would rewrite the whole grid per micro-batch (probe: ~6 s
+    # of merge per streaming-ANN entry at sf0.1). Decimal/bigint
+    # addition is exact and associative, so read-time summing
+    # (_cent_grid_totals) bit-equals a merged accumulation.
+    folded = _append_batch(
         spark, batch_id, cents_path, "cent_batch_hwm", partial,
         "ivf_index_sink",
     )
     return wrote or folded
 
 
-def _cent_grid_totals(spark: SparkSession, cents_path: str) -> DataFrame:
-    """The maintained centroid-moment TOTALS relation summed from the
-    delta-append grid (label, dim_idx, s, n) — the read-side half of
-    the delta contract, shared by the serving probe and the pytests."""
-    from ..load.lakehouse import LakehouseTable
+def _cent_fold() -> tuple[list[str], list]:
+    """The centroid grid's (keys, aggregates): exact decimal(38,6) sum
+    s and bigint count n per (label, dim_idx) — shared by the
+    read-side fold and the compaction."""
+    return ["label", "dim_idx"], [_sum("s", "decimal(38,6)"), _sum("n")]
 
-    return (
-        LakehouseTable(spark, cents_path)
-        .read()
-        .groupBy("label", "dim_idx")
-        .agg(
-            F.sum("s").cast("decimal(38,6)").alias("s"),
-            F.sum("n").cast("bigint").alias("n"),
-        )
-    )
+
+def _cent_grid_totals(spark: SparkSession, cents_path: str) -> DataFrame:
+    """The maintained centroid-moment TOTALS relation folded from the
+    delta-append grid — shared by the serving probe and the pytests."""
+    return _fold_grid(spark, cents_path, *_cent_fold())
 
 
 def maintain_ivf_index(
@@ -5154,13 +4585,7 @@ def maintain_ivf_index(
                 )
             except ConcurrentWriteError:
                 pass  # best-effort maintenance; the next cycle retries
-            _aggregate_compact(
-                spark, cents_path, ["label", "dim_idx"],
-                [
-                    F.sum("s").cast("decimal(38,6)").alias("s"),
-                    F.sum("n").cast("bigint").alias("n"),
-                ],
-            )
+            _aggregate_compact(spark, cents_path, *_cent_fold())
         for path in (vectors_path, cents_path):
             _maybe_clean_log(spark, path, log_retention)
 
@@ -5179,8 +4604,6 @@ def _replayed_ivf_index(spark: SparkSession, sf_dir: str) -> str | None:
     from ..catalog import load_table
     from ..operators.similarity import _as_double_array
 
-    work = tempfile.mkdtemp(prefix="ivf_stream_")
-    src = f"{work}/src"
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.col("label").cast("bigint").alias("label"),
@@ -5189,6 +4612,8 @@ def _replayed_ivf_index(spark: SparkSession, sf_dir: str) -> str | None:
     hi = emb.agg(F.max("vec_id")).first()[0]
     if hi is None:  # empty corpus: nothing to index
         return None
+    work = tempfile.mkdtemp(prefix="ivf_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(
@@ -5401,40 +4826,15 @@ def ivf_pq_index_sink(
         )
     if codebook is None:
         return wrote
-    codes_t = LakehouseTable(spark, codes_path)
-    for _ in range(3):
-        rv_c = codes_t.latest_version()
-        hwm_c = codes_t.latest_value("codes_batch_hwm", as_of=rv_c)
-        if _landed_on(codes_t, batch_id, rv_c, hwm_c):
-            break
-        batch_codes = _pq_code(
-            batch_df.select("vec_id", "v"), codebook
-        ).join(batch_df.select("vec_id", "label"), "vec_id")
-        try:
-            codes_t.write(
-                batch_codes.select("label", "vec_id", "sub", "code"),
-                mode="append",
-                extra={
-                    "batch_id": batch_id,
-                    "codes_batch_hwm": max(
-                        batch_id, hwm_c if hwm_c is not None else batch_id
-                    ),
-                },
-                conflict_on="batch_id",
-                read_version=rv_c,
-                monotone_max=("codes_batch_hwm",),
-            )
-            return True
-        except DuplicateCommitError:
-            break  # a rival landed this batch's codes
-        except ConcurrentWriteError:
-            continue
-    else:
-        raise RuntimeError(
-            f"ivf_pq_index_sink: could not append codes for batch "
-            f"{batch_id} after 3 attempts ({codes_path})"
-        )
-    return wrote
+    batch_codes = _pq_code(batch_df.select("vec_id", "v"), codebook).join(
+        batch_df.select("vec_id", "label"), "vec_id"
+    )
+    coded = _append_batch(
+        spark, batch_id, codes_path, "codes_batch_hwm",
+        batch_codes.select("label", "vec_id", "sub", "code"),
+        "ivf_pq_index_sink",
+    )
+    return coded or wrote
 
 
 def maintain_ivf_pq_index(
@@ -5530,8 +4930,6 @@ def _replayed_ivf_pq_index(spark: SparkSession, sf_dir: str) -> str | None:
     from ..catalog import load_table
     from ..operators.similarity import _as_double_array
 
-    work = tempfile.mkdtemp(prefix="ivfpq_stream_")
-    src = f"{work}/src"
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.col("label").cast("bigint").alias("label"),
@@ -5540,6 +4938,8 @@ def _replayed_ivf_pq_index(spark: SparkSession, sf_dir: str) -> str | None:
     hi = emb.agg(F.max("vec_id")).first()[0]
     if hi is None:
         return None
+    work = tempfile.mkdtemp(prefix="ivfpq_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(
@@ -5593,20 +4993,16 @@ def bm25_index_sink(
     """Fold one micro-batch of DOCUMENTS into the maintained BM25
     index: the FULL-vocabulary posting grid of the batch (shared
     ``_bm25_doc_terms`` builder — doc length stored inline so serving
-    never joins a second doc-keyed table) appends conditionally (docs
-    arrive once, so (w, doc) rows are disjoint across batches), and
+    never joins a second doc-keyed table) appends through
+    ``_append_batch`` (docs arrive once, so (w, doc) rows are disjoint
+    across batches), and
     the stats grid — ("df", w) -> docs-containing count plus one
     ("corpus", "") row carrying (n_docs, sum_dl) — delta-appends
-    through ``_delta_grid_sink`` and is summed on read (all counts
+    through ``_append_batch`` and is summed on read (all counts
     additive over disjoint doc sets, so any delivery order bit-equals
     the from-scratch corpus stats). Independent replay guards per
     table (no cross-table delta, so no rewind protocol — the
     ``ivf_index_sink`` shape)."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
     from ..operators.text import _bm25_doc_terms
 
     spark = batch_df.sparkSession
@@ -5614,40 +5010,11 @@ def bm25_index_sink(
         "doc_id", F.split(F.lower("text"), " ").alias("ws")
     )
     grid = _bm25_doc_terms(toks).cache()
-    postings = LakehouseTable(spark, postings_path)
-    wrote = False
     try:
-        for _ in range(3):
-            rv = postings.latest_version()
-            hwm = postings.latest_value("post_batch_hwm", as_of=rv)
-            if _landed_on(postings, batch_id, rv, hwm):
-                break
-            try:
-                postings.write(
-                    grid.select("w", "doc_id", "tf", "dl"),
-                    mode="append",
-                    extra={
-                        "batch_id": batch_id,
-                        "post_batch_hwm": max(
-                            batch_id, hwm if hwm is not None else batch_id
-                        ),
-                    },
-                    conflict_on="batch_id",
-                    read_version=rv,
-                    monotone_max=("post_batch_hwm",),
-                )
-                wrote = True
-                break
-            except DuplicateCommitError:
-                break  # a rival landed this batch's postings
-            except ConcurrentWriteError:
-                continue
-        else:
-            raise RuntimeError(
-                f"bm25_index_sink: could not append batch {batch_id} "
-                f"after 3 attempts (rivals kept advancing {postings_path})"
-            )
-
+        wrote = _append_batch(
+            spark, batch_id, postings_path, "post_batch_hwm",
+            grid.select("w", "doc_id", "tf", "dl"), "bm25_index_sink",
+        )
         dfreq = grid.groupBy("w").agg(
             F.count(F.lit(1)).cast("bigint").alias("v"),
             F.lit(0).cast("bigint").alias("v2"),
@@ -5663,41 +5030,32 @@ def bm25_index_sink(
         ).select(
             F.lit("corpus").alias("kind"), F.lit("").alias("w"), "v", "v2"
         )
-        partial = dfreq.unionByName(corpus)
-
-        # DELTA-APPEND stats grid (the pmi/rake pattern): df counts and
-        # the corpus (n_docs, sum_dl) row are purely additive over
-        # disjoint doc sets, yet the old MERGE fold rewrote most of the
-        # vocabulary-sized grid EVERY batch (common words recur in
-        # every batch, so the rewrite had no key locality to exploit).
-        # The batch partial now lands append-only — no prior-grid read,
-        # no touched-file scan, O(batch partial) write volume — totals
-        # fold on read (``_bm25_stats_totals``) and the maintenance
-        # cycle's aggregating compaction re-bounds live rows.
-        folded = _delta_grid_sink(
-            spark, batch_id, stats_path, "bm25_batch_hwm", partial,
-            "bm25_index_sink",
+        # DELTA-APPEND stats grid: df counts and the corpus (n_docs,
+        # sum_dl) row are purely additive over disjoint doc sets, while
+        # a MERGE would rewrite most of the vocabulary-sized grid every
+        # batch (common words recur in every batch, so the rewrite has
+        # no key locality to exploit). Totals fold on read
+        # (``_bm25_stats_totals``) and the maintenance cycle's
+        # aggregating compaction re-bounds live rows.
+        folded = _append_batch(
+            spark, batch_id, stats_path, "bm25_batch_hwm",
+            dfreq.unionByName(corpus), "bm25_index_sink",
         )
         return wrote or folded
     finally:
         grid.unpersist()
 
 
-def _bm25_stats_totals(spark: SparkSession, stats_path: str) -> DataFrame:
-    """The maintained BM25 stats TOTALS relation summed from the
-    delta-append grid — the read-side half of the delta contract
-    (kind, w, v, v2), shared by the serve entry and the pytests."""
-    from ..load.lakehouse import LakehouseTable
+def _bm25_stats_fold() -> tuple[list[str], list]:
+    """The BM25 stats grid's (keys, aggregates): bigint sums of v/v2
+    per (kind, w) — shared by the read-side fold and the compaction."""
+    return ["kind", "w"], [_sum("v"), _sum("v2")]
 
-    return (
-        LakehouseTable(spark, stats_path)
-        .read()
-        .groupBy("kind", "w")
-        .agg(
-            F.sum("v").cast("bigint").alias("v"),
-            F.sum("v2").cast("bigint").alias("v2"),
-        )
-    )
+
+def _bm25_stats_totals(spark: SparkSession, stats_path: str) -> DataFrame:
+    """The maintained BM25 stats TOTALS relation folded from the
+    delta-append grid — shared by the serve entry and the pytests."""
+    return _fold_grid(spark, stats_path, *_bm25_stats_fold())
 
 
 def maintain_bm25_index(
@@ -5733,13 +5091,7 @@ def maintain_bm25_index(
                 )
             except ConcurrentWriteError:
                 pass  # best-effort maintenance; the next cycle retries
-            _aggregate_compact(
-                spark, stats_path, ["kind", "w"],
-                [
-                    F.sum("v").cast("bigint").alias("v"),
-                    F.sum("v2").cast("bigint").alias("v2"),
-                ],
-            )
+            _aggregate_compact(spark, stats_path, *_bm25_stats_fold())
         for path in (postings_path, stats_path):
             _maybe_clean_log(spark, path, log_retention)
 
@@ -5763,14 +5115,14 @@ def q_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..load.lakehouse import LakehouseTable
     from ..operators.text import BM25_QUERY, _bm25_rank
 
-    work = tempfile.mkdtemp(prefix="bm25_stream_")
-    src = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hi = docs.agg(F.max("doc_id")).first()[0]
     if hi is None:  # empty corpus: nothing to retrieve
         return spark.createDataFrame(
             [], "doc_id bigint, bm25_score double, n_terms_matched bigint"
         )
+    work = tempfile.mkdtemp(prefix="bm25_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(
@@ -6012,19 +5364,14 @@ def decon_sink(
     distinct train grams (capped by ``_probe_keys_or_warn``); the
     probed rows — bounded by batch gram count, benchmarks are MBs —
     broadcast against the batch grid, so the maintained index never
-    shuffles. Exactly-once across the two tables: verdicts commit
-    FIRST (computed from the pinned index plus the batch's OWN eval
-    grams — a doc is never eval and train at once, so no
-    self-judging), then the batch's NEW eval grams append (anti-joined
+    shuffles. Exactly-once across the two tables through
+    ``_commit_batch``: verdicts commit FIRST (computed from the pinned
+    index plus the batch's OWN eval grams — a doc is never eval and
+    train at once, so no self-judging), then the batch's NEW eval
+    grams append (anti-joined
     against the pinned index so the gram table stays a set); a crash
     between the two replays into a verdict skip + gram append, and a
-    full replay is a no-op on both (``_landed_on`` on the gram table,
-    which commits last)."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
+    full replay is a no-op on both (the gram table is the marker)."""
     from ..operators.text import (
         DECON_EVAL_MOD,
         DECON_FRAC_THRESH,
@@ -6032,7 +5379,6 @@ def decon_sink(
         _word_ngrams,
     )
 
-    spark = batch_df.sparkSession
     w = F.split("text", " ")
     grams = batch_df.select(
         "doc_id",
@@ -6042,112 +5388,50 @@ def decon_sink(
     batch_eval = grams.filter(is_eval).select("gram").distinct().cache()
     train_grams = grams.filter(~is_eval).cache()
     train_ids = batch_df.filter(~is_eval).select("doc_id")
-    idx = LakehouseTable(spark, grams_path)
-    verd = LakehouseTable(spark, verdicts_path)
-    keys = ()  # () = not collected yet; None = collected, over cap
+    probe = _ProbeRead(
+        train_grams.select("gram").unionAll(batch_eval), "gram", batch_id,
+        "decon_sink",
+    )
+
+    def stage(verd, idx):
+        stored = probe.read(idx.table, idx.version, "gram string")
+        eval_all = (
+            stored.select("gram")
+            .unionAll(batch_eval)
+            .distinct()
+            .withColumn("hit", F.lit(1))
+        )
+        hits = (
+            train_grams.join(F.broadcast(eval_all), "gram", "left")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_grams"),
+                F.count("hit").alias("n_contaminated"),
+            )
+        )
+        out = train_ids.join(hits, "doc_id", "left")
+        n_grams = F.coalesce(F.col("n_grams"), F.lit(0)).cast("bigint")
+        n_cont = F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("bigint")
+        frac = F.when(
+            n_grams > 0, n_cont.cast("double") / n_grams
+        ).otherwise(F.lit(0.0))
+        verdicts = out.select(
+            "doc_id",
+            n_grams.alias("n_grams"),
+            n_cont.alias("n_contaminated"),
+            frac.alias("contamination_frac"),
+            (frac >= F.lit(DECON_FRAC_THRESH)).alias("is_contaminated"),
+        )
+        # the gram table stays a SET: only grams the pinned index does
+        # not already hold append (stored is already the
+        # probe-key-restricted read, a superset of the overlap)
+        new_grams = batch_eval.join(stored.select("gram"), "gram", "left_anti")
+        return [_append(verdicts), _append(new_grams)]
+
     try:
-        for _ in range(3):
-            rv_i = idx.latest_version()
-            hwm_i = idx.latest_value("batch_hwm", as_of=rv_i)
-            if _landed_on(idx, batch_id, rv_i, hwm_i):
-                return False  # fully landed (the gram table commits last)
-            if rv_i is None:
-                stored = spark.createDataFrame([], "gram string")
-            else:
-                if keys == ():
-                    keys = (
-                        None
-                        if _skip_probe_collect(idx, rv_i)
-                        else _probe_keys_or_warn(
-                            train_grams.select("gram")
-                            .unionAll(batch_eval),
-                            batch_id, "decon_sink", "gram",
-                        )
-                    )
-                stored = (
-                    idx.read_where_in("gram", keys, version=rv_i)
-                    if keys is not None
-                    else idx.read(version=rv_i)
-                )
-            eval_all = (
-                stored.select("gram")
-                .unionAll(batch_eval)
-                .distinct()
-                .withColumn("hit", F.lit(1))
-            )
-            hits = (
-                train_grams.join(F.broadcast(eval_all), "gram", "left")
-                .groupBy("doc_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n_grams"),
-                    F.count("hit").alias("n_contaminated"),
-                )
-            )
-            out = train_ids.join(hits, "doc_id", "left")
-            n_grams = F.coalesce(F.col("n_grams"), F.lit(0)).cast("bigint")
-            n_cont = F.coalesce(F.col("n_contaminated"), F.lit(0)).cast(
-                "bigint"
-            )
-            frac = F.when(
-                n_grams > 0, n_cont.cast("double") / n_grams
-            ).otherwise(F.lit(0.0))
-            verdicts = out.select(
-                "doc_id",
-                n_grams.alias("n_grams"),
-                n_cont.alias("n_contaminated"),
-                frac.alias("contamination_frac"),
-                (frac >= F.lit(DECON_FRAC_THRESH)).alias("is_contaminated"),
-            )
-            rv_v = verd.latest_version()
-            hwm_v = verd.latest_value("batch_hwm", as_of=rv_v)
-            if not _landed_on(verd, batch_id, rv_v, hwm_v):
-                try:
-                    verd.write(
-                        verdicts,
-                        mode="append",
-                        extra={
-                            "batch_id": batch_id,
-                            "batch_hwm": max(
-                                batch_id,
-                                hwm_v if hwm_v is not None else batch_id,
-                            ),
-                        },
-                        conflict_on="batch_id",
-                        read_version=rv_v,
-                        monotone_max=("batch_hwm",),
-                    )
-                except DuplicateCommitError:
-                    pass  # a rival landed this batch's verdicts
-                except ConcurrentWriteError:
-                    continue  # re-pin both tables and retry
-            # the gram table stays a SET: only grams the pinned index
-            # does not already hold append (stored is already the
-            # probe-key-restricted read, a superset of the overlap)
-            new_grams = batch_eval.join(
-                stored.select("gram"), "gram", "left_anti"
-            )
-            try:
-                idx.write(
-                    new_grams,
-                    mode="append",
-                    extra={
-                        "batch_id": batch_id,
-                        "batch_hwm": max(
-                            batch_id, hwm_i if hwm_i is not None else batch_id
-                        ),
-                    },
-                    conflict_on="batch_id",
-                    read_version=rv_i,
-                    monotone_max=("batch_hwm",),
-                )
-                return True
-            except DuplicateCommitError:
-                return False  # a rival landed this batch's grams
-            except ConcurrentWriteError:
-                continue  # re-pin both tables and retry
-        raise RuntimeError(
-            f"decon_sink: could not commit batch {batch_id} after 3 "
-            f"attempts (concurrent writers kept advancing {grams_path})"
+        return _commit_batch(
+            batch_df.sparkSession, batch_id, "decon_sink",
+            [verdicts_path, grams_path], stage,
         )
     finally:
         batch_eval.unpersist()
@@ -6206,12 +5490,12 @@ def _staged_docs_eval_first(spark: SparkSession, sf_dir: str) -> str | None:
     from ..catalog import load_table
     from ..operators.text import DECON_EVAL_MOD
 
-    work = tempfile.mkdtemp(prefix="decon_stream_")
-    src = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = docs.agg(F.max("doc_id")).first()[0]
     if max_id is None:  # empty corpus: nothing to judge
         return None
+    work = tempfile.mkdtemp(prefix="decon_stream_")
+    src = f"{work}/src"
     hi = max_id + 1
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
@@ -6291,15 +5575,10 @@ def containment_sink(
     register before ingest; probes are file-pruned ``read_where_in``
     on the batch's distinct grams (capped LOUD); probed rows are
     bounded by batch gram count and broadcast; exactly-once two-table
-    commits (pairs FIRST from the pinned index plus the batch's own
-    eval grams, then the gram append — (eval_id, gram) rows are
+    ``_commit_batch`` (pairs FIRST from the pinned index plus the
+    batch's own eval grams, then the gram append — (eval_id, gram) rows are
     disjoint across batches because each eval doc arrives once, so
     the append needs no anti-join)."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
     from pyspark.sql import Window
 
     from ..operators.text import (
@@ -6309,7 +5588,6 @@ def containment_sink(
         _word_ngrams,
     )
 
-    spark = batch_df.sparkSession
     w = F.split("text", " ")
     grams = batch_df.select(
         "doc_id",
@@ -6327,99 +5605,39 @@ def containment_sink(
         .cache()
     )
     train_grams = grams.filter(~is_eval).cache()
-    idx = LakehouseTable(spark, egrams_path)
-    pairs_t = LakehouseTable(spark, pairs_path)
-    keys = ()  # () = not collected yet; None = collected, over cap
+    probe = _ProbeRead(
+        train_grams.select("gram"), "gram", batch_id, "containment_sink"
+    )
+
+    def stage(pairs_t, idx):
+        stored = probe.read(
+            idx.table, idx.version, "eval_id bigint, gram string, eval_grams bigint"
+        )
+        eval_all = stored.unionByName(batch_eval)
+        hits = (
+            train_grams.join(F.broadcast(eval_all), "gram")
+            .groupBy("doc_id", "eval_id")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_shared"),
+                F.expr("any_value(eval_grams)").cast("bigint").alias("eval_grams"),
+            )
+        )
+        containment = fround(
+            F.col("n_shared").cast("double") / F.col("eval_grams"), 6
+        )
+        pairs = hits.select(
+            "doc_id",
+            "eval_id",
+            "n_shared",
+            "eval_grams",
+            containment.alias("containment"),
+        ).filter(F.col("containment") >= CONTAIN_THRESH)
+        return [_append(pairs), _append(batch_eval)]
+
     try:
-        for _ in range(3):
-            rv_i = idx.latest_version()
-            hwm_i = idx.latest_value("batch_hwm", as_of=rv_i)
-            if _landed_on(idx, batch_id, rv_i, hwm_i):
-                return False  # fully landed (the gram table commits last)
-            if rv_i is None:
-                stored = spark.createDataFrame(
-                    [], "eval_id bigint, gram string, eval_grams bigint"
-                )
-            else:
-                if keys == ():
-                    keys = (
-                        None
-                        if _skip_probe_collect(idx, rv_i)
-                        else _probe_keys_or_warn(
-                            train_grams.select("gram"), batch_id,
-                            "containment_sink", "gram",
-                        )
-                    )
-                stored = (
-                    idx.read_where_in("gram", keys, version=rv_i)
-                    if keys is not None
-                    else idx.read(version=rv_i)
-                )
-            eval_all = stored.unionByName(batch_eval)
-            hits = (
-                train_grams.join(F.broadcast(eval_all), "gram")
-                .groupBy("doc_id", "eval_id")
-                .agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_shared"),
-                    F.expr("any_value(eval_grams)")
-                    .cast("bigint")
-                    .alias("eval_grams"),
-                )
-            )
-            containment = fround(
-                F.col("n_shared").cast("double") / F.col("eval_grams"), 6
-            )
-            pairs = hits.select(
-                "doc_id",
-                "eval_id",
-                "n_shared",
-                "eval_grams",
-                containment.alias("containment"),
-            ).filter(F.col("containment") >= CONTAIN_THRESH)
-            rv_p = pairs_t.latest_version()
-            hwm_p = pairs_t.latest_value("batch_hwm", as_of=rv_p)
-            if not _landed_on(pairs_t, batch_id, rv_p, hwm_p):
-                try:
-                    pairs_t.write(
-                        pairs,
-                        mode="append",
-                        extra={
-                            "batch_id": batch_id,
-                            "batch_hwm": max(
-                                batch_id,
-                                hwm_p if hwm_p is not None else batch_id,
-                            ),
-                        },
-                        conflict_on="batch_id",
-                        read_version=rv_p,
-                        monotone_max=("batch_hwm",),
-                    )
-                except DuplicateCommitError:
-                    pass  # a rival landed this batch's pairs
-                except ConcurrentWriteError:
-                    continue  # re-pin both tables and retry
-            try:
-                idx.write(
-                    batch_eval,
-                    mode="append",
-                    extra={
-                        "batch_id": batch_id,
-                        "batch_hwm": max(
-                            batch_id, hwm_i if hwm_i is not None else batch_id
-                        ),
-                    },
-                    conflict_on="batch_id",
-                    read_version=rv_i,
-                    monotone_max=("batch_hwm",),
-                )
-                return True
-            except DuplicateCommitError:
-                return False  # a rival landed this batch's grams
-            except ConcurrentWriteError:
-                continue  # re-pin both tables and retry
-        raise RuntimeError(
-            f"containment_sink: could not commit batch {batch_id} after 3 "
-            f"attempts (concurrent writers kept advancing {egrams_path})"
+        return _commit_batch(
+            batch_df.sparkSession, batch_id, "containment_sink",
+            [pairs_path, egrams_path], stage,
         )
     finally:
         batch_eval.unpersist()
@@ -6589,208 +5807,147 @@ def session_tails_sink(
     Exactly-once across TWO tables where the GRID delta READS the
     tails table (unlike the rake grids, which are independent): the
     grid delta depends only on the PRE-batch tails state, and the
-    tails table only advances after the grid commit — so the order is
-    replay-check TAILS first (it commits last: a tails hit means the
-    batch fully landed), commit grid, then tails. A crash between the
-    two commits replays into: tails still pre-batch, grid delta
-    recomputed identically and skipped by its own ``_landed_on``,
-    tails folded — no cross-table rewind. Returns False on full
-    replay or an empty batch (nothing to fold; skipping the commit is
-    idempotent)."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
-    spark = batch_df.sparkSession
+    tails table only advances after the grid commit — so
+    ``_commit_batch`` commits the grid, then tails (the marker). A
+    crash between the two commits replays into: tails still
+    pre-batch, grid delta recomputed identically and skipped (the
+    grid pin holds the batch), tails folded — no cross-table rewind.
+    Returns False on full replay or an empty batch (nothing to fold;
+    skipping the commit is idempotent)."""
     if batch_df.isEmpty():
         return False
     sess = _batch_sessions(batch_df).cache()
-    user_keys = ()  # () = not collected yet; None = collected, over cap
-    tails = LakehouseTable(spark, tails_path)
-    grid = LakehouseTable(spark, grid_path)
+    probe = _ProbeRead(
+        sess.select("user_id"), "user_id", batch_id, "session_tails_sink"
+    )
+    cached = [sess]
 
-    def _stamp(b: int, hwm) -> dict:
-        return {
-            "batch_id": b,
-            "batch_hwm": max(b, hwm if hwm is not None else b),
-        }
+    def stage(grid, tails):
+        # Retirement boundary enforcement (the r17 pattern: enforced,
+        # not assumed): once a retirement cycle stamped
+        # retire_cutoff_s, a batch carrying events BELOW the cutoff
+        # would fold against retired (dropped) tails and silently
+        # resurrect half a session — refuse loud.
+        cut = (
+            tails.table.latest_value("retire_cutoff_s", as_of=tails.version)
+            if tails.version is not None
+            else None
+        )
+        if cut is not None:
+            lo = sess.agg(F.min("first_s")).first()[0]
+            if lo is not None and int(lo) < int(cut):
+                raise ValueError(
+                    f"session_tails_sink: micro-batch {batch_id} "
+                    f"carries events at {int(lo)}s, below the "
+                    f"retirement cutoff {int(cut)}s — folding against "
+                    "retired tails would resurrect a dropped session; "
+                    "the in-order delivery contract is broken at the "
+                    "retirement boundary — refusing to fold"
+                )
+        prior = probe.read(tails.table, tails.version, _SESS_TAILS_SCHEMA)
+        # one decision row per batch user: does the stored tail
+        # merge with the batch's first session, or close? An
+        # out-of-order batch must fail LOUD here — a mis-split
+        # session would poison the long-lived grid forever.
+        firsts = sess.filter(F.col("seq") == 1).select(
+            "user_id", F.col("first_s").alias("b_first_s")
+        )
+        dec = (
+            firsts.join(prior.alias("c"), "user_id", "left")
+            .select(
+                "user_id",
+                "b_first_s",
+                F.col("c.open_first_s").alias("p_first"),
+                F.col("c.open_last_s").alias("p_last"),
+            )
+            .withColumn(
+                "merged",
+                F.when(F.col("p_last").isNull(), F.lit(False)).when(
+                    F.col("b_first_s") < F.col("p_last"),
+                    F.raise_error(
+                        F.concat(
+                            F.lit(
+                                "session_tails_sink: out-of-order "
+                                f"micro-batch {batch_id} — events for "
+                                "user_id="
+                            ),
+                            F.col("user_id").cast("string"),
+                            F.lit(" precede the stored open_last_s ("),
+                            F.col("b_first_s").cast("string"),
+                            F.lit(" < "),
+                            F.col("p_last").cast("string"),
+                            F.lit(
+                                "); the in-order delivery contract is "
+                                "broken — refusing to fold"
+                            ),
+                        )
+                    ).cast("boolean"),
+                ).otherwise(
+                    F.col("b_first_s") - F.col("p_last")
+                    <= SESSION_GAP_SEC
+                ),
+            )
+        )
+        joined = sess.join(dec, "user_id")
+        closed_batch = joined.filter(
+            F.col("seq") < F.col("n_sess")
+        ).select(
+            (
+                F.col("last_s")
+                - F.when(
+                    (F.col("seq") == 1) & F.col("merged"),
+                    F.col("p_first"),
+                ).otherwise(F.col("first_s"))
+            )
+            .cast("bigint")
+            .alias("dur")
+        )
+        closed_tails = dec.filter(
+            F.col("p_last").isNotNull() & ~F.col("merged")
+        ).select(
+            (F.col("p_last") - F.col("p_first"))
+            .cast("bigint")
+            .alias("dur")
+        )
+        delta = (
+            closed_batch.unionByName(closed_tails)
+            .groupBy("dur")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_death"))
+            .cache()
+        )
+        cached.append(delta)
+        new_tails = joined.filter(
+            F.col("seq") == F.col("n_sess")
+        ).select(
+            "user_id",
+            F.when(
+                (F.col("n_sess") == 1) & F.col("merged"),
+                F.col("p_first"),
+            )
+            .otherwise(F.col("first_s"))
+            .cast("bigint")
+            .alias("open_first_s"),
+            F.col("last_s").cast("bigint").alias("open_last_s"),
+        )
+        # closed-duration counts are purely additive: the batch delta
+        # lands APPEND-ONLY (no prior probe, no MERGE rewrite); totals
+        # fold on read (_served_km_grid) and the maintenance cycle's
+        # aggregating compaction re-bounds live rows to one per
+        # distinct duration
+        return [
+            None if delta.isEmpty() else _append(delta),
+            _append(new_tails) if tails.version is None  # creates it
+            else _merge(new_tails, ["user_id"], prune_keys=probe.prune_keys),
+        ]
 
     try:
-        for _ in range(3):
-            rv_t = tails.latest_version()
-            hwm_t = tails.latest_value("batch_hwm", as_of=rv_t)
-            if _landed_on(tails, batch_id, rv_t, hwm_t):
-                return False  # tails commits last: fully landed
-            # Retirement boundary enforcement (the r17 pattern:
-            # enforced, not assumed): once a retirement cycle stamped
-            # retire_cutoff_s, a batch carrying events BELOW the
-            # cutoff would fold against retired (dropped) tails and
-            # silently resurrect half a session — refuse loud.
-            cut = (
-                tails.latest_value("retire_cutoff_s", as_of=rv_t)
-                if rv_t is not None
-                else None
-            )
-            if cut is not None:
-                lo = sess.agg(F.min("first_s")).first()[0]
-                if lo is not None and int(lo) < int(cut):
-                    raise ValueError(
-                        f"session_tails_sink: micro-batch {batch_id} "
-                        f"carries events at {int(lo)}s, below the "
-                        f"retirement cutoff {int(cut)}s — folding against "
-                        "retired tails would resurrect a dropped session; "
-                        "the in-order delivery contract is broken at the "
-                        "retirement boundary — refusing to fold"
-                    )
-            rv_g = grid.latest_version()
-            hwm_g = grid.latest_value("batch_hwm", as_of=rv_g)
-            if rv_t is None:
-                prior = spark.createDataFrame([], _SESS_TAILS_SCHEMA)
-            else:
-                if user_keys == ():
-                    user_keys = (
-                        None
-                        if _skip_probe_collect(tails, rv_t)
-                        else _probe_keys_or_warn(
-                            sess.select("user_id"), batch_id,
-                            "session_tails_sink", "user_id",
-                        )
-                    )
-                prior = (
-                    tails.read_where_in("user_id", user_keys, version=rv_t)
-                    if user_keys is not None
-                    else tails.read(version=rv_t)
-                )
-            # one decision row per batch user: does the stored tail
-            # merge with the batch's first session, or close? An
-            # out-of-order batch must fail LOUD here — a mis-split
-            # session would poison the long-lived grid forever.
-            firsts = sess.filter(F.col("seq") == 1).select(
-                "user_id", F.col("first_s").alias("b_first_s")
-            )
-            dec = (
-                firsts.join(prior.alias("c"), "user_id", "left")
-                .select(
-                    "user_id",
-                    "b_first_s",
-                    F.col("c.open_first_s").alias("p_first"),
-                    F.col("c.open_last_s").alias("p_last"),
-                )
-                .withColumn(
-                    "merged",
-                    F.when(F.col("p_last").isNull(), F.lit(False)).when(
-                        F.col("b_first_s") < F.col("p_last"),
-                        F.raise_error(
-                            F.concat(
-                                F.lit(
-                                    "session_tails_sink: out-of-order "
-                                    f"micro-batch {batch_id} — events for "
-                                    "user_id="
-                                ),
-                                F.col("user_id").cast("string"),
-                                F.lit(" precede the stored open_last_s ("),
-                                F.col("b_first_s").cast("string"),
-                                F.lit(" < "),
-                                F.col("p_last").cast("string"),
-                                F.lit(
-                                    "); the in-order delivery contract is "
-                                    "broken — refusing to fold"
-                                ),
-                            )
-                        ).cast("boolean"),
-                    ).otherwise(
-                        F.col("b_first_s") - F.col("p_last")
-                        <= SESSION_GAP_SEC
-                    ),
-                )
-            )
-            joined = sess.join(dec, "user_id")
-            closed_batch = joined.filter(
-                F.col("seq") < F.col("n_sess")
-            ).select(
-                (
-                    F.col("last_s")
-                    - F.when(
-                        (F.col("seq") == 1) & F.col("merged"),
-                        F.col("p_first"),
-                    ).otherwise(F.col("first_s"))
-                )
-                .cast("bigint")
-                .alias("dur")
-            )
-            closed_tails = dec.filter(
-                F.col("p_last").isNotNull() & ~F.col("merged")
-            ).select(
-                (F.col("p_last") - F.col("p_first"))
-                .cast("bigint")
-                .alias("dur")
-            )
-            delta = (
-                closed_batch.unionByName(closed_tails)
-                .groupBy("dur")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_death"))
-                .cache()
-            )
-            new_tails = joined.filter(
-                F.col("seq") == F.col("n_sess")
-            ).select(
-                "user_id",
-                F.when(
-                    (F.col("n_sess") == 1) & F.col("merged"),
-                    F.col("p_first"),
-                )
-                .otherwise(F.col("first_s"))
-                .cast("bigint")
-                .alias("open_first_s"),
-                F.col("last_s").cast("bigint").alias("open_last_s"),
-            )
-            try:
-                has_delta = not delta.isEmpty()
-                if has_delta and not _landed_on(grid, batch_id, rv_g, hwm_g):
-                    try:
-                        # closed-duration counts are purely additive:
-                        # the batch delta lands APPEND-ONLY (no prior
-                        # probe, no MERGE rewrite); totals fold on
-                        # read (_served_km_grid) and the maintenance
-                        # cycle's aggregating compaction re-bounds
-                        # live rows to one per distinct duration
-                        grid.write(
-                            delta, mode="append",
-                            extra=_stamp(batch_id, hwm_g),
-                            conflict_on="batch_id", read_version=rv_g,
-                            monotone_max=("batch_hwm",),
-                        )
-                    except DuplicateCommitError:
-                        pass  # a rival landed this batch's grid delta
-                if rv_t is None:  # first commit creates the tails table
-                    tails.write(
-                        new_tails, mode="append",
-                        extra=_stamp(batch_id, hwm_t),
-                        conflict_on="batch_id", read_version=rv_t,
-                        monotone_max=("batch_hwm",),
-                    )
-                else:
-                    tails.merge(
-                        new_tails, ["user_id"],
-                        extra=_stamp(batch_id, hwm_t),
-                        read_version=rv_t, conflict_on="batch_id",
-                        prune_keys=("user_id", user_keys or None),
-                    )
-                return True
-            except DuplicateCommitError:
-                return False  # a rival landed this batch's tails
-            except ConcurrentWriteError:
-                continue  # re-pin both tables and re-fold
-            finally:
-                delta.unpersist()
-        raise RuntimeError(
-            f"session_tails_sink: could not commit batch {batch_id} after "
-            f"3 attempts (concurrent writers kept advancing {tails_path})"
+        return _commit_batch(
+            batch_df.sparkSession, batch_id, "session_tails_sink",
+            [grid_path, tails_path], stage,
         )
     finally:
-        sess.unpersist()
+        for c in cached:
+            c.unpersist()
 
 
 def maintain_session_tails(
@@ -6878,14 +6035,18 @@ def maintain_session_tails(
                 pass  # best-effort maintenance; the next cycle retries
             # the delta-append duration grid compacts by AGGREGATION
             # (totals invariant), not by clustering — nothing probes it
-            _aggregate_compact(
-                spark, grid_path, ["dur"],
-                [F.sum("n_death").cast("bigint").alias("n_death")],
-            )
+            _aggregate_compact(spark, grid_path, *_km_grid_fold())
         for path in (tails_path, grid_path):
             _maybe_clean_log(spark, path, log_retention)
 
     return _run_foreach_batch(stream, _sink, checkpoint)
+
+
+def _km_grid_fold() -> tuple[list[str], list]:
+    """The closed-duration grid's (keys, aggregates): the bigint death
+    count per duration — shared by the read-side fold and the
+    compaction."""
+    return ["dur"], [_sum("n_death")]
 
 
 def _served_km_grid(
@@ -6904,12 +6065,7 @@ def _served_km_grid(
     tails_df = LakehouseTable(spark, tails_path).read()
     if os.path.exists(os.path.join(grid_path, "_log")):
         # delta-append grid: fold the per-batch delta rows to totals
-        closed = (
-            LakehouseTable(spark, grid_path)
-            .read()
-            .groupBy("dur")
-            .agg(F.sum("n_death").cast("bigint").alias("n_death"))
-        )
+        closed = _fold_grid(spark, grid_path, *_km_grid_fold())
     else:  # no session ever closed: the grid table was never created
         closed = spark.createDataFrame([], _SESS_GRID_SCHEMA)
     gmax = tails_df.agg(F.max("open_last_s").alias("gmax"))
@@ -7077,20 +6233,12 @@ def copurchase_sink(
     compaction (``maintain_copurchase``'s cycle) folds the deltas
     back to one row per key.
 
-    Exactly-once across TWO tables (the rake protocol — neither
-    grid's delta reads the other): replay-check ITEMS first (it
-    commits last, and carries the cumulative ``n_baskets_total`` +
-    ``orders_hwm`` stamps so a crash between commits replays into
-    pairs-skipped / items-recomputed with the totals added exactly
-    once), commit pairs -> items. Returns False on full replay or an
-    empty batch."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
-
-    spark = batch_df.sparkSession
+    Exactly-once across TWO tables through ``_commit_batch`` (neither
+    grid's delta reads the other): pairs, then items — the marker,
+    carrying the cumulative ``n_baskets_total`` + ``orders_hwm``
+    stamps, so a crash between commits replays into pairs-skipped /
+    items-recomputed with the totals added exactly once. Returns False
+    on full replay or an empty batch."""
     if batch_df.isEmpty():
         return False
     baskets = batch_df.select("l_orderkey", "l_partkey").distinct().cache()
@@ -7119,69 +6267,34 @@ def copurchase_sink(
         F.min("l_orderkey"), F.max("l_orderkey"),
         F.countDistinct("l_orderkey"),
     ).first()
-    pairs = LakehouseTable(spark, pairs_path)
-    items = LakehouseTable(spark, items_path)
 
-    def _stamp_p(hwm) -> dict:
-        return {
-            "batch_id": batch_id,
-            "batch_hwm": max(
-                batch_id, hwm if hwm is not None else batch_id
+    def stage(pairs, items):
+        orders_hwm = items.table.latest_value("orders_hwm", as_of=items.version)
+        if orders_hwm is not None and o_min <= orders_hwm:
+            raise RuntimeError(
+                f"copurchase_sink: out-of-order micro-batch "
+                f"{batch_id} — orderkey {o_min} at or below the "
+                f"stored orders_hwm {orders_hwm}; the order-atomic "
+                "ascending-range delivery contract is broken — a "
+                "split basket would under-count pairs; refusing to "
+                "fold"
+            )
+        total_prev = items.table.latest_value(
+            "n_baskets_total", as_of=items.version
+        )
+        return [
+            _append(p_pairs),
+            _append(
+                p_items,
+                orders_hwm=int(o_max),
+                n_baskets_total=int(n_orders_batch) + int(total_prev or 0),
             ),
-        }
+        ]
 
     try:
-        for _ in range(3):
-            rv_i = items.latest_version()
-            hwm_i = items.latest_value("batch_hwm", as_of=rv_i)
-            if _landed_on(items, batch_id, rv_i, hwm_i):
-                return False  # items commits last: fully landed
-            orders_hwm = items.latest_value("orders_hwm", as_of=rv_i)
-            if orders_hwm is not None and o_min <= orders_hwm:
-                raise RuntimeError(
-                    f"copurchase_sink: out-of-order micro-batch "
-                    f"{batch_id} — orderkey {o_min} at or below the "
-                    f"stored orders_hwm {orders_hwm}; the order-atomic "
-                    "ascending-range delivery contract is broken — a "
-                    "split basket would under-count pairs; refusing to "
-                    "fold"
-                )
-            total_prev = items.latest_value("n_baskets_total", as_of=rv_i)
-            rv_p = pairs.latest_version()
-            hwm_p = pairs.latest_value("batch_hwm", as_of=rv_p)
-            stamp_i = {
-                "batch_id": batch_id,
-                "batch_hwm": max(
-                    batch_id, hwm_i if hwm_i is not None else batch_id
-                ),
-                "orders_hwm": int(o_max),
-                "n_baskets_total": int(n_orders_batch)
-                + int(total_prev if total_prev is not None else 0),
-            }
-            try:
-                if not _landed_on(pairs, batch_id, rv_p, hwm_p):
-                    try:
-                        pairs.write(
-                            p_pairs, mode="append",
-                            extra=_stamp_p(hwm_p),
-                            conflict_on="batch_id", read_version=rv_p,
-                            monotone_max=("batch_hwm",),
-                        )
-                    except DuplicateCommitError:
-                        pass  # a rival landed this batch's pairs
-                items.write(
-                    p_items, mode="append", extra=stamp_i,
-                    conflict_on="batch_id", read_version=rv_i,
-                    monotone_max=("batch_hwm", "orders_hwm"),
-                )
-                return True
-            except DuplicateCommitError:
-                return False  # a rival landed this batch's items
-            except ConcurrentWriteError:
-                continue  # a compaction landed mid-attempt; re-pin, retry
-        raise RuntimeError(
-            f"copurchase_sink: could not commit batch {batch_id} after 3 "
-            f"attempts (concurrent writers kept advancing {items_path})"
+        return _commit_batch(
+            batch_df.sparkSession, batch_id, "copurchase_sink",
+            [pairs_path, items_path], stage,
         )
     finally:
         baskets.unpersist()
@@ -7210,41 +6323,30 @@ def maintain_copurchase(
         spark = batch_df.sparkSession
         copurchase_sink(batch_df, batch_id, pairs_path, items_path)
         if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(
-                spark, pairs_path, ["a_part", "b_part"],
-                [F.sum("n_orders").cast("bigint").alias("n_orders")],
-            )
-            _aggregate_compact(
-                spark, items_path, ["pk"],
-                [F.sum("n_item").cast("bigint").alias("n_item")],
-            )
+            for path, fold in zip((pairs_path, items_path), _copurchase_folds()):
+                _aggregate_compact(spark, path, *fold)
         for path in (pairs_path, items_path):
             _maybe_clean_log(spark, path, log_retention)
 
     return _run_foreach_batch(stream, _sink, checkpoint)
 
 
+def _copurchase_folds() -> tuple:
+    """The (pairs, items) grids' (keys, aggregates): bigint count sums
+    — shared by the read-side fold and the compaction."""
+    return (["a_part", "b_part"], [_sum("n_orders")]), (["pk"], [_sum("n_item")])
+
+
 def _copurchase_grid_totals(
     spark: SparkSession, pairs_path: str, items_path: str
 ) -> tuple[DataFrame, DataFrame]:
-    """The (pairs, items) TOTALS relations summed from the
-    delta-append co-purchase grids — the read-side half of the delta
-    contract, shared by the serve entry and the pytests."""
-    from ..load.lakehouse import LakehouseTable
-
-    pairs = (
-        LakehouseTable(spark, pairs_path)
-        .read()
-        .groupBy("a_part", "b_part")
-        .agg(F.sum("n_orders").cast("bigint").alias("n_orders"))
+    """The (pairs, items) TOTALS relations folded from the
+    delta-append co-purchase grids — shared by the serve entry and the
+    pytests."""
+    return tuple(
+        _fold_grid(spark, path, *fold)
+        for path, fold in zip((pairs_path, items_path), _copurchase_folds())
     )
-    items = (
-        LakehouseTable(spark, items_path)
-        .read()
-        .groupBy("pk")
-        .agg(F.sum("n_item").cast("bigint").alias("n_item"))
-    )
-    return pairs, items
 
 
 def q_streaming_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7264,8 +6366,6 @@ def q_streaming_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..load.lakehouse import LakehouseTable
     from ..operators.graph import MIN_COPURCHASE, _affinity_from_grids
 
-    work = tempfile.mkdtemp(prefix="copur_stream_")
-    src = f"{work}/src"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -7276,6 +6376,8 @@ def q_streaming_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a_part bigint, b_part bigint, n_ab bigint, lift double, "
             "conf_a_to_b double",
         )
+    work = tempfile.mkdtemp(prefix="copur_stream_")
+    src = f"{work}/src"
     cuts = [k_lo + (k_hi - k_lo) * i // 4 for i in range(5)]
     _stage_ordered_batches(
         li, src, _range_batch_expr_closed("l_orderkey", cuts, k_hi), 4
@@ -7375,19 +6477,11 @@ def pmi_grids_sink(
     row per key, so live rows stay O(distinct keys) amortized — the
     LSM aggregate-on-compaction form of the same grid.
 
-    Exactly-once across two independent tables = the rake protocol
-    verbatim (replay-check UNIGRAMS first — they commit last), each
-    append individually guarded by ``_landed_on`` +
-    ``conflict_on="batch_id"``. Returns False on full replay or an
-    empty batch."""
-    from ..load.lakehouse import (
-        ConcurrentWriteError,
-        DuplicateCommitError,
-        LakehouseTable,
-    )
+    Exactly-once across the two independent tables through
+    ``_commit_batch``: pairs, then unigrams (the marker). Returns False
+    on full replay or an empty batch."""
     from ..operators.text import _ADJ_PAIRS_EXPR
 
-    spark = batch_df.sparkSession
     if batch_df.isEmpty():
         return False
     toks = batch_df.select(F.split(F.lower("text"), " ").alias("w"))
@@ -7402,47 +6496,10 @@ def pmi_grids_sink(
         .groupBy("t")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_t"))
     )
-    pairs = LakehouseTable(spark, pairs_path)
-    uni = LakehouseTable(spark, uni_path)
-
-    def _stamp(b: int, hwm) -> dict:
-        return {
-            "batch_id": b,
-            "batch_hwm": max(b, hwm if hwm is not None else b),
-        }
-
-    for _ in range(3):
-        rv_u = uni.latest_version()
-        hwm_u = uni.latest_value("batch_hwm", as_of=rv_u)
-        if _landed_on(uni, batch_id, rv_u, hwm_u):
-            return False  # unigrams commit last: fully landed
-        rv_p = pairs.latest_version()
-        hwm_p = pairs.latest_value("batch_hwm", as_of=rv_p)
-        try:
-            if not _landed_on(pairs, batch_id, rv_p, hwm_p):
-                try:
-                    pairs.write(
-                        p_pairs, mode="append",
-                        extra=_stamp(batch_id, hwm_p),
-                        conflict_on="batch_id", read_version=rv_p,
-                        monotone_max=("batch_hwm",),
-                    )
-                except DuplicateCommitError:
-                    pass  # a rival landed this batch's pairs
-            uni.write(
-                p_uni, mode="append",
-                extra=_stamp(batch_id, hwm_u),
-                conflict_on="batch_id", read_version=rv_u,
-                monotone_max=("batch_hwm",),
-            )
-            return True
-        except DuplicateCommitError:
-            return False  # a rival landed this batch's unigrams
-        except ConcurrentWriteError:
-            continue  # a compaction landed mid-attempt; re-pin and retry
-    raise RuntimeError(
-        f"pmi_grids_sink: could not commit batch {batch_id} after 3 "
-        f"attempts (concurrent writers kept advancing {uni_path})"
+    return _commit_batch(
+        batch_df.sparkSession, batch_id, "pmi_grids_sink",
+        [pairs_path, uni_path],
+        lambda pairs, uni: [_append(p_pairs), _append(p_uni)],
     )
 
 
@@ -7493,27 +6550,27 @@ def _fold_grid(
     )
 
 
+def _sum(col: str, dtype: str = "bigint"):
+    """A delta grid's additive aggregate: ``sum(col)`` cast back to
+    the column's stored type, keeping its name."""
+    return F.sum(col).cast(dtype).alias(col)
+
+
+def _pmi_folds() -> tuple:
+    """The (pairs, unigrams) grids' (keys, aggregates): bigint count
+    sums — shared by the read-side fold and the compaction."""
+    return (["w1", "w2"], [_sum("n_ab")]), (["t"], [_sum("n_t")])
+
+
 def _pmi_grid_totals(
     spark: SparkSession, pairs_path: str, uni_path: str
 ) -> tuple[DataFrame, DataFrame]:
-    """The (pairs, unigrams) TOTALS relations summed from the
-    delta-append grids — the read-side half of the delta contract,
-    shared by the serve entry and the pytests."""
-    from ..load.lakehouse import LakehouseTable
-
-    pairs = (
-        LakehouseTable(spark, pairs_path)
-        .read()
-        .groupBy("w1", "w2")
-        .agg(F.sum("n_ab").cast("bigint").alias("n_ab"))
+    """The (pairs, unigrams) TOTALS relations folded from the
+    delta-append grids — shared by the serve entry and the pytests."""
+    return tuple(
+        _fold_grid(spark, path, *fold)
+        for path, fold in zip((pairs_path, uni_path), _pmi_folds())
     )
-    uni = (
-        LakehouseTable(spark, uni_path)
-        .read()
-        .groupBy("t")
-        .agg(F.sum("n_t").cast("bigint").alias("n_t"))
-    )
-    return pairs, uni
 
 
 def maintain_pmi_grids(
@@ -7537,14 +6594,8 @@ def maintain_pmi_grids(
         spark = batch_df.sparkSession
         pmi_grids_sink(batch_df, batch_id, pairs_path, uni_path)
         if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(
-                spark, pairs_path, ["w1", "w2"],
-                [F.sum("n_ab").cast("bigint").alias("n_ab")],
-            )
-            _aggregate_compact(
-                spark, uni_path, ["t"],
-                [F.sum("n_t").cast("bigint").alias("n_t")],
-            )
+            for path, fold in zip((pairs_path, uni_path), _pmi_folds()):
+                _aggregate_compact(spark, path, *fold)
         for path in (pairs_path, uni_path):
             _maybe_clean_log(spark, path, log_retention)
 
@@ -7565,14 +6616,14 @@ def q_streaming_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
     from ..operators.text import _pmi_from_grids
 
-    work = tempfile.mkdtemp(prefix="pmi_stream_")
-    src = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hi = docs.agg(F.max("doc_id")).first()[0]
     if hi is None:  # empty corpus: the batch twin returns empty
         return spark.createDataFrame(
             [], "w1 string, w2 string, n_ab bigint, pmi double"
         )
+    work = tempfile.mkdtemp(prefix="pmi_stream_")
+    src = f"{work}/src"
     hi += 1
     cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
     _stage_ordered_batches(

@@ -2366,10 +2366,17 @@ def test_rfm_state_sink_delta_append_and_compaction(spark, tmp_path):
     assert got2 == got
 
 
-def test_streaming_entries_empty_fact_returns_empty(spark, tmp_path):
+def test_streaming_entries_empty_fact_returns_empty(
+    spark, tmp_path, monkeypatch
+):
     """An empty source table must yield an EMPTY frame from the
     replay-style driver entries (their batch twins and shared oracles
-    all return empty) — not a TypeError from None range arithmetic."""
+    all return empty) — not a TypeError from None range arithmetic —
+    and must not leave a work directory behind: the entries create it
+    only after the empty check."""
+    import os
+    import tempfile
+
     from pyspark.sql import functions as F  # noqa: F401
 
     d = str(tmp_path)
@@ -2385,12 +2392,36 @@ def test_streaming_entries_empty_fact_returns_empty(spark, tmp_path):
         [], "doc_id long, text string, lang string, source string, "
             "n_chars bigint"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+    spark.createDataFrame(
+        [], "vec_id long, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    spark.createDataFrame(
+        [], "l_orderkey long, l_partkey long"
+    ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
+
+    work_root = tmp_path / "work_root"
+    work_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(work_root))
 
     assert streaming_events.q_streaming_rfm(spark, d).count() == 0
     assert streaming_events.q_streaming_burstiness(spark, d).count() == 0
     assert streaming_events.q_streaming_rake_by_source(
         spark, d
     ).count() == 0
+    for entry in (
+        streaming_events.q_streaming_daily_peaks,
+        streaming_events.q_streaming_novelty,
+        streaming_events.q_streaming_drift_mmd,
+        streaming_events.q_streaming_mann_kendall,
+        streaming_events.q_streaming_ann_ivf,
+        streaming_events.q_streaming_ann_ivf_pq_stored,
+        streaming_events.q_streaming_bm25,
+        streaming_events.q_streaming_decontaminate,
+        streaming_events.q_streaming_affinity,
+        streaming_events.q_streaming_pmi,
+    ):
+        assert entry(spark, d).count() == 0, entry.__name__
+    assert os.listdir(work_root) == []
 
 
 def test_events_daily_sink_additive_order_insensitive_replay(
