@@ -20,8 +20,11 @@ natively) — the reader sniffs the footer and adapts.
 
 from __future__ import annotations
 
+import atexit
 import logging
 import os
+import shutil
+import tempfile
 
 from collections.abc import Iterable
 from typing import NamedTuple
@@ -347,14 +350,124 @@ def dedupe_stream(stream: DataFrame, watermark: str = "30 minutes") -> DataFrame
     return stream.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 
-def _run_foreach_batch(stream: DataFrame, sink, checkpoint: str):
-    """Shared foreachBatch/availableNow wiring for every batch sink."""
+_OPTIMIZE_FILES = 8
+"""Files per new clustered generation in the maintenance cycle's
+incremental Z-order OPTIMIZE (sized for ~128 MB-1 GB each at the
+target corpus)."""
+
+_OPTIMIZE_MAX_GENERATIONS = 8
+"""Clustered generations a table may hold before the cycle's OPTIMIZE
+folds the smallest together (size-tiered merging — see
+``LakehouseTable.optimize``)."""
+
+
+def _run_foreach_batch(
+    stream: DataFrame,
+    checkpoint: str,
+    sink,
+    tables=(),
+    optimize_every: int | None = None,
+    log_retention: int | None = None,
+):
+    """Run ``sink(batch_df, batch_id)`` under foreachBatch
+    (availableNow), each batch followed by the one maintenance cycle
+    of the sink's lakehouse tables.
+
+    ``tables`` declares them as ``(path, fold, zorder_by)``. Every
+    ``optimize_every`` batches, table by table in declared order: a
+    ``fold`` (a delta grid's ``(keys, aggregates)``) runs the
+    aggregating compaction ``_aggregate_compact`` (one row per key
+    again, totals invariant); a ``zorder_by`` key runs the INCREMENTAL
+    Z-order OPTIMIZE — only the files added since the last cycle
+    cluster into a new generation of ``_OPTIMIZE_FILES`` files, the
+    smallest generations folding together above
+    ``_OPTIMIZE_MAX_GENERATIONS`` — so per-cycle write volume is bounded
+    by recent appends, never by table size, while the sinks' per-batch
+    probe reads (``read_where_in`` on the key) stay file-pruned. Both
+    are best-effort: a commit landing mid-rewrite aborts it and the
+    next cycle retries. Compaction commits carry no batch_id, so they
+    never touch the exactly-once watermark, and a read pinned to an
+    older version keeps its files (OPTIMIZE removes from the log, not
+    the disk). Then ``_maybe_clean_log`` runs on every table.
+    Sink-specific steps (retirement) belong in ``sink``, after its
+    commit."""
+    from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        sink(batch_df, batch_id)
+        spark = batch_df.sparkSession
+        if optimize_every and (batch_id + 1) % optimize_every == 0:
+            for path, fold, key in tables:
+                if fold is not None:
+                    _aggregate_compact(spark, path, *fold)
+                if key is None:
+                    continue
+                try:
+                    LakehouseTable(spark, path).optimize(
+                        target_files=_OPTIMIZE_FILES,
+                        zorder_by=[key],
+                        incremental=True,
+                        max_generations=_OPTIMIZE_MAX_GENERATIONS,
+                    )
+                except ConcurrentWriteError:
+                    pass  # best-effort maintenance; the next cycle retries
+        for path, _, _ in tables:
+            _maybe_clean_log(spark, path, log_retention)
+
     return (
-        stream.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(_batch)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
+
+
+def _work_dir(prefix: str) -> str:
+    """A fresh work dir for one streaming entry's state (staged source,
+    checkpoint, maintained tables), removed at interpreter exit. It
+    outlives the entry call on purpose: the entry returns lazy frames
+    over the maintained tables."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    return work
+
+
+def _replay(
+    spark: SparkSession,
+    df: DataFrame,
+    key: str,
+    slice_rule,
+    maintain,
+    n_batches: int = 4,
+    cols: list | None = None,
+) -> str | None:
+    """The one replay harness of the ``q_streaming_*`` entries: deliver
+    ``df`` as ``n_batches`` ordered micro-batches through
+    ``maintain(stream, work)`` (a ``maintain_*`` call keeping its
+    tables under ``work``) and wait for it. Returns the work dir, or
+    None on an empty source — before any directory exists.
+
+    One bounds job reads ``(min, max)`` of ``key``; ``slice_rule(lo,
+    hi)`` turns them into the batch-index Column that
+    ``_stage_ordered_batches`` stages by (batch membership fixes each
+    batch's partial sums, so a rule's cut arithmetic is part of the
+    entry's bit-exact result). The stream reads one file per trigger
+    with the staged frame's own schema (``cols``: the staged columns,
+    default all)."""
+    lo, hi = df.agg(F.min(key), F.max(key)).first()
+    if hi is None:
+        return None
+    work = _work_dir("replay_")
+    src = f"{work}/src"
+    _stage_ordered_batches(df, src, slice_rule(lo, hi), n_batches, cols)
+    staged = df if cols is None else df.select(*cols)
+    stream = (
+        spark.readStream.schema(staged.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    maintain(stream, work).awaitTermination()
+    return work
 
 
 def _stage_ordered_batches(
@@ -362,26 +475,15 @@ def _stage_ordered_batches(
     cols: list | None = None,
 ) -> None:
     """Stage ``df`` as one mtime-ordered parquet file per micro-batch
-    in ONE Spark job — the replay-harness staging every
-    ``q_streaming_*`` entry runs before its stream starts.
-
-    ``batch_expr`` is an int Column assigning each row its batch index
-    (0..n_batches-1; NULL rows are dropped — the old per-slice loop's
-    filters). The previous form ran one full source scan + single-task
-    coalesce(1) write PER SLICE (4 scans, 4 serialized writes); this
-    runs one scan, one hash shuffle on the batch index, and n
-    concurrent single-file writes — identical row SET per batch, so
-    every per-batch sink aggregation commits identical state, and the
-    entries' outputs hash-check unchanged.
+    in ONE Spark job: ``batch_expr`` is an int Column assigning each
+    row its batch index (0..n_batches-1; NULL rows are dropped), and
+    one scan, one hash shuffle on the index and n concurrent
+    single-file writes land the batches.
 
     FileStreamSource lists files by (mtime, path): each batch's single
     file lands as ``src/batch-<i>.parquet`` with strictly increasing
-    mtimes, exactly as the old loop pinned them. A batch index with no
-    rows stages no file (the old loop staged an empty file; sinks
-    skip empty batches either way, and the maintained tables come out
-    identical)."""
+    mtimes. A batch index with no rows stages no file."""
     import glob as _glob
-    import shutil as _shutil
     import time as _time
 
     parts = f"{src}_parts"
@@ -411,14 +513,13 @@ def _stage_ordered_batches(
         target = os.path.join(src, f"batch-{i:03d}.parquet")
         os.replace(files[0], target)
         os.utime(target, (t0 + i, t0 + i))
-    _shutil.rmtree(parts, ignore_errors=True)
+    shutil.rmtree(parts, ignore_errors=True)
 
 
 def _range_batch_expr(key, cuts: list) -> "F.Column":
-    """Batch-index expression for the standard 4-slice key-range
-    replay: index i where cuts[i] <= key < cuts[i+1] (NULL outside
-    [cuts[0], cuts[-1]) — dropped by _stage_ordered_batches, exactly
-    the rows the old per-slice filters excluded)."""
+    """Batch-index expression for a key-range replay: index i where
+    cuts[i] <= key < cuts[i+1] (NULL outside [cuts[0], cuts[-1]),
+    dropped by ``_stage_ordered_batches``)."""
     k = F.col(key) if isinstance(key, str) else key
     expr = F.lit(None).cast("int")
     for i in range(len(cuts) - 2, -1, -1):
@@ -429,11 +530,9 @@ def _range_batch_expr(key, cuts: list) -> "F.Column":
 
 
 def _range_batch_expr_closed(key, cuts: list, hi) -> "F.Column":
-    """Batch-index expression for the value-range replays whose LAST
+    """Batch-index expression for a value-range replay whose LAST
     slice is inclusive: index i where cuts[i] <= key < cuts[i+1] for
-    i < n-1, and cuts[n-1] <= key <= hi for the last slice — the
-    ``cond = ... if i < 3 else key <= hi`` form of the old loops,
-    verbatim."""
+    i < n-1, and cuts[n-1] <= key <= hi for the last slice."""
     k = F.col(key) if isinstance(key, str) else key
     n = len(cuts) - 1
     expr = F.when(
@@ -444,6 +543,25 @@ def _range_batch_expr_closed(key, cuts: list, hi) -> "F.Column":
             (k >= F.lit(cuts[i])) & (k < F.lit(cuts[i + 1])), F.lit(i)
         ).otherwise(expr)
     return expr
+
+
+def _open_quarters(key: str):
+    """Slice rule: four equal ``key`` ranges of [0, max + 1) — the
+    id-range replay (``lo`` unused)."""
+
+    def rule(lo, hi):
+        n = hi + 1
+        return _range_batch_expr(key, [0, n // 4, n // 2, (3 * n) // 4, n])
+
+    return rule
+
+
+def _closed_quarters(key: str):
+    """Slice rule: four equal ``key`` ranges of [min, max], the last
+    one closed — the value-range replay (ts, l_orderkey)."""
+    return lambda lo, hi: _range_batch_expr_closed(
+        key, [lo + (hi - lo) * i // 4 for i in range(5)], hi
+    )
 
 
 def write_batches_to_parquet(
@@ -463,7 +581,7 @@ def write_batches_to_parquet(
             .parquet(path)
         )
 
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(stream, checkpoint, _sink)
 
 
 def lakehouse_batch_sink(batch_df: DataFrame, batch_id: int, table_path: str) -> bool:
@@ -520,11 +638,11 @@ def write_batches_to_lakehouse(
     __batch_id) to true exactly-once: a torn write is invisible
     because files without a log entry don't exist to readers.
     """
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        lakehouse_batch_sink(batch_df, batch_id, table_path)
-        _maybe_clean_log(batch_df.sparkSession, table_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: lakehouse_batch_sink(b, i, table_path),
+        [(table_path, None, None)], log_retention=log_retention,
+    )
 
 
 def heavy_hitter_sink(
@@ -598,12 +716,11 @@ def maintain_heavy_hitters(
     """Run the streaming MG summary sink under foreachBatch
     (availableNow) — the streaming twin of the batch ``heavy_hitters``
     candidate pass."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        heavy_hitter_sink(batch_df, batch_id, table_path)
-        _maybe_clean_log(batch_df.sparkSession, table_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: heavy_hitter_sink(b, i, table_path),
+        [(table_path, None, None)], log_retention=log_retention,
+    )
 
 
 def _landed_on(table, batch_id: int, read_version, hwm) -> tuple[bool, int | None]:
@@ -1064,57 +1181,30 @@ def maintain_lsh_dedup(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
 ):
     """Run the incremental LSH dedup sink under foreachBatch
     (availableNow) — the streaming twin of ``dedup_minhash_lsh``.
 
     ``optimize_every=N`` compacts the signature table every N batches
-    (metadata-swap OPTIMIZE): an append-per-batch index otherwise
+    with the cycle's incremental Z-order by ``band_key`` (see
+    ``_run_foreach_batch``): an append-per-batch index otherwise
     accumulates one small file per micro-batch forever, and the
     per-batch probe join opens O(batches) files instead of O(1) — the
     standard streaming-ingest small-file problem, solved the standard
-    lakehouse way. The compaction is INCREMENTAL, Z-ordered by
-    ``band_key``: each cycle clusters ONLY the band rows appended
-    since the last cycle into a new clustered generation of
-    ``optimize_files`` files (size for ~128 MB-1 GB each at the
-    target corpus), folding the smallest generations together when
-    the count exceeds ``max_generations`` (size-tiered merging — see
-    ``LakehouseTable.optimize``), so the per-cycle write volume is
-    bounded by recent-APPEND volume, never by index size (a full
-    rewrite per cycle would be amortized O(corpus) written per batch
-    on a growing index). Each generation's band_key [min, max]
-    footers stay tight, so the sink's per-batch probe
-    (``read_where_in`` on the batch's band keys) opens at most a few
-    files per generation plus the not-yet-compacted recent appends —
-    WITHOUT this cycle the probe still answers correctly but degrades
-    to scanning the full index per batch. Compaction commits carry no
-    batch_id, so they never collide with the exactly-once watermark; a
-    probe pinned to an older version keeps its files (OPTIMIZE removes
-    from the log, not the disk). If ``log_retention`` is set on these
-    SHARED index tables under independent distinct-batch writers, size
-    it above the worst-case batch lag — see ``_landed_on``."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
-
-        lsh_dedup_sink(batch_df, batch_id, sigs_path, verdicts_path)
-        spark = batch_df.sparkSession
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            try:
-                LakehouseTable(spark, sigs_path).optimize(
-                    target_files=optimize_files,
-                    zorder_by=["band_key"],
-                    incremental=True,
-                    max_generations=optimize_max_generations,
-                )
-            except ConcurrentWriteError:
-                pass  # best-effort maintenance; the next cycle retries
-        _maybe_clean_log(spark, sigs_path, log_retention)
-        _maybe_clean_log(spark, verdicts_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    lakehouse way. Each generation's band_key [min, max] footers stay
+    tight, so the sink's per-batch probe (``read_where_in`` on the
+    batch's band keys) opens at most a few files per generation plus
+    the not-yet-compacted recent appends — WITHOUT this cycle the
+    probe still answers correctly but degrades to scanning the full
+    index per batch. If ``log_retention`` is set on these SHARED index
+    tables under independent distinct-batch writers, size it above the
+    worst-case batch lag — see ``_landed_on``."""
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: lsh_dedup_sink(b, i, sigs_path, verdicts_path),
+        [(sigs_path, None, "band_key"), (verdicts_path, None, None)],
+        optimize_every, log_retention,
+    )
 
 
 def _phash_partner_pairs(
@@ -1246,40 +1336,20 @@ def maintain_phash_dedup(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
 ):
     """Run the incremental perceptual-hash dedup sink under
     foreachBatch (availableNow) — the streaming image-side twin of
-    ``maintain_lsh_dedup``, with the same INCREMENTAL index
-    compaction (``optimize_every``: each cycle Z-orders only the
-    appends since the last cycle by ``phash`` into a new clustered
-    generation of ``optimize_files`` files, size-tiered generation
-    merging — per-cycle writes bounded by recent-append volume, so
-    the per-batch 13-mask probe reads file-pruned; see
-    ``maintain_lsh_dedup``) and metadata retention
+    ``maintain_lsh_dedup``, with the same incremental index
+    compaction (``optimize_every``: Z-order by ``phash``, so the
+    per-batch 13-mask probe reads file-pruned) and metadata retention
     (``log_retention``; size above worst-case batch lag under
     independent writers, see ``_landed_on``) maintenance hooks."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
-
-        phash_dedup_sink(batch_df, batch_id, index_path, verdicts_path)
-        spark = batch_df.sparkSession
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            try:
-                LakehouseTable(spark, index_path).optimize(
-                    target_files=optimize_files,
-                    zorder_by=["phash"],
-                    incremental=True,
-                    max_generations=optimize_max_generations,
-                )
-            except ConcurrentWriteError:
-                pass  # best-effort maintenance; the next cycle retries
-        _maybe_clean_log(spark, index_path, log_retention)
-        _maybe_clean_log(spark, verdicts_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: phash_dedup_sink(b, i, index_path, verdicts_path),
+        [(index_path, None, "phash"), (verdicts_path, None, None)],
+        optimize_every, log_retention,
+    )
 
 
 _IVM_DEC = "decimal(25,6)"
@@ -1375,12 +1445,11 @@ def maintain_event_rollup(
     log_retention: int | None = None,
 ):
     """Run the streaming IVM sink under foreachBatch (availableNow)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        ivm_lakehouse_sink(batch_df, batch_id, table_path)
-        _maybe_clean_log(batch_df.sparkSession, table_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: ivm_lakehouse_sink(b, i, table_path),
+        [(table_path, None, None)], log_retention=log_retention,
+    )
 
 
 def cdc_apply_sink(
@@ -1457,12 +1526,11 @@ def apply_changes_stream(
     change-feed stream materializes into an exactly-once-maintained
     lakehouse table."""
     keys = list(primary_key)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        cdc_apply_sink(batch_df, batch_id, table_path, keys, sequence_by)
-        _maybe_clean_log(batch_df.sparkSession, table_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: cdc_apply_sink(b, i, table_path, keys, sequence_by),
+        [(table_path, None, None)], log_retention=log_retention,
+    )
 
 
 def interval_join_clicks_purchases(
@@ -1711,11 +1779,9 @@ def q_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     application AND intra-batch event ordering end-to-end through the
     lakehouse commit log.
     """
-    import tempfile
-
     from ..catalog import load_table
 
-    work = tempfile.mkdtemp(prefix="cdc_apply_")
+    work = _work_dir("cdc_apply_")
     src = f"{work}/changes"
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1783,12 +1849,10 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     every false candidate — so the result is IDENTICAL to the batch
     ``heavy_hitters`` and hash-checks against the same SQL oracle.
     """
-    import tempfile
-
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
 
-    work = tempfile.mkdtemp(prefix="hh_stream_")
+    work = _work_dir("hh_stream_")
     tbl_path = f"{work}/hh_table"
     # split the events into 4 files so availableNow really runs 4
     # micro-batches — the maintained summary is folded across batches,
@@ -1824,44 +1888,39 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DEDUP_VERDICTS_SCHEMA = (
+    "doc_id bigint, is_dup boolean, dup_of bigint, n_dup_sources bigint"
+)
+
+
 def q_streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the incremental LSH dedup sink:
-    replay the documents table in 4 doc_id-range micro-batches (file
-    mtimes pinned so FileStreamSource delivers them in range order)
-    through ``maintain_lsh_dedup``, then return the maintained
-    verdicts table. Because batches arrive in doc_id order, the
+    replay the documents table in 4 doc_id-range micro-batches
+    (``_replay``) through ``maintain_lsh_dedup``, then return the
+    maintained verdicts table. Batches arrive IN doc_id order, so the
     arrival-time verdict ("shares a band with anything seen before
     me") equals the batch relation ("shares a band with any smaller
-    doc_id") — so the streamed output hash-checks against the batch
+    doc_id"), and the streamed output hash-checks against the batch
     LSH oracle, proving the maintained-index path end-to-end through
     the lakehouse commit log.
     """
-    import tempfile
-
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
 
-    work = tempfile.mkdtemp(prefix="lsh_stream_")
-    src = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    hi = docs.agg(F.max("doc_id")).first()[0] + 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        docs, src, _range_batch_expr("doc_id", cuts), 4
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     # optimize_every=3 exercises the FULL maintained-index lifecycle
     # in the driver proof at ONE compaction's cost: the cycle Z-ORDERS
     # the index by band_key after batch 2, and batch 3 probes the
     # clustered index through the stats-pruned read_where_in path
-    maintain_lsh_dedup(
-        stream, f"{work}/sigs", f"{work}/verdicts", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
+    work = _replay(
+        spark, docs, "doc_id", _open_quarters("doc_id"),
+        lambda stream, w: maintain_lsh_dedup(
+            stream, f"{w}/sigs", f"{w}/verdicts", f"{w}/ckpt",
+            optimize_every=3,
+        ),
+    )
+    if work is None:  # empty corpus: nothing to judge
+        return spark.createDataFrame([], _DEDUP_VERDICTS_SCHEMA)
     return LakehouseTable(spark, f"{work}/verdicts").read().select(
         "doc_id", "is_dup", "dup_of", "n_dup_sources"
     )
@@ -1870,41 +1929,30 @@ def q_streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the incremental perceptual-hash image
     dedup sink: replay the documents table in 4 doc_id-range
-    micro-batches (file mtimes pinned so FileStreamSource delivers
-    them in range order) through ``maintain_phash_dedup``, then return
-    the maintained verdicts table. Because batches arrive in doc_id
-    order, the arrival-time verdict ("within Hamming 1 of anything
+    micro-batches (``_replay``) through ``maintain_phash_dedup``, then
+    return the maintained verdicts table. Batches arrive IN doc_id
+    order, so the arrival-time verdict ("within Hamming 1 of anything
     seen before me") equals the batch relation ("within Hamming 1 of
-    any smaller doc_id") — so the streamed output hash-checks against
+    any smaller doc_id"), and the streamed output hash-checks against
     an all-pairs bit_count(xor()) batch oracle, proving the
     multi-probe index path end-to-end through the lakehouse commit
     log with a DIFFERENT algorithm on the oracle side.
     """
-    import tempfile
-
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
 
-    work = tempfile.mkdtemp(prefix="phash_stream_")
-    src = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    hi = (max_id if max_id is not None else 0) + 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        docs, src, _range_batch_expr("doc_id", cuts), 4
-    )
-    stream = (
-        spark.readStream.schema("doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     # optimize_every=3: one mid-stream Z-ORDER (by phash) with the
     # last batch probing the clustered index, as in q_streaming_dedup_lsh
-    maintain_phash_dedup(
-        stream, f"{work}/index", f"{work}/verdicts", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
+    work = _replay(
+        spark, docs, "doc_id", _open_quarters("doc_id"),
+        lambda stream, w: maintain_phash_dedup(
+            stream, f"{w}/index", f"{w}/verdicts", f"{w}/ckpt",
+            optimize_every=3,
+        ),
+    )
+    if work is None:  # empty corpus: nothing to judge
+        return spark.createDataFrame([], _DEDUP_VERDICTS_SCHEMA)
     return LakehouseTable(spark, f"{work}/verdicts").read().select(
         "doc_id", "is_dup", "dup_of", "n_dup_sources"
     )
@@ -2202,15 +2250,11 @@ def maintain_source_sketch(
     """Run the streaming sketch sink under foreachBatch (availableNow).
     ``optimize_every=N`` runs the aggregating compaction every N
     batches (one row per source again, sketch invariant)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        source_sketch_sink(batch_df, batch_id, table_path)
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(spark, table_path, *_sketch_fold())
-        _maybe_clean_log(spark, table_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: source_sketch_sink(b, i, table_path),
+        [(table_path, _sketch_fold(), None)], optimize_every, log_retention,
+    )
 
 
 def q_streaming_source_sketch(
@@ -2224,36 +2268,24 @@ def q_streaming_source_sketch(
     SQL twin, proving mergeable-sketch IVM end-to-end through the
     lakehouse commit log.
     """
-    import tempfile
-
     from ..catalog import load_table
     from ..operators.dedup import N_MINHASH
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    if hi is None:  # empty corpus: the batch twin returns empty
+    work = _replay(
+        spark, docs, "doc_id", _open_quarters("doc_id"),
+        lambda stream, w: maintain_source_sketch(
+            stream, f"{w}/sketch", f"{w}/ckpt"
+        ),
+    )
+    if work is None:  # empty corpus: the batch twin returns empty
         return spark.createDataFrame(
             [],
             "source string, "
             + ", ".join(f"mh{j} string" for j in range(N_MINHASH)),
         )
-    work = tempfile.mkdtemp(prefix="sketch_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        docs, src, _range_batch_expr("doc_id", cuts), 4
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_source_sketch(
-        stream, f"{work}/sketch", f"{work}/ckpt"
-    ).awaitTermination()
     return _sketch_grid_totals(spark, f"{work}/sketch")
 
 
@@ -2312,14 +2344,12 @@ def q_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     and hash-checks against SELECT-the-table.
     """
     import glob
-    import os
-    import tempfile
     import time
     import uuid
 
     from ..catalog import load_table
 
-    work = tempfile.mkdtemp(prefix="dedup_replay_")
+    work = _work_dir("dedup_replay_")
     src = f"{work}/src"
     os.makedirs(src, exist_ok=True)
     ev = load_table(spark, sf_dir, "events")
@@ -2331,9 +2361,7 @@ def q_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = sorted(glob.glob(f"{src}/*.parquet"))
     os.utime(staged[0], (t0, t0))
     replay = os.path.join(src, "replay-" + os.path.basename(staged[0]))
-    import shutil as _shutil
-
-    _shutil.copyfile(staged[0], replay)
+    shutil.copyfile(staged[0], replay)
     os.utime(replay, (t0 + 1, t0 + 1))
     stream = read_events_stream(spark, src, max_files_per_trigger=1)
     deduped = dedupe_stream(stream).select(
@@ -2381,11 +2409,10 @@ def q_streaming_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth the oracle's TRUE flag checks against.
     """
     import glob
-    import tempfile
 
     from ..catalog import load_table
 
-    work = tempfile.mkdtemp(prefix="foreach_sink_")
+    work = _work_dir("foreach_sink_")
     src = f"{work}/src"
     load_table(spark, sf_dir, "events").repartition(4).write.parquet(src)
     n_files = len(glob.glob(f"{src}/part-*"))
@@ -2426,12 +2453,11 @@ def q_streaming_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch oracle states all three as constants TRUE.
     """
     import glob
-    import tempfile
 
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
 
-    work = tempfile.mkdtemp(prefix="exactly_once_")
+    work = _work_dir("exactly_once_")
     src = f"{work}/src"
     load_table(spark, sf_dir, "events").repartition(4).write.parquet(src)
     n_files = len(glob.glob(f"{src}/part-*"))
@@ -2715,18 +2741,14 @@ def maintain_cohort_ltv(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
     retire_every: int | None = None,
     retire_horizon_months: int | None = None,
 ):
     """Run the cohort-LTV IVM sink under foreachBatch (availableNow).
-    ``optimize_every=N`` compacts BOTH customer-keyed tables every N
-    batches — INCREMENTALLY, Z-ordered by o_custkey: each cycle
-    clusters only the files added since the last cycle (appends AND
-    merge-rewritten state files, which drop out of their generation)
-    into a new generation of ``optimize_files`` files, size-tiered
-    generation merging (see ``LakehouseTable.optimize``) — so the
+    ``optimize_every=N`` runs the aggregating compaction on the two
+    delta-append grids (state, matrix) every N batches, then clusters
+    BOTH customer-keyed tables (firsts, state) with the incremental
+    Z-order by o_custkey (see ``_run_foreach_batch``) — so the
     per-batch customer-probe reads (``read_where_in``) stay
     file-pruned as the customer population grows while per-cycle
     write volume stays bounded by recent-change volume, not table
@@ -2766,9 +2788,9 @@ def maintain_cohort_ltv(
     published matrix is long-lived, so the corruption would be
     unrecoverable."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
+    from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
 
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         retiring = bool(retire_every and retire_horizon_months)
         wm = None
@@ -2830,79 +2852,66 @@ def maintain_cohort_ltv(
                         )
                 except ConcurrentWriteError:
                     pass  # best-effort; the next cycle retries
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            # aggregating compactions FIRST (re-bound the delta-append
-            # grids to one row per key), then the incremental Z-order
-            # clusters the freshly folded state files by customer
-            for path, fold in zip((state_path, matrix_path), _cohort_folds()):
-                _aggregate_compact(spark, path, *fold)
-            for path in (firsts_path, state_path):
-                try:
-                    LakehouseTable(spark, path).optimize(
-                        target_files=optimize_files,
-                        zorder_by=["o_custkey"],
-                        incremental=True,
-                        max_generations=optimize_max_generations,
-                    )
-                except ConcurrentWriteError:
-                    pass  # best-effort maintenance; the next cycle retries
-        for path in (firsts_path, state_path, matrix_path):
-            _maybe_clean_log(spark, path, log_retention)
 
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    # the state grid folds FIRST, so its Z-order clusters the freshly
+    # folded files by customer
+    state_fold, matrix_fold = _cohort_folds()
+    return _run_foreach_batch(
+        stream, checkpoint, _sink,
+        [
+            (firsts_path, None, "o_custkey"),
+            (state_path, state_fold, "o_custkey"),
+            (matrix_path, matrix_fold, None),
+        ],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the cohort-LTV IVM sink: replay the
-    orders table in 4 o_orderdate-range micro-batches (file mtimes
-    pinned so FileStreamSource delivers them in date order — the
-    in-order contract under which acquisition cohorts never retract),
-    fold each through ``maintain_cohort_ltv`` (with a mid-stream
-    Z-order cycle so the customer-probe pruning path is covered), then
-    read the maintained matrix and emit the same cohort_month /
-    months_since / n_active / cohort_size / revenue / cum_revenue /
-    ltv surface as the batch ``cohort_ltv`` — hash-checked against the
-    SAME oracle SQL, proving the maintained matrix equals a
-    from-scratch cohort pass over everything delivered."""
-    import tempfile
+    orders table in 4 o_orderdate-range micro-batches (``_replay``)
+    in date order — the in-order contract under which acquisition
+    cohorts never retract — fold each through ``maintain_cohort_ltv``
+    (with a mid-stream Z-order cycle so the customer-probe pruning
+    path is covered), then read the maintained matrix and emit the
+    same cohort_month / months_since / n_active / cohort_size /
+    revenue / cum_revenue / ltv surface as the batch ``cohort_ltv`` —
+    hash-checked against the SAME oracle SQL, proving the maintained
+    matrix equals a from-scratch cohort pass over everything
+    delivered."""
+    import datetime as dt
 
     from pyspark.sql import Window
 
     from ..catalog import load_table
 
-    work = tempfile.mkdtemp(prefix="cohort_stream_")
-    src = f"{work}/src"
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.to_date("o_orderdate").alias("o_orderdate"),
         "o_totalprice",
     )
-    d0, d1 = orders.agg(
-        F.min("o_orderdate"), F.max("o_orderdate")
-    ).first()
-    span = (d1 - d0).days + 1
-    cuts = [d0 + __import__("datetime").timedelta(days=(span * i) // 4)
-            for i in range(5)]
-    _stage_ordered_batches(
-        orders, src,
-        _range_batch_expr_closed("o_orderdate", cuts, d1), 4,
+
+    def whole_day_quarters(d0, d1):  # [d0, d1] in 4 day ranges, in order
+        span = (d1 - d0).days + 1
+        cuts = [d0 + dt.timedelta(days=(span * i) // 4) for i in range(5)]
+        return _range_batch_expr_closed("o_orderdate", cuts, d1)
+
+    work = _replay(
+        spark, orders, "o_orderdate", whole_day_quarters,
+        lambda stream, w: maintain_cohort_ltv(
+            stream, f"{w}/firsts", f"{w}/state", f"{w}/matrix",
+            f"{w}/ckpt", optimize_every=3,
+        ),
     )
-    stream = (
-        spark.readStream.schema(
-            "o_custkey bigint, o_orderdate date, o_totalprice double"
+    grid = (
+        _cohort_matrix_totals(spark, f"{work}/matrix")
+        if work is not None  # empty fact: the batch twin returns empty
+        else spark.createDataFrame(
+            [],
+            "cohort_m bigint, months_since int, n_active bigint, "
+            f"rev {_IVM_DEC}",
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
     )
-    maintain_cohort_ltv(
-        stream,
-        f"{work}/firsts",
-        f"{work}/state",
-        f"{work}/matrix",
-        f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
-    grid = _cohort_matrix_totals(spark, f"{work}/matrix")
     wg = Window.partitionBy("cohort_m")
     wcum = wg.orderBy("months_since").rowsBetween(
         Window.unboundedPreceding, 0
@@ -3050,15 +3059,11 @@ def maintain_corpus_health(
     (availableNow). ``optimize_every=N`` runs the aggregating
     compaction every N batches (one row per (source, lang) again,
     totals invariant)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        corpus_health_sink(batch_df, batch_id, table_path)
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(spark, table_path, *_health_fold())
-        _maybe_clean_log(spark, table_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: corpus_health_sink(b, i, table_path),
+        [(table_path, _health_fold(), None)], optimize_every, log_retention,
+    )
 
 
 def q_streaming_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3073,32 +3078,27 @@ def q_streaming_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch pass over everything delivered, so the oracle is one
     batch SQL aggregate over documents — proving text-QC IVM
     end-to-end through the lakehouse commit log."""
-    import tempfile
-
     from ..catalog import load_table
 
-    work = tempfile.mkdtemp(prefix="health_stream_")
-    src = f"{work}/src"
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    hi = docs.agg(F.max("doc_id")).first()[0] + 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        docs, src, _range_batch_expr("doc_id", cuts), 4
+    work = _replay(
+        spark, docs, "doc_id", _open_quarters("doc_id"),
+        lambda stream, w: maintain_corpus_health(
+            stream, f"{w}/health", f"{w}/ckpt", optimize_every=3
+        ),
     )
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars bigint"
+    grid = (
+        _health_grid_totals(spark, f"{work}/health")
+        if work is not None  # empty corpus: the batch twin returns empty
+        else spark.createDataFrame(
+            [],
+            "source string, lang string, n_docs bigint, total_chars bigint, "
+            "min_chars bigint, max_chars bigint, total_words bigint, "
+            f"total_distinct bigint, entropy_sum {_IVM_DEC}",
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
     )
-    maintain_corpus_health(
-        stream, f"{work}/health", f"{work}/ckpt", optimize_every=3
-    ).awaitTermination()
-    grid = _health_grid_totals(spark, f"{work}/health")
     return grid.select(
         "source",
         "lang",
@@ -3216,15 +3216,12 @@ def maintain_daily_revenue(
     (availableNow). ``optimize_every=N`` runs the aggregating
     compaction every N batches (one row per day again, totals
     invariant)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        daily_revenue_sink(batch_df, batch_id, table_path)
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(spark, table_path, *_day_grid_fold("v"))
-        _maybe_clean_log(spark, table_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: daily_revenue_sink(b, i, table_path),
+        [(table_path, _day_grid_fold("v"), None)],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3238,35 +3235,34 @@ def q_streaming_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the batch ``revenue_periodogram``, proving a 100 TB pipeline
     can serve the spectrum (and every other day-grid operator) without
     ever re-scanning the fact."""
-    import tempfile
-
-    from ..catalog import load_table
     from ..operators.profiling import _periodogram_spectrum
 
-    work = tempfile.mkdtemp(prefix="perio_stream_")
-    src = f"{work}/src"
+    work = _replayed_daily_revenue(spark, sf_dir)
+    daily = (
+        _day_grid_totals(spark, f"{work}/daily", "v")
+        if work is not None  # empty fact: the batch twin's empty grid
+        else spark.createDataFrame([], "d int, v bigint")
+    )
+    return _periodogram_spectrum(daily)
+
+
+def _replayed_daily_revenue(spark: SparkSession, sf_dir: str) -> str | None:
+    """Replay the orders table in 4 o_custkey-range micro-batches
+    (any order: cents add exactly) through ``maintain_daily_revenue``
+    (mid-stream aggregating compaction); returns the work dir holding
+    the ``daily`` grid, or None on an empty fact. Shared by the
+    periodogram and Mann-Kendall serve entries."""
+    from ..catalog import load_table
+
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
-    hi = orders.agg(F.max("o_custkey")).first()[0] + 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        orders, src, _range_batch_expr("o_custkey", cuts), 4
+    return _replay(
+        spark, orders, "o_custkey", _open_quarters("o_custkey"),
+        lambda stream, w: maintain_daily_revenue(
+            stream, f"{w}/daily", f"{w}/ckpt", optimize_every=3
+        ),
     )
-    first = spark.read.parquet(src).schema["o_orderdate"].dataType
-    stream = (
-        spark.readStream.schema(
-            f"o_custkey bigint, o_orderdate {first.simpleString()}, "
-            "o_totalprice double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_daily_revenue(
-        stream, f"{work}/daily", f"{work}/ckpt", optimize_every=3
-    ).awaitTermination()
-    daily = _day_grid_totals(spark, f"{work}/daily", "v")
-    return _periodogram_spectrum(daily)
 
 
 QUERIES["streaming_periodogram"] = q_streaming_periodogram
@@ -3448,19 +3444,15 @@ def maintain_user_gaps(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
     retire_every: int | None = None,
     retire_horizon_s: int | None = None,
 ):
     """Run the per-user gap-moment IVM sink under foreachBatch
     (availableNow). ``optimize_every=N`` compacts the user-keyed state
-    every N batches — INCREMENTALLY, Z-ordered by user_id (each cycle
-    clusters only the files changed since the last cycle into a new
-    generation, size-tiered merging: see ``LakehouseTable.optimize``) —
-    so the per-batch user-probe reads stay file-pruned as the user
-    population grows while per-cycle write volume stays bounded by
-    recent-change volume, not table size.
+    every N batches with the incremental Z-order by user_id (see
+    ``_run_foreach_batch``) — so the per-batch user-probe reads stay
+    file-pruned as the user population grows while per-cycle write
+    volume stays bounded by recent-change volume, not table size.
 
     ``retire_every=N`` + ``retire_horizon_s=H`` opt into state-row
     RETIREMENT (the Flink state-TTL policy on the lakehouse): every N
@@ -3475,9 +3467,9 @@ def maintain_user_gaps(
     guard never trips on them because the retired row is gone. Off by
     default: the driver-contract entry keeps exact forever-semantics."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
+    from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
 
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
         user_gaps_sink(batch_df, batch_id, state_path)
         spark = batch_df.sparkSession
         if (
@@ -3497,60 +3489,40 @@ def maintain_user_gaps(
                     )
                 except ConcurrentWriteError:
                     pass  # best-effort; the next cycle retries
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            try:
-                LakehouseTable(spark, state_path).optimize(
-                    target_files=optimize_files,
-                    zorder_by=["user_id"],
-                    incremental=True,
-                    max_generations=optimize_max_generations,
-                )
-            except ConcurrentWriteError:
-                pass  # best-effort maintenance; the next cycle retries
-        _maybe_clean_log(spark, state_path, log_retention)
 
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint, _sink, [(state_path, None, "user_id")],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the per-user gap-moment IVM: replay
-    the events table in 4 ts-range micro-batches (file mtimes pinned
-    so FileStreamSource delivers them in event-time order — the
-    in-order contract under which each batch seam hides exactly one
-    boundary gap per user), fold each through ``maintain_user_gaps``
-    (with a mid-stream Z-order cycle so the user-probe pruning path is
-    covered), then derive the Goh-Barabási (mu, sigma, B) surface from
-    the MAINTAINED moments — hash-checked against the SAME oracle as
-    the batch ``events_burstiness``, proving a 100 TB pipeline can
-    serve the burstiness screen without ever re-scanning events."""
-    import tempfile
-
+    the events table in 4 ts-range micro-batches (``_replay``) in
+    event-time order — the in-order contract under which each batch
+    seam hides exactly one boundary gap per user — fold each through
+    ``maintain_user_gaps`` (with a mid-stream Z-order cycle so the
+    user-probe pruning path is covered), then derive the Goh-Barabási
+    (mu, sigma, B) surface from the MAINTAINED moments — hash-checked
+    against the SAME oracle as the batch ``events_burstiness``,
+    proving a 100 TB pipeline can serve the burstiness screen without
+    ever re-scanning events."""
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    t_lo, t_hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    if t_lo is None:  # empty stream: the batch twin returns empty
+    work = _replay(
+        spark, ev, "ts", _closed_quarters("ts"),
+        lambda stream, w: maintain_user_gaps(
+            stream, f"{w}/state", f"{w}/ckpt", optimize_every=3
+        ),
+    )
+    if work is None:  # empty stream: the batch twin returns empty
         return spark.createDataFrame(
             [],
             "user_id bigint, n_gaps bigint, mean_gap_s double, "
             "std_gap_s double, burstiness double",
         )
-    work = tempfile.mkdtemp(prefix="gaps_stream_")
-    src = f"{work}/src"
-    cuts = [t_lo + (t_hi - t_lo) * i // 4 for i in range(5)]
-    _stage_ordered_batches(
-        ev, src, _range_batch_expr_closed("ts", cuts, t_hi), 4
-    )
-    ts_t = spark.read.parquet(src).schema["ts"].dataType.simpleString()
-    stream = (
-        spark.readStream.schema(f"user_id bigint, ts {ts_t}")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_user_gaps(
-        stream, f"{work}/state", f"{work}/ckpt", optimize_every=3
-    ).awaitTermination()
     st = LakehouseTable(spark, f"{work}/state").read()
     agg = st.filter(F.col("n_events") >= 3).select(
         "user_id",
@@ -3686,17 +3658,13 @@ def maintain_rake_by_source(
     invariant) — live rows stay O(vocabulary) / O(distinct phrases)
     amortized; between cycles the tables additionally hold at most N
     batches of delta rows."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        rake_source_sink(batch_df, batch_id, words_path, phrases_path)
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            for path, fold in zip((words_path, phrases_path), _rake_folds()):
-                _aggregate_compact(spark, path, *fold)
-        for path in (words_path, phrases_path):
-            _maybe_clean_log(spark, path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    words_fold, phrases_fold = _rake_folds()
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: rake_source_sink(b, i, words_path, phrases_path),
+        [(words_path, words_fold, None), (phrases_path, phrases_fold, None)],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_rake_by_source(
@@ -3711,8 +3679,6 @@ def q_streaming_rake_by_source(
     the SAME oracle as the batch ``rake_keywords_by_source``, proving
     a 100 TB pipeline can serve the phrase-characterization surface
     tokenizing each document exactly once."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..catalog import load_table
@@ -3724,29 +3690,19 @@ def q_streaming_rake_by_source(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    if hi is None:  # empty corpus: the batch twin returns empty
+    work = _replay(
+        spark, docs, "doc_id", _open_quarters("doc_id"),
+        lambda stream, w: maintain_rake_by_source(
+            stream, f"{w}/words", f"{w}/phrases", f"{w}/ckpt",
+            optimize_every=3,
+        ),
+    )
+    if work is None:  # empty corpus: the batch twin returns empty
         return spark.createDataFrame(
             [],
             "source string, rank int, phrase string, n_words bigint, "
             "freq bigint, score double",
         )
-    work = tempfile.mkdtemp(prefix="rake_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        docs, src, _range_batch_expr("doc_id", cuts), 4
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_rake_by_source(
-        stream, f"{work}/words", f"{work}/phrases", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
     wordstats, uniq = _rake_grid_totals(
         spark, f"{work}/words", f"{work}/phrases"
     )
@@ -3862,11 +3818,11 @@ def maintain_rfm(
     documented); off by default — the driver entry keeps exact
     forever-semantics (see ``maintain_user_gaps``)."""
 
+    import datetime as dt
+
+    from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
+
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import datetime as dt
-
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
-
         rfm_state_sink(batch_df, batch_id, state_path)
         spark = batch_df.sparkSession
         if (
@@ -3891,11 +3847,11 @@ def maintain_rfm(
                         )
                     except ConcurrentWriteError:
                         pass  # best-effort; the next cycle retries
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(spark, state_path, *_rfm_fold())
-        _maybe_clean_log(spark, state_path, log_retention)
 
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint, _sink, [(state_path, _rfm_fold(), None)],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3908,36 +3864,20 @@ def q_streaming_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked against the SAME oracle as the batch ``customer_rfm``,
     proving the behavioral surface stays current per batch on a
     100 TB order stream without re-scanning the fact."""
-    import tempfile
-
     from ..catalog import load_table
     from ..plans.behavioral import _rfm_rank
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
-    hi = orders.agg(F.max("o_custkey")).first()[0]
-    if hi is None:  # empty fact: the batch twin returns an empty frame
+    work = _replay(
+        spark, orders, "o_custkey", _open_quarters("o_custkey"),
+        lambda stream, w: maintain_rfm(
+            stream, f"{w}/state", f"{w}/ckpt", optimize_every=3
+        ),
+    )
+    if work is None:  # empty fact: the batch twin returns an empty frame
         return _rfm_rank(spark.createDataFrame([], _RFM_STATE_SCHEMA))
-    work = tempfile.mkdtemp(prefix="rfm_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        orders, src, _range_batch_expr("o_custkey", cuts), 4
-    )
-    od_t = spark.read.parquet(src).schema["o_orderdate"].dataType
-    stream = (
-        spark.readStream.schema(
-            f"o_custkey bigint, o_orderdate {od_t.simpleString()}, "
-            "o_totalprice double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_rfm(
-        stream, f"{work}/state", f"{work}/ckpt", optimize_every=3
-    ).awaitTermination()
     return _rfm_rank(_rfm_state_totals(spark, f"{work}/state"))
 
 
@@ -3990,15 +3930,12 @@ def maintain_events_daily(
     (availableNow). ``optimize_every=N`` runs the aggregating
     compaction every N batches (one row per day again, totals
     invariant)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        events_daily_sink(batch_df, batch_id, table_path)
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(spark, table_path, *_day_grid_fold("c"))
-        _maybe_clean_log(spark, table_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: events_daily_sink(b, i, table_path),
+        [(table_path, _day_grid_fold("c"), None)],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4011,35 +3948,22 @@ def q_streaming_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_daily_peaks`` — hash- checked against the SAME oracle as the
     batch ``events_daily_peaks``, proving the event-side day-grid
     family is servable without ever re-scanning the stream."""
-    import tempfile
-
     from ..catalog import load_table
     from ..operators.events import _daily_peaks
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    hi = ev.agg(F.max("event_id")).first()[0]
-    if hi is None:  # empty stream: the batch twin returns empty
+    work = _replay(
+        spark, ev, "event_id", _open_quarters("event_id"),
+        lambda stream, w: maintain_events_daily(
+            stream, f"{w}/daily", f"{w}/ckpt", optimize_every=3
+        ),
+    )
+    if work is None:  # empty stream: the batch twin returns empty
         return spark.createDataFrame(
             [],
             "peak_date date, n_events bigint, prev_n bigint, "
             "next_n bigint, vs_mean double",
         )
-    work = tempfile.mkdtemp(prefix="evdaily_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        ev, src, _range_batch_expr("event_id", cuts), 4
-    )
-    ts_t = spark.read.parquet(src).schema["ts"].dataType.simpleString()
-    stream = (
-        spark.readStream.schema(f"event_id bigint, ts {ts_t}")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_events_daily(
-        stream, f"{work}/daily", f"{work}/ckpt", optimize_every=3
-    ).awaitTermination()
     daily = _day_grid_totals(spark, f"{work}/daily", "c")
     return _daily_peaks(daily)
 
@@ -4198,37 +4122,19 @@ def maintain_novelty(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
 ):
     """Run the novelty IVM sink under foreachBatch (availableNow).
-    ``optimize_every=N`` compacts BOTH tables every N batches —
-    INCREMENTALLY: the gram lattice Z-ordered by g (the dedup-index
-    probe discipline: the per-batch gram probe stays file-pruned as
-    the vocabulary grows), the doc table by doc_id (correction rows
-    probe by doc key) — per-cycle write volume bounded by
-    recent-change volume (see ``LakehouseTable.optimize``)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
-
-        novelty_sink(batch_df, batch_id, firsts_path, docs_path)
-        spark = batch_df.sparkSession
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            for path, key in ((firsts_path, "g"), (docs_path, "doc_id")):
-                try:
-                    LakehouseTable(spark, path).optimize(
-                        target_files=optimize_files,
-                        zorder_by=[key],
-                        incremental=True,
-                        max_generations=optimize_max_generations,
-                    )
-                except ConcurrentWriteError:
-                    pass  # best-effort maintenance; the next cycle retries
-        for path in (firsts_path, docs_path):
-            _maybe_clean_log(spark, path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    ``optimize_every=N`` compacts BOTH tables every N batches with the
+    incremental Z-order (see ``_run_foreach_batch``): the gram lattice
+    by g (the dedup-index probe discipline: the per-batch gram probe
+    stays file-pruned as the vocabulary grows), the doc table by
+    doc_id (correction rows probe by doc key)."""
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: novelty_sink(b, i, firsts_path, docs_path),
+        [(firsts_path, None, "g"), (docs_path, None, "doc_id")],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4242,41 +4148,33 @@ def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the SAME oracle as the batch ``doc_novelty``,
     proving the maintained counters bit-equal a from-scratch pass over
     everything delivered regardless of arrival order."""
-    import tempfile
-
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    if hi is None:  # empty corpus: the batch twin returns empty
+
+    def shuffled_quarters(lo, hi):  # range i lands in slot (2, 0, 3, 1)[i]
+        rng = _open_quarters("doc_id")(lo, hi)
+        return (
+            F.when(rng == 2, 0)
+            .when(rng == 0, 1)
+            .when(rng == 3, 2)
+            .when(rng == 1, 3)
+            .otherwise(F.lit(None).cast("int"))
+        )
+
+    work = _replay(
+        spark, docs, "doc_id", shuffled_quarters,
+        lambda stream, w: maintain_novelty(
+            stream, f"{w}/firsts", f"{w}/docs", f"{w}/ckpt",
+            optimize_every=3,
+        ),
+    )
+    if work is None:  # empty corpus: the batch twin returns empty
         return spark.createDataFrame(
             [], "doc_id bigint, n_grams bigint, n_novel bigint, "
             "novelty double"
         )
-    work = tempfile.mkdtemp(prefix="novelty_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    # shuffled delivery order: range i lands in slot (2, 0, 3, 1)[i]
-    rng = _range_batch_expr("doc_id", cuts)
-    slot = (
-        F.when(rng == 2, 0)
-        .when(rng == 0, 1)
-        .when(rng == 3, 2)
-        .when(rng == 1, 3)
-        .otherwise(F.lit(None).cast("int"))
-    )
-    _stage_ordered_batches(docs, src, slot, 4)
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_novelty(
-        stream, f"{work}/firsts", f"{work}/docs", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
     out = LakehouseTable(spark, f"{work}/docs").read()
     return out.select(
         "doc_id",
@@ -4358,15 +4256,11 @@ def maintain_drift_moments(
     (availableNow). ``optimize_every=N`` runs the AGGREGATING
     compaction every N batches (one row per (label, i, j) again,
     totals invariant) — the delta-grid growth-contract knob."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        drift_moments_sink(batch_df, batch_id, table_path)
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            _aggregate_compact(spark, table_path, *_drift_fold())
-        _maybe_clean_log(spark, table_path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: drift_moments_sink(b, i, table_path),
+        [(table_path, _drift_fold(), None)], optimize_every, log_retention,
+    )
 
 
 def q_streaming_drift_mmd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4380,41 +4274,20 @@ def q_streaming_drift_mmd(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as the batch ``embedding_drift_mmd``, proving a streaming
     pipeline can serve the drift monitor per batch without ever
     re-scanning a vector."""
-    import tempfile
+    from ..operators.similarity import _drift_mmd_from_moments
 
-    from ..catalog import load_table
-    from ..operators.similarity import (
-        _as_double_array,
-        _drift_mmd_from_moments,
+    work = _replay(
+        spark, _embeddings(spark, sf_dir), "vec_id", _open_quarters("vec_id"),
+        lambda stream, w: maintain_drift_moments(
+            stream, f"{w}/grid", f"{w}/ckpt"
+        ),
+        cols=["label", "v"],
     )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("label").cast("bigint").alias("label"),
-        _as_double_array("embedding").alias("v"),
-    )
-    hi = emb.agg(F.max("vec_id")).first()[0]
-    if hi is None:  # empty corpus: no pairs to report
+    if work is None:  # empty corpus: no pairs to report
         return spark.createDataFrame(
             [], "label_a bigint, label_b bigint, n_a bigint, "
             "n_b bigint, mmd2_linear double, mmd2_quadratic double"
         )
-    work = tempfile.mkdtemp(prefix="drift_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        emb, src, _range_batch_expr("vec_id", cuts), 4,
-        cols=["label", "v"],
-    )
-    stream = (
-        spark.readStream.schema("label bigint, v array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_drift_moments(
-        stream, f"{work}/grid", f"{work}/ckpt"
-    ).awaitTermination()
     return _drift_mmd_from_moments(_drift_grid_totals(spark, f"{work}/grid"))
 
 
@@ -4438,39 +4311,14 @@ def q_streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME oracle as the batch ``revenue_mann_kendall``, proving a 100
     TB pipeline serves trend significance per batch without
     re-scanning the fact."""
-    import tempfile
-
-    from ..catalog import load_table
     from ..operators.profiling import _mann_kendall_from_daily
 
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    hi = orders.agg(F.max("o_custkey")).first()[0]
-    if hi is None:  # empty fact: nothing to test
+    work = _replayed_daily_revenue(spark, sf_dir)
+    if work is None:  # empty fact: nothing to test
         return spark.createDataFrame(
             [], "n_days bigint, s_stat bigint, var_s double, "
             "z double, tau_b double"
         )
-    work = tempfile.mkdtemp(prefix="mk_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        orders, src, _range_batch_expr("o_custkey", cuts), 4
-    )
-    od_t = spark.read.parquet(src).schema["o_orderdate"].dataType
-    stream = (
-        spark.readStream.schema(
-            f"o_custkey bigint, o_orderdate {od_t.simpleString()}, "
-            "o_totalprice double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_daily_revenue(
-        stream, f"{work}/daily", f"{work}/ckpt", optimize_every=3
-    ).awaitTermination()
     daily = _day_grid_totals(spark, f"{work}/daily", "v")
     return _mann_kendall_from_daily(daily)
 
@@ -4560,36 +4408,33 @@ def maintain_ivf_index(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
 ):
     """Run the IVF serving-index sink under foreachBatch
     (availableNow). ``optimize_every=N`` Z-orders the VECTOR table by
-    label every N batches — INCREMENTALLY (the dedup-index
+    label every N batches — incrementally (the dedup-index
     discipline), which is what turns nprobe routing into file-level
     data skipping: a probed cell's vectors live in a handful of
-    narrow-range files instead of striping every file."""
+    narrow-range files instead of striping every file — and compacts
+    the delta-append centroid grid."""
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: ivf_index_sink(b, i, vectors_path, cents_path),
+        [(vectors_path, None, "label"), (cents_path, _cent_fold(), None)],
+        optimize_every, log_retention,
+    )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
 
-        ivf_index_sink(batch_df, batch_id, vectors_path, cents_path)
-        spark = batch_df.sparkSession
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            try:
-                LakehouseTable(spark, vectors_path).optimize(
-                    target_files=optimize_files,
-                    zorder_by=["label"],
-                    incremental=True,
-                    max_generations=optimize_max_generations,
-                )
-            except ConcurrentWriteError:
-                pass  # best-effort maintenance; the next cycle retries
-            _aggregate_compact(spark, cents_path, *_cent_fold())
-        for path in (vectors_path, cents_path):
-            _maybe_clean_log(spark, path, log_retention)
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table as the streaming ANN/drift sinks take it:
+    (vec_id, label bigint, v array<double>)."""
+    from ..catalog import load_table
+    from ..operators.similarity import _as_double_array
 
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.col("label").cast("bigint").alias("label"),
+        _as_double_array("embedding").alias("v"),
+    )
 
 
 def _replayed_ivf_index(spark: SparkSession, sf_dir: str) -> str | None:
@@ -4599,38 +4444,13 @@ def _replayed_ivf_index(spark: SparkSession, sf_dir: str) -> str | None:
     Z-order cycle) into a fresh work dir holding the maintained
     ``vectors`` and ``cents`` tables. Returns the work dir, or None
     for an empty corpus."""
-    import tempfile
-
-    from ..catalog import load_table
-    from ..operators.similarity import _as_double_array
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("label").cast("bigint").alias("label"),
-        _as_double_array("embedding").alias("v"),
+    return _replay(
+        spark, _embeddings(spark, sf_dir), "vec_id", _open_quarters("vec_id"),
+        lambda stream, w: maintain_ivf_index(
+            stream, f"{w}/vectors", f"{w}/cents", f"{w}/ckpt",
+            optimize_every=3,
+        ),
     )
-    hi = emb.agg(F.max("vec_id")).first()[0]
-    if hi is None:  # empty corpus: nothing to index
-        return None
-    work = tempfile.mkdtemp(prefix="ivf_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        emb, src, _range_batch_expr("vec_id", cuts), 4
-    )
-    stream = (
-        spark.readStream.schema(
-            "vec_id bigint, label bigint, v array<double>"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_ivf_index(
-        stream, f"{work}/vectors", f"{work}/cents", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
-    return work
 
 
 def _maintained_ivf_probe(spark: SparkSession, work: str, nprobe: int):
@@ -4846,8 +4666,6 @@ def maintain_ivf_pq_index(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
 ):
     """Run the full IVFPQ index sink under foreachBatch (availableNow).
     ``optimize_every=N`` Z-orders BOTH cell-keyed tables (vectors AND
@@ -4855,30 +4673,19 @@ def maintain_ivf_pq_index(
     is the one a 100 TB query actually scans (ADC over 2-byte codes),
     so its file-pruning is the serving hot path; the vector table is
     only touched for the constant-size exact re-rank."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
-
-        ivf_pq_index_sink(
-            batch_df, batch_id, vectors_path, cents_path,
-            codebook_path, codes_path,
-        )
-        spark = batch_df.sparkSession
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            for path in (vectors_path, codes_path):
-                try:
-                    LakehouseTable(spark, path).optimize(
-                        target_files=optimize_files,
-                        zorder_by=["label"],
-                        incremental=True,
-                        max_generations=optimize_max_generations,
-                    )
-                except ConcurrentWriteError:
-                    pass  # best-effort maintenance; the next cycle retries
-        for path in (vectors_path, cents_path, codebook_path, codes_path):
-            _maybe_clean_log(spark, path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: ivf_pq_index_sink(
+            b, i, vectors_path, cents_path, codebook_path, codes_path
+        ),
+        [
+            (vectors_path, None, "label"),
+            (cents_path, None, None),
+            (codebook_path, None, None),
+            (codes_path, None, "label"),
+        ],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_ann_ivf_pq_stored(
@@ -4925,38 +4732,13 @@ def _replayed_ivf_pq_index(spark: SparkSession, sf_dir: str) -> str | None:
     ``maintain_ivf_pq_index`` (mid-stream Z-order cycle). Returns the
     work dir holding vectors/cents/codebook/codes, or None for an
     empty corpus."""
-    import tempfile
-
-    from ..catalog import load_table
-    from ..operators.similarity import _as_double_array
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("label").cast("bigint").alias("label"),
-        _as_double_array("embedding").alias("v"),
+    return _replay(
+        spark, _embeddings(spark, sf_dir), "vec_id", _open_quarters("vec_id"),
+        lambda stream, w: maintain_ivf_pq_index(
+            stream, f"{w}/vectors", f"{w}/cents", f"{w}/codebook",
+            f"{w}/codes", f"{w}/ckpt", optimize_every=3,
+        ),
     )
-    hi = emb.agg(F.max("vec_id")).first()[0]
-    if hi is None:
-        return None
-    work = tempfile.mkdtemp(prefix="ivfpq_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        emb, src, _range_batch_expr("vec_id", cuts), 4
-    )
-    stream = (
-        spark.readStream.schema(
-            "vec_id bigint, label bigint, v array<double>"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_ivf_pq_index(
-        stream, f"{work}/vectors", f"{work}/cents", f"{work}/codebook",
-        f"{work}/codes", f"{work}/ckpt", optimize_every=3,
-    ).awaitTermination()
-    return work
 
 
 QUERIES["streaming_ann_ivf_pq_stored"] = q_streaming_ann_ivf_pq_stored
@@ -5065,8 +4847,6 @@ def maintain_bm25_index(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
 ):
     """Run the BM25 index sink under foreachBatch (availableNow).
     ``optimize_every=N`` Z-orders the POSTINGS table by term every N
@@ -5075,27 +4855,12 @@ def maintain_bm25_index(
     skipping instead of full postings scans — and runs the AGGREGATING
     compaction on the delta-append stats grid (one row per (kind, w)
     again, totals invariant)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
-
-        bm25_index_sink(batch_df, batch_id, postings_path, stats_path)
-        spark = batch_df.sparkSession
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            try:
-                LakehouseTable(spark, postings_path).optimize(
-                    target_files=optimize_files,
-                    zorder_by=["w"],
-                    incremental=True,
-                    max_generations=optimize_max_generations,
-                )
-            except ConcurrentWriteError:
-                pass  # best-effort maintenance; the next cycle retries
-            _aggregate_compact(spark, stats_path, *_bm25_stats_fold())
-        for path in (postings_path, stats_path):
-            _maybe_clean_log(spark, path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: bm25_index_sink(b, i, postings_path, stats_path),
+        [(postings_path, None, "w"), (stats_path, _bm25_stats_fold(), None)],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5109,35 +4874,22 @@ def q_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME oracle as the batch ``bm25_retrieval``, proving a 100 TB
     ingest pipeline can serve ANY lexical query from per-term index
     reads without ever re-tokenizing the corpus."""
-    import tempfile
-
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
     from ..operators.text import BM25_QUERY, _bm25_rank
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    if hi is None:  # empty corpus: nothing to retrieve
+    work = _replay(
+        spark, docs, "doc_id", _open_quarters("doc_id"),
+        lambda stream, w: maintain_bm25_index(
+            stream, f"{w}/postings", f"{w}/stats", f"{w}/ckpt",
+            optimize_every=3,
+        ),
+    )
+    if work is None:  # empty corpus: nothing to retrieve
         return spark.createDataFrame(
             [], "doc_id bigint, bm25_score double, n_terms_matched bigint"
         )
-    work = tempfile.mkdtemp(prefix="bm25_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        docs, src, _range_batch_expr("doc_id", cuts), 4
-    )
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_bm25_index(
-        stream, f"{work}/postings", f"{work}/stats", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
-
     sgrid = _bm25_stats_totals(spark, f"{work}/stats")
     dfreq = sgrid.where(
         (F.col("kind") == "df") & F.col("w").isin(*BM25_QUERY)
@@ -5445,8 +5197,6 @@ def maintain_decontaminate(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
 ):
     """Run the ingest-time decontamination sink under foreachBatch
     (availableNow). ``optimize_every=N`` Z-orders the eval-gram table
@@ -5456,56 +5206,34 @@ def maintain_decontaminate(
     an INDEX, not TTL state: it grows with the registered eval
     corpora (MBs against a TB ingest) and is never retired — dropping
     a benchmark is an explicit offline rebuild."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
-
-        decon_sink(batch_df, batch_id, grams_path, verdicts_path)
-        spark = batch_df.sparkSession
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            try:
-                LakehouseTable(spark, grams_path).optimize(
-                    target_files=optimize_files,
-                    zorder_by=["gram"],
-                    incremental=True,
-                    max_generations=optimize_max_generations,
-                )
-            except ConcurrentWriteError:
-                pass  # best-effort maintenance; the next cycle retries
-        for path in (grams_path, verdicts_path):
-            _maybe_clean_log(spark, path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: decon_sink(b, i, grams_path, verdicts_path),
+        [(grams_path, None, "gram"), (verdicts_path, None, None)],
+        optimize_every, log_retention,
+    )
 
 
-def _staged_docs_eval_first(spark: SparkSession, sf_dir: str) -> str | None:
-    """The shared replay harness behind the ingest-time
-    decontamination entries: stage the documents table as 5
-    mtime-pinned stream files — the EVAL slice first (batch 0, the
-    benchmark-registers-before-ingest contract), then the training
-    docs in 4 doc_id-range batches. Returns the work dir (stream
-    source under ``<work>/src``), or None for an empty corpus."""
-    import tempfile
-
+def _replayed_docs_eval_first(
+    spark: SparkSession, sf_dir: str, maintain
+) -> str | None:
+    """The shared replay behind the ingest-time decontamination
+    entries: the documents table through ``maintain`` (see
+    ``_replay``) as 5 micro-batches — the EVAL slice first (batch 0,
+    the benchmark-registers-before-ingest contract), then the
+    training docs in 4 doc_id-range batches. Returns the work dir, or
+    None for an empty corpus."""
     from ..catalog import load_table
     from ..operators.text import DECON_EVAL_MOD
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    if max_id is None:  # empty corpus: nothing to judge
-        return None
-    work = tempfile.mkdtemp(prefix="decon_stream_")
-    src = f"{work}/src"
-    hi = max_id + 1
-    is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    # eval slice lands first (batch 0), then the 4 train ranges —
-    # mtime order makes FileStreamSource deliver them that way
-    expr = F.when(is_eval, F.lit(0)).otherwise(
-        _range_batch_expr("doc_id", cuts) + F.lit(1)
-    )
-    _stage_ordered_batches(docs, src, expr, 5)
-    return work
+
+    def eval_first(lo, hi):
+        return F.when(
+            F.col("doc_id") % DECON_EVAL_MOD == 0, F.lit(0)
+        ).otherwise(_open_quarters("doc_id")(lo, hi) + F.lit(1))
+
+    return _replay(spark, docs, "doc_id", eval_first, maintain, n_batches=5)
 
 
 def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5513,30 +5241,27 @@ def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard: deliver the EVAL slice first (batch 0 — the
     benchmark-registers-before-ingest contract the sink documents),
     then replay the training docs in 4 doc_id-range micro-batches
-    (mtime-pinned order, with a mid-stream Z-order cycle) through
-    ``maintain_decontaminate``, and return the maintained verdicts
+    (``_replayed_docs_eval_first``, with a mid-stream Z-order cycle)
+    through ``maintain_decontaminate``, and return the maintained verdicts
     table — hash-checked against the SAME oracle as the batch
     ``decontaminate_ngram``, proving a 100 TB ingest pipeline can
     emit per-doc leakage flags at arrival from file-pruned eval-gram
     probes, never a corpus re-scan."""
     from ..load.lakehouse import LakehouseTable
 
-    work = _staged_docs_eval_first(spark, sf_dir)
+    work = _replayed_docs_eval_first(
+        spark, sf_dir,
+        lambda stream, w: maintain_decontaminate(
+            stream, f"{w}/grams", f"{w}/verdicts", f"{w}/ckpt",
+            optimize_every=3,
+        ),
+    )
     if work is None:  # empty corpus: nothing to judge
         return spark.createDataFrame(
             [],
             "doc_id bigint, n_grams bigint, n_contaminated bigint, "
             "contamination_frac double, is_contaminated boolean",
         )
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/src")
-    )
-    maintain_decontaminate(
-        stream, f"{work}/grams", f"{work}/verdicts", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
     return LakehouseTable(spark, f"{work}/verdicts").read().select(
         "doc_id",
         "n_grams",
@@ -5651,8 +5376,6 @@ def maintain_containment(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
 ):
     """Run the per-eval-item containment sink under foreachBatch
     (availableNow). ``optimize_every=N`` Z-orders the eval-gram table
@@ -5661,56 +5384,39 @@ def maintain_containment(
     Growth contract: the index is O(registered benchmark grams), the
     pairs table is the audit log of detected leaks — both indexes,
     never TTL state (SURVEY §6)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
-
-        containment_sink(batch_df, batch_id, egrams_path, pairs_path)
-        spark = batch_df.sparkSession
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            try:
-                LakehouseTable(spark, egrams_path).optimize(
-                    target_files=optimize_files,
-                    zorder_by=["gram"],
-                    incremental=True,
-                    max_generations=optimize_max_generations,
-                )
-            except ConcurrentWriteError:
-                pass  # best-effort maintenance; the next cycle retries
-        for path in (egrams_path, pairs_path):
-            _maybe_clean_log(spark, path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: containment_sink(b, i, egrams_path, pairs_path),
+        [(egrams_path, None, "gram"), (pairs_path, None, None)],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the per-eval-item containment guard:
     the eval slice registers first, the training docs replay in 4
-    doc_id-range batches (mtime-pinned, mid-stream Z-order cycle)
-    through ``maintain_containment``, and the maintained pairs table
-    is returned — hash-checked against the SAME oracle as the batch
-    ``decontaminate_containment``, closing the second leakage
-    modality at ingest time: the pooled-gram flag
+    doc_id-range batches (``_replayed_docs_eval_first``, mid-stream
+    Z-order cycle) through ``maintain_containment``, and the
+    maintained pairs table is returned — hash-checked against the
+    SAME oracle as the batch ``decontaminate_containment``, closing
+    the second leakage modality at ingest time: the pooled-gram flag
     (``streaming_decontaminate``) says A DOC leaks, this says WHICH
     benchmark item it leaks."""
     from ..load.lakehouse import LakehouseTable
 
-    work = _staged_docs_eval_first(spark, sf_dir)
+    work = _replayed_docs_eval_first(
+        spark, sf_dir,
+        lambda stream, w: maintain_containment(
+            stream, f"{w}/egrams", f"{w}/pairs", f"{w}/ckpt",
+            optimize_every=3,
+        ),
+    )
     if work is None:  # empty corpus: nothing to judge
         return spark.createDataFrame(
             [],
             "doc_id bigint, eval_id bigint, n_shared bigint, "
             "eval_grams bigint, containment double",
         )
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/src")
-    )
-    maintain_containment(
-        stream, f"{work}/egrams", f"{work}/pairs", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
     return LakehouseTable(spark, f"{work}/pairs").read().select(
         "doc_id", "eval_id", "n_shared", "eval_grams", "containment"
     )
@@ -5957,20 +5663,19 @@ def maintain_session_tails(
     checkpoint: str,
     log_retention: int | None = None,
     optimize_every: int | None = None,
-    optimize_files: int = 8,
-    optimize_max_generations: int = 8,
     retire_every: int | None = None,
     retire_horizon_s: int | None = None,
 ):
     """Run the session-survival IVM sink under foreachBatch
-    (availableNow). ``optimize_every=N`` clusters BOTH state tables
-    every N batches — INCREMENTALLY, tails Z-ordered by user_id (the
-    per-batch user-probe pruning path) and the closed-duration grid by
-    dur — so probe reads stay file-pruned as the user population and
-    the duration support grow, while per-cycle write volume stays
-    bounded by recent-change volume (growth contract: tails rows =
-    users ever seen, grid rows = distinct closed durations — both
-    sublinear in events).
+    (availableNow). ``optimize_every=N`` compacts BOTH state tables
+    every N batches: the tails with the incremental Z-order by user_id
+    (the per-batch user-probe pruning path), the delta-append
+    closed-duration grid by AGGREGATION (totals invariant; nothing
+    probes it) — so probe reads stay file-pruned as the user
+    population grows, while per-cycle write volume stays bounded by
+    recent-change volume (growth contract: tails rows = users ever
+    seen, grid rows = distinct closed durations — both sublinear in
+    events).
 
     ``retire_every=N`` + ``retire_horizon_s=H`` opt into TAILS
     retirement (the SURVEY §6 TTL trade, now implemented): every N
@@ -5998,9 +5703,9 @@ def maintain_session_tails(
                 "have merged — splitting a live session"
             )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
+    from ..load.lakehouse import ConcurrentWriteError, LakehouseTable
 
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
         session_tails_sink(batch_df, batch_id, tails_path, grid_path)
         spark = batch_df.sparkSession
         if (
@@ -6023,23 +5728,12 @@ def maintain_session_tails(
                     )
                 except ConcurrentWriteError:
                     pass  # best-effort; the next cycle retries
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            try:
-                LakehouseTable(spark, tails_path).optimize(
-                    target_files=optimize_files,
-                    zorder_by=["user_id"],
-                    incremental=True,
-                    max_generations=optimize_max_generations,
-                )
-            except ConcurrentWriteError:
-                pass  # best-effort maintenance; the next cycle retries
-            # the delta-append duration grid compacts by AGGREGATION
-            # (totals invariant), not by clustering — nothing probes it
-            _aggregate_compact(spark, grid_path, *_km_grid_fold())
-        for path in (tails_path, grid_path):
-            _maybe_clean_log(spark, path, log_retention)
 
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    return _run_foreach_batch(
+        stream, checkpoint, _sink,
+        [(tails_path, None, "user_id"), (grid_path, _km_grid_fold(), None)],
+        optimize_every, log_retention,
+    )
 
 
 def _km_grid_fold() -> tuple[list[str], list]:
@@ -6115,44 +5809,30 @@ def _served_weibull_from_state(
 
 
 def _replayed_session_state(spark: SparkSession, sf_dir: str) -> str | None:
-    """Stage the events table as 4 mtime-pinned ts-range micro-batch
-    files, fold them through ``maintain_session_tails`` (mid-stream
-    Z-order cycle), and return the work dir holding the maintained
-    ``tails``/``grid`` tables — None on an empty events table. Shared
-    by the Weibull-fit and KM-curve serve entries."""
-    import tempfile
-
+    """Replay the events table in 4 ts-range micro-batches, in
+    event-time order (the seam protocol's contract), through
+    ``maintain_session_tails`` (mid-stream Z-order cycle), and return
+    the work dir holding the maintained ``tails``/``grid`` tables —
+    None on an empty events table. Shared by the Weibull-fit and
+    KM-curve serve entries."""
     from ..catalog import load_table
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    t_lo, t_hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    if t_lo is None:
-        return None
-    work = tempfile.mkdtemp(prefix="weib_stream_")
-    src = f"{work}/src"
-    cuts = [t_lo + (t_hi - t_lo) * i // 4 for i in range(5)]
-    _stage_ordered_batches(
-        ev, src, _range_batch_expr_closed("ts", cuts, t_hi), 4
+    return _replay(
+        spark, ev, "ts", _closed_quarters("ts"),
+        lambda stream, w: maintain_session_tails(
+            stream, f"{w}/tails", f"{w}/grid", f"{w}/ckpt",
+            optimize_every=3,
+        ),
     )
-    ts_t = spark.read.parquet(src).schema["ts"].dataType.simpleString()
-    stream = (
-        spark.readStream.schema(f"user_id bigint, ts {ts_t}")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_session_tails(
-        stream, f"{work}/tails", f"{work}/grid", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
-    return work
 
 
 def q_streaming_weibull(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the session-survival IVM: replay the
-    events table in 4 ts-range micro-batches (file mtimes pinned so
-    FileStreamSource delivers them in event-time order — the seam
-    protocol's in-order contract; the cuts are ts-range, so sessions
-    STRADDLE the seams and the tail-merge path is exercised for real),
+    events table in 4 ts-range micro-batches in event-time order
+    (``_replayed_session_state`` — the seam protocol's in-order
+    contract; the cuts are ts-range, so sessions STRADDLE the seams
+    and the tail-merge path is exercised for real),
     fold each through ``maintain_session_tails`` (mid-stream Z-order
     cycle covering the probe-pruning path on both tables), then serve
     the Weibull fit from the MAINTAINED state — hash-checked against
@@ -6318,17 +5998,13 @@ def maintain_copurchase(
     O(distinct parts) amortized — both bounded by the catalog
     cross-support, not by order volume; between cycles the tables
     additionally hold at most N batches of delta rows."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        copurchase_sink(batch_df, batch_id, pairs_path, items_path)
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            for path, fold in zip((pairs_path, items_path), _copurchase_folds()):
-                _aggregate_compact(spark, path, *fold)
-        for path in (pairs_path, items_path):
-            _maybe_clean_log(spark, path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    pairs_fold, items_fold = _copurchase_folds()
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: copurchase_sink(b, i, pairs_path, items_path),
+        [(pairs_path, pairs_fold, None), (items_path, items_fold, None)],
+        optimize_every, log_retention,
+    )
 
 
 def _copurchase_folds() -> tuple:
@@ -6352,7 +6028,7 @@ def _copurchase_grid_totals(
 def q_streaming_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the co-purchase grid IVM: replay the
     lineitem table in 4 ascending l_orderkey-range micro-batches
-    (mtime-pinned — the order-atomic contract: every basket lands
+    (``_replay`` — the order-atomic contract: every basket lands
     whole in one batch), fold each through ``maintain_copurchase``
     (mid-stream aggregating-compaction cycle), then rank
     lift/confidence from the MAINTAINED grids' read-time totals
@@ -6360,8 +6036,6 @@ def q_streaming_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the SAME oracle as the batch ``part_affinity_lift``,
     proving the market-basket surface is servable at any moment
     without re-exploding 100 TB of order history."""
-    import tempfile
-
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
     from ..operators.graph import MIN_COPURCHASE, _affinity_from_grids
@@ -6369,28 +6043,19 @@ def q_streaming_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    k_lo, k_hi = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
-    if k_lo is None:  # empty fact: the batch twin returns empty
+    work = _replay(
+        spark, li, "l_orderkey", _closed_quarters("l_orderkey"),
+        lambda stream, w: maintain_copurchase(
+            stream, f"{w}/pairs", f"{w}/items", f"{w}/ckpt",
+            optimize_every=3,
+        ),
+    )
+    if work is None:  # empty fact: the batch twin returns empty
         return spark.createDataFrame(
             [],
             "a_part bigint, b_part bigint, n_ab bigint, lift double, "
             "conf_a_to_b double",
         )
-    work = tempfile.mkdtemp(prefix="copur_stream_")
-    src = f"{work}/src"
-    cuts = [k_lo + (k_hi - k_lo) * i // 4 for i in range(5)]
-    _stage_ordered_batches(
-        li, src, _range_batch_expr_closed("l_orderkey", cuts, k_hi), 4
-    )
-    stream = (
-        spark.readStream.schema("l_orderkey bigint, l_partkey bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_copurchase(
-        stream, f"{work}/pairs", f"{work}/items", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
     items_t = LakehouseTable(spark, f"{work}/items")
     pair_tot, item_tot = _copurchase_grid_totals(
         spark, f"{work}/pairs", f"{work}/items"
@@ -6589,55 +6254,39 @@ def maintain_pmi_grids(
     O(vocabulary) amortized, both sublinear in corpus under Heaps'
     law; between cycles the tables additionally hold at most N
     batches of delta rows."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        pmi_grids_sink(batch_df, batch_id, pairs_path, uni_path)
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            for path, fold in zip((pairs_path, uni_path), _pmi_folds()):
-                _aggregate_compact(spark, path, *fold)
-        for path in (pairs_path, uni_path):
-            _maybe_clean_log(spark, path, log_retention)
-
-    return _run_foreach_batch(stream, _sink, checkpoint)
+    pairs_fold, uni_fold = _pmi_folds()
+    return _run_foreach_batch(
+        stream, checkpoint,
+        lambda b, i: pmi_grids_sink(b, i, pairs_path, uni_path),
+        [(pairs_path, pairs_fold, None), (uni_path, uni_fold, None)],
+        optimize_every, log_retention,
+    )
 
 
 def q_streaming_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the collocation IVM: replay the
-    documents table in 4 doc_id-range micro-batches (mtime-pinned,
-    mid-stream aggregating-compaction cycle) through
+    documents table in 4 doc_id-range micro-batches (``_replay``; any
+    order folds alike — mid-stream aggregating-compaction cycle) through
     ``maintain_pmi_grids``, then rank PMI from the MAINTAINED grids'
     read-time totals through the shared ``_pmi_from_grids`` tail —
     hash-checked against the SAME oracle as the batch
     ``pmi_bigrams``, proving the phrase-mining surface is servable
     tokenizing each document exactly once."""
-    import tempfile
-
     from ..catalog import load_table
     from ..operators.text import _pmi_from_grids
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    if hi is None:  # empty corpus: the batch twin returns empty
+    work = _replay(
+        spark, docs, "doc_id", _open_quarters("doc_id"),
+        lambda stream, w: maintain_pmi_grids(
+            stream, f"{w}/pairs", f"{w}/uni", f"{w}/ckpt",
+            optimize_every=3,
+        ),
+    )
+    if work is None:  # empty corpus: the batch twin returns empty
         return spark.createDataFrame(
             [], "w1 string, w2 string, n_ab bigint, pmi double"
         )
-    work = tempfile.mkdtemp(prefix="pmi_stream_")
-    src = f"{work}/src"
-    hi += 1
-    cuts = [0, hi // 4, hi // 2, (3 * hi) // 4, hi]
-    _stage_ordered_batches(
-        docs, src, _range_batch_expr("doc_id", cuts), 4
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    maintain_pmi_grids(
-        stream, f"{work}/pairs", f"{work}/uni", f"{work}/ckpt",
-        optimize_every=3,
-    ).awaitTermination()
     return _pmi_from_grids(
         *_pmi_grid_totals(spark, f"{work}/pairs", f"{work}/uni")
     )

@@ -14,7 +14,8 @@ through two faults:
 
 A structural guard keeps the protocol in one place: no conditional
 ``conflict_on=`` commit may appear in ``events.py`` outside the
-helper.
+helper. A second keeps the work dir, the replay staging and the
+Z-order maintenance cycle to one call site each.
 """
 
 from __future__ import annotations
@@ -210,3 +211,25 @@ def test_conditional_commits_only_in_commit_helper():
     assert [f for f, _ in found if f == "ivf_pq_index_sink"], (
         "the codebook claim moved; update this guard"
     )
+
+
+def test_one_work_dir_replay_and_maintenance_site():
+    """Each streaming mechanism has one home in ``events.py``: work dirs
+    come from ``_work_dir`` (the one ``tempfile.mkdtemp``), replays
+    stage through ``_replay`` (the one ``_stage_ordered_batches``
+    call), and Z-order compaction runs in ``_run_foreach_batch``'s
+    maintenance cycle (the one ``.optimize`` call)."""
+    sites = {"mkdtemp": [], "_stage_ordered_batches": [], "optimize": []}
+    for top in ast.parse(inspect.getsource(streaming_events)).body:
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in sites:
+                sites[name].append(getattr(top, "name", "<module>"))
+    assert sites == {
+        "mkdtemp": ["_work_dir"],
+        "_stage_ordered_batches": ["_replay"],
+        "optimize": ["_run_foreach_batch"],
+    }, sites

@@ -969,15 +969,17 @@ def test_lsh_dedup_sink_two_writer_race(spark, tmp_path):
     assert {r["count"] for r in per_doc.collect()} == {4}  # 4 bands/doc
 
 
-def test_lsh_dedup_sink_optimize_bounds_index_files(spark, tmp_path):
+def test_lsh_dedup_sink_optimize_bounds_index_files(
+    spark, tmp_path, monkeypatch
+):
     """With optimize_every=2, the signature table's live-file count
     stays bounded as micro-batches accumulate (the streaming
     small-file problem), verdicts still land once per doc, and the
     compaction commit never disturbs the exactly-once watermark.
-    Under incremental clustering the bound is max_generations x
-    optimize_files plus the not-yet-compacted appends; with
-    optimize_max_generations=1 every cycle folds into one generation
-    (the old full-rewrite layout, now an explicit knob)."""
+    Under incremental clustering the bound is the cycle's
+    _OPTIMIZE_MAX_GENERATIONS x _OPTIMIZE_FILES plus the
+    not-yet-compacted appends; with one generation every cycle folds
+    into one generation (the full-rewrite layout)."""
     import glob
 
     from pyspark.sql import functions as F
@@ -1003,9 +1005,10 @@ def test_lsh_dedup_sink_optimize_bounds_index_files(spark, tmp_path):
     )
     sigs = str(tmp_path / "sigs")
     verd = str(tmp_path / "verd")
+    monkeypatch.setattr(streaming_events, "_OPTIMIZE_FILES", 2)
+    monkeypatch.setattr(streaming_events, "_OPTIMIZE_MAX_GENERATIONS", 1)
     streaming_events.maintain_lsh_dedup(
         stream, sigs, verd, str(tmp_path / "ckpt"), optimize_every=2,
-        optimize_files=2, optimize_max_generations=1,
     ).awaitTermination()
     table = LakehouseTable(spark, sigs)
     live = table.read().inputFiles()
@@ -1020,7 +1023,9 @@ def test_lsh_dedup_sink_optimize_bounds_index_files(spark, tmp_path):
     assert LakehouseTable(spark, verd).read().count() == 40
 
 
-def test_maintain_lsh_dedup_write_amp_bounded_by_appends(spark, tmp_path):
+def test_maintain_lsh_dedup_write_amp_bounded_by_appends(
+    spark, tmp_path, monkeypatch
+):
     """The r14 write-amplification contract ON A MULTI-BATCH STREAM:
     every optimize cycle's rows_written is the band rows APPENDED
     since the previous cycle — flat across cycles — while the index
@@ -1051,9 +1056,9 @@ def test_maintain_lsh_dedup_write_amp_bounded_by_appends(spark, tmp_path):
     )
     sigs = str(tmp_path / "sigs")
     verd = str(tmp_path / "verd")
+    monkeypatch.setattr(streaming_events, "_OPTIMIZE_FILES", 1)
     streaming_events.maintain_lsh_dedup(
         stream, sigs, verd, str(tmp_path / "ckpt"), optimize_every=2,
-        optimize_files=1,
     ).awaitTermination()
     table = LakehouseTable(spark, sigs)
     rewrites = [
@@ -2373,10 +2378,12 @@ def test_streaming_entries_empty_fact_returns_empty(
     replay-style driver entries (their batch twins and shared oracles
     all return empty) — not a TypeError from None range arithmetic —
     and must not leave a work directory behind: the entries create it
-    only after the empty check."""
+    only after the empty check. The oracle-backed entries return
+    exactly what their DuckDB oracle returns over the same tables."""
     import os
     import tempfile
 
+    import duckdb
     from pyspark.sql import functions as F  # noqa: F401
 
     d = str(tmp_path)
@@ -2421,7 +2428,57 @@ def test_streaming_entries_empty_fact_returns_empty(
         streaming_events.q_streaming_pmi,
     ):
         assert entry(spark, d).count() == 0, entry.__name__
+    con = duckdb.connect()
+    for t in ("orders", "documents"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{d}/{t}.parquet/*.parquet')"
+        )
+    for name in (
+        "streaming_dedup_lsh",
+        "streaming_phash_dedup",
+        "streaming_corpus_health",
+        "streaming_periodogram",
+        "streaming_cohort_ltv",
+    ):
+        got = streaming_events.QUERIES[name](spark, d)
+        want = con.execute(streaming_events.ORACLE[name])
+        assert sorted(got.columns) == sorted(c[0] for c in want.description)
+        assert got.collect() == want.fetchall() == [], name
     assert os.listdir(work_root) == []
+
+
+def test_streaming_work_dirs_removed_at_exit(sf_dir, tmp_path):
+    """Streaming entries keep their work dirs while the process runs
+    (the returned frames read the maintained tables) and release them
+    when the interpreter exits: two entries run in a subprocess whose
+    TMPDIR is a fresh directory, which must be empty afterwards."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmpdir"
+    tmp.mkdir()
+    code = f"""
+import os, sys, tempfile
+sys.path.insert(0, {repo!r})
+from retail_sales_etl_spark.session import get_spark
+from retail_sales_etl_spark.streaming import events
+spark = get_spark(master="local[1]", shuffle_partitions=1,
+                  extra_conf={{"spark.driver.memory": "1g"}})
+for entry in (events.q_streaming_cdc_apply, events.q_streaming_source_sketch):
+    entry(spark, {sf_dir!r}).collect()
+print("work_dirs", len(os.listdir(tempfile.gettempdir())))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        env={**os.environ, "TMPDIR": str(tmp)},
+        capture_output=True, text=True, timeout=900,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert int(out.stdout.split()[-1]) >= 2, out.stdout
+    assert os.listdir(tmp) == []
 
 
 def test_events_daily_sink_additive_order_insensitive_replay(
