@@ -40,6 +40,7 @@ import os
 import shutil
 import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,6 +83,7 @@ _RESERVED_ENTRY_KEYS = frozenset(
         "zorder_gens",
         "zorder_gens_by",
         "retained",
+        "stats",
     }
 )
 
@@ -165,21 +167,6 @@ def _typed_bound(column: str, canonical, schema: StructType | None):
     return canonical
 
 
-def _merge_extra(entry: dict, extra: dict | None) -> dict:
-    """Merge caller metadata into a commit entry, rejecting any key that
-    collides with a reserved transaction-log field."""
-    if extra:
-        clash = _RESERVED_ENTRY_KEYS.intersection(extra)
-        if clash:
-            raise ValueError(
-                f"extra metadata keys {sorted(clash)} collide with reserved "
-                "commit-entry fields; rename them (e.g. nest under a "
-                "caller-owned key)"
-            )
-        entry.update(extra)
-    return entry
-
-
 class ConcurrentWriteError(RuntimeError):
     """A conflicting commit landed between this writer's read and its
     attempted commit, and the operation cannot be safely rebased."""
@@ -189,6 +176,19 @@ class DuplicateCommitError(ConcurrentWriteError):
     """An interloping commit carries the same ``conflict_on`` key value
     as this writer's entry — the unique-commit-key contract (e.g. a
     streaming batch_id) would be violated by landing both."""
+
+
+class _Snapshot(NamedTuple):
+    """One replayed table version: the live files in add order, the last
+    commit entry (None on an empty log), the per-file stats manifest
+    (file -> {column: [min, max, null_count]}), the committed schema
+    parsed once, and the version it resolves to (None when empty)."""
+
+    live: list[str]
+    last: dict | None
+    stats: dict[str, dict]
+    schema: StructType | None
+    version: int | None
 
 
 class LakehouseTable:
@@ -285,7 +285,7 @@ class LakehouseTable:
         depends on this file existing."""
         tmp = self._ckpt_path(version) + f".tmp-{uuid.uuid4().hex[:8]}"
         try:
-            live, last, stats = self._replay_stats(as_of=version)
+            live, last, stats, _, _ = self._snapshot(version)
             key_values: dict = {}
             start = 0
             prev = self._newest_checkpoint(version - 1)
@@ -310,10 +310,7 @@ class LakehouseTable:
                 json.dump(payload, fh)
             os.replace(tmp, self._ckpt_path(version))
         except Exception:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
+            self._remove([tmp])
 
     def latest_version(self) -> int | None:
         vs = self._versions()
@@ -323,23 +320,16 @@ class LakehouseTable:
         with open(self._log_path(version)) as fh:
             return json.load(fh)
 
-    def _replay(self, as_of: int | None = None) -> tuple[list[str], dict | None]:
-        """Replay the log up to ``as_of`` (inclusive); return the live
-        relative file list (in add order) and the last commit entry."""
-        live, last, _ = self._replay_stats(as_of)
-        return live, last
-
-    def _replay_stats(
-        self, as_of: int | None = None
-    ) -> tuple[list[str], dict | None, dict]:
-        """_replay plus the per-file column stats manifest: a dict
-        file -> {column: [min, max]} accumulated from each add's
-        ``stats`` entry (files from pre-stats commits simply have no
-        entry and are never pruned). Starts from the newest snapshot
-        checkpoint at or below ``as_of`` — O(commits since checkpoint)
-        JSON opens, bounded by the checkpoint interval, instead of
-        O(all commits); time travel below the oldest checkpoint still
-        replays from version 0 (commit JSONs are never deleted)."""
+    def _snapshot(self, as_of: int | None = None) -> _Snapshot:
+        """Replay the log up to ``as_of`` (inclusive; latest when None)
+        into the one snapshot every operation works against. The stats
+        manifest accumulates each add's ``stats`` entry (files from
+        pre-stats commits simply have no entry and are never pruned).
+        Starts from the newest snapshot checkpoint at or below
+        ``as_of`` — O(commits since checkpoint) JSON opens, bounded by
+        the checkpoint interval, instead of O(all commits); time travel
+        below the oldest checkpoint still replays from version 0
+        (commit JSONs are never deleted)."""
         live: dict[str, None] = {}  # ordered set
         stats: dict[str, dict] = {}
         last = None
@@ -384,7 +374,43 @@ class LakehouseTable:
                 if f in entry_stats:
                     stats[f] = entry_stats[f]
             last = entry
-        return list(live), last, stats
+        schema = (
+            StructType.fromJson(json.loads(last["schema"]))
+            if last and "schema" in last
+            else None
+        )
+        return _Snapshot(
+            list(live), last, stats, schema, target if last is not None else None
+        )
+
+    def _checked(self, version: int | None) -> _Snapshot:
+        """The snapshot a reader may scan: ``version`` (latest when
+        None) must be in the retained log and every live file must
+        still be on disk."""
+        vs = self._versions()
+        if not vs:
+            raise FileNotFoundError(f"No lakehouse log at {self.log_dir}")
+        if version is not None and version not in vs:
+            raise ValueError(f"Version {version} not in retained log {vs}")
+        snap = self._snapshot(version)
+        missing = [
+            f for f in snap.live if not os.path.exists(os.path.join(self.path, f))
+        ]
+        if missing:
+            raise FileNotFoundError(
+                f"Version {version or vs[-1]} references vacuumed files "
+                f"{missing[:3]}{'...' if len(missing) > 3 else ''}"
+            )
+        return snap
+
+    def _scan(self, schema: StructType, files: Sequence[str]) -> DataFrame:
+        """Schema-pinned scan of table-relative ``files`` — an empty
+        frame of ``schema`` when there are none."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, f) for f in files]
+        )
 
     def history(self) -> list[dict]:
         """Commit metadata, oldest first (DESCRIBE HISTORY)."""
@@ -442,7 +468,7 @@ class LakehouseTable:
             if ckpt is not None:
                 return ckpt[1].get("key_values", {}).get(key)
         if vs and vs[0] > 1:
-            # Same contract as _replay_stats: below a cleaned log's
+            # Same contract as _snapshot: below a cleaned log's
             # replay base, "not found" is indistinguishable from
             # "cleaned away" — refuse rather than let a caller pinned
             # to a pre-cleanup version treat a landed watermark as
@@ -470,14 +496,17 @@ class LakehouseTable:
     # (a streaming sink's per-batch delta/merge — KBs to a few MB) sit
     # far under the caps on ANY deployment; bulk loads and full
     # OPTIMIZE rewrites sit far over them at scale and keep the
-    # cluster-parallel path. Env-tunable so a cluster driver with
-    # different headroom can move the line.
-    _DRIVER_STATS_MAX_BYTES = int(
-        os.environ.get("SPARK_GRAFT_DRIVER_STATS_MAX_BYTES", 32 * 1024 * 1024)
-    )
-    _DRIVER_STATS_MAX_ROWS = int(
-        os.environ.get("SPARK_GRAFT_DRIVER_STATS_MAX_ROWS", 1_000_000)
-    )
+    # cluster-parallel path.
+    _DRIVER_STATS_MAX_BYTES = 32 * 1024 * 1024
+    _DRIVER_STATS_MAX_ROWS = 1_000_000
+
+    @classmethod
+    def _stats_column(cls, schema: StructType | None, name: str) -> bool:
+        """Whether ``schema`` has a stats-eligible column ``name``."""
+        return schema is not None and any(
+            f.name == name and f.dataType.simpleString() in cls._STATS_DTYPES
+            for f in schema.fields
+        )
 
     @classmethod
     def _driver_file_stats(
@@ -595,60 +624,14 @@ class LakehouseTable:
             stats[base] = fstats
         return stats, rows
 
-    def _stage_files(self, df: DataFrame) -> tuple[list[str], int, dict]:
-        """Write ``df`` as immutable parquet files into the table dir
-        under commit-unique names; return (relative names, row count,
-        per-file column stats).
-
-        Files are invisible to readers until a log entry references
-        them, so a failed job leaves only unreferenced garbage for
-        VACUUM — never a torn table.
-
-        Stats: for metadata-scale commits (at or under the
-        _DRIVER_STATS_MAX_* ceilings — every streaming micro-batch
-        delta) the staged files are read back IN-PROCESS with pyarrow
-        and min/max/null-count computed there, eliminating a whole
-        Spark job (scheduler + task launch dominated the old stats
-        pass at micro-batch scale; this is the write-side stats
-        collection real lakehouse writers do inside the writer task).
-        Larger commits keep the ONE distributed pass over the staged
-        files (groupBy input_file_name, min/max per eligible column).
-        Either way the stats ride in the commit entry — the
-        manifest-stats pattern every lakehouse format uses for data
-        skipping — and per-file row counts ride next to them (the
-        ``__nrows__`` pseudo-column) so maintenance operations can do
-        row accounting by log arithmetic instead of a count job.
-        """
-        token = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.path, f"_staging_{token}")
-        df.write.mode("overwrite").parquet(staging)
-        staged_cols = [
-            (c, t) for c, t in df.dtypes if t in self._STATS_DTYPES
-        ]
-        staged_paths = [
-            os.path.join(staging, f)
-            for f in sorted(os.listdir(staging))
-            if f.endswith(".parquet")
-        ]
-        fast = self._driver_file_stats(staged_paths, staged_cols)
-        if fast is not None:
-            file_stats, file_rows = fast
-            n = sum(file_rows.values())
-            names = []
-            stats: dict[str, dict] = {}
-            for i, p in enumerate(staged_paths):
-                f = os.path.basename(p)
-                name = f"part-{token}-{i:05d}.parquet"
-                os.replace(p, os.path.join(self.path, name))
-                names.append(name)
-                if f in file_stats:
-                    stats[name] = file_stats[f]
-                    if "__nrows__" not in dict(staged_cols):
-                        stats[name]["__nrows__"] = [
-                            None, None, int(file_rows[f])
-                        ]
-            shutil.rmtree(staging, ignore_errors=True)
-            return names, n, stats
+    def _spark_file_stats(
+        self, staging: str
+    ) -> tuple[dict[str, dict], dict[str, int]]:
+        """The distributed stats source, in ``_driver_file_stats``'s
+        shape: ONE Spark job over the staged files (groupBy
+        input_file_name, min/max/non-null count per eligible column).
+        A file with no rows forms no group, so it gets no manifest
+        entry."""
         staged = self.spark.read.parquet(staging)
         cols = [c for c, t in staged.dtypes if t in self._STATS_DTYPES]
         # the third stats element is the per-file NULL count: min/max
@@ -684,31 +667,59 @@ class LakehouseTable:
                 ]
                 for i, c in enumerate(cols)
             }
-        n = sum(file_rows.values())
+        return file_stats, file_rows
+
+    def _stage_files(self, df: DataFrame) -> tuple[list[str], int, dict]:
+        """Write ``df`` as immutable parquet files into the table dir
+        under commit-unique names; return (relative names, row count,
+        per-file column stats).
+
+        Files are invisible to readers until a log entry references
+        them, so a failed job leaves only unreferenced garbage for
+        VACUUM — never a torn table.
+
+        Stats come from ``_driver_file_stats`` (in-process, no Spark
+        job) when the commit is at or under the ``_DRIVER_STATS_MAX_*``
+        caps — every streaming micro-batch delta — and from
+        ``_spark_file_stats`` above them. Either way they ride in the
+        commit entry — the manifest-stats pattern every lakehouse
+        format uses for data skipping — and per-file row counts ride
+        next to them (the ``__nrows__`` pseudo-column) so maintenance
+        operations can do row accounting by log arithmetic instead of
+        a count job.
+        """
+        token = uuid.uuid4().hex[:12]
+        staging = os.path.join(self.path, f"_staging_{token}")
+        df.write.mode("overwrite").parquet(staging)
+        staged = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+        file_stats, file_rows = self._driver_file_stats(
+            [os.path.join(staging, f) for f in staged],
+            [(c, t) for c, t in df.dtypes if t in self._STATS_DTYPES],
+        ) or self._spark_file_stats(staging)
         names = []
         stats: dict[str, dict] = {}
-        for i, f in enumerate(sorted(os.listdir(staging))):
-            if not f.endswith(".parquet"):
-                continue
+        for i, f in enumerate(staged):
             name = f"part-{token}-{i:05d}.parquet"
             os.replace(os.path.join(staging, f), os.path.join(self.path, name))
             names.append(name)
             if f in file_stats:
                 stats[name] = file_stats[f]
-                if "__nrows__" not in file_stats[f]:
-                    stats[name]["__nrows__"] = [
-                        None, None, int(file_rows[f])
-                    ]
+                # a real stats-eligible column named __nrows__ owns the
+                # slot (see _manifest_rows)
+                if "__nrows__" not in stats[name]:
+                    stats[name]["__nrows__"] = [None, None, int(file_rows[f])]
         shutil.rmtree(staging, ignore_errors=True)
-        return names, n, stats
+        return names, sum(file_rows.values()), stats
 
-    def _check_schema(self, df: DataFrame, last: dict | None, evolve: bool) -> str:
+    def _check_schema(
+        self, df: DataFrame, table: StructType | None, evolve: bool
+    ) -> str:
         """Enforce write-time schema-on-write (the lakehouse contract
-        plain parquet dirs lack). Returns the schema JSON to commit."""
+        plain parquet dirs lack) against the committed ``table``
+        schema. Returns the schema JSON to commit."""
         incoming = df.schema
-        if last is None or "schema" not in last:
+        if table is None:
             return incoming.json()
-        table = StructType.fromJson(json.loads(last["schema"]))
         table_fields = {f.name: f.dataType for f in table.fields}
         new = [f for f in incoming.fields if f.name not in table_fields]
         for f in incoming.fields:
@@ -732,16 +743,39 @@ class LakehouseTable:
             return merged.json()
         return incoming.json()
 
-    def _try_commit(
+    @staticmethod
+    def _remove(paths) -> int:
+        """Best-effort delete of ``paths``; returns how many went."""
+        n = 0
+        for p in paths:
+            try:
+                os.remove(p)
+                n += 1
+            except OSError:
+                pass
+        return n
+
+    def _commit(
         self,
         entry: dict,
         read_version: int | None,
+        extra: dict | None = None,
         conflict_on: str | None = None,
         monotone_max: tuple[str, ...] = (),
+        staged: Sequence[str] = (),
     ) -> int:
-        """Optimistic-concurrency commit loop. ``entry`` was computed
-        against ``read_version``; if other commits landed since, append
-        rebases over them, anything that removes files aborts.
+        """The one commit path: merge caller metadata ``extra`` into
+        ``entry`` (no reserved transaction-log key may be shadowed),
+        then land it as the next log version with optimistic
+        concurrency. ``entry`` was computed against ``read_version``;
+        if other commits landed since, append rebases over them,
+        anything that removes files aborts with ConcurrentWriteError.
+        ``staged`` names the data files staged for THIS commit: they
+        are removed when it is refused or loses a race, so a retrying
+        caller (the maintenance hooks swallow ConcurrentWriteError
+        every cycle) never orphans a file set per attempt. Files the
+        entry merely re-adds (a restore's live files) must not be
+        passed.
 
         ``conflict_on`` names a metadata key that must be unique across
         commits: an interloper carrying the same value for it raises
@@ -761,46 +795,63 @@ class LakehouseTable:
         so each committed stamp is the max over all prior ones, and
         readers may trust the newest stamp as the true high-water
         mark even under concurrent blind-append writers."""
-        while True:
-            next_v = (self.latest_version() or 0) + 1 if self._versions() else 1
-            for v in self._versions():
-                if read_version is not None and v <= read_version:
-                    continue
-                interloper = self._read_commit(v)
-                if (
-                    conflict_on is not None
-                    and conflict_on in interloper
-                    and interloper[conflict_on] == entry.get(conflict_on)
-                ):
-                    raise DuplicateCommitError(
-                        f"Version {v} already committed "
-                        f"{conflict_on}={entry.get(conflict_on)!r}"
-                    )
-                for k in monotone_max:
-                    if k in interloper and (
-                        k not in entry or interloper[k] > entry[k]
+        # staged files no commit will reference: VACUUM would reclaim
+        # them, removing them here saves it the work
+        staged_paths = [os.path.join(self.path, f) for f in staged]
+        clash = _RESERVED_ENTRY_KEYS.intersection(extra or ())
+        if clash:
+            self._remove(staged_paths)
+            raise ValueError(
+                f"extra metadata keys {sorted(clash)} collide with reserved "
+                "commit-entry fields; rename them (e.g. nest under a "
+                "caller-owned key)"
+            )
+        entry.update(extra or {})
+        try:
+            while True:
+                vs = self._versions()
+                for v in vs:
+                    if read_version is not None and v <= read_version:
+                        continue
+                    interloper = self._read_commit(v)
+                    if (
+                        conflict_on is not None
+                        and conflict_on in interloper
+                        and interloper[conflict_on] == entry.get(conflict_on)
                     ):
-                        entry[k] = interloper[k]
-                if entry["operation"] == "append" and not interloper.get("remove"):
-                    continue  # blind appends commute
-                raise ConcurrentWriteError(
-                    f"Version {v} ({interloper['operation']}) landed after "
-                    f"this writer read v{read_version}; "
-                    f"{entry['operation']} cannot be rebased"
-                )
-            os.makedirs(self.log_dir, exist_ok=True)
-            entry["version"] = next_v
-            try:
-                fd = os.open(
-                    self._log_path(next_v), os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                )
-            except FileExistsError:
-                continue  # lost the race on the number; re-validate + retry
-            with os.fdopen(fd, "w") as fh:
-                json.dump(entry, fh)
-            if next_v % _CHECKPOINT_INTERVAL == 0:
-                self._write_checkpoint(next_v)
-            return next_v
+                        raise DuplicateCommitError(
+                            f"Version {v} already committed "
+                            f"{conflict_on}={entry.get(conflict_on)!r}"
+                        )
+                    for k in monotone_max:
+                        if k in interloper and (
+                            k not in entry or interloper[k] > entry[k]
+                        ):
+                            entry[k] = interloper[k]
+                    if entry["operation"] == "append" and not interloper.get("remove"):
+                        continue  # blind appends commute
+                    raise ConcurrentWriteError(
+                        f"Version {v} ({interloper['operation']}) landed after "
+                        f"this writer read v{read_version}; "
+                        f"{entry['operation']} cannot be rebased"
+                    )
+                next_v = vs[-1] + 1 if vs else 1
+                os.makedirs(self.log_dir, exist_ok=True)
+                entry["version"] = next_v
+                try:
+                    fd = os.open(
+                        self._log_path(next_v), os.O_CREAT | os.O_EXCL | os.O_WRONLY
+                    )
+                except FileExistsError:
+                    continue  # lost the race on the number; re-validate + retry
+                with os.fdopen(fd, "w") as fh:
+                    json.dump(entry, fh)
+                if next_v % _CHECKPOINT_INTERVAL == 0:
+                    self._write_checkpoint(next_v)
+                return next_v
+        except ConcurrentWriteError:
+            self._remove(staged_paths)
+            raise
 
     def write(
         self,
@@ -826,92 +877,63 @@ class LakehouseTable:
         blind-write case). ``monotone_max`` names ``extra`` keys whose
         values must never regress across commits (watermarks): the
         rebase scan raises them to any higher value committed after
-        ``read_version`` (see ``_try_commit``). Returns the committed
+        ``read_version`` (see ``_commit``). Returns the committed
         version number."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-        if read_version is _UNPINNED:
-            read_version = self.latest_version()
-        live, last = self._replay(as_of=read_version)
-        schema_json = self._check_schema(df, last, evolve)
+        pinned = read_version is not _UNPINNED
+        snap = self._snapshot(read_version if pinned else None)
+        if not pinned:
+            read_version = snap.version
+        schema_json = self._check_schema(df, snap.schema, evolve)
         files, n, stats = self._stage_files(df)
-        entry = _merge_extra(
+        return self._commit(
             {
                 "operation": mode,
                 "add": files,
-                "remove": live if mode == "overwrite" else [],
+                "remove": snap.live if mode == "overwrite" else [],
                 "schema": schema_json,
                 "rows_written": n,
                 "stats": stats,
             },
+            read_version,
             extra,
+            conflict_on,
+            monotone_max,
+            staged=files,
         )
-        try:
-            return self._try_commit(entry, read_version, conflict_on, monotone_max)
-        except ConcurrentWriteError:
-            # The staged files will never be referenced by any commit;
-            # removing them now saves VACUUM the work.
-            for f in files:
-                try:
-                    os.remove(os.path.join(self.path, f))
-                except OSError:
-                    pass
-            raise
 
     # --------------------------------------------------------------- read
-
-    def _resolve_files(self, version: int | None) -> tuple[list[str], dict]:
-        vs = self._versions()
-        if not vs:
-            raise FileNotFoundError(f"No lakehouse log at {self.log_dir}")
-        if version is not None and version not in vs:
-            raise ValueError(f"Version {version} not in retained log {vs}")
-        live, last = self._replay(as_of=version)
-        missing = [f for f in live if not os.path.exists(os.path.join(self.path, f))]
-        if missing:
-            raise FileNotFoundError(
-                f"Version {version or vs[-1]} references vacuumed files "
-                f"{missing[:3]}{'...' if len(missing) > 3 else ''}"
-            )
-        return live, last
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read (time travel when ``version`` is given). The
         file list is resolved ONCE, here — later commits cannot change
         what this DataFrame scans (snapshot isolation)."""
-        live, last = self._resolve_files(version)
-        schema = StructType.fromJson(json.loads(last["schema"]))
-        if not live:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.path, f) for f in live]
-        return self.spark.read.schema(schema).parquet(*paths)
+        snap = self._checked(version)
+        return self._scan(snap.schema, snap.live)
+
+    def _manifest_rows(self, snap: _Snapshot, files: Sequence[str]) -> int | None:
+        """Row count of ``files`` by log arithmetic: the sum of their
+        ``__nrows__`` manifest counts. None when any file predates the
+        manifest row counts, or when a real stats-eligible table column
+        is literally named ``__nrows__`` (its manifest slot holds
+        genuine column stats, not a count)."""
+        if self._stats_column(snap.schema, "__nrows__"):
+            return None
+        counts = [snap.stats.get(f, {}).get("__nrows__") for f in files]
+        if any(k is None for k in counts):
+            return None
+        return sum(int(k[2]) for k in counts)
 
     def live_rows(self, version: int | None = None) -> int | None:
-        """Total live row count by PURE LOG ARITHMETIC (the
-        ``__nrows__`` manifest per-file counts) — no file opened, no
-        Spark job. Returns None when any live file predates the
-        manifest row counts, or when a real stats-eligible table
-        column is literally named ``__nrows__`` (its manifest slot
-        holds genuine column stats) — callers must treat None as
-        "unknown", never as zero."""
-        live, last, stats = self._replay_stats(as_of=version)
-        if last is None:
+        """Total live row count by PURE LOG ARITHMETIC (see
+        ``_manifest_rows``) — no file opened, no Spark job. None means
+        "unknown" (an empty log, pre-manifest files or a shadowed
+        ``__nrows__`` slot), never zero."""
+        snap = self._snapshot(version)
+        if snap.last is None:
             return None
-        if "schema" in last:
-            schema = StructType.fromJson(json.loads(last["schema"]))
-            if any(
-                f.name == "__nrows__"
-                and f.dataType.simpleString() in self._STATS_DTYPES
-                for f in schema.fields
-            ):
-                return None
-        total = 0
-        for f in live:
-            k = stats.get(f, {}).get("__nrows__")
-            if k is None:
-                return None
-            total += int(k[2])
-        return total
+        return self._manifest_rows(snap, snap.live)
 
     def prune_files(
         self,
@@ -935,12 +957,7 @@ class LakehouseTable:
         lexically wrong against the 'T' separator and silently drop
         live files), and a bound whose type cannot match the column
         raises instead of corrupting the prune."""
-        live, last, stats = self._replay_stats(as_of=version)
-        schema = (
-            StructType.fromJson(json.loads(last["schema"]))
-            if last and "schema" in last
-            else None
-        )
+        live, _, stats, schema, _ = self._snapshot(version)
         lo = _normalize_bound(column, lower, schema)
         hi = _normalize_bound(column, upper, schema)
         keep = []
@@ -973,14 +990,9 @@ class LakehouseTable:
         why OPTIMIZE's Z-order exists: clustered files have tight
         min/max ranges, so a point/range query skips almost all of
         them."""
-        keep, _ = self.prune_files(column, lower, upper, version=version)
-        _, last = self._resolve_files(version)
-        schema = StructType.fromJson(json.loads(last["schema"]))
-        if not keep:
-            df = self.spark.createDataFrame([], schema)
-        else:
-            paths = [os.path.join(self.path, f) for f in keep]
-            df = self.spark.read.schema(schema).parquet(*paths)
+        snap = self._checked(version)
+        keep, _ = self.prune_files(column, lower, upper, version=snap.version)
+        df = self._scan(snap.schema, keep)
         c = F.col(column)
         if lower is not None:
             df = df.where(c >= F.lit(lower))
@@ -1002,27 +1014,30 @@ class LakehouseTable:
         log arithmetic — values are sorted once, then each file is one
         binary search (O(F log K)); no file footer is opened and no
         Spark job runs."""
-        keep, n_live, _last, _vals = self._prune_files_in(
+        keep, n_live, _snap, _vals = self._prune_files_in(
             column, values, version
         )
         return keep, n_live
 
     def _prune_files_in(
-        self, column: str, values, version: int | None = None
-    ) -> tuple[list[str], int, dict | None, list]:
-        """``prune_files_in`` plus the newest log entry and the
+        self,
+        column: str,
+        values,
+        version: int | None = None,
+        snap: _Snapshot | None = None,
+    ) -> tuple[list[str], int, _Snapshot, list]:
+        """``prune_files_in`` plus the snapshot it pruned and the
         normalized, sorted, deduplicated probe values — one log replay
         and ONE normalization pass serve the prune, the schema lookup,
         and the residual filter (``read_where_in`` calls this so the
-        per-batch probe hot path never re-parses the probe set)."""
+        per-batch probe hot path never re-parses the probe set). A
+        caller already holding ``snap`` (merge) prunes against it
+        instead of replaying ``version``."""
         import bisect
 
-        live, last, stats = self._replay_stats(as_of=version)
-        schema = (
-            StructType.fromJson(json.loads(last["schema"]))
-            if last and "schema" in last
-            else None
-        )
+        if snap is None:
+            snap = self._snapshot(version)
+        live, _, stats, schema, _ = snap
         vals = sorted(
             {
                 _normalize_bound(column, v, schema)
@@ -1031,7 +1046,7 @@ class LakehouseTable:
             }
         )
         if not vals:
-            return [], len(live), last, vals
+            return [], len(live), snap, vals
         keep = []
         for f in live:
             s = stats.get(f, {}).get(column)
@@ -1056,7 +1071,7 @@ class LakehouseTable:
             i = bisect.bisect_left(vals, mn)
             if i < len(vals) and vals[i] <= mx:
                 keep.append(f)
-        return keep, len(live), last, vals
+        return keep, len(live), snap, vals
 
     def read_where_in(
         self, column: str, values, version: int | None = None
@@ -1082,32 +1097,19 @@ class LakehouseTable:
         string against a date/timestamp column probes the rows that
         date/timestamp equals (the prune already normalized it; the
         residual join must agree, not reject the string)."""
-        keep, _, last, vals = self._prune_files_in(column, values, version)
-        if last is None:
+        keep, _, snap, vals = self._prune_files_in(column, values, version)
+        if snap.last is None:
             raise FileNotFoundError(f"No lakehouse log at {self.log_dir}")
-        schema = StructType.fromJson(json.loads(last["schema"]))
-        if not keep:
-            df = self.spark.createDataFrame([], schema)
-        else:
-            paths = [os.path.join(self.path, f) for f in keep]
-            df = self.spark.read.schema(schema).parquet(*paths)
+        df = self._scan(snap.schema, keep)
         if not vals:
             return df.where(F.lit(False))
-        field = next(f for f in schema.fields if f.name == column)
-        t = field.dataType.typeName()
+        field = next(f for f in snap.schema.fields if f.name == column)
         # vals are already normalized (canonical ISO strings for
         # temporal columns) — only the parse back to native types
         # remains before they can ride in a DataFrame
-        if t == "date":
-            import datetime as dt
-
-            vals = [dt.date.fromisoformat(v) for v in vals]
-        elif t in ("timestamp", "timestamp_ntz"):
-            import datetime as dt
-
-            vals = [dt.datetime.fromisoformat(v) for v in vals]
         keys_df = self.spark.createDataFrame(
-            [(v,) for v in vals], StructType([field])
+            [(_typed_bound(column, v, snap.schema),) for v in vals],
+            StructType([field]),
         )
         return df.join(F.broadcast(keys_df), column, "leftsemi")
 
@@ -1137,13 +1139,9 @@ class LakehouseTable:
         with ``input_file_name()`` and semi-joining the (broadcast)
         change keys. At 100 TB a point-upsert touches a handful of
         files; everything else is carried forward as metadata.
-        ``extra`` merges caller metadata into the log entry (e.g. a
-        streaming batch_id for replay idempotence); ``conflict_on``
-        names an extra key that must be unique across commits (see
-        ``write``). ``read_version`` pins the snapshot the caller's
-        ``updates`` were derived from (see ``write``): a commit landing
-        after it aborts the merge instead of rebasing stale derived
-        rows over fresh state.
+        ``extra``, ``conflict_on`` and ``read_version`` work as in
+        ``write``: the whole merge runs against the one snapshot at
+        ``read_version`` and lands through ``_commit``.
         ``prune_keys`` bounds the touched-file DETECTION scan with the
         stats manifest: ``(column, values)`` names a primary-key
         column and the distinct probe values every update/delete row
@@ -1159,12 +1157,11 @@ class LakehouseTable:
         the first PK column's distinct values up to
         ``_MERGE_AUTO_PRUNE_CAP`` and prunes with those.
         """
-        if read_version is _UNPINNED:
-            read_version = self.latest_version()
-        live, last = self._resolve_files(read_version)
+        pinned = read_version is not _UNPINNED
+        snap = self._checked(read_version if pinned else None)
+        if not pinned:
+            read_version = snap.version
         keys = list(primary_key)
-        target = self.read(version=read_version)
-
         if (
             prune_keys is not None
             and prune_keys[1] is not None
@@ -1180,115 +1177,75 @@ class LakehouseTable:
         # staged rewrite) — without a cache each one re-executes the
         # caller's whole delta plan (probes, joins). MEMORY_AND_DISK
         # so an oversized generic merge spills instead of OOMing;
-        # sink updates are batch-bounded by contract.
+        # sink updates are batch-bounded by contract. Released in the
+        # finally so an exception anywhere in detection/staging doesn't
+        # leak the cached update set for the session's lifetime.
         from pyspark import StorageLevel
 
         updates = updates.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            return self._merge_pinned(
-                updates, keys, extra, read_version, deletes, conflict_on,
-                prune_keys, live, last, target,
-            )
-        finally:
-            # released here (not only around the commit) so an
-            # exception anywhere in detection/staging doesn't leak the
-            # cached update set for the session's lifetime
-            updates.unpersist()
+            change_keys = updates.select(*keys)
+            if deletes is not None:
+                change_keys = change_keys.unionByName(deletes.select(*keys))
+            change_keys = change_keys.distinct()
 
-    def _merge_pinned(
-        self, updates, keys, extra, read_version, deletes, conflict_on,
-        prune_keys, live, last, target,
-    ) -> dict:
-        change_keys = updates.select(*keys)
-        if deletes is not None:
-            change_keys = change_keys.unionByName(deletes.select(*keys))
-        change_keys = change_keys.distinct()
-
-        if prune_keys is None:
-            # auto-prune only when the first PK column carries stats —
-            # a boolean/decimal/binary key has no manifest entry and
+            prune_col, prune_vals = prune_keys or (keys[0], None)
+            # auto-prune only when the first PK column carries stats — a
+            # boolean/decimal/binary key has no manifest entry and
             # _normalize_bound would (rightly) reject its bounds
-            if dict(target.dtypes).get(keys[0]) in self._STATS_DTYPES:
+            if prune_keys is None and self._stats_column(snap.schema, keys[0]):
                 cap = self._MERGE_AUTO_PRUNE_CAP
                 auto = (
-                    change_keys.select(keys[0])
-                    .distinct()
-                    .limit(cap + 1)
-                    .collect()
+                    change_keys.select(keys[0]).distinct().limit(cap + 1).collect()
                 )
-                prune_keys = (
-                    (keys[0], [r[0] for r in auto])
-                    if len(auto) <= cap
-                    else (keys[0], None)
-                )
-            else:
-                prune_keys = (keys[0], None)
-        prune_col, prune_vals = prune_keys
-        if prune_vals is not None:
-            cand_files, _, _, _ = self._prune_files_in(
-                prune_col, prune_vals, read_version
-            )
-            cand_set = set(cand_files)
-            scan_files = [f for f in live if f in cand_set]
-        else:
-            scan_files = live
-        if scan_files:
-            scan = self.spark.read.schema(target.schema).parquet(
-                *[os.path.join(self.path, f) for f in scan_files]
-            )
-            tagged = scan.withColumn("_lh_file", F.input_file_name())
-            touched_files = [
-                os.path.basename(r[0])
-                for r in tagged.join(
-                    F.broadcast(change_keys), keys, "left_semi"
-                )
-                .select("_lh_file")
-                .distinct()
-                .collect()
-            ]
-        else:
+                if len(auto) <= cap:
+                    prune_vals = [r[0] for r in auto]
+            scan_files = snap.live
+            if prune_vals is not None:
+                cand = set(self._prune_files_in(prune_col, prune_vals, snap=snap)[0])
+                scan_files = [f for f in snap.live if f in cand]
             touched_files = []
-        touched_set = set(touched_files)
-        untouched = [f for f in live if f not in touched_set]
+            if scan_files:
+                tagged = self._scan(snap.schema, scan_files).withColumn(
+                    "_lh_file", F.input_file_name()
+                )
+                touched_files = [
+                    os.path.basename(r[0])
+                    for r in tagged.join(
+                        F.broadcast(change_keys), keys, "left_semi"
+                    )
+                    .select("_lh_file")
+                    .distinct()
+                    .collect()
+                ]
+            touched_set = set(touched_files)
+            untouched = [f for f in snap.live if f not in touched_set]
 
-        if touched_files:
-            paths = [os.path.join(self.path, f) for f in touched_files]
-            affected = self.spark.read.schema(target.schema).parquet(*paths)
-            kept = affected.join(change_keys, keys, "left_anti")
-        else:
-            kept = None
-        merged = (
-            kept.unionByName(updates.select(*target.columns))
-            if kept is not None
-            else updates.select(*target.columns)
-        )
-        files, n, stats = self._stage_files(merged)
-        entry = _merge_extra(
-            {
-                "operation": "merge",
-                "add": files,
-                "remove": touched_files,
-                "schema": last["schema"],
-                "rows_written": n,
-                "stats": stats,
-                "files_rewritten": len(touched_files),
-                "files_carried": len(untouched),
-            },
-            extra,
-        )
-        try:
-            v = self._try_commit(entry, read_version, conflict_on)
-        except ConcurrentWriteError:
-            # The staged rewrite will never be referenced by any commit;
-            # a retrying caller (e.g. the IVM sink's 3-attempt loop)
-            # would otherwise orphan a full file set per aborted attempt
-            # until VACUUM.
-            for f in files:
-                try:
-                    os.remove(os.path.join(self.path, f))
-                except OSError:
-                    pass
-            raise
+            merged = updates.select(*snap.schema.fieldNames())
+            if touched_files:
+                kept = self._scan(snap.schema, touched_files).join(
+                    change_keys, keys, "left_anti"
+                )
+                merged = kept.unionByName(merged)
+            files, n, stats = self._stage_files(merged)
+            v = self._commit(
+                {
+                    "operation": "merge",
+                    "add": files,
+                    "remove": touched_files,
+                    "schema": snap.last["schema"],
+                    "rows_written": n,
+                    "stats": stats,
+                    "files_rewritten": len(touched_files),
+                    "files_carried": len(untouched),
+                },
+                read_version,
+                extra,
+                conflict_on,
+                staged=files,
+            )
+        finally:
+            updates.unpersist()
         return {
             "version": v,
             "files_rewritten": len(touched_files),
@@ -1337,15 +1294,9 @@ class LakehouseTable:
         working; retired generations drop out of the Z-order manifest
         on the next optimize cycle (it intersects with the live set).
         """
-        read_version = self.latest_version()
-        if read_version is None:
+        live, last, stats, schema, read_version = self._snapshot()
+        if last is None:
             raise FileNotFoundError(f"No lakehouse log at {self.log_dir}")
-        live, last, stats = self._replay_stats(as_of=read_version)
-        schema = (
-            StructType.fromJson(json.loads(last["schema"]))
-            if last and "schema" in last
-            else None
-        )
         cut = _normalize_bound(column, cutoff, schema)
         if cut is None:
             raise ValueError("retire_below needs a non-NULL cutoff")
@@ -1384,16 +1335,15 @@ class LakehouseTable:
                 "files_dropped": 0,
                 "files_rewritten": 0,
             }
+        files, n, stats_out = [], 0, {}
         if straddle:
-            src = self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f) for f in straddle]
-            )
             c = F.col(column)
-            kept = src.where((c >= F.lit(typed_cut)) | c.isNull())
+            kept = self._scan(schema, straddle).where(
+                (c >= F.lit(typed_cut)) | c.isNull()
+            )
             files, n, stats_out = self._stage_files(kept)
-        else:
-            files, n, stats_out = [], 0, {}
-        entry = _merge_extra(
+        bytes_dropped = self._disk_bytes(drop)
+        v = self._commit(
             {
                 "operation": "retire",
                 "add": files,
@@ -1405,25 +1355,19 @@ class LakehouseTable:
                 "retire_below": cut,
                 "files_dropped": len(drop),
                 "files_rewritten": len(straddle),
-                "bytes_dropped": self._disk_bytes(drop),
+                "bytes_dropped": bytes_dropped,
             },
+            read_version,
             extra,
+            conflict_on,
+            staged=files,
         )
-        try:
-            v = self._try_commit(entry, read_version, conflict_on)
-        except ConcurrentWriteError:
-            for f in files:
-                try:
-                    os.remove(os.path.join(self.path, f))
-                except OSError:
-                    pass
-            raise
         return {
             "version": v,
             "files_dropped": len(drop),
             "files_rewritten": len(straddle),
             "rows_kept": n,
-            "bytes_dropped": entry["bytes_dropped"],
+            "bytes_dropped": bytes_dropped,
         }
 
     # ----------------------------------------------------- optimize/vacuum
@@ -1550,8 +1494,8 @@ class LakehouseTable:
         single generation it produces. Rows never change either way —
         only layout; a no-op cycle (nothing unclustered) commits
         nothing and returns ``{"noop": True}``."""
-        read_version = self.latest_version()
-        live, last = self._resolve_files(None)
+        snap = self._checked(None)
+        live, read_version = snap.live, snap.version
         rewrite = live
         gens_kept: list[list[str]] = []
         if incremental:
@@ -1593,81 +1537,45 @@ class LakehouseTable:
             else:
                 gens_kept = gens
                 rewrite = unclustered
-        schema = StructType.fromJson(json.loads(last["schema"]))
-        if rewrite:
-            df = self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f) for f in rewrite]
-            )
-        else:
-            df = self.spark.createDataFrame([], schema)
-        # Row accounting for the drift check by LOG ARITHMETIC when the
-        # manifest carries per-file row counts (the __nrows__
-        # pseudo-column every _stage_files commit records): summing the
-        # manifest replaces a whole count() job per maintenance cycle.
-        # Any rewrite file from a pre-__nrows__ commit falls back to
-        # the count — never to a skipped check.
-        # A stats-eligible table column literally named __nrows__ owns
-        # that manifest slot (its genuine [min, max, nulls] — see
-        # _stage_files), so the pseudo-count is absent: fall back to
-        # the count job rather than summing null counts.
-        nrows_shadowed = any(
-            f.name == "__nrows__"
-            and f.dataType.simpleString() in self._STATS_DTYPES
-            for f in schema.fields
-        )
-        _, _, all_stats = self._replay_stats(as_of=read_version)
-        known = [all_stats.get(f, {}).get("__nrows__") for f in rewrite]
-        if rewrite and not nrows_shadowed and all(
-            k is not None for k in known
-        ):
-            n_before = sum(int(k[2]) for k in known)
-        elif rewrite:
+        df = self._scan(snap.schema, rewrite)
+        # Row accounting for the drift check by LOG ARITHMETIC
+        # (_manifest_rows) replaces a whole count() job per maintenance
+        # cycle; when the manifest cannot answer, the count job runs —
+        # never a skipped check.
+        n_before = self._manifest_rows(snap, rewrite) if rewrite else 0
+        if n_before is None:
             n_before = df.count()
-        else:
-            n_before = 0
         if zorder_by:
             out = self._zorder_cluster(df, zorder_by, target_files)
         else:
             out = df.coalesce(target_files)
         files, n, stats = self._stage_files(out)
         if n != n_before:
-            for f in files:
-                os.remove(os.path.join(self.path, f))
+            self._remove(os.path.join(self.path, f) for f in files)
             raise ValueError(f"Compaction row drift: {n_before} -> {n}")
 
         # merge-mass telemetry: bytes folded in vs bytes staged out,
         # in the COMMIT LOG (history() is the audit surface a 100 TB
         # operator alerts on) as well as the return value
         bytes_in, bytes_out = self._disk_bytes(rewrite), self._disk_bytes(files)
-        entry = {
-            "operation": "optimize",
-            "add": files,
-            "remove": rewrite,
-            "schema": last["schema"],
-            "rows_written": n,
-            "stats": stats,
-            "bytes_rewritten": bytes_in,
-            "bytes_written": bytes_out,
-            "zorder_by": list(zorder_by) if zorder_by else None,
-            "zorder_gens": (
-                gens_kept + [files] if zorder_by else []
-            ),
-            "zorder_gens_by": list(zorder_by) if zorder_by else None,
-        }
-        try:
-            v = self._try_commit(entry, read_version)
-        except ConcurrentWriteError:
-            # The maintenance hooks call optimize inside a best-effort
-            # `except ConcurrentWriteError: pass` every N batches —
-            # under concurrent writers a lost race would otherwise
-            # orphan a full rewritten generation per cycle until
-            # VACUUM (write() cleans up the same way).
-            for f in files:
-                try:
-                    os.remove(os.path.join(self.path, f))
-                except OSError:
-                    pass
-            raise
+        gens = gens_kept + [files] if zorder_by else []
+        v = self._commit(
+            {
+                "operation": "optimize",
+                "add": files,
+                "remove": rewrite,
+                "schema": snap.last["schema"],
+                "rows_written": n,
+                "stats": stats,
+                "bytes_rewritten": bytes_in,
+                "bytes_written": bytes_out,
+                "zorder_by": list(zorder_by) if zorder_by else None,
+                "zorder_gens": gens,
+                "zorder_gens_by": list(zorder_by) if zorder_by else None,
+            },
+            read_version,
+            staged=files,
+        )
         return {
             "version": v,
             "files_before": len(live),
@@ -1676,7 +1584,7 @@ class LakehouseTable:
             "rows_rewritten": n,
             "bytes_rewritten": bytes_in,
             "bytes_written": bytes_out,
-            "generations": len(entry["zorder_gens"]),
+            "generations": len(gens),
         }
 
     def restore(self, version: int) -> dict:
@@ -1688,33 +1596,31 @@ class LakehouseTable:
         bad write or MERGE: roll forward-by-rolling-back instead of
         hand-editing state.
 
-        Fails if the target snapshot's files were VACUUMed (same
-        contract as time travel). Stats manifests for the restored
-        files are carried over so data skipping keeps working on the
-        restored snapshot. Optimistic concurrency: the commit aborts
-        if a rival lands after the current version was pinned."""
-        read_version = self.latest_version()
-        if read_version is None:
-            raise FileNotFoundError(f"No lakehouse log at {self.log_dir}")
-        # validates the version AND that its files survived VACUUM
-        target_live, target_last = self._resolve_files(version)
-        _, _, all_stats = self._replay_stats(as_of=version)
-        entry = {
-            "operation": "restore",
-            "restored_version": version,
-            "add": target_live,
-            "remove": [
-                f
-                for f in self._resolve_files(None)[0]
-                if f not in set(target_live)
-            ],
-            "schema": target_last["schema"],
-            "rows_written": target_last.get("rows_written"),
-            "stats": {f: all_stats[f] for f in target_live if f in all_stats},
-        }
-        v = self._try_commit(entry, read_version)
+        Both snapshots are reader-checked (``_checked``), so a target
+        whose files were VACUUMed fails like time travel does. The
+        target's stats manifests are carried over so data skipping
+        keeps working on the restored snapshot. The entry lands
+        through ``_commit`` pinned to the current version, with no
+        staged files: its adds are existing data files."""
+        target = self._checked(version)
+        current = self._checked(None)
+        restored = set(target.live)
+        v = self._commit(
+            {
+                "operation": "restore",
+                "restored_version": version,
+                "add": target.live,
+                "remove": [f for f in current.live if f not in restored],
+                "schema": target.last["schema"],
+                "rows_written": target.last.get("rows_written"),
+                "stats": {
+                    f: target.stats[f] for f in target.live if f in target.stats
+                },
+            },
+            current.version,
+        )
         return {"version": v, "restored_version": version,
-                "n_files": len(target_live)}
+                "n_files": len(target.live)}
 
     def table_changes(
         self,
@@ -1743,7 +1649,7 @@ class LakehouseTable:
         strictly below the newest checkpoint that still covers every
         retained version. The replay base checkpoint and its commit
         stay, so every version >= it remains queryable; time travel
-        below it raises by contract (``_replay_stats`` detects the
+        below it raises by contract (``_snapshot`` detects the
         truncated prefix — commits number from 1 — instead of silently
         replaying partial state). A table whose log would otherwise
         grow one entry per streaming micro-batch forever stays
@@ -1759,25 +1665,13 @@ class LakehouseTable:
                 break
         if base is None:
             return {"log_entries_removed": 0, "checkpoints_removed": 0}
-        n_log = 0
-        for v in vs:
-            if v < base:
-                try:
-                    os.remove(self._log_path(v))
-                    n_log += 1
-                except OSError:
-                    pass
-        n_ck = 0
-        for v in self._checkpoint_versions():
-            if v < base:
-                try:
-                    os.remove(self._ckpt_path(v))
-                    n_ck += 1
-                except OSError:
-                    pass
         return {
-            "log_entries_removed": n_log,
-            "checkpoints_removed": n_ck,
+            "log_entries_removed": self._remove(
+                self._log_path(v) for v in vs if v < base
+            ),
+            "checkpoints_removed": self._remove(
+                self._ckpt_path(v) for v in self._checkpoint_versions() if v < base
+            ),
             "replay_base": base,
         }
 
@@ -1790,8 +1684,7 @@ class LakehouseTable:
         horizon = vs[-retain_versions:] if retain_versions > 0 else vs[-1:]
         keep: set[str] = set()
         for v in horizon:
-            live, _ = self._replay(as_of=v)
-            keep.update(live)
+            keep.update(self._snapshot(v).live)
         removed = 0
         for f in os.listdir(self.path):
             full = os.path.join(self.path, f)

@@ -82,7 +82,7 @@ def test_merge_rewrites_only_touched_files(spark, table):
         table.write(
             spark.createDataFrame(_rows(10, start=k * 10)), mode="append"
         )
-    live_before, _ = table._replay()
+    live_before = table._snapshot().live
     updates = spark.createDataFrame(
         [Row(id=5, src="UPD", val=-1.0), Row(id=999, src="NEW", val=-2.0)]
     )
@@ -111,7 +111,7 @@ def test_merge_into_empty_matches_insert_only(spark, table):
 def test_optimize_compacts_then_vacuum_ages_out(spark, table):
     for k in range(4):
         table.write(spark.createDataFrame(_rows(5, start=k * 5)), mode="append")
-    live_before, _ = table._replay()
+    live_before = table._snapshot().live
     assert len(live_before) >= 4
     res = table.optimize(target_files=1)
     assert res["files_after"] == 1
@@ -133,10 +133,10 @@ def test_concurrent_append_rebases_but_overwrite_aborts(spark, table):
     # version. Blind appends commute -> rebase succeeds.
     t2 = LakehouseTable(spark, table.path)
     read_v = table.latest_version()
-    live, last = table._replay()
+    live, last, *_ = table._snapshot()
     files, n, _stats = table._stage_files(spark.createDataFrame(_rows(2, start=100)))
     t2.write(spark.createDataFrame(_rows(3, start=50)), mode="append")  # interloper
-    v = table._try_commit(
+    v = table._commit(
         {"operation": "append", "add": files, "remove": [],
          "schema": last["schema"], "rows_written": n},
         read_v,
@@ -146,11 +146,11 @@ def test_concurrent_append_rebases_but_overwrite_aborts(spark, table):
     # An overwrite prepared against a stale read version must abort:
     # its remove-set no longer describes the table.
     read_v = table.latest_version()
-    live, last = table._replay()
+    live, last, *_ = table._snapshot()
     files, n, _stats = table._stage_files(spark.createDataFrame(_rows(1, start=999)))
     t2.write(spark.createDataFrame(_rows(1, start=500)), mode="append")
     with pytest.raises(ConcurrentWriteError):
-        table._try_commit(
+        table._commit(
             {"operation": "overwrite", "add": files, "remove": live,
              "schema": last["schema"], "rows_written": n},
             read_v,
@@ -251,10 +251,10 @@ def test_optimize_zorder_tightens_file_ranges(spark, table):
             tot += float(mm[0]) + float(mm[1])
         return tot
 
-    naive_files, _ = table._replay()
+    naive_files = table._snapshot().live
     naive = spread(naive_files)
     res = table.optimize(target_files=4, zorder_by=["id", "val"])
-    z_files, _ = table._replay()
+    z_files = table._snapshot().live
     assert len(z_files) == 4
     assert table.read().count() == 1600
     zs = spread(z_files)
@@ -301,14 +301,14 @@ def test_concurrent_merge_aborts_not_corrupts(spark, table):
 
     # writer A prepares its merge state, then writer B commits first
     read_v = table.latest_version()
-    live, last = table._replay()
+    live, last, *_ = table._snapshot()
     files, n, _stats = table._stage_files(
         spark.createDataFrame([Row(id=3, src="A", val=-3.0)])
     )
     t2.merge(spark.createDataFrame([Row(id=3, src="B", val=-9.0)]),
              primary_key=["id"])
     with pytest.raises(ConcurrentWriteError):
-        table._try_commit(
+        table._commit(
             {"operation": "merge", "add": files, "remove": live,
              "schema": last["schema"], "rows_written": n},
             read_v,
@@ -325,6 +325,8 @@ def test_extra_metadata_cannot_shadow_reserved_keys(spark, table):
     df = spark.createDataFrame(_rows(3))
     with pytest.raises(ValueError, match="reserved"):
         table.write(df, mode="append", extra={"add": ["evil.parquet"]})
+    with pytest.raises(ValueError, match="reserved"):
+        table.write(df, mode="append", extra={"stats": {}})
     table.write(df, mode="append", extra={"batch_id": 7})
     with pytest.raises(ValueError, match="reserved"):
         table.merge(
@@ -588,11 +590,11 @@ def test_checkpoint_replay_equals_full_replay(spark, table, monkeypatch):
     for i in range(10):
         table.write(spark.createDataFrame(_rows(1, start=200 + i)), mode="append")
     assert table._checkpoint_versions()  # at least v10, v20
-    fast = table._replay_stats()
+    fast = table._snapshot()
     monkeypatch.setattr(
         lh.LakehouseTable, "_newest_checkpoint", lambda self, as_of=None: None
     )
-    full = table._replay_stats()
+    full = table._snapshot()
     monkeypatch.undo()
     assert fast[0] == full[0]  # live files, in add order
     assert fast[2] == full[2]  # stats manifest
@@ -675,7 +677,7 @@ def test_clean_log_prunes_metadata_keeps_recent_reads(spark, table, monkeypatch)
     with open(table._ckpt_path(20), "w") as fh:
         fh.write("{broken")
     with pytest.raises(FileNotFoundError, match="cleaned below"):
-        table._replay_stats()
+        table._snapshot()
     with open(table._ckpt_path(20), "w") as fh:
         _json.dump(ck, fh)
     # appends continue normally after cleanup
@@ -1079,6 +1081,29 @@ def test_incremental_optimize_recluster_on_zorder_by_change(spark, table):
     assert res2.get("noop") is True
 
 
+def _rival_commit_after_staging(monkeypatch):
+    """Land a rival commit right after the operation under test stages
+    its files, so its commit loses the race inside ``_commit``. The
+    rival restores the current version: a metadata-only commit that
+    re-adds the live files and removes none, so the live set stays the
+    same. Returns the staged file lists, one per ``_stage_files``
+    call."""
+    from retail_sales_etl_spark.load import lakehouse as lh
+
+    orig = lh.LakehouseTable._stage_files
+    staged = []
+
+    def stage_then_rival(self, df):
+        out = orig(self, df)
+        staged.append(out[0])
+        rival = lh.LakehouseTable(self.spark, self.path)
+        rival.restore(rival.latest_version())
+        return out
+
+    monkeypatch.setattr(lh.LakehouseTable, "_stage_files", stage_then_rival)
+    return staged
+
+
 def test_optimize_cleans_staged_files_on_abort(spark, table, monkeypatch):
     """A lost commit race must not orphan the rewritten generation's
     parquet files: the maintenance hooks swallow ConcurrentWriteError
@@ -1091,13 +1116,11 @@ def test_optimize_cleans_staged_files_on_abort(spark, table, monkeypatch):
     table.write(spark.createDataFrame(_rows(100)).coalesce(2), mode="append")
     live = set(table.read().inputFiles())
 
-    def boom(self, entry, read_version, conflict_on=None, monotone_max=()):
-        raise lh.ConcurrentWriteError("rival landed")
-
-    monkeypatch.setattr(lh.LakehouseTable, "_try_commit", boom)
+    staged = _rival_commit_after_staging(monkeypatch)
     with pytest.raises(lh.ConcurrentWriteError):
         table.optimize(target_files=1, zorder_by=["id"], incremental=True)
     monkeypatch.undo()
+    assert len(staged) == 1 and staged[0]  # a rewrite was staged
     on_disk = {
         f for f in os.listdir(table.path) if f.endswith(".parquet")
     }
@@ -1148,7 +1171,8 @@ def test_retire_below_drops_whole_files_by_metadata(spark, table):
 def test_retire_below_cleans_staged_files_on_abort(spark, table, monkeypatch):
     """A lost commit race during retirement must not orphan the
     rewritten parquet files (the optimize abort-cleanup contract: the
-    maintenance hooks swallow ConcurrentWriteError every cycle)."""
+    maintenance hooks swallow ConcurrentWriteError every cycle). The
+    cutoff straddles a file, so retirement stages a rewrite."""
     import os
 
     from retail_sales_etl_spark.load import lakehouse as lh
@@ -1156,13 +1180,11 @@ def test_retire_below_cleans_staged_files_on_abort(spark, table, monkeypatch):
     table.write(spark.createDataFrame(_rows(100)).coalesce(2), mode="append")
     live = set(table.read().inputFiles())
 
-    def boom(self, entry, read_version, conflict_on=None, monotone_max=()):
-        raise lh.ConcurrentWriteError("rival landed")
-
-    monkeypatch.setattr(lh.LakehouseTable, "_try_commit", boom)
+    staged = _rival_commit_after_staging(monkeypatch)
     with pytest.raises(lh.ConcurrentWriteError):
-        table.retire_below("id", 50)
+        table.retire_below("id", 25)
     monkeypatch.undo()
+    assert len(staged) == 1 and staged[0]  # a rewrite was staged
     on_disk = {
         f for f in os.listdir(table.path) if f.endswith(".parquet")
     }
@@ -1470,3 +1492,58 @@ def test_optimize_counts_when_nrows_is_a_real_column(spark, tmp_path):
     res = t.optimize(target_files=1)
     assert res["rows_rewritten"] == 25
     assert t.read().count() == 25
+
+
+def test_one_snapshot_scan_and_commit_site():
+    """Each ``LakehouseTable`` mechanism has one home in ``lakehouse.py``:
+    the committed schema is parsed in ``_snapshot`` (the one
+    ``StructType.fromJson``), data files are scanned in ``_scan`` (the
+    one ``.read.schema(``), and commits land in ``_commit`` (the one
+    create-exclusive log open and the one ``except
+    ConcurrentWriteError`` that removes a lost commit's staged files).
+    Nothing reads the environment."""
+    import ast
+    import inspect
+
+    from retail_sales_etl_spark.load import lakehouse as lh
+
+    sites = {
+        "except ConcurrentWriteError": [],
+        ".read.schema(": [],
+        "StructType.fromJson(": [],
+        "os.O_EXCL": [],
+        "os.environ": [],
+    }
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                visit(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.ExceptHandler)
+                and child.type is not None
+                and "ConcurrentWriteError" in ast.unparse(child.type)
+            ):
+                sites["except ConcurrentWriteError"].append(fn)
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                called = ast.unparse(child.func)
+                if called.endswith(".read.schema"):
+                    sites[".read.schema("].append(fn)
+                if called == "StructType.fromJson":
+                    sites["StructType.fromJson("].append(fn)
+            if isinstance(child, ast.Attribute) and ast.unparse(child) in (
+                "os.O_EXCL",
+                "os.environ",
+            ):
+                sites[ast.unparse(child)].append(fn)
+            visit(child, fn)
+
+    visit(ast.parse(inspect.getsource(lh)), "<module>")
+    assert sites == {
+        "except ConcurrentWriteError": ["_commit"],
+        ".read.schema(": ["_scan"],
+        "StructType.fromJson(": ["_snapshot"],
+        "os.O_EXCL": ["_commit"],
+        "os.environ": [],
+    }, sites

@@ -190,7 +190,7 @@ def test_lakehouse_sink_duplicate_conflict_at_commit(spark, sf_dir, tmp_path):
     # ...and our writer now tries to commit batch 2 as well
     with pytest.raises(DuplicateCommitError):
         files, n, stats = table._stage_files(batch)
-        table._try_commit(
+        table._commit(
             {
                 "operation": "append",
                 "add": files,
