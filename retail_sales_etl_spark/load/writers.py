@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.modeling import pk_integrity_stats
+
 
 def write_table(
     df: DataFrame,
@@ -75,19 +77,7 @@ def validate_loaded(
     not the in-memory plan) and checks: row count reconciliation, PK
     non-null, PK uniqueness — all in one distributed aggregate.
     """
-    df = spark.read.format(fmt).load(path)
-
-    null_cond = None
-    for pk in primary_key:
-        c = F.col(pk).isNull()
-        null_cond = c if null_cond is None else (null_cond | c)
-
-    stats = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(null_cond, 1).otherwise(0)).alias("null_pk"),
-        F.count_distinct(*[F.col(pk) for pk in primary_key]).alias("distinct_pk"),
-    ).first()
-
+    stats = pk_integrity_stats(spark.read.format(fmt).load(path), primary_key)
     if expected_row_count is not None and stats["n"] != expected_row_count:
         raise ValueError(
             f"Row count mismatch after LOAD for {path}: "

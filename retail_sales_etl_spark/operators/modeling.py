@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -144,6 +144,24 @@ def build_sales_fact(lineitem: DataFrame) -> DataFrame:
     )
 
 
+def pk_integrity_stats(df: DataFrame, primary_key: Sequence[str]) -> Row:
+    """The one primary-key integrity aggregate: row count ``n``, rows
+    with a NULL in any key column ``null_pk``, and distinct keys
+    ``distinct_pk``, in one distributed pass — only the scalar row
+    comes back to the driver. Shared by the T2 gate
+    (``validate_integrity``) and the post-load check
+    (``writers.validate_loaded``); each caller keeps its own checks."""
+    null_cond = None
+    for pk in primary_key:
+        c = F.col(pk).isNull()
+        null_cond = c if null_cond is None else (null_cond | c)
+    return df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(null_cond, 1).otherwise(0)).alias("null_pk"),
+        F.count_distinct(*[F.col(pk) for pk in primary_key]).alias("distinct_pk"),
+    ).first()
+
+
 def validate_integrity(
     df: DataFrame,
     primary_key: Sequence[str],
@@ -168,16 +186,7 @@ def validate_integrity(
         if _re.fullmatch(r"[a-z0-9]+(?:_[a-z0-9]+)*", col) is None:
             raise ValueError(f"Invalid column name (not snake_case): {col}")
 
-    null_cond = None
-    for pk in primary_key:
-        c = F.col(pk).isNull()
-        null_cond = c if null_cond is None else (null_cond | c)
-    stats = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(null_cond, 1).otherwise(0)).alias("null_pk"),
-        F.count_distinct(*[F.col(pk) for pk in primary_key]).alias("distinct_pk"),
-    ).first()
-
+    stats = pk_integrity_stats(df, primary_key)
     if stats["null_pk"] and stats["null_pk"] > 0:
         raise ValueError(f"NULL values found in primary key {list(primary_key)}")
     if stats["distinct_pk"] != stats["n"]:

@@ -12,12 +12,26 @@ tested. Swap ``_decode_image_stub`` for a PIL/ffmpeg call in production.
 
 ``multimodal_bytes`` (oracle-checked) exercises the JVM-side path:
 utf-8 payload encode, byte stats, checksum, synthesized metadata.
+
+Every codec entry is a codec body plus one harness call.
+``_synthesize(docs, mime, encode)`` turns a per-doc encoder into the
+media table, and ``_map_docs(media, fn, schema)`` runs a per-doc
+decoder over it. Both are one map-side Arrow-batched ``mapInPandas``
+stage, so every codec entry has the same scale shape: the scan reads
+only ``doc_id``, there is no Exchange, and payload bytes stay inside
+the executor and never shuffle. The output is narrow typed rows at doc
+grain, or at (doc, image) / (doc, frame) grain for the 1->N decoders.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import datetime as dt
+import math
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +79,61 @@ def to_media_table(docs: DataFrame) -> DataFrame:
         F.lit("text/plain").alias("mime_type"),
         F.length(payload).cast("long").alias("n_bytes"),
     )
+
+
+def _synthesize(
+    docs: DataFrame, mime: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """The media table of one synthetic codec: ``encode(doc_id)`` is
+    the payload of each document. One Arrow-batched ``mapInPandas``
+    over ``docs.select("doc_id")``, so the scan reads only ``doc_id``
+    and the payload is generated in the executor, never carried."""
+
+    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = [int(d) for d in pdf["doc_id"]]
+            payloads = [bytes(encode(d)) for d in ids]
+            yield pd.DataFrame(
+                {
+                    "doc_id": ids,
+                    "payload": payloads,
+                    "mime_type": mime,
+                    "n_bytes": [len(p) for p in payloads],
+                }
+            )
+
+    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+
+
+def _map_docs(
+    media: DataFrame,
+    fn: Callable[[int, bytes], dict | list[dict]],
+    schema: StructType,
+) -> DataFrame:
+    """Per-doc decode over the media table: ``fn(doc_id, payload)``
+    returns one output row (a dict keyed by ``schema``'s fields after
+    ``doc_id``) or a list of them (the 1->N decoders: ICO images, WAV
+    frames, sampled frames). Each Arrow batch becomes one pandas frame
+    built from the schema's field names, ``doc_id`` first; an empty
+    batch yields an empty frame with the same columns.
+
+    Scale shape of every entry built on it: one map-side
+    ``mapInPandas`` stage, zero Exchange, payload bytes stay inside
+    the executor and never shuffle."""
+    cols = schema.fieldNames()
+
+    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: dict[str, list] = {c: [] for c in cols}
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                out = fn(int(doc_id), payload)
+                for row in out if isinstance(out, list) else [out]:
+                    rows["doc_id"].append(int(doc_id))
+                    for c in cols[1:]:
+                        rows[c].append(row[c])
+            yield pd.DataFrame(rows)
+
+    return media.mapInPandas(_map, schema=schema)
 
 
 def _decode_image_stub(payload: bytes) -> dict:
@@ -145,22 +214,29 @@ PPM_RESIZE_W = 4
 PPM_RESIZE_H = 3
 
 
-def resize_ppm_nn(payload: bytes) -> dict:
-    """Nearest-neighbor resize on a REAL decoded raster: target pixel
-    (x', y') samples source pixel (x'*w // W', y'*h // H') — the
-    standard NN kernel, integer arithmetic only. Returns the source
-    dims plus per-channel sums of the RESIZED raster, so a wrong
-    source-coordinate mapping or raster stride is oracle-visible."""
-    width, height, raw = _parse_ppm(payload)
-    sr = sg = sb = 0
-    for y2 in range(PPM_RESIZE_H):
-        sy = (y2 * height) // PPM_RESIZE_H
-        for x2 in range(PPM_RESIZE_W):
-            sx = (x2 * width) // PPM_RESIZE_W
-            off = 3 * (sy * width + sx)
-            sr += raw[off]
-            sg += raw[off + 1]
-            sb += raw[off + 2]
+def _nn_sums(
+    width: int, height: int, pixel: Callable[[int, int], tuple]
+) -> list[int]:
+    """The one nearest-neighbor resize kernel: target pixel (x', y')
+    of the PPM_RESIZE_W x PPM_RESIZE_H grid samples source pixel
+    (x'*w // W', y'*h // H'), integer arithmetic only. ``pixel(x, y)``
+    returns the source sample's channel tuple; the result is the
+    per-channel sums over the resized raster, so a wrong coordinate
+    mapping or raster stride is oracle-visible."""
+    samples = [
+        pixel((x2 * width) // PPM_RESIZE_W, (y2 * height) // PPM_RESIZE_H)
+        for y2 in range(PPM_RESIZE_H)
+        for x2 in range(PPM_RESIZE_W)
+    ]
+    return [sum(ch) for ch in zip(*samples)]
+
+
+def _rgb_resize(
+    width: int, height: int, pixel: Callable[[int, int], tuple]
+) -> dict:
+    """Source dims plus the (r, g, b) sums of the NN-resized raster —
+    the output row of every RGB member of the resize family."""
+    sr, sg, sb = _nn_sums(width, height, pixel)
     return {
         "src_width": width,
         "src_height": height,
@@ -168,6 +244,17 @@ def resize_ppm_nn(payload: bytes) -> dict:
         "sum_g": sg,
         "sum_b": sb,
     }
+
+
+def resize_ppm_nn(payload: bytes) -> dict:
+    """Nearest-neighbor resize (``_nn_sums``) on a REAL decoded P6
+    raster: source dims plus per-channel sums of the RESIZED raster."""
+    width, height, raw = _parse_ppm(payload)
+    return _rgb_resize(
+        width,
+        height,
+        lambda x, y: raw[3 * (y * width + x) : 3 * (y * width + x) + 3],
+    )
 
 
 def _decode_media(payload: bytes, mime_type: str) -> dict:
@@ -202,15 +289,12 @@ def _decode_media(payload: bytes, mime_type: str) -> dict:
     return _decode_image_stub(payload)
 
 
-def extract_features(media: DataFrame, batch_partitions: int | None = None) -> DataFrame:
-    """Arrow-batched decode/feature-extract over ``mapInPandas``.
-
-    ``batch_partitions`` controls payload batch sizing: at scale,
-    repartition so each Arrow batch fits executor memory (payloads are
-    the dominant bytes — do NOT let one partition hold 10k 4K frames).
-    """
-    if batch_partitions:
-        media = media.repartition(batch_partitions)
+def extract_features(media: DataFrame) -> DataFrame:
+    """Arrow-batched decode/feature-extract over ``mapInPandas``. It
+    keeps its own map because the decode dispatches on ``mime_type``,
+    which ``_map_docs`` does not pass. At scale, repartition the media
+    table so each Arrow batch fits executor memory (payloads are the
+    dominant bytes — do NOT let one partition hold 10k 4K frames)."""
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -236,30 +320,35 @@ FRAME_SCHEMA = StructType(
     ]
 )
 
+FRAME_SIZE = 64  # bytes per sampled frame
+FRAME_STRIDE = 256  # bytes between frame starts
 
-def sample_frames(media: DataFrame, frame_size: int = 64, stride: int = 256) -> DataFrame:
+
+def _slice_frames(payload: bytes) -> list[dict]:
+    buf = bytes(payload)
+    return [
+        {
+            "frame_idx": i,
+            "frame_offset": off,
+            "frame_bytes": buf[off : off + FRAME_SIZE],
+        }
+        for i, off in enumerate(
+            range(0, max(len(buf) - FRAME_SIZE, 1), FRAME_STRIDE)
+        )
+    ]
+
+
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling over binary payloads: one input row -> N frame rows.
 
-    The video/audio pattern: slice fixed-size windows out of the payload
-    at a stride (a real decoder would seek keyframes; this deterministic
-    slicer exercises the same 1->N Arrow plumbing and output schema).
-    Frames explode data volume — at scale, repartition the OUTPUT, not
-    the input, before any downstream shuffle.
+    The video/audio pattern: slice FRAME_SIZE-byte windows out of the
+    payload every FRAME_STRIDE bytes (a real decoder would seek
+    keyframes; this deterministic slicer exercises the same 1->N Arrow
+    plumbing and output schema). Frames explode data volume — at
+    scale, repartition the OUTPUT, not the input, before any
+    downstream shuffle.
     """
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_offset": [], "frame_bytes": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                for i, off in enumerate(range(0, max(len(buf) - frame_size, 1), stride)):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_offset"].append(off)
-                    out["frame_bytes"].append(buf[off : off + frame_size])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_sample, schema=FRAME_SCHEMA)
+    return _map_docs(media, lambda _, p: _slice_frames(p), FRAME_SCHEMA)
 
 
 def q_multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,28 +451,15 @@ def synthesize_ppm(docs: DataFrame) -> DataFrame:
     closed-form pixel function: 'P6\\n{w} {h}\\n255\\n' + raw RGB raster.
     Arrow-batched; the raster is bounded (<= 9x7 pixels) by design."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _ppm_dims(d)
-                buf = bytearray(f"P6\n{w} {h}\n255\n".encode("ascii"))
-                for y in range(h):
-                    for x in range(w):
-                        buf.extend(_ppm_pixel(d, x, y))
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": PPM_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def encode(d: int) -> bytes:
+        w, h = _ppm_dims(d)
+        buf = bytearray(f"P6\n{w} {h}\n255\n".encode("ascii"))
+        for y in range(h):
+            for x in range(w):
+                buf.extend(_ppm_pixel(d, x, y))
+        return buf
 
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(docs, PPM_MIME, encode)
 
 
 PPM_STATS_SCHEMA = StructType(
@@ -407,26 +483,7 @@ def q_multimodal_ppm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers the full encode->Arrow->decode path (header parse, raster
     offset, channel interleave), not a stub."""
     media = synthesize_ppm(load_table(spark, sf_dir, "documents"))
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "n_pixels": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_ppm(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=PPM_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_ppm(p), PPM_STATS_SCHEMA)
 
 
 PPM_RESIZE_SCHEMA = StructType(
@@ -449,25 +506,7 @@ def q_multimodal_ppm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel (x', y') -> generator(doc_id, x'*w // W', y'*h // H')), so
     the NN coordinate mapping and raster stride are hash-checked."""
     media = synthesize_ppm(load_table(spark, sf_dir, "documents"))
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "src_width": [],
-                "src_height": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = resize_ppm_nn(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_resize, schema=PPM_RESIZE_SCHEMA)
+    return _map_docs(media, lambda _, p: resize_ppm_nn(p), PPM_RESIZE_SCHEMA)
 
 
 QUERIES = {
@@ -651,18 +690,7 @@ def ahash_ppm(payload: bytes) -> dict:
 def phash_frame(media: DataFrame) -> DataFrame:
     """(doc_id, phash, gray_sum) via the Arrow-batched aHash decode —
     the shared front end of both perceptual-hash operators."""
-
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "phash": [], "gray_sum": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = ahash_ppm(payload)
-                rows["doc_id"].append(int(doc_id))
-                rows["phash"].append(d["phash"])
-                rows["gray_sum"].append(d["gray_sum"])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_hash, schema=PHASH_SCHEMA)
+    return _map_docs(media, lambda _, p: ahash_ppm(p), PHASH_SCHEMA)
 
 
 def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -879,40 +907,24 @@ def synthesize_bmp(docs: DataFrame) -> DataFrame:
     multi-byte header fields, per-row 4-byte stride padding (written
     as 0xAA, NOT zero, so a decoder that sums padding bytes is caught),
     bottom-up row storage, and B-G-R channel order."""
-    import struct
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _ppm_dims(d)
-                stride = _bmp_stride(w)
-                size = _BMP_HEADER_SIZE + stride * h
-                buf = bytearray()
-                buf += struct.pack("<2sIHHI", b"BM", size, 0, 0, _BMP_HEADER_SIZE)
-                buf += struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h, 0, 0, 0, 0
-                )
-                for y in range(h - 1, -1, -1):  # bottom-up
-                    row = bytearray()
-                    for x in range(w):
-                        r, g, b = _ppm_pixel(d, x, y)
-                        row += bytes((b, g, r))  # BGR
-                    row += b"\xaa" * (stride - 3 * w)
-                    buf += row
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": BMP_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def encode(d: int) -> bytes:
+        w, h = _ppm_dims(d)
+        stride = _bmp_stride(w)
+        size = _BMP_HEADER_SIZE + stride * h
+        buf = bytearray()
+        buf += struct.pack("<2sIHHI", b"BM", size, 0, 0, _BMP_HEADER_SIZE)
+        buf += struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h, 0, 0, 0, 0
+        )
+        for y in range(h - 1, -1, -1):  # bottom-up
+            for x in range(w):
+                r, g, b = _ppm_pixel(d, x, y)
+                buf += bytes((b, g, r))  # BGR
+            buf += b"\xaa" * (stride - 3 * w)
+        return buf
 
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(docs, BMP_MIME, encode)
 
 
 def decode_bmp(payload: bytes) -> dict:
@@ -926,8 +938,6 @@ def decode_bmp(payload: bytes) -> dict:
     reordering, so a missing flip only the corner's y-dependence
     catches (a B<->R swap is caught by the sums themselves: the
     generator's R and B formulas differ)."""
-    import struct
-
     payload = bytes(payload)
     if payload[:2] != b"BM" or len(payload) < _BMP_HEADER_SIZE:
         raise ValueError("not a BMP payload")
@@ -1001,24 +1011,9 @@ def q_multimodal_bmp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (pinned by the distinct per-channel sum formulas of the
     generator). The oracle recomputes every output
     closed-form from the shared pixel generator + stride arithmetic,
-    so encode->Arrow->decode round-trips hash-exact. Scale shape:
-    identical to the PPM path — one Arrow-batched mapInPandas chain,
-    payload bytes never shuffle, output is doc-grain stats."""
+    so encode->Arrow->decode round-trips hash-exact."""
     media = synthesize_bmp(load_table(spark, sf_dir, "documents"))
-
-    cols = [f.name for f in BMP_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_bmp(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=BMP_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_bmp(p), BMP_STATS_SCHEMA)
 
 
 QUERIES["multimodal_bmp_stats"] = q_multimodal_bmp_stats
@@ -1097,37 +1092,21 @@ def synthesize_wav(docs: DataFrame) -> DataFrame:
     variable-position chunks (data's offset depends on junk_len, so a
     fixed-offset "decoder" dies immediately), the RIFF padding rule,
     and signed little-endian samples."""
-    import struct
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate, n, junk = _wav_params(d)
-                body = bytearray()
-                body += b"WAVE"
-                body += struct.pack(
-                    "<4sIHHIIHH", b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16
-                )
-                body += struct.pack("<4sI", b"JUNK", junk)
-                body += b"\xee" * junk + b"\x00" * (junk % 2)
-                body += struct.pack("<4sI", b"data", 2 * n)
-                for i in range(n):
-                    body += struct.pack("<h", _wav_sample(d, i))
-                buf = struct.pack("<4sI", b"RIFF", len(body)) + bytes(body)
-                ids.append(d)
-                payloads.append(buf)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": WAV_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def encode(d: int) -> bytes:
+        rate, n, junk = _wav_params(d)
+        body = bytearray(b"WAVE")
+        body += struct.pack(
+            "<4sIHHIIHH", b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16
+        )
+        body += struct.pack("<4sI", b"JUNK", junk)
+        body += b"\xee" * junk + b"\x00" * (junk % 2)
+        body += struct.pack("<4sI", b"data", 2 * n)
+        for i in range(n):
+            body += struct.pack("<h", _wav_sample(d, i))
+        return struct.pack("<4sI", b"RIFF", len(body)) + bytes(body)
 
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(docs, WAV_MIME, encode)
 
 
 def parse_wav(payload: bytes) -> tuple[int, "object"]:
@@ -1138,10 +1117,6 @@ def parse_wav(payload: bytes) -> tuple[int, "object"]:
     little-endian int16. Returns (sample_rate, int64 sample array) —
     the shared front end of the clip-grain stats and the frame-grain
     feature extractor."""
-    import struct
-
-    import numpy as np
-
     payload = bytes(payload)
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
@@ -1168,23 +1143,29 @@ def parse_wav(payload: bytes) -> tuple[int, "object"]:
     return int(rate), samples
 
 
-def decode_wav(payload: bytes) -> dict:
-    """Clip-grain stats over ``parse_wav`` — integer-exact;
-    zero_crossings counts strict sign-class changes (negative vs
-    non-negative) between consecutive samples — the standard ZCR
-    numerator."""
-    import numpy as np
-
-    payload = bytes(payload)
-    rate, samples = parse_wav(payload)
+def _pcm_stats(samples) -> dict:
+    """Integer-exact energy stats of an int64 sample array: sum |s|,
+    peak |s| (0 when empty), sum s^2, and zero_crossings — strict
+    sign-class changes (negative vs non-negative) between consecutive
+    samples, the standard ZCR numerator. Shared by the clip, frame and
+    resampled stats."""
     neg = samples < 0
     return {
-        "sample_rate": int(rate),
-        "n_samples": int(samples.size),
         "sum_abs": int(np.abs(samples).sum()),
         "peak": int(np.abs(samples).max()) if samples.size else 0,
         "sum_sq": int((samples * samples).sum()),
         "zero_crossings": int((neg[:-1] != neg[1:]).sum()),
+    }
+
+
+def decode_wav(payload: bytes) -> dict:
+    """Clip-grain stats over ``parse_wav`` (``_pcm_stats``)."""
+    payload = bytes(payload)
+    rate, samples = parse_wav(payload)
+    return {
+        "sample_rate": int(rate),
+        "n_samples": int(samples.size),
+        **_pcm_stats(samples),
         "n_bytes": len(payload),
     }
 
@@ -1212,25 +1193,9 @@ def q_multimodal_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     read wrecks sum_abs/peak/zero_crossings loudly). The oracle
     recomputes every output closed-form from the shared sample
     generator + container arithmetic (header sizes, junk padding), so
-    the encode->Arrow->decode round-trip is hash-exact end to end.
-    Scale shape: identical to the image codecs — one Arrow-batched
-    mapInPandas chain, payload bytes stay inside the executor and
-    never shuffle, output is doc-grain integer stats."""
+    the encode->Arrow->decode round-trip is hash-exact end to end."""
     media = synthesize_wav(load_table(spark, sf_dir, "documents"))
-
-    cols = [f.name for f in WAV_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_wav(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=WAV_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_wav(p), WAV_STATS_SCHEMA)
 
 
 QUERIES["multimodal_wav_stats"] = q_multimodal_wav_stats
@@ -1302,6 +1267,27 @@ WAV_FRAMES_SCHEMA = StructType(
 )
 
 
+def _wav_frames(payload: bytes) -> list[dict]:
+    """One row per WAV_FRAME-sample analysis frame of the decoded clip
+    (last frame partial): ``_pcm_stats`` plus the integer-only
+    low-energy gate."""
+    _rate, samples = parse_wav(payload)
+    rows = []
+    for f0 in range(0, int(samples.size), WAV_FRAME):
+        fr = samples[f0 : f0 + WAV_FRAME]
+        st = _pcm_stats(fr)
+        low = st["sum_abs"] < WAV_FRAME_LOW_MEAN_ABS * fr.size
+        rows.append(
+            {
+                "frame_idx": f0 // WAV_FRAME,
+                "n_in_frame": int(fr.size),
+                **st,
+                "low_energy": int(low),
+            }
+        )
+    return rows
+
+
 def q_multimodal_wav_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-grain audio feature extraction — the audio analog of the
     video frame sampler: each decoded clip is chopped into fixed
@@ -1312,43 +1298,13 @@ def q_multimodal_wav_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-energy flag for silence trimming — decided integer-only by
     cross-multiplication against the mean-|s| threshold.
 
-    Scale shape: identical to the codec stats — one Arrow-batched
-    mapInPandas chain over the synthesized payloads (the REAL
-    ``parse_wav`` chunk walk runs per clip inside the executor),
-    payload bytes never shuffle, output is (doc, frame)-grain integer
-    rows, a bounded ~2-6x row expansion. The oracle recomputes every
+    The REAL ``parse_wav`` chunk walk runs per clip inside the
+    executor; the (doc, frame)-grain output is a bounded ~2-6x row
+    expansion. The oracle recomputes every
     frame closed-form from the shared sample generator with the frame
     key i // WAV_FRAME and a within-frame lag window."""
     media = synthesize_wav(load_table(spark, sf_dir, "documents"))
-
-    cols = [f.name for f in WAV_FRAMES_SCHEMA.fields]
-
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, samples = parse_wav(bytes(payload))
-                for f0 in range(0, int(samples.size), WAV_FRAME):
-                    fr = samples[f0 : f0 + WAV_FRAME]
-                    neg = fr < 0
-                    sum_abs = int(np.abs(fr).sum())
-                    rows["doc_id"].append(int(doc_id))
-                    rows["frame_idx"].append(f0 // WAV_FRAME)
-                    rows["n_in_frame"].append(int(fr.size))
-                    rows["sum_abs"].append(sum_abs)
-                    rows["peak"].append(int(np.abs(fr).max()))
-                    rows["sum_sq"].append(int((fr * fr).sum()))
-                    rows["zero_crossings"].append(
-                        int((neg[:-1] != neg[1:]).sum())
-                    )
-                    rows["low_energy"].append(
-                        int(sum_abs < WAV_FRAME_LOW_MEAN_ABS * fr.size)
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_frames, schema=WAV_FRAMES_SCHEMA)
+    return _map_docs(media, lambda _, p: _wav_frames(p), WAV_FRAMES_SCHEMA)
 
 
 QUERIES["multimodal_wav_frames"] = q_multimodal_wav_frames
@@ -1419,8 +1375,6 @@ def decimate_samples(samples, factor: int):
     is reproducible closed-form in SQL. Floor (toward -inf, matching
     SQL floor(sum/cnt)), NOT C-style truncation: the samples are
     signed."""
-    import numpy as np
-
     s = samples.astype(np.int64)
     n = int(s.size)
     if n == 0:
@@ -1429,6 +1383,21 @@ def decimate_samples(samples, factor: int):
     sums = np.add.reduceat(s, bounds)
     counts = np.minimum(bounds + factor, n) - bounds
     return np.floor_divide(sums, counts)
+
+
+def _wav_resample(doc_id: int, payload: bytes) -> dict:
+    """Decimate the decoded clip by M = 2 + doc_id % 4
+    (``decimate_samples``) and take ``_pcm_stats`` of the result."""
+    factor = 2 + doc_id % 4
+    rate, samples = parse_wav(payload)
+    out = decimate_samples(samples, factor)
+    return {
+        "factor": factor,
+        "sample_rate_out": rate // factor,
+        "n_in": int(samples.size),
+        "n_out": int(out.size),
+        **_pcm_stats(out),
+    }
 
 
 def q_multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1444,9 +1413,7 @@ def q_multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncating-instead-of-flooring average, or an off-by-one tail
     block hash-fails). sample_rate_out = rate // M.
 
-    Scale shape: identical to the codec stats — one Arrow-batched
-    mapInPandas chain, payload bytes never leave the executor, output
-    is one narrow row per clip. The oracle reproduces the decimation
+    Output is one narrow row per clip. The oracle reproduces the decimation
     closed-form from the shared sample generator (block key i // M,
     floor-averaged per block, lag window for crossings) — a DIFFERENT
     formulation (SQL grouping) of the same arithmetic, the
@@ -1456,35 +1423,7 @@ def q_multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's warehouse lacks entirely (SURVEY §2 additions).
     """
     media = synthesize_wav(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in WAV_RESAMPLE_SCHEMA.fields]
-
-    def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                doc_id = int(doc_id)
-                factor = 2 + doc_id % 4
-                rate, samples = parse_wav(bytes(payload))
-                out = decimate_samples(samples, factor)
-                neg = out < 0
-                rows["doc_id"].append(doc_id)
-                rows["factor"].append(factor)
-                rows["sample_rate_out"].append(rate // factor)
-                rows["n_in"].append(int(samples.size))
-                rows["n_out"].append(int(out.size))
-                rows["sum_abs"].append(int(np.abs(out).sum()))
-                rows["peak"].append(
-                    int(np.abs(out).max()) if out.size else 0
-                )
-                rows["sum_sq"].append(int((out * out).sum()))
-                rows["zero_crossings"].append(
-                    int((neg[:-1] != neg[1:]).sum())
-                )
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_resample, schema=WAV_RESAMPLE_SCHEMA)
+    return _map_docs(media, _wav_resample, WAV_RESAMPLE_SCHEMA)
 
 
 QUERIES["multimodal_wav_resample"] = q_multimodal_wav_resample
@@ -1566,8 +1505,6 @@ def synthesize_png(docs: DataFrame) -> DataFrame:
     (doc_id + y) % 5, so a decoder must implement ALL FIVE filters
     (None/Sub/Up/Average/Paeth) correctly — a lazy filter-0-only
     reader dies on the second row of almost every payload."""
-    import struct
-    import zlib
 
     def _chunk(ctype: bytes, data: bytes) -> bytes:
         return (
@@ -1577,58 +1514,39 @@ def synthesize_png(docs: DataFrame) -> DataFrame:
             + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
         )
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _ppm_dims(d)
-                raw = []  # per-row RAW rgb bytes
-                for y in range(h):
-                    row = bytearray()
-                    for x in range(w):
-                        row += bytes(_ppm_pixel(d, x, y))
-                    raw.append(bytes(row))
-                stream = bytearray()
-                prev = bytes(3 * w)
-                for y, row in enumerate(raw):
-                    ft = (d + y) % 5
-                    stream.append(ft)
-                    for i, v in enumerate(row):
-                        a = row[i - 3] if i >= 3 else 0
-                        b = prev[i]
-                        c = prev[i - 3] if i >= 3 else 0
-                        if ft == 0:
-                            f = v
-                        elif ft == 1:
-                            f = (v - a) % 256
-                        elif ft == 2:
-                            f = (v - b) % 256
-                        elif ft == 3:
-                            f = (v - (a + b) // 2) % 256
-                        else:
-                            f = (v - _paeth(a, b, c)) % 256
-                        stream.append(f)
-                    prev = row
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                buf = (
-                    _PNG_SIG
-                    + _chunk(b"IHDR", ihdr)
-                    + _chunk(b"IDAT", zlib.compress(bytes(stream)))
-                    + _chunk(b"IEND", b"")
-                )
-                ids.append(d)
-                payloads.append(buf)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": PNG_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def encode(d: int) -> bytes:
+        w, h = _ppm_dims(d)
+        stream = bytearray()
+        prev = bytes(3 * w)
+        for y in range(h):
+            row = b"".join(bytes(_ppm_pixel(d, x, y)) for x in range(w))
+            ft = (d + y) % 5
+            stream.append(ft)
+            for i, v in enumerate(row):
+                a = row[i - 3] if i >= 3 else 0
+                b = prev[i]
+                c = prev[i - 3] if i >= 3 else 0
+                if ft == 0:
+                    f = v
+                elif ft == 1:
+                    f = (v - a) % 256
+                elif ft == 2:
+                    f = (v - b) % 256
+                elif ft == 3:
+                    f = (v - (a + b) // 2) % 256
+                else:
+                    f = (v - _paeth(a, b, c)) % 256
+                stream.append(f)
+            prev = row
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        return (
+            _PNG_SIG
+            + _chunk(b"IHDR", ihdr)
+            + _chunk(b"IDAT", zlib.compress(bytes(stream)))
+            + _chunk(b"IEND", b"")
+        )
 
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(docs, PNG_MIME, encode)
 
 
 def _png_raster(payload: bytes) -> tuple[int, int, list[bytes], int]:
@@ -1638,9 +1556,6 @@ def _png_raster(payload: bytes) -> tuple[int, int, list[bytes], int]:
     per-row RGB byte rows, filter-type bitmask) — shared by the stats
     decode (``decode_png``) and the NN resize (``resize_png_nn``), so
     the two codecs can never drift on the byte walk."""
-    import struct
-    import zlib
-
     payload = bytes(payload)
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
@@ -1780,23 +1695,10 @@ def q_multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the compressor), so the oracle pins the RAW stream length
     (h·(1+3w)), the filter-type bitmask (bit_or over the known per-row
     cycle), the shared-generator channel sums, and the top-left corner
-    probe. Scale shape: identical to every codec — one Arrow-batched
-    mapInPandas chain, payload bytes never shuffle, doc-grain output.
+    probe.
     """
     media = synthesize_png(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in PNG_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_png(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=PNG_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_png(p), PNG_STATS_SCHEMA)
 
 
 QUERIES["multimodal_png_stats"] = q_multimodal_png_stats
@@ -1860,21 +1762,7 @@ def resize_png_nn(payload: bytes) -> dict:
     the resized raster, so a wrong coordinate mapping, stride, or
     filter bug is oracle-visible."""
     width, height, rows, _ = _png_raster(payload)
-    sr = sg = sb = 0
-    for y2 in range(PPM_RESIZE_H):
-        row = rows[(y2 * height) // PPM_RESIZE_H]
-        for x2 in range(PPM_RESIZE_W):
-            off = 3 * ((x2 * width) // PPM_RESIZE_W)
-            sr += row[off]
-            sg += row[off + 1]
-            sb += row[off + 2]
-    return {
-        "src_width": width,
-        "src_height": height,
-        "sum_r": sr,
-        "sum_g": sg,
-        "sum_b": sb,
-    }
+    return _rgb_resize(width, height, lambda x, y: rows[y][3 * x : 3 * x + 3])
 
 
 def q_multimodal_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1885,29 +1773,9 @@ def q_multimodal_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     image. The PNG payload decodes to the SAME shared-generator raster
     as the PPM payload, so the oracle is the ppm_resize closed form
     verbatim — but the Spark side must earn it through CRC validation,
-    inflate, and all five scanline filters first. Scale shape: one
-    Arrow-batched mapInPandas chain, payload bytes never shuffle,
-    doc-grain output."""
+    inflate, and all five scanline filters first."""
     media = synthesize_png(load_table(spark, sf_dir, "documents"))
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "src_width": [],
-                "src_height": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = resize_png_nn(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_resize, schema=PPM_RESIZE_SCHEMA)
+    return _map_docs(media, lambda _, p: resize_png_nn(p), PPM_RESIZE_SCHEMA)
 
 
 QUERIES["multimodal_png_resize"] = q_multimodal_png_resize
@@ -2082,55 +1950,36 @@ def synthesize_gif(docs: DataFrame) -> DataFrame:
     generator field) REALLY LZW-compressed (``_lzw_encode``) into
     255-byte sub-blocks, closed with the block terminator and
     trailer."""
-    import struct
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _gif_dims(d)
-                indices = bytes(
-                    _gif_index(d, x, y)
-                    for y in range(h)
-                    for x in range(w)
-                )
-                gct = b"".join(
-                    bytes(_gif_palette(i)) for i in range(_GIF_NCOLORS)
-                )
-                lzw = _lzw_encode(indices, _GIF_MCS)
-                blocks = bytearray()
-                for i in range(0, len(lzw), 255):
-                    chunk = lzw[i : i + 255]
-                    blocks.append(len(chunk))
-                    blocks += chunk
-                blocks.append(0)  # block terminator
-                buf = (
-                    b"GIF87a"
-                    + struct.pack("<HH", w, h)
-                    # GCT present, 1-bit color resolution field, size
-                    # 2^(n+1) = 4 entries -> packed 0x81
-                    + bytes([0x80 | ((_GIF_MCS - 1) & 0x07), 0, 0])
-                    + gct
-                    + b"\x2c"
-                    + struct.pack("<HHHH", 0, 0, w, h)
-                    + b"\x00"  # no local color table, not interlaced
-                    + bytes([_GIF_MCS])
-                    + bytes(blocks)
-                    + b"\x3b"  # trailer
-                )
-                ids.append(d)
-                payloads.append(buf)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": GIF_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def encode(d: int) -> bytes:
+        w, h = _gif_dims(d)
+        indices = bytes(
+            _gif_index(d, x, y) for y in range(h) for x in range(w)
+        )
+        gct = b"".join(bytes(_gif_palette(i)) for i in range(_GIF_NCOLORS))
+        lzw = _lzw_encode(indices, _GIF_MCS)
+        blocks = bytearray()
+        for i in range(0, len(lzw), 255):
+            chunk = lzw[i : i + 255]
+            blocks.append(len(chunk))
+            blocks += chunk
+        blocks.append(0)  # block terminator
+        return (
+            b"GIF87a"
+            + struct.pack("<HH", w, h)
+            # GCT present, 1-bit color resolution field, size
+            # 2^(n+1) = 4 entries -> packed 0x81
+            + bytes([0x80 | ((_GIF_MCS - 1) & 0x07), 0, 0])
+            + gct
+            + b"\x2c"
+            + struct.pack("<HHHH", 0, 0, w, h)
+            + b"\x00"  # no local color table, not interlaced
+            + bytes([_GIF_MCS])
+            + bytes(blocks)
+            + b"\x3b"  # trailer
+        )
 
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(docs, GIF_MIME, encode)
 
 
 def _gif_raster(payload: bytes) -> tuple[int, int, bytes, list]:
@@ -2144,8 +1993,6 @@ def _gif_raster(payload: bytes) -> tuple[int, int, bytes, list]:
     (``decode_gif``) and the NN resize (``resize_gif_nn``), so the two
     can never drift on the byte walk (the ``_png_raster``
     discipline)."""
-    import struct
-
     payload = bytes(payload)
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
@@ -2253,23 +2100,9 @@ def q_multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoder-dependent (deferred clears are legal), so the oracle pins
     the raster dims, the palette size, the through-the-palette channel
     sums (closed form over the shared generator folded to the 4-color
-    table), and the top-left palette index. Scale shape: identical to
-    every codec — one Arrow-batched mapInPandas chain, payload bytes
-    never shuffle, doc-grain output."""
+    table), and the top-left palette index."""
     media = synthesize_gif(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in GIF_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_gif(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=GIF_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_gif(p), GIF_STATS_SCHEMA)
 
 
 QUERIES["multimodal_gif_stats"] = q_multimodal_gif_stats
@@ -2318,21 +2151,9 @@ def resize_gif_nn(payload: bytes) -> dict:
     of the resized raster through the palette — the LZW-container twin
     of ``resize_png_nn``."""
     width, height, indices, palette = _gif_raster(payload)
-    sr = sg = sb = 0
-    for y2 in range(PPM_RESIZE_H):
-        row = ((y2 * height) // PPM_RESIZE_H) * width
-        for x2 in range(PPM_RESIZE_W):
-            r, g, b = palette[indices[row + (x2 * width) // PPM_RESIZE_W]]
-            sr += r
-            sg += g
-            sb += b
-    return {
-        "src_width": width,
-        "src_height": height,
-        "sum_r": sr,
-        "sum_g": sg,
-        "sum_b": sb,
-    }
+    return _rgb_resize(
+        width, height, lambda x, y: palette[indices[y * width + x]]
+    )
 
 
 def q_multimodal_gif_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2342,29 +2163,9 @@ def q_multimodal_gif_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-channel sums of the resized image through the palette. The
     oracle recomputes the sums closed-form: target pixel (x', y') ->
     palette[generator index at (x'*w // W', y'*h // H')] — earned
-    through sub-block reassembly and the variable-width LZW rebuild.
-    Scale shape: one Arrow-batched mapInPandas chain, payload bytes
-    never shuffle, doc-grain output."""
+    through sub-block reassembly and the variable-width LZW rebuild."""
     media = synthesize_gif(load_table(spark, sf_dir, "documents"))
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "src_width": [],
-                "src_height": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = resize_gif_nn(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_resize, schema=PPM_RESIZE_SCHEMA)
+    return _map_docs(media, lambda _, p: resize_gif_nn(p), PPM_RESIZE_SCHEMA)
 
 
 QUERIES["multimodal_gif_resize"] = q_multimodal_gif_resize
@@ -2489,44 +2290,28 @@ def synthesize_tga(docs: DataFrame) -> DataFrame:
     field of per-doc length, per-row RLE packets over the BGR pixel
     stream in STORAGE order (top-down or bottom-up per the descriptor),
     and the 26-byte v2.0 footer."""
-    import struct
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _ppm_dims(d)
-                id_len = _tga_id_len(d)
-                topdown = _tga_topdown(d)
-                desc = 0x20 if topdown else 0
-                buf = bytearray()
-                buf += struct.pack(
-                    "<BBBHHBHHHHBB",
-                    id_len, 0, 10, 0, 0, 0, 0, 0, w, h, 24, desc,
-                )
-                buf += b"\x77" * id_len
-                ys = range(h) if topdown else range(h - 1, -1, -1)
-                for y in ys:
-                    row = [
-                        bytes(reversed(_tga_pixel(d, x, y)))  # BGR
-                        for x in range(w)
-                    ]
-                    enc, _, _ = _tga_rle_row(row)
-                    buf += enc
-                buf += _TGA_FOOTER
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": TGA_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def encode(d: int) -> bytes:
+        w, h = _ppm_dims(d)
+        id_len = _tga_id_len(d)
+        topdown = _tga_topdown(d)
+        desc = 0x20 if topdown else 0
+        buf = bytearray()
+        buf += struct.pack(
+            "<BBBHHBHHHHBB",
+            id_len, 0, 10, 0, 0, 0, 0, 0, w, h, 24, desc,
+        )
+        buf += b"\x77" * id_len
+        ys = range(h) if topdown else range(h - 1, -1, -1)
+        for y in ys:
+            # BGR pixels
+            row = [bytes(reversed(_tga_pixel(d, x, y))) for x in range(w)]
+            enc, _, _ = _tga_rle_row(row)
+            buf += enc
+        buf += _TGA_FOOTER
+        return buf
 
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(docs, TGA_MIME, encode)
 
 
 def _tga_raster(payload: bytes):
@@ -2540,8 +2325,6 @@ def _tga_raster(payload: bytes):
     descriptor bit 5. Returns (width, height, rows top-first as lists
     of 3-byte BGR pixels, id_len, topdown, n_run_packets,
     n_raw_packets)."""
-    import struct
-
     payload = bytes(payload)
     if len(payload) < _TGA_HEADER + len(_TGA_FOOTER):
         raise ValueError("truncated TGA payload")
@@ -2642,21 +2425,7 @@ def resize_tga_nn(payload: bytes) -> dict:
     raster — the RLE-container member of the resize family (PPM, PNG,
     GIF)."""
     width, height, rows, *_ = _tga_raster(payload)
-    sr = sg = sb = 0
-    for y2 in range(PPM_RESIZE_H):
-        row = rows[(y2 * height) // PPM_RESIZE_H]
-        for x2 in range(PPM_RESIZE_W):
-            px = row[(x2 * width) // PPM_RESIZE_W]
-            sb += px[0]
-            sg += px[1]
-            sr += px[2]
-    return {
-        "src_width": width,
-        "src_height": height,
-        "sum_r": sr,
-        "sum_g": sg,
-        "sum_b": sb,
-    }
+    return _rgb_resize(width, height, lambda x, y: rows[y][x][::-1])
 
 
 TGA_STATS_SCHEMA = StructType(
@@ -2687,24 +2456,9 @@ def q_multimodal_tga_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     h*(w%2) raws — so wrong packet framing can't hide behind correct
     sums), 3/4 of payloads carry a nonzero image-ID offset, half
     store bottom-up (corner probe catches an ignored origin bit), and
-    the footer check rejects truncation. Scale shape: identical to
-    the PPM/BMP/PNG/GIF paths — one Arrow-batched mapInPandas chain,
-    payload bytes never shuffle, output is doc-grain stats."""
+    the footer check rejects truncation."""
     media = synthesize_tga(load_table(spark, sf_dir, "documents"))
-
-    cols = [f.name for f in TGA_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_tga(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=TGA_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_tga(p), TGA_STATS_SCHEMA)
 
 
 QUERIES["multimodal_tga_stats"] = q_multimodal_tga_stats
@@ -2761,25 +2515,7 @@ def q_multimodal_tga_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: one Arrow-batched mapInPandas chain, payload bytes never
     shuffle, doc-grain output."""
     media = synthesize_tga(load_table(spark, sf_dir, "documents"))
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "src_width": [],
-                "src_height": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = resize_tga_nn(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_resize, schema=PPM_RESIZE_SCHEMA)
+    return _map_docs(media, lambda _, p: resize_tga_nn(p), PPM_RESIZE_SCHEMA)
 
 
 QUERIES["multimodal_tga_resize"] = q_multimodal_tga_resize
@@ -2870,62 +2606,46 @@ def synthesize_ico(docs: DataFrame) -> DataFrame:
     a BITMAPINFOHEADER with DOUBLED biHeight + the bottom-up 24-bpp
     BGR XOR raster (4-byte stride) + the bottom-up 1-bpp AND mask
     (MSB-first, 32-bit-padded rows)."""
-    import struct
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = _ico_n_images(d)
-                images = []
-                for j in range(n):
-                    w, h = _ico_dims(d, j)
-                    xor_stride = _bmp_stride(w)
-                    and_stride = _ico_and_stride(w)
-                    img = bytearray()
-                    img += struct.pack(
-                        "<IiiHHIIiiII",
-                        40, w, 2 * h, 1, 24, 0,
-                        xor_stride * h + and_stride * h, 0, 0, 0, 0,
-                    )
-                    for y in range(h - 1, -1, -1):  # XOR, bottom-up
-                        row = bytearray()
-                        for x in range(w):
-                            r, g, b = _ico_pixel(d, j, x, y)
-                            row += bytes((b, g, r))
-                        row += b"\x00" * (xor_stride - 3 * w)
-                        img += row
-                    for y in range(h - 1, -1, -1):  # AND, bottom-up
-                        row = bytearray(and_stride)
-                        for x in range(w):
-                            if _ico_transparent(d, x, y):
-                                row[x // 8] |= 0x80 >> (x % 8)
-                        img += row
-                    images.append((w, h, bytes(img)))
-                buf = bytearray()
-                buf += struct.pack("<HHH", 0, 1, n)
-                offset = 6 + 16 * n
-                for w, h, img in images:
-                    buf += struct.pack(
-                        "<BBBBHHII",
-                        w % 256, h % 256, 0, 0, 1, 24, len(img), offset,
-                    )
-                    offset += len(img)
-                for _, _, img in images:
-                    buf += img
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": ICO_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
+    def encode(d: int) -> bytes:
+        n = _ico_n_images(d)
+        images = []
+        for j in range(n):
+            w, h = _ico_dims(d, j)
+            xor_stride = _bmp_stride(w)
+            and_stride = _ico_and_stride(w)
+            img = bytearray()
+            img += struct.pack(
+                "<IiiHHIIiiII",
+                40, w, 2 * h, 1, 24, 0,
+                xor_stride * h + and_stride * h, 0, 0, 0, 0,
             )
+            for y in range(h - 1, -1, -1):  # XOR, bottom-up
+                for x in range(w):
+                    r, g, b = _ico_pixel(d, j, x, y)
+                    img += bytes((b, g, r))
+                img += b"\x00" * (xor_stride - 3 * w)
+            for y in range(h - 1, -1, -1):  # AND, bottom-up
+                row = bytearray(and_stride)
+                for x in range(w):
+                    if _ico_transparent(d, x, y):
+                        row[x // 8] |= 0x80 >> (x % 8)
+                img += row
+            images.append((w, h, bytes(img)))
+        buf = bytearray()
+        buf += struct.pack("<HHH", 0, 1, n)
+        offset = 6 + 16 * n
+        for w, h, img in images:
+            buf += struct.pack(
+                "<BBBBHHII",
+                w % 256, h % 256, 0, 0, 1, 24, len(img), offset,
+            )
+            offset += len(img)
+        for _, _, img in images:
+            buf += img
+        return buf
 
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(docs, ICO_MIME, encode)
 
 
 def _ico_entries(payload: bytes):
@@ -2938,8 +2658,6 @@ def _ico_entries(payload: bytes):
     32-bit-padded AND mask located but NOT expanded — the stats
     decoder and the NN resizer sample from here. Directory bytes 0
     mean 256."""
-    import struct
-
     payload = bytes(payload)
     if len(payload) < 6:
         raise ValueError("truncated ICO header")
@@ -3049,24 +2767,9 @@ def q_multimodal_ico_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong AND-mask bit order or stride poisons them; biHeight doubled;
     every fifth doc carries a 256-wide image exercising the
     0-means-256 directory byte). Oracle = closed form over the shared
-    generator + the diagonal mask predicate. Scale shape: one
-    Arrow-batched mapInPandas chain, payload bytes never shuffle,
-    (doc, image)-grain output."""
+    generator + the diagonal mask predicate."""
     media = synthesize_ico(load_table(spark, sf_dir, "documents"))
-
-    cols = [f.name for f in ICO_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for img in decode_ico(payload):
-                    rows["doc_id"].append(int(doc_id))
-                    for k, v in img.items():
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=ICO_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_ico(p), ICO_STATS_SCHEMA)
 
 
 QUERIES["multimodal_ico_stats"] = q_multimodal_ico_stats
@@ -3130,19 +2833,16 @@ def resize_ico_nn(payload: bytes) -> list[dict]:
     for (
         j, _count, w, h, xor_base, xor_stride, and_base, and_stride,
     ) in _ico_entries(payload):
-        n_opaque = sr = sg = sb = 0
-        for y2 in range(PPM_RESIZE_H):
-            sy = (y2 * h) // PPM_RESIZE_H
-            xrow = xor_base + (h - 1 - sy) * xor_stride
-            mrow = and_base + (h - 1 - sy) * and_stride
-            for x2 in range(PPM_RESIZE_W):
-                sx = (x2 * w) // PPM_RESIZE_W
-                if payload[mrow + sx // 8] & (0x80 >> (sx % 8)):
-                    continue  # transparent sample: excluded
-                n_opaque += 1
-                sb += payload[xrow + 3 * sx]
-                sg += payload[xrow + 3 * sx + 1]
-                sr += payload[xrow + 3 * sx + 2]
+
+        def pixel(x: int, y: int) -> tuple[int, int, int, int]:
+            row = h - 1 - y  # bottom-up storage
+            mask = payload[and_base + row * and_stride + x // 8]
+            if mask & (0x80 >> (x % 8)):
+                return 0, 0, 0, 0  # transparent sample: excluded
+            px = xor_base + row * xor_stride + 3 * x
+            return 1, payload[px + 2], payload[px + 1], payload[px]  # 1, RGB
+
+        n_opaque, sr, sg, sb = _nn_sums(w, h, pixel)
         out.append(
             {
                 "img_idx": j,
@@ -3181,24 +2881,9 @@ def q_multimodal_ico_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled mask bits closed-form at the sampled source pixel), so a
     resize that ignores the AND plane — the bug a container-unaware
     port would ship — hash-fails. Every fifth doc's 256-wide image
-    exercises 0-means-256 under resampling. Scale shape: one
-    Arrow-batched mapInPandas chain, payload bytes never shuffle,
-    (doc, image)-grain output."""
+    exercises 0-means-256 under resampling."""
     media = synthesize_ico(load_table(spark, sf_dir, "documents"))
-
-    cols = [f.name for f in ICO_RESIZE_SCHEMA.fields]
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for img in resize_ico_nn(payload):
-                    rows["doc_id"].append(int(doc_id))
-                    for k, v in img.items():
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_resize, schema=ICO_RESIZE_SCHEMA)
+    return _map_docs(media, lambda _, p: resize_ico_nn(p), ICO_RESIZE_SCHEMA)
 
 
 QUERIES["multimodal_ico_resize"] = q_multimodal_ico_resize
@@ -3278,6 +2963,30 @@ def detect_silence_runs(samples) -> tuple[int, int, int]:
     return n_silent, n_runs, max_run
 
 
+WAV_SILENCE_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("sample_rate", IntegerType()),
+        StructField("n_samples", LongType()),
+        StructField("n_silent", LongType()),
+        StructField("n_runs", LongType()),
+        StructField("max_run", LongType()),
+    ]
+)
+
+
+def _wav_silence(payload: bytes) -> dict:
+    rate, samples = parse_wav(payload)
+    n_silent, n_runs, max_run = detect_silence_runs(samples)
+    return {
+        "sample_rate": rate,
+        "n_samples": len(samples),
+        "n_silent": n_silent,
+        "n_runs": n_runs,
+        "max_run": max_run,
+    }
+
+
 def q_multimodal_wav_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Silence-run profile per audio clip: decode the REAL RIFF/WAVE
     payload (full chunk walk past the poisoned JUNK chunk — a desynced
@@ -3288,33 +2997,9 @@ def q_multimodal_wav_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     silence drives chunking and dedup decisions). The oracle
     recomputes the runs closed-form from the sample generator via
     gaps-and-islands (i - row_number over silent samples), so run
-    SEGMENTATION is pinned, not merely the silent count. Scale shape:
-    one Arrow-batched mapInPandas chain, payload bytes never shuffle,
-    doc-grain output."""
+    SEGMENTATION is pinned, not merely the silent count."""
     media = synthesize_wav(load_table(spark, sf_dir, "documents"))
-
-    def _silence(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [], "sample_rate": [], "n_samples": [],
-                "n_silent": [], "n_runs": [], "max_run": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, samples = parse_wav(payload)
-                n_silent, n_runs, max_run = detect_silence_runs(samples)
-                rows["doc_id"].append(int(doc_id))
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(samples))
-                rows["n_silent"].append(n_silent)
-                rows["n_runs"].append(n_runs)
-                rows["max_run"].append(max_run)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(
-        _silence,
-        schema="doc_id long, sample_rate int, n_samples long, "
-               "n_silent long, n_runs long, max_run long",
-    )
+    return _map_docs(media, lambda _, p: _wav_silence(p), WAV_SILENCE_SCHEMA)
 
 
 QUERIES["multimodal_wav_silence"] = q_multimodal_wav_silence
@@ -3415,8 +3100,6 @@ def _qoi_encode(pixels: list, w: int, h: int) -> bytes:
     chunks) — with identical index discipline on both sides an INDEX
     emission can never dereference a slot the decoder sees
     differently, which is the classic QOI encoder corruption bug."""
-    import struct
-
     out = bytearray()
     out += b"qoif" + struct.pack(">IIBB", w, h, 3, 0)
     index = [(0, 0, 0, 0)] * 64
@@ -3473,29 +3156,12 @@ def synthesize_qoi(docs: DataFrame) -> DataFrame:
     DIFF/LUMA deltas, RGB literals, wraparound) over the quantized
     generator raster."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _qoi_dims(d)
-                pixels = [
-                    _qoi_pixel(d, x, y)
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                ids.append(d)
-                payloads.append(_qoi_encode(pixels, w, h))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": QOI_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def encode(d: int) -> bytes:
+        w, h = _qoi_dims(d)
+        pixels = [_qoi_pixel(d, x, y) for y in range(h) for x in range(w)]
+        return _qoi_encode(pixels, w, h)
 
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(docs, QOI_MIME, encode)
 
 
 def _qoi_raster(payload: bytes):
@@ -3507,8 +3173,6 @@ def _qoi_raster(payload: bytes):
     CHUNK (the reference decoder's discipline — RUN chunks included);
     INDEX chunks read whatever the running index holds, including the
     zero-initialized (0,0,0,0) slots."""
-    import struct
-
     payload = bytes(payload)
     if len(payload) < 22 or payload[:4] != b"qoif":
         raise ValueError("not a QOI stream")
@@ -3630,24 +3294,9 @@ def q_multimodal_qoi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the running (prev pixel, color index, open run) state — a
     single mis-decoded DIFF bias or stale INDEX slot derails every
     later pixel of the doc. The generator makes all chunk kinds
-    load-bearing on the corpus (pytest-pinned: each kind appears).
-    Scale shape: one Arrow-batched mapInPandas chain, payload bytes
-    never shuffle, doc-grain output."""
+    load-bearing on the corpus (pytest-pinned: each kind appears)."""
     media = synthesize_qoi(load_table(spark, sf_dir, "documents"))
-
-    cols = [f.name for f in QOI_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_qoi(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=QOI_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_qoi(p), QOI_STATS_SCHEMA)
 
 
 QUERIES["multimodal_qoi_stats"] = q_multimodal_qoi_stats
@@ -3704,21 +3353,7 @@ def resize_qoi_nn(payload: bytes) -> dict:
     stateful-stream member of the resize family: the full chunk walk,
     the standard NN kernel, per-channel sums of the resized image."""
     width, height, rows, _ops = _qoi_raster(payload)
-    sr = sg = sb = 0
-    for y2 in range(PPM_RESIZE_H):
-        row = rows[(y2 * height) // PPM_RESIZE_H]
-        for x2 in range(PPM_RESIZE_W):
-            r, g, b, _a = row[(x2 * width) // PPM_RESIZE_W]
-            sr += r
-            sg += g
-            sb += b
-    return {
-        "src_width": width,
-        "src_height": height,
-        "sum_r": sr,
-        "sum_g": sg,
-        "sum_b": sb,
-    }
+    return _rgb_resize(width, height, lambda x, y: rows[y][x][:3])
 
 
 def q_multimodal_qoi_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3726,28 +3361,9 @@ def q_multimodal_qoi_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     QOI bytes, decode + NN-resize to PPM_RESIZE_W x PPM_RESIZE_H
     inside ``mapInPandas``, emit per-channel sums of the resized
     raster; the oracle recomputes the sums closed-form at the sampled
-    generator coordinates. Zero-Exchange mapInPandas, payloads never
-    shuffle."""
+    generator coordinates."""
     media = synthesize_qoi(load_table(spark, sf_dir, "documents"))
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "src_width": [],
-                "src_height": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = resize_qoi_nn(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_resize, schema=PPM_RESIZE_SCHEMA)
+    return _map_docs(media, lambda _, p: resize_qoi_nn(p), PPM_RESIZE_SCHEMA)
 
 
 QUERIES["multimodal_qoi_resize"] = q_multimodal_qoi_resize
@@ -4047,115 +3663,115 @@ def _jpeg_extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def synthesize_jpeg(docs: DataFrame, dri: int | None = None) -> DataFrame:
-    """One REAL baseline JFIF payload per document: SOI, APP0, DQT
-    (both quant tables), SOF0 (8-bit, 3 components, 4:4:4), DHT (all
-    four Annex K.3 standard tables), SOS, interleaved Huffman-coded
-    MCUs, EOI. Every 8x8 block is flat at its closed-form
-    ``_jpeg_block_val`` — encoded as a DC-only block (DC difference
-    through the real category/EXTEND magnitude coding, so block order
-    exercises multiple Huffman categories; AC as one EOB symbol) —
-    which is what makes the lossy transform chain CLOSED-FORM at the
-    oracle grain. ``dri=N`` emits a DRI segment and a byte-aligned
-    cyclic RSTn every N MCUs with DC predictors reset (T.81 E.2.4) —
-    the camera-file stream structure."""
-    import struct
+_JPEG_DC_CODES = (
+    _jpeg_code_map(*_JPEG_DC_LUMA),
+    _jpeg_code_map(*_JPEG_DC_CHROMA),
+)
+_JPEG_EOB_CODES = (
+    _jpeg_code_map(*_JPEG_AC_LUMA)[0x00],
+    _jpeg_code_map(*_JPEG_AC_CHROMA)[0x00],
+)
 
-    dc_maps = (
-        _jpeg_code_map(*_JPEG_DC_LUMA),
-        _jpeg_code_map(*_JPEG_DC_CHROMA),
+
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+
+
+def _jpeg_baseline(
+    doc_id: int,
+    w: int,
+    h: int,
+    hy: int = 1,
+    vy: int = 1,
+    dri: int | None = None,
+) -> bytes:
+    """The one baseline JFIF encoder: SOI, APP0, DQT (both quant
+    tables), SOF0 (8-bit, 3 components, Y sampled ``hy`` x ``vy``,
+    Cb/Cr 1x1), DHT (all four Annex K.3 standard tables), an optional
+    DRI, SOS, the interleaved Huffman-coded MCUs, EOI. Each MCU covers
+    8*hy x 8*vy pixels: ``hy * vy`` Y blocks in raster order (T.81
+    A.2.3), Y indexed by its own 8x8 block grid, then one Cb and one Cr
+    indexed by the MCU grid. Every block is flat at its closed-form
+    ``_jpeg_block_val`` — a DC-only block (the DC difference through
+    the real category/EXTEND magnitude coding; AC as one EOB symbol).
+    ``dri=N`` emits a DRI segment and a byte-aligned cyclic RSTn every
+    N MCUs with all DC predictors reset (T.81 E.2.4)."""
+    buf = bytearray(b"\xff\xd8")  # SOI
+    buf += _jpeg_seg(
+        0xE0, b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 1, 0, 1, 1, 0, 0)
     )
-    ac_maps = (
-        _jpeg_code_map(*_JPEG_AC_LUMA),
-        _jpeg_code_map(*_JPEG_AC_CHROMA),
+    buf += _jpeg_seg(
+        0xDB,
+        bytes([0x00]) + bytes(_JPEG_QT_LUMA)
+        + bytes([0x01]) + bytes(_JPEG_QT_CHROMA),
     )
-
-    def _seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _jpeg_dims(d)
-                wb, hb = w // 8, h // 8
-                buf = bytearray(b"\xff\xd8")  # SOI
-                buf += _seg(
-                    0xE0,
-                    b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 1, 0, 1, 1, 0, 0),
-                )
-                buf += _seg(
-                    0xDB,
-                    bytes([0x00]) + bytes(_JPEG_QT_LUMA)
-                    + bytes([0x01]) + bytes(_JPEG_QT_CHROMA),
-                )
-                buf += _seg(
-                    0xC0,
-                    struct.pack(">BHHB", 8, h, w, 3)
-                    + bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]),
-                )
-                dht = bytearray()
-                for cls_id, (bits, vals) in (
-                    (0x00, _JPEG_DC_LUMA),
-                    (0x10, _JPEG_AC_LUMA),
-                    (0x01, _JPEG_DC_CHROMA),
-                    (0x11, _JPEG_AC_CHROMA),
-                ):
-                    dht += bytes([cls_id]) + bytes(bits) + bytes(vals)
-                buf += _seg(0xC4, bytes(dht))
-                if dri:
-                    buf += _seg(0xDD, struct.pack(">H", dri))
-                buf += _seg(
-                    0xDA,
-                    bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]),
-                )
-                bw = _JpegBitWriter()
+    buf += _jpeg_seg(
+        0xC0,
+        struct.pack(">BHHB", 8, h, w, 3)
+        + bytes([1, 0x10 * hy + vy, 0, 2, 0x11, 1, 3, 0x11, 1]),
+    )
+    dht = bytearray()
+    for cls_id, (bits, vals) in (
+        (0x00, _JPEG_DC_LUMA),
+        (0x10, _JPEG_AC_LUMA),
+        (0x01, _JPEG_DC_CHROMA),
+        (0x11, _JPEG_AC_CHROMA),
+    ):
+        dht += bytes([cls_id]) + bytes(bits) + bytes(vals)
+    buf += _jpeg_seg(0xC4, bytes(dht))
+    if dri:
+        buf += _jpeg_seg(0xDD, struct.pack(">H", dri))
+    buf += _jpeg_seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
+    bw = _JpegBitWriter()
+    pred = [0, 0, 0]
+    mcu = 0
+    for my in range(h // (8 * vy)):
+        for mx in range(w // (8 * hy)):
+            if dri and mcu and mcu % dri == 0:
+                bw.restart((mcu // dri - 1) % 8)
                 pred = [0, 0, 0]
-                mcu = 0
-                for by in range(hb):
-                    for bx in range(wb):
-                        if dri and mcu and mcu % dri == 0:
-                            bw.restart((mcu // dri - 1) % 8)
-                            pred = [0, 0, 0]
-                        mcu += 1
-                        for comp in range(3):
-                            tsel = 0 if comp == 0 else 1
-                            dc = _jpeg_block_val(d, comp, bx, by) - 128
-                            diff = dc - pred[comp]
-                            pred[comp] = dc
-                            t = abs(diff).bit_length()
-                            code, ln = dc_maps[tsel][t]
-                            bw.write(code, ln)
-                            if t:
-                                mag = diff if diff >= 0 else diff + (1 << t) - 1
-                                bw.write(mag, t)
-                            code, ln = ac_maps[tsel][0x00]  # EOB
-                            bw.write(code, ln)
-                bw.flush()
-                buf += bw.buf
-                buf += b"\xff\xd9"  # EOI
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": JPEG_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+            mcu += 1
+            blocks = [
+                (0, hy * mx + hh, vy * my + vv)
+                for vv in range(vy)
+                for hh in range(hy)
+            ] + [(1, mx, my), (2, mx, my)]
+            for comp, bx, by in blocks:
+                tsel = 0 if comp == 0 else 1
+                dc = _jpeg_block_val(doc_id, comp, bx, by) - 128
+                diff = dc - pred[comp]
+                pred[comp] = dc
+                t = abs(diff).bit_length()
+                bw.write(*_JPEG_DC_CODES[tsel][t])
+                if t:
+                    bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+                bw.write(*_JPEG_EOB_CODES[tsel])
+    bw.flush()
+    return bytes(buf + bw.buf + b"\xff\xd9")  # EOI
 
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+
+def _jpeg_spliced(doc_id: int, app1: bytes) -> bytes:
+    """The baseline 4:4:4 stream with an APP1 segment spliced directly
+    after SOI (the camera-file layout: the APP1 leads the metadata
+    block; the JFIF APP0 that follows is marker-walk-skipped)."""
+    jpeg = _jpeg_baseline(doc_id, *_jpeg_dims(doc_id))
+    return jpeg[:2] + app1 + jpeg[2:]
+
+
+def synthesize_jpeg(docs: DataFrame, dri: int | None = None) -> DataFrame:
+    """One REAL baseline 4:4:4 JFIF payload per document
+    (``_jpeg_baseline``). The DC-only flat blocks are what make the
+    lossy transform chain CLOSED-FORM at the oracle grain, and the DC
+    differences walk multiple Huffman categories. ``dri=N`` adds the
+    restart-interval structure of camera files."""
+    return _synthesize(
+        docs, JPEG_MIME, lambda d: _jpeg_baseline(d, *_jpeg_dims(d), dri=dri)
+    )
 
 
 def _jpeg_idct_mat():
     """The 8-point DCT-III basis matrix A with A[u, x] =
     C(u)/2 * cos((2x+1) u pi / 16); the 2D IDCT is A.T @ F @ A."""
-    import math
-
-    import numpy as np
-
     a = np.zeros((8, 8))
     for u in range(8):
         cu = (1.0 / math.sqrt(2.0)) if u == 0 else 1.0
@@ -4181,10 +3797,6 @@ def _jpeg_raster(payload: bytes):
     the spec does not fix — and the per-component (hi, vi) sampling
     factors). The trailing EOI is REQUIRED — a stream cut after the
     last complete MCU fails, the codec-family truncation contract."""
-    import struct
-
-    import numpy as np
-
     p = bytes(payload)
     if p[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
@@ -4409,23 +4021,9 @@ def q_multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     because every block is DC-only with a DC quant step of 8 — the
     lossy chain becomes bit-exact at the oracle grain, the
     generator-must-emit-byte-exact-decoder-input discipline the PNG
-    entry set for DEFLATE. Scale shape: identical to every codec —
-    one Arrow-batched mapInPandas chain, payload bytes never shuffle,
-    doc-grain output."""
+    entry set for DEFLATE."""
     media = synthesize_jpeg(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in JPEG_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_jpeg(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=JPEG_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_jpeg(p), JPEG_STATS_SCHEMA)
 
 
 QUERIES["multimodal_jpeg_stats"] = q_multimodal_jpeg_stats
@@ -4442,19 +4040,7 @@ def q_multimodal_jpeg_dri_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     4:4:4 closed form VERBATIM: restart structure must be
     sum-invisible when handled right, load-bearing when not."""
     media = synthesize_jpeg(load_table(spark, sf_dir, "documents"), dri=2)
-    cols = [f.name for f in JPEG_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_jpeg(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=JPEG_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_jpeg(p), JPEG_STATS_SCHEMA)
 
 
 QUERIES["multimodal_jpeg_dri_stats"] = q_multimodal_jpeg_dri_stats
@@ -4498,6 +4084,19 @@ ORACLE["multimodal_jpeg_stats"] = """
 ORACLE["multimodal_jpeg_dri_stats"] = ORACLE["multimodal_jpeg_stats"]
 
 
+def _jpeg_sampler(planes: list, samps: list) -> Callable[[int, int], tuple]:
+    """pixel(x, y) -> (Y, Cb, Cr) over decoded component planes at full
+    resolution. Subsampled chroma samples at its native grid: full-res
+    (x, y) maps to (x*hi // max_h, y*vi // max_v) — the NN analogue of
+    the replicate upsample."""
+    max_h = max(hi for hi, _ in samps)
+    max_v = max(vi for _, vi in samps)
+    return lambda x, y: tuple(
+        int(pl[(y * vi) // max_v, (x * hi) // max_h])
+        for pl, (hi, vi) in zip(planes, samps)
+    )
+
+
 def resize_jpeg_nn(payload: bytes) -> dict:
     """Nearest-neighbor resize on a REAL decoded baseline JPEG — the
     transform-coded member of the resize family: full marker walk,
@@ -4510,23 +4109,13 @@ def resize_jpeg_nn(payload: bytes) -> dict:
     to chroma (sx*hi//max_h, sy*vi//max_v) — the NN analogue of the
     replicate upsample."""
     w, h, planes, samps = _jpeg_raster(payload)
-    max_h = max(hi for hi, _ in samps)
-    max_v = max(vi for _, vi in samps)
-    sums = [0, 0, 0]
-    for y2 in range(PPM_RESIZE_H):
-        sy = (y2 * h) // PPM_RESIZE_H
-        for x2 in range(PPM_RESIZE_W):
-            sx = (x2 * w) // PPM_RESIZE_W
-            for c, (hi, vi) in enumerate(samps):
-                sums[c] += int(
-                    planes[c][(sy * vi) // max_v, (sx * hi) // max_h]
-                )
+    sum_y, sum_cb, sum_cr = _nn_sums(w, h, _jpeg_sampler(planes, samps))
     return {
         "src_width": w,
         "src_height": h,
-        "sum_y": sums[0],
-        "sum_cb": sums[1],
-        "sum_cr": sums[2],
+        "sum_y": sum_y,
+        "sum_cb": sum_cb,
+        "sum_cr": sum_cr,
     }
 
 
@@ -4550,23 +4139,9 @@ def q_multimodal_jpeg_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks are flat, so the NN sample at source (x'*w//W', y'*h//H')
     is the closed-form block value at (sx//8, sy//8) — the oracle
     walks the same integer kernel in SQL, but the Spark side must
-    earn every sample through the full Huffman+IDCT chain first.
-    Scale shape: one Arrow-batched mapInPandas chain, payload bytes
-    never shuffle, doc-grain output."""
+    earn every sample through the full Huffman+IDCT chain first."""
     media = synthesize_jpeg(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in JPEG_RESIZE_SCHEMA.fields]
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = resize_jpeg_nn(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_resize, schema=JPEG_RESIZE_SCHEMA)
+    return _map_docs(media, lambda _, p: resize_jpeg_nn(p), JPEG_RESIZE_SCHEMA)
 
 
 QUERIES["multimodal_jpeg_resize"] = q_multimodal_jpeg_resize
@@ -4624,98 +4199,9 @@ def synthesize_jpeg420(docs: DataFrame) -> DataFrame:
     the decode is closed-form at NATIVE chroma resolution and an
     MCU block-order slip (the classic 4:2:0 decoder bug) shifts the
     Y sums visibly."""
-    import struct
-
-    dc_maps = (
-        _jpeg_code_map(*_JPEG_DC_LUMA),
-        _jpeg_code_map(*_JPEG_DC_CHROMA),
+    return _synthesize(
+        docs, JPEG_MIME, lambda d: _jpeg_baseline(d, *_jpeg420_dims(d), 2, 2)
     )
-    ac_maps = (
-        _jpeg_code_map(*_JPEG_AC_LUMA),
-        _jpeg_code_map(*_JPEG_AC_CHROMA),
-    )
-
-    def _seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _jpeg420_dims(d)
-                mw, mh = w // 16, h // 16
-                buf = bytearray(b"\xff\xd8")
-                buf += _seg(
-                    0xE0,
-                    b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 1, 0, 1, 1, 0, 0),
-                )
-                buf += _seg(
-                    0xDB,
-                    bytes([0x00]) + bytes(_JPEG_QT_LUMA)
-                    + bytes([0x01]) + bytes(_JPEG_QT_CHROMA),
-                )
-                buf += _seg(
-                    0xC0,
-                    struct.pack(">BHHB", 8, h, w, 3)
-                    + bytes([1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]),
-                )
-                dht = bytearray()
-                for cls_id, (bits, vals) in (
-                    (0x00, _JPEG_DC_LUMA),
-                    (0x10, _JPEG_AC_LUMA),
-                    (0x01, _JPEG_DC_CHROMA),
-                    (0x11, _JPEG_AC_CHROMA),
-                ):
-                    dht += bytes([cls_id]) + bytes(bits) + bytes(vals)
-                buf += _seg(0xC4, bytes(dht))
-                buf += _seg(
-                    0xDA,
-                    bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]),
-                )
-                bw = _JpegBitWriter()
-                pred = [0, 0, 0]
-
-                def _block(comp: int, tsel: int, val: int) -> None:
-                    dc = val - 128
-                    diff = dc - pred[comp]
-                    pred[comp] = dc
-                    t = abs(diff).bit_length()
-                    code, ln = dc_maps[tsel][t]
-                    bw.write(code, ln)
-                    if t:
-                        mag = diff if diff >= 0 else diff + (1 << t) - 1
-                        bw.write(mag, t)
-                    code, ln = ac_maps[tsel][0x00]  # EOB
-                    bw.write(code, ln)
-
-                for my in range(mh):
-                    for mx in range(mw):
-                        for vv in range(2):
-                            for hh in range(2):
-                                _block(
-                                    0, 0,
-                                    _jpeg_block_val(
-                                        d, 0, 2 * mx + hh, 2 * my + vv
-                                    ),
-                                )
-                        _block(1, 1, _jpeg_block_val(d, 1, mx, my))
-                        _block(2, 1, _jpeg_block_val(d, 2, mx, my))
-                bw.flush()
-                buf += bw.buf
-                buf += b"\xff\xd9"  # EOI
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": JPEG_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
 
 
 def q_multimodal_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4726,23 +4212,9 @@ def q_multimodal_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains straight across the 4-Y runs, and place each Y block at
     (2*mx+hh, 2*my+vv) — the classic places a 4:2:0 decoder breaks.
     Stats run at NATIVE chroma resolution (quarter-size planes), so
-    the oracle needs no upsampling convention. Scale shape: identical
-    to every codec — one Arrow-batched mapInPandas chain, payload
-    bytes never shuffle, doc-grain output."""
+    the oracle needs no upsampling convention."""
     media = synthesize_jpeg420(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in JPEG_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_jpeg(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=JPEG_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_jpeg(p), JPEG_STATS_SCHEMA)
 
 
 QUERIES["multimodal_jpeg420_stats"] = q_multimodal_jpeg420_stats
@@ -4813,95 +4285,9 @@ def synthesize_jpeg422(docs: DataFrame) -> DataFrame:
     conflating the two sampling axes). Blocks stay DC-only flat at
     the closed-form ``_jpeg_block_val``: Y indexed by its own block
     grid, chroma by the MCU grid."""
-    import struct
-
-    dc_maps = (
-        _jpeg_code_map(*_JPEG_DC_LUMA),
-        _jpeg_code_map(*_JPEG_DC_CHROMA),
+    return _synthesize(
+        docs, JPEG_MIME, lambda d: _jpeg_baseline(d, *_jpeg422_dims(d), 2, 1)
     )
-    ac_maps = (
-        _jpeg_code_map(*_JPEG_AC_LUMA),
-        _jpeg_code_map(*_JPEG_AC_CHROMA),
-    )
-
-    def _seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _jpeg422_dims(d)
-                mw, mh = w // 16, h // 8
-                buf = bytearray(b"\xff\xd8")
-                buf += _seg(
-                    0xE0,
-                    b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 1, 0, 1, 1, 0, 0),
-                )
-                buf += _seg(
-                    0xDB,
-                    bytes([0x00]) + bytes(_JPEG_QT_LUMA)
-                    + bytes([0x01]) + bytes(_JPEG_QT_CHROMA),
-                )
-                buf += _seg(
-                    0xC0,
-                    struct.pack(">BHHB", 8, h, w, 3)
-                    + bytes([1, 0x21, 0, 2, 0x11, 1, 3, 0x11, 1]),
-                )
-                dht = bytearray()
-                for cls_id, (bits, vals) in (
-                    (0x00, _JPEG_DC_LUMA),
-                    (0x10, _JPEG_AC_LUMA),
-                    (0x01, _JPEG_DC_CHROMA),
-                    (0x11, _JPEG_AC_CHROMA),
-                ):
-                    dht += bytes([cls_id]) + bytes(bits) + bytes(vals)
-                buf += _seg(0xC4, bytes(dht))
-                buf += _seg(
-                    0xDA,
-                    bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]),
-                )
-                bw = _JpegBitWriter()
-                pred = [0, 0, 0]
-
-                def _block(comp: int, tsel: int, val: int) -> None:
-                    dc = val - 128
-                    diff = dc - pred[comp]
-                    pred[comp] = dc
-                    t = abs(diff).bit_length()
-                    code, ln = dc_maps[tsel][t]
-                    bw.write(code, ln)
-                    if t:
-                        mag = diff if diff >= 0 else diff + (1 << t) - 1
-                        bw.write(mag, t)
-                    code, ln = ac_maps[tsel][0x00]  # EOB
-                    bw.write(code, ln)
-
-                for my in range(mh):
-                    for mx in range(mw):
-                        for hh in range(2):
-                            _block(
-                                0, 0,
-                                _jpeg_block_val(d, 0, 2 * mx + hh, my),
-                            )
-                        _block(1, 1, _jpeg_block_val(d, 1, mx, my))
-                        _block(2, 1, _jpeg_block_val(d, 2, mx, my))
-                bw.flush()
-                buf += bw.buf
-                buf += b"\xff\xd9"  # EOI
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": JPEG_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
 
 
 def q_multimodal_jpeg422_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4911,22 +4297,9 @@ def q_multimodal_jpeg422_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     conflates horizontal and vertical sampling (or transposes the
     block-placement arithmetic) decodes 4:4:4 and 4:2:0 perfectly and
     breaks HERE. Chroma planes come back half-width full-height at
-    native resolution. Scale shape: one Arrow-batched mapInPandas
-    chain, payload bytes never shuffle, doc-grain output."""
+    native resolution."""
     media = synthesize_jpeg422(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in JPEG_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_jpeg(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=JPEG_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_jpeg(p), JPEG_STATS_SCHEMA)
 
 
 QUERIES["multimodal_jpeg422_stats"] = q_multimodal_jpeg422_stats
@@ -4997,8 +4370,6 @@ def _exif_fields_for(doc_id: int) -> dict:
     endiannesses are exercised, orientation walks all 8 spec values,
     dims mirror the SOF closed form, the timestamp steps a coprime
     stride through ~28 hours."""
-    import datetime as dt
-
     w, h = _jpeg_dims(doc_id)
     t = dt.datetime(*_EXIF_EPOCH) + dt.timedelta(
         seconds=(doc_id * 977) % 100_000
@@ -5019,8 +4390,6 @@ def _build_exif_app1(doc_id: int) -> bytes:
     the 0x8769 Exif-IFD pointer) + Exif IFD (DateTimeOriginal offset
     ASCII-20, PixelXDimension / PixelYDimension inline LONGs). Entries
     tag-sorted within each IFD, offsets word-aligned (TIFF 6.0)."""
-    import struct
-
     f = _exif_fields_for(doc_id)
     little = f["byte_order"] == "II"
     e = "<" if little else ">"
@@ -5065,31 +4434,15 @@ def synthesize_jpeg_exif(docs: DataFrame) -> DataFrame:
     EXIF segment spliced directly after SOI (the camera-file layout:
     Exif APP1 leads the metadata block; the JFIF APP0 that follows is
     marker-walk-skipped by any compliant reader)."""
-
-    def _splice(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                bytes(p[:2]) + _build_exif_app1(int(d)) + bytes(p[2:])
-                for d, p in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime_type": pdf["mime_type"],
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return synthesize_jpeg(docs).mapInPandas(_splice, schema=MEDIA_SCHEMA)
+    return _synthesize(
+        docs, JPEG_MIME, lambda d: _jpeg_spliced(d, _build_exif_app1(d))
+    )
 
 
 def _tiff_ifd_entries(t: bytes, e: str, off: int) -> tuple[dict, int]:
     """Walk one TIFF IFD at ``off``: returns ({tag: (type, count,
     value_bytes)}, next_ifd_offset) with offset-stored values resolved
     against the full TIFF block — truncation anywhere fails loud."""
-    import struct
-
     sizes = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}
     if off + 2 > len(t):
         raise ValueError("EXIF: IFD offset beyond TIFF block")
@@ -5117,8 +4470,6 @@ def _tiff_ifd_entries(t: bytes, e: str, off: int) -> tuple[dict, int]:
 
 
 def _exif_scalar(e: str, ent: tuple) -> int:
-    import struct
-
     typ, cnt, raw = ent
     if typ == 3:
         return struct.unpack_from(e + "H", raw, 0)[0]
@@ -5135,8 +4486,6 @@ def _jpeg_exif_tiff(payload: bytes) -> tuple[bytes, str] | None:
     (tiff_block, struct_endianness) or None when no Exif APP1 exists
     (the has-no-metadata case a curation filter must distinguish from
     corrupt); malformed structure raises."""
-    import struct
-
     p = bytes(payload)
     if p[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
@@ -5179,8 +4528,6 @@ def extract_jpeg_exif(payload: bytes) -> dict | None:
     walk — IFD0 entry table, the 0x8769 pointer into the Exif
     sub-IFD. Returns None when no Exif APP1 exists; malformed TIFF
     structure raises."""
-    import struct
-
     hdr = _jpeg_exif_tiff(payload)
     if hdr is None:
         return None
@@ -5230,6 +4577,19 @@ JPEG_EXIF_SCHEMA = StructType(
 )
 
 
+def _required(extract: Callable[[bytes], dict | None], what: str):
+    """``_map_docs`` body for a metadata extractor whose generator
+    always writes the segment: a None result fails loud."""
+
+    def fn(doc_id: int, payload: bytes) -> dict:
+        d = extract(payload)
+        if d is None:
+            raise ValueError(f"doc {doc_id}: generator emitted no {what}")
+        return d
+
+    return fn
+
+
 def q_multimodal_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXIF metadata extraction at corpus scale — the filter-before-
     decode stage of a real image pipeline (orientation fix-up lists,
@@ -5237,27 +4597,11 @@ def q_multimodal_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy stream: the generator splices spec-valid APP1 blocks
     (both TIFF byte orders, inline and offset values, the Exif
     sub-IFD indirection) and the extractor earns every field through
-    the generic marker + TIFF walk. Scale shape: one Arrow-batched
-    mapInPandas chain, payload bytes never shuffle, doc-grain
-    output."""
+    the generic marker + TIFF walk."""
     media = synthesize_jpeg_exif(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in JPEG_EXIF_SCHEMA.fields]
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = extract_jpeg_exif(payload)
-                if d is None:
-                    raise ValueError(
-                        f"doc {doc_id}: generator emitted no APP1"
-                    )
-                rows["doc_id"].append(int(doc_id))
-                for k, v in d.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_extract, schema=JPEG_EXIF_SCHEMA)
+    return _map_docs(
+        media, _required(extract_jpeg_exif, "APP1"), JPEG_EXIF_SCHEMA
+    )
 
 
 QUERIES["multimodal_jpeg_exif"] = q_multimodal_jpeg_exif
@@ -5373,6 +4717,64 @@ class _FlacBitReader:
         self.acc, self.n = 0, 0
 
 
+def _flac_stream(
+    doc_id: int,
+    subframes: Callable[[_FlacBitWriter, int, int, int], None],
+    channel_codes: tuple[int, ...] = (0,),
+    pad: int = 0,
+) -> bytes:
+    """The one FLAC stream writer: ``fLaC`` magic, STREAMINFO (min ==
+    max blocksize — the fixed-blocksize declaration; MD5 zeroed =
+    unknown, per spec), an optional PADDING metadata block of ``pad``
+    bytes the walk must skip, then ceil(n/16) frames. Each frame is
+    the spec's bit-packed header (sync 0b11111111111110, fixed
+    blocking, 8-bit blocksize-1 code, rate from STREAMINFO, 16-bit
+    samples, channel assignment ``channel_codes[k % len]`` — 0 is
+    mono, every other code two channels — and a UTF-8-coded frame
+    number), its CRC-8, the subframe bits ``subframes(bw, doc_id, k,
+    m)`` writes for frame k of m samples, byte alignment, and the
+    frame CRC-16."""
+    rate, n = _flac_params(doc_id)
+    si = _FlacBitWriter()
+    si.write(_FLAC_BS, 16)  # min blocksize
+    si.write(_FLAC_BS, 16)  # max blocksize == min: fixed
+    si.write(0, 24)  # min framesize (0 = unknown)
+    si.write(0, 24)  # max framesize
+    si.write(rate, 20)
+    si.write(0 if channel_codes == (0,) else 1, 3)  # channels - 1
+    si.write(15, 5)  # bits per sample - 1 (16)
+    si.write(n, 36)
+    si.write(0, 128)  # MD5 unknown
+    buf = bytearray(b"fLaC")
+    # STREAMINFO header: type 0, last-block flag unless PADDING follows
+    buf += bytes([0x00 if pad else 0x80]) + len(si.buf).to_bytes(3, "big")
+    buf += si.buf
+    if pad:  # PADDING, last block
+        buf += bytes([0x81]) + pad.to_bytes(3, "big") + bytes(pad)
+    for k in range((n + _FLAC_BS - 1) // _FLAC_BS):
+        m = min(_FLAC_BS, n - k * _FLAC_BS)
+        code = channel_codes[k % len(channel_codes)]
+        # sync/fixed, bs=0b0110 rate=streaminfo, channel code + 16-bit,
+        # UTF-8 frame no. (k < 128), bs-1
+        hdr = bytes([0xFF, 0xF8, 0x60, (code << 4) | 0x08, k, m - 1])
+        bw = _FlacBitWriter()
+        subframes(bw, doc_id, k, m)
+        bw.align()
+        frame = hdr + bytes([_flac_crc8(hdr)]) + bytes(bw.buf)
+        buf += frame + _flac_crc16(frame).to_bytes(2, "big")
+    return bytes(buf)
+
+
+def _flac_cv_subframe(bw: _FlacBitWriter, d: int, k: int, m: int) -> None:
+    if k % 2 == 0:  # CONSTANT subframe
+        bw.write(0x00, 8)  # pad0 | type 000000 | w0
+        bw.write(_flac_const_val(d, k), 16)
+    else:  # VERBATIM subframe
+        bw.write(0x02, 8)  # pad0 | type 000001 | w0
+        for j in range(m):
+            bw.write(_wav_sample(d, k * _FLAC_BS + j), 16)
+
+
 def synthesize_flac(docs: DataFrame) -> DataFrame:
     """One REAL FLAC stream per document: ``fLaC`` magic, STREAMINFO
     (min==max blocksize — the fixed-blocksize declaration; MD5 zeroed
@@ -5383,64 +4785,11 @@ def synthesize_flac(docs: DataFrame) -> DataFrame:
     spec's bit-packed frame headers (sync 0b11111111111110, fixed
     blocking, 8-bit blocksize-1 code, rate-from-STREAMINFO, mono,
     16-bit), UTF-8-coded frame numbers, real CRC-8 and CRC-16."""
-    import struct
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate, n = _flac_params(d)
-                buf = bytearray(b"fLaC")
-                si = _FlacBitWriter()
-                si.write(_FLAC_BS, 16)  # min blocksize
-                si.write(_FLAC_BS, 16)  # max blocksize == min: fixed
-                si.write(0, 24)  # min framesize (0 = unknown)
-                si.write(0, 24)  # max framesize
-                si.write(rate, 20)
-                si.write(0, 3)  # channels - 1 (mono)
-                si.write(15, 5)  # bits per sample - 1 (16)
-                si.write(n, 36)
-                for _ in range(16):
-                    si.write(0, 8)  # MD5 unknown
-                buf += struct.pack(">B", 0x00)  # STREAMINFO, not last
-                buf += struct.pack(">I", len(si.buf))[1:]  # 24-bit len
-                buf += si.buf
-                pad = 4 + (d % 3)
-                buf += struct.pack(">B", 0x81)  # PADDING, LAST block
-                buf += struct.pack(">I", pad)[1:]
-                buf += b"\x00" * pad
-                nf = (n + _FLAC_BS - 1) // _FLAC_BS
-                for k in range(nf):
-                    m = min(_FLAC_BS, n - k * _FLAC_BS)
-                    hdr = bytearray(
-                        [0xFF, 0xF8, 0x60, 0x08, k, m - 1]
-                    )  # sync/fixed, bs=0b0110 rate=streaminfo,
-                    # mono 16-bit, UTF-8 frame no. (k < 128), bs-1
-                    hdr.append(_flac_crc8(bytes(hdr)))
-                    bw = _FlacBitWriter()
-                    if k % 2 == 0:  # CONSTANT subframe
-                        bw.write(0x00, 8)  # pad0 | type 000000 | w0
-                        bw.write(_flac_const_val(d, k), 16)
-                    else:  # VERBATIM subframe
-                        bw.write(0x02, 8)  # pad0 | type 000001 | w0
-                        for j in range(m):
-                            bw.write(_wav_sample(d, k * _FLAC_BS + j), 16)
-                    bw.align()
-                    frame = bytes(hdr) + bytes(bw.buf)
-                    buf += frame + struct.pack(">H", _flac_crc16(frame))
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": FLAC_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(
+        docs,
+        FLAC_MIME,
+        lambda d: _flac_stream(d, _flac_cv_subframe, pad=4 + d % 3),
+    )
 
 
 def _flac_decode_subframe(
@@ -5533,8 +4882,6 @@ def decode_flac(payload: bytes) -> dict:
     bits, variable blocking, rate-override codes) and every corruption
     fail LOUD; per-channel decoded samples must equal STREAMINFO's
     count."""
-    import struct
-
     p = bytes(payload)
     if p[:4] != b"fLaC":
         raise ValueError("not a FLAC payload (missing fLaC magic)")
@@ -5741,23 +5088,9 @@ def q_multimodal_flac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline that made the JPEG transform chain oracle-exact. A
     decoder that misreads the bit-packed header, drops the blocksize-1
     byte, skips CRC validation, or mis-signs the 16-bit reads goes
-    loudly wrong on sum_abs/peak/sum_sq. Scale shape: identical to
-    every codec — one Arrow-batched mapInPandas chain, payload bytes
-    never shuffle, doc-grain output."""
+    loudly wrong on sum_abs/peak/sum_sq."""
     media = synthesize_flac(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in FLAC_STATS_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_flac(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k in cols[1:]:
-                    rows[k].append(d[k])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=FLAC_STATS_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_flac(p), FLAC_STATS_SCHEMA)
 
 
 QUERIES["multimodal_flac_stats"] = q_multimodal_flac_stats
@@ -5887,6 +5220,43 @@ def _flac_fixed_frame_plan(d: int, k: int, m: int) -> tuple[int, list]:
     return eff, [b + j * t for j in range(m)]
 
 
+def _flac_write_residuals(
+    bw: _FlacBitWriter, res: list, k4: int, order: int, po: int = 0
+) -> None:
+    """Write one FIXED/LPC residual block, the inverse of
+    ``_flac_rice_residuals``: RICE method, partition order ``po``,
+    every partition at rice parameter ``k4`` (the first short by the
+    predictor order), zigzag-folded residuals as unary quotient (q
+    zeros then the 1 terminator) plus k-bit remainder."""
+    bw.write(0, 2)  # residual method: RICE
+    bw.write(po, 4)
+    at = 0
+    for part in range(1 << po):
+        cnt = ((len(res) + order) >> po) - (order if part == 0 else 0)
+        bw.write(k4, 4)
+        for v in res[at : at + cnt]:
+            mfold = 2 * v if v >= 0 else -2 * v - 1
+            bw.write(1, (mfold >> k4) + 1)
+            if k4:
+                bw.write(mfold & ((1 << k4) - 1), k4)
+        at += cnt
+
+
+def _flac_fixed_subframe(bw: _FlacBitWriter, d: int, k: int, m: int) -> None:
+    eff, samples = _flac_fixed_frame_plan(d, k, m)
+    bw.write((8 + eff) << 1, 8)  # pad|type|wasted=0
+    for j in range(eff):
+        bw.write(samples[j], 16)
+    if eff == 0:
+        res, k4 = samples, 4
+    elif eff == 1:
+        res, k4 = [samples[j] - samples[j - 1] for j in range(1, m)], 4
+    else:
+        res, k4 = [0] * (m - 2), 0
+    po = 1 if (eff == 1 and m % 2 == 0) else 0
+    _flac_write_residuals(bw, res, k4, eff, po)
+
+
 def synthesize_flac_fixed(docs: DataFrame) -> DataFrame:
     """A FLAC stream per document whose every subframe is a FIXED
     predictor with real rice-coded residuals: orders cycle 0/1/2 per
@@ -5894,84 +5264,11 @@ def synthesize_flac_fixed(docs: DataFrame) -> DataFrame:
     leave a constant residual, rice-partitioned at order 1 on even
     blocksizes so multi-partition headers are exercised; order-2
     linear frames leave all-zero residuals at k=0 — the maximal
-    compression case). Container structure (STREAMINFO, PADDING,
-    frame headers, CRC-8/CRC-16) identical to ``synthesize_flac``."""
-    import struct
-
-    def _rice_write(bw: "_FlacBitWriter", res: int, k4: int) -> None:
-        mfold = 2 * res if res >= 0 else -2 * res - 1
-        bw.write(1, (mfold >> k4) + 1)  # q zeros then the 1 terminator
-        if k4:
-            bw.write(mfold & ((1 << k4) - 1), k4)
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate, n = _flac_params(d)
-                buf = bytearray(b"fLaC")
-                si = _FlacBitWriter()
-                si.write(_FLAC_BS, 16)
-                si.write(_FLAC_BS, 16)
-                si.write(0, 24)
-                si.write(0, 24)
-                si.write(rate, 20)
-                si.write(0, 3)
-                si.write(15, 5)
-                si.write(n, 36)
-                for _ in range(16):
-                    si.write(0, 8)
-                buf += struct.pack(">B", 0x80)  # STREAMINFO, LAST
-                buf += struct.pack(">I", len(si.buf))[1:]
-                buf += si.buf
-                nf = (n + _FLAC_BS - 1) // _FLAC_BS
-                for k in range(nf):
-                    m = min(_FLAC_BS, n - k * _FLAC_BS)
-                    eff, samples = _flac_fixed_frame_plan(d, k, m)
-                    hdr = bytearray([0xFF, 0xF8, 0x60, 0x08, k, m - 1])
-                    hdr.append(_flac_crc8(bytes(hdr)))
-                    bw = _FlacBitWriter()
-                    bw.write((8 + eff) << 1, 8)  # pad|type|wasted=0
-                    for j in range(eff):
-                        bw.write(samples[j], 16)
-                    if eff == 0:
-                        res, k4 = samples, 4
-                    elif eff == 1:
-                        res = [
-                            samples[j] - samples[j - 1]
-                            for j in range(1, m)
-                        ]
-                        k4 = 4
-                    else:
-                        res, k4 = [0] * (m - 2), 0
-                    po = 1 if (eff == 1 and m % 2 == 0) else 0
-                    bw.write(0, 2)  # residual method: RICE
-                    bw.write(po, 4)
-                    nparts = 1 << po
-                    at = 0
-                    for part in range(nparts):
-                        bw.write(k4, 4)
-                        cnt = (m >> po) - (eff if part == 0 else 0)
-                        for _ in range(cnt):
-                            _rice_write(bw, res[at], k4)
-                            at += 1
-                    assert at == len(res)
-                    bw.align()
-                    frame = bytes(hdr) + bytes(bw.buf)
-                    buf += frame + struct.pack(">H", _flac_crc16(frame))
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": FLAC_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    compression case). The container (STREAMINFO, frame headers,
+    CRC-8/CRC-16) is the shared ``_flac_stream``."""
+    return _synthesize(
+        docs, FLAC_MIME, lambda d: _flac_stream(d, _flac_fixed_subframe)
+    )
 
 
 FLAC_FIXED_SCHEMA = StructType(
@@ -6000,23 +5297,9 @@ def q_multimodal_flac_fixed_stats(
     partition's order-shortened count, unfolds the zigzag wrong, or
     breaks the predictor recursion goes loudly wrong on
     sum_abs/peak/sum_sq. n_fixed == n_frames pins that no frame fell
-    back to CONSTANT/VERBATIM. Scale shape: the codec-family
-    contract — one Arrow-batched mapInPandas chain, doc-grain
-    output."""
+    back to CONSTANT/VERBATIM."""
     media = synthesize_flac_fixed(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in FLAC_FIXED_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_flac(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k in cols[1:]:
-                    rows[k].append(d[k])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=FLAC_FIXED_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_flac(p), FLAC_FIXED_SCHEMA)
 
 
 QUERIES["multimodal_flac_fixed_stats"] = q_multimodal_flac_fixed_stats
@@ -6081,6 +5364,26 @@ ORACLE["multimodal_flac_fixed_stats"] = """
 # ---------------------------------------------------------------------------
 
 
+def _flac_lpc_subframe(bw: _FlacBitWriter, d: int, k: int, m: int) -> None:
+    b = (d * 7 + k * 13) % 1800 + 100
+    t = (d + k) % 16
+    samples = [b + j * t for j in range(m)]
+    order = 2 if k % 2 == 1 and m >= 2 else 1
+    bw.write((32 + order - 1) << 1, 8)  # LPC type
+    for j in range(order):
+        bw.write(samples[j], 16)
+    bw.write(4, 4)  # precision code: 5-bit coefficients
+    if order == 2:
+        bw.write(2, 5)  # shift 2
+        bw.write(8, 5)  # c0 = 8  (2 << 2)
+        bw.write(-4 & 0x1F, 5)  # c1 = -4 (signed!)
+        _flac_write_residuals(bw, [0] * (m - 2), 0, order)
+    else:
+        bw.write(3, 5)  # shift 3
+        bw.write(8, 5)  # c0 = 8 (1 << 3): quantized x1
+        _flac_write_residuals(bw, [t] * (m - 1), 4, order)
+
+
 def synthesize_flac_lpc(docs: DataFrame) -> DataFrame:
     """A FLAC stream per document whose every subframe is LPC: even
     frames are one-tap order-1 (coefficient 8 at shift 3 — the
@@ -6090,79 +5393,9 @@ def synthesize_flac_lpc(docs: DataFrame) -> DataFrame:
     flavor). Every sample is the SAME ramp b + j·t either way, so the
     oracle has no case split while the decoder earns precision/shift/
     signed-coefficient parsing on every frame."""
-    import struct
-
-    def _rice_write(bw: "_FlacBitWriter", res: int, k4: int) -> None:
-        mfold = 2 * res if res >= 0 else -2 * res - 1
-        bw.write(1, (mfold >> k4) + 1)
-        if k4:
-            bw.write(mfold & ((1 << k4) - 1), k4)
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate, n = _flac_params(d)
-                buf = bytearray(b"fLaC")
-                si = _FlacBitWriter()
-                si.write(_FLAC_BS, 16)
-                si.write(_FLAC_BS, 16)
-                si.write(0, 24)
-                si.write(0, 24)
-                si.write(rate, 20)
-                si.write(0, 3)
-                si.write(15, 5)
-                si.write(n, 36)
-                for _ in range(16):
-                    si.write(0, 8)
-                buf += struct.pack(">B", 0x80)
-                buf += struct.pack(">I", len(si.buf))[1:]
-                buf += si.buf
-                nf = (n + _FLAC_BS - 1) // _FLAC_BS
-                for k in range(nf):
-                    m = min(_FLAC_BS, n - k * _FLAC_BS)
-                    b = (d * 7 + k * 13) % 1800 + 100
-                    t = (d + k) % 16
-                    samples = [b + j * t for j in range(m)]
-                    two_tap = k % 2 == 1 and m >= 2
-                    order = 2 if two_tap else 1
-                    hdr = bytearray([0xFF, 0xF8, 0x60, 0x08, k, m - 1])
-                    hdr.append(_flac_crc8(bytes(hdr)))
-                    bw = _FlacBitWriter()
-                    bw.write((32 + order - 1) << 1, 8)  # LPC type
-                    for j in range(order):
-                        bw.write(samples[j], 16)
-                    bw.write(4, 4)  # precision code: 5-bit coefficients
-                    if two_tap:
-                        bw.write(2, 5)  # shift 2
-                        bw.write(8, 5)  # c0 = 8  (2 << 2)
-                        bw.write(-4 & 0x1F, 5)  # c1 = -4 (signed!)
-                        res, k4 = [0] * (m - 2), 0
-                    else:
-                        bw.write(3, 5)  # shift 3
-                        bw.write(8, 5)  # c0 = 8 (1 << 3): quantized x1
-                        res, k4 = [t] * (m - 1), 4
-                    bw.write(0, 2)  # residual method RICE
-                    bw.write(0, 4)  # partition order 0
-                    bw.write(k4, 4)
-                    for v in res:
-                        _rice_write(bw, v, k4)
-                    bw.align()
-                    frame = bytes(hdr) + bytes(bw.buf)
-                    buf += frame + struct.pack(">H", _flac_crc16(frame))
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": FLAC_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    return _synthesize(
+        docs, FLAC_MIME, lambda d: _flac_stream(d, _flac_lpc_subframe)
+    )
 
 
 FLAC_LPC_SCHEMA = StructType(
@@ -6187,23 +5420,9 @@ def q_multimodal_flac_lpc_stats(
     (4-bit precision code, 5-bit shift, order × precision-bit SIGNED
     coefficients — the two-tap frames carry a negative one) and runs
     the arithmetic-shift prediction recursion over rice residuals.
-    n_lpc == n_frames pins that no frame fell back. Scale shape: the
-    codec-family contract — one Arrow-batched mapInPandas chain,
-    doc-grain output."""
+    n_lpc == n_frames pins that no frame fell back."""
     media = synthesize_flac_lpc(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in FLAC_LPC_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_flac(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k in cols[1:]:
-                    rows[k].append(d[k])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=FLAC_LPC_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_flac(p), FLAC_LPC_SCHEMA)
 
 
 QUERIES["multimodal_flac_lpc_stats"] = q_multimodal_flac_lpc_stats
@@ -6273,90 +5492,42 @@ def _flac_right_sample(doc_id: int, i: int) -> int:
     return (doc_id * 13 + i * 29 + (i * i) % 89) % 4001 - 2000
 
 
+def _flac_stereo_subframes(
+    bw: _FlacBitWriter, d: int, k: int, m: int
+) -> None:
+    left = [_wav_sample(d, k * _FLAC_BS + j) for j in range(m)]
+    right = [_flac_right_sample(d, k * _FLAC_BS + j) for j in range(m)]
+    side = [a - b for a, b in zip(left, right)]
+    mid = [(a + b) >> 1 for a, b in zip(left, right)]  # floor
+    chans = (  # by k % 4, the order of _FLAC_STEREO_CODES
+        [(left, 16), (right, 16)],  # independent stereo
+        [(left, 16), (side, 17)],  # left/side
+        [(side, 17), (right, 16)],  # right/side
+        [(mid, 16), (side, 17)],  # mid/side
+    )[k % 4]
+    for samples, width in chans:
+        bw.write(0x02, 8)  # VERBATIM subframe header
+        for v in samples:
+            bw.write(v, width)
+
+
+_FLAC_STEREO_CODES = (1, 8, 9, 10)
+
+
 def synthesize_flac_stereo(docs: DataFrame) -> DataFrame:
     """A STEREO FLAC stream per document: STREAMINFO declares 2
     channels; frames cycle the four channel assignments by k%4 —
     independent (code 1), left/side (8), right/side (9), mid/side
     (10) — each carrying two VERBATIM subframes with the side channel
     at 17 bits. n >= 64 means every document exercises all four
-    modes. Container structure (fixed 16-sample blocks, bit-packed
-    headers, UTF-8 frame numbers, CRC-8/CRC-16) identical to
-    ``synthesize_flac``."""
-    import struct
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate, n = _flac_params(d)
-                buf = bytearray(b"fLaC")
-                si = _FlacBitWriter()
-                si.write(_FLAC_BS, 16)
-                si.write(_FLAC_BS, 16)
-                si.write(0, 24)
-                si.write(0, 24)
-                si.write(rate, 20)
-                si.write(1, 3)  # channels - 1 (stereo)
-                si.write(15, 5)
-                si.write(n, 36)
-                for _ in range(16):
-                    si.write(0, 8)
-                buf += struct.pack(">B", 0x80)  # STREAMINFO, LAST
-                buf += struct.pack(">I", len(si.buf))[1:]
-                buf += si.buf
-                nf = (n + _FLAC_BS - 1) // _FLAC_BS
-                for k in range(nf):
-                    m = min(_FLAC_BS, n - k * _FLAC_BS)
-                    left = [
-                        _wav_sample(d, k * _FLAC_BS + j) for j in range(m)
-                    ]
-                    right = [
-                        _flac_right_sample(d, k * _FLAC_BS + j)
-                        for j in range(m)
-                    ]
-                    side = [a - b for a, b in zip(left, right)]
-                    mode = k % 4
-                    if mode == 0:  # independent stereo
-                        chan_code, chans = 1, [(left, 16), (right, 16)]
-                    elif mode == 1:  # left/side
-                        chan_code, chans = 8, [(left, 16), (side, 17)]
-                    elif mode == 2:  # right/side
-                        chan_code, chans = 9, [(side, 17), (right, 16)]
-                    else:  # mid/side: mid = (L+R)>>1, floor
-                        mid = [(a + b) >> 1 for a, b in zip(left, right)]
-                        chan_code, chans = 10, [(mid, 16), (side, 17)]
-                    hdr = bytearray(
-                        [
-                            0xFF,
-                            0xF8,
-                            0x60,
-                            (chan_code << 4) | 0x08,
-                            k,
-                            m - 1,
-                        ]
-                    )
-                    hdr.append(_flac_crc8(bytes(hdr)))
-                    bw = _FlacBitWriter()
-                    for samples, width in chans:
-                        bw.write(0x02, 8)  # VERBATIM subframe header
-                        for v in samples:
-                            bw.write(v, width)
-                    bw.align()
-                    frame = bytes(hdr) + bytes(bw.buf)
-                    buf += frame + struct.pack(">H", _flac_crc16(frame))
-                ids.append(d)
-                payloads.append(bytes(buf))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "mime_type": FLAC_MIME,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
+    modes. The container (fixed 16-sample blocks, bit-packed headers,
+    UTF-8 frame numbers, CRC-8/CRC-16) is the shared
+    ``_flac_stream``."""
+    return _synthesize(
+        docs,
+        FLAC_MIME,
+        lambda d: _flac_stream(d, _flac_stereo_subframes, _FLAC_STEREO_CODES),
+    )
 
 
 FLAC_STEREO_SCHEMA = StructType(
@@ -6387,23 +5558,9 @@ def q_multimodal_flac_stereo_stats(
     and any reconstruction error (dropped parity bit, swapped
     channels, mis-signed side) lands loudly in sum_abs/peak/sum_sq.
     The per-mode counts pin that each assignment was actually
-    decoded, not skipped. Scale shape: the codec-family contract —
-    one Arrow-batched mapInPandas chain, payload bytes never shuffle,
-    doc-grain output."""
+    decoded, not skipped."""
     media = synthesize_flac_stereo(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in FLAC_STEREO_SCHEMA.fields]
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_flac(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k in cols[1:]:
-                    rows[k].append(d[k])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_stats, schema=FLAC_STEREO_SCHEMA)
+    return _map_docs(media, lambda _, p: decode_flac(p), FLAC_STEREO_SCHEMA)
 
 
 QUERIES["multimodal_flac_stereo_stats"] = q_multimodal_flac_stereo_stats
@@ -6478,8 +5635,6 @@ def _build_gps_app1(doc_id: int) -> bytes:
     IFD holds LatRef/Lat/LonRef/Lon with the coordinates as offset
     RATIONAL[3] blocks (deg/1, min/1, centi-arcsec/100) — byte order
     alternates per doc like the EXIF entry."""
-    import struct
-
     f = _gps_fields_for(doc_id)
     little = doc_id % 2 == 0
     e = "<" if little else ">"
@@ -6522,23 +5677,9 @@ def _build_gps_app1(doc_id: int) -> bytes:
 def synthesize_jpeg_gps(docs: DataFrame) -> DataFrame:
     """The baseline JPEG stream with a GPS-bearing APP1 spliced after
     SOI (camera layout, like ``synthesize_jpeg_exif``)."""
-
-    def _splice(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                bytes(p[:2]) + _build_gps_app1(int(d)) + bytes(p[2:])
-                for d, p in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime_type": pdf["mime_type"],
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return synthesize_jpeg(docs).mapInPandas(_splice, schema=MEDIA_SCHEMA)
+    return _synthesize(
+        docs, JPEG_MIME, lambda d: _jpeg_spliced(d, _build_gps_app1(d))
+    )
 
 
 def _exif_rational3_cas(e: str, ent: tuple) -> int:
@@ -6546,8 +5687,6 @@ def _exif_rational3_cas(e: str, ent: tuple) -> int:
     centi-arcseconds with exact integer floors per component —
     deterministic for any denominators, exact for the standard
     (1, 1, 100) camera encoding; zero denominators fail loud."""
-    import struct
-
     typ, cnt, raw = ent
     if typ != 5 or cnt != 3:
         raise ValueError(
@@ -6572,8 +5711,6 @@ def extract_jpeg_gps(payload: bytes) -> dict | None:
     the RATIONAL[3] coordinates to exact centi-arcseconds. Returns
     None when the stream has no Exif APP1 or no GPS IFD (has-no-geo,
     not corrupt); malformed structure raises."""
-    import struct
-
     hdr = _jpeg_exif_tiff(payload)
     if hdr is None:
         return None
@@ -6613,26 +5750,11 @@ def q_multimodal_jpeg_gps(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy stream: the TIFF type-5 RATIONAL consumer earned through
     the generic IFD walk, coordinates kept integer-exact as total
     centi-arcseconds (no float degrees — both engines agree to the
-    digit). Scale shape: the codec-family contract — one Arrow-batched
-    mapInPandas chain, doc-grain output."""
+    digit)."""
     media = synthesize_jpeg_gps(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in JPEG_GPS_SCHEMA.fields]
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = extract_jpeg_gps(payload)
-                if d is None:
-                    raise ValueError(
-                        f"doc {doc_id}: generator emitted no GPS APP1"
-                    )
-                rows["doc_id"].append(int(doc_id))
-                for k in cols[1:]:
-                    rows[k].append(d[k])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_extract, schema=JPEG_GPS_SCHEMA)
+    return _map_docs(
+        media, _required(extract_jpeg_gps, "GPS APP1"), JPEG_GPS_SCHEMA
+    )
 
 
 QUERIES["multimodal_jpeg_gps"] = q_multimodal_jpeg_gps
@@ -6700,26 +5822,18 @@ def resize_jpeg_exif_oriented(payload: bytes) -> dict:
         raise ValueError("EXIF orientation missing from payload")
     o = meta["orientation"]
     w, h, planes, samps = _jpeg_raster(payload)
-    max_h = max(hi for hi, _ in samps)
-    max_v = max(vi for _, vi in samps)
     uw, uh, to_stored = _exif_orient_map(o, w, h)
-    sums = [0, 0, 0]
-    for y2 in range(PPM_RESIZE_H):
-        uy = (y2 * uh) // PPM_RESIZE_H
-        for x2 in range(PPM_RESIZE_W):
-            ux = (x2 * uw) // PPM_RESIZE_W
-            sx, sy = to_stored(ux, uy)
-            for c, (hi, vi) in enumerate(samps):
-                sums[c] += int(
-                    planes[c][(sy * vi) // max_v, (sx * hi) // max_h]
-                )
+    pixel = _jpeg_sampler(planes, samps)
+    sum_y, sum_cb, sum_cr = _nn_sums(
+        uw, uh, lambda x, y: pixel(*to_stored(x, y))
+    )
     return {
         "orientation": o,
         "upright_width": uw,
         "upright_height": uh,
-        "sum_y": sums[0],
-        "sum_cb": sums[1],
-        "sum_cr": sums[2],
+        "sum_y": sum_y,
+        "sum_cb": sum_cb,
+        "sum_cr": sum_cr,
     }
 
 
@@ -6746,23 +5860,11 @@ def q_multimodal_exif_oriented_resize(
     wrong inverse mapping for any value, a dims-swap miss on 5-8, or
     an orientation-ignoring resize lands loudly in the per-channel
     sums. Oracle mirrors the integer kernel with an 8-way CASE on
-    doc_id % 8 + 1. Scale shape: the codec-family contract — one
-    Arrow-batched mapInPandas chain, payload bytes never shuffle,
-    doc-grain output."""
+    doc_id % 8 + 1."""
     media = synthesize_jpeg_exif(load_table(spark, sf_dir, "documents"))
-    cols = [f.name for f in JPEG_ORIENTED_SCHEMA.fields]
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = resize_jpeg_exif_oriented(payload)
-                rows["doc_id"].append(int(doc_id))
-                for k in cols[1:]:
-                    rows[k].append(d[k])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_resize, schema=JPEG_ORIENTED_SCHEMA)
+    return _map_docs(
+        media, lambda _, p: resize_jpeg_exif_oriented(p), JPEG_ORIENTED_SCHEMA
+    )
 
 
 QUERIES["multimodal_exif_oriented_resize"] = q_multimodal_exif_oriented_resize

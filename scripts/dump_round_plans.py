@@ -1,8 +1,9 @@
-"""Dump .explain('formatted') for named queries to plans/r19/<name>_<tag>.txt.
+"""Dump .explain('formatted') for named queries to plans/<round>/<name>_<tag>.txt.
 
-Usage: python scripts/dump_r19_plans.py before|after query [query ...]
-The judge checks plan claims against these files; regenerate the
-"after" files whenever a touched query's plan changes.
+Usage: python scripts/dump_round_plans.py ROUND before|after query [query ...]
+ROUND names the directory under plans/ (for example r20). Plan claims
+are checked against these files; regenerate the "after" files whenever
+a touched query's plan changes.
 """
 
 from __future__ import annotations
@@ -18,14 +19,13 @@ from retail_sales_etl_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    if tag not in ("before", "after") or not names:
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
         raise SystemExit(__doc__)
+    round_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(REPO, "plans", "r19")
+    out_dir = os.path.join(REPO, "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="dump-r19-plans")
+    spark = get_spark(app_name=f"dump-{round_dir}-plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.all_queries()
     for name in names:

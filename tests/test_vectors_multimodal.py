@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from retail_sales_etl_spark.catalog import load_table
@@ -45,7 +47,7 @@ def test_media_table_schema(spark, sf_dir):
 
 def test_sample_frames_one_to_many(spark, sf_dir):
     media = multimodal.to_media_table(load_table(spark, sf_dir, "documents"))
-    frames = multimodal.sample_frames(media, frame_size=64, stride=256)
+    frames = multimodal.sample_frames(media)
     rows = frames.limit(500).collect()
     assert len(rows) > 0
     by_doc = {}
@@ -61,7 +63,7 @@ def test_sample_frames_one_to_many(spark, sf_dir):
 
 def test_extract_features_mapinpandas(spark, sf_dir):
     media = multimodal.to_media_table(load_table(spark, sf_dir, "documents"))
-    feats = multimodal.extract_features(media, batch_partitions=4)
+    feats = multimodal.extract_features(media)
     rows = feats.collect()
     assert len(rows) == media.count()
     sample = rows[0]
@@ -2438,3 +2440,89 @@ def test_exif_oriented_resize_all_eight_orientations(spark):
     assert (plain["sum_y"], plain["sum_cb"]) != (
         oriented["sum_y"], oriented["sum_cb"],
     )
+
+
+_MULTIMODAL_ENTRIES = sorted(
+    n for n in multimodal.QUERIES if n.startswith("multimodal_")
+)
+
+
+@pytest.fixture(scope="module")
+def empty_corpus_dir(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("empty_corpus"))
+    spark.createDataFrame(
+        [], "doc_id long, text string, lang string, source string, "
+            "n_chars long"
+    ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+    return d
+
+
+@pytest.mark.parametrize("name", _MULTIMODAL_ENTRIES)
+def test_multimodal_entry_on_empty_corpus(spark, empty_corpus_dir, name):
+    """Every multimodal entry over a ``documents`` table with 0 rows
+    returns 0 rows and the same columns as its DuckDB oracle over the
+    same table — the codec harness's empty-input path."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{empty_corpus_dir}/documents.parquet/*.parquet')"
+    )
+    got = multimodal.QUERIES[name](spark, empty_corpus_dir)
+    want = con.execute(multimodal.ORACLE[name])
+    assert sorted(got.columns) == sorted(c[0] for c in want.description)
+    assert got.collect() == want.fetchall() == []
+
+
+def test_one_codec_harness_site():
+    """Each codec mechanism has one home in ``multimodal.py``: Arrow
+    batches are built only by ``_synthesize`` and ``_map_docs`` (and by
+    ``extract_features``, which dispatches on ``mime_type``), the
+    nearest-neighbor resize loop lives in ``_nn_sums``, the FLAC
+    ``fLaC`` magic is written only by ``_flac_stream`` (the decoder's
+    comparison is a read), and the SOF0 component bytes only by
+    ``_jpeg_baseline``."""
+    import ast
+    import inspect
+
+    sites = {
+        "mapInPandas": [],
+        "range(PPM_RESIZE_H)": [],
+        'b"fLaC"': [],
+        "SOF0 components": [],
+    }
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Compare):
+                continue  # reads, not writes
+            if isinstance(child, ast.Call):
+                called = ast.unparse(child.func)
+                args = [ast.unparse(a) for a in child.args]
+                if called.endswith(".mapInPandas"):
+                    sites["mapInPandas"].append(fn)
+                if called == "range" and args == ["PPM_RESIZE_H"]:
+                    sites["range(PPM_RESIZE_H)"].append(fn)
+                if (
+                    called == "bytes"
+                    and child.args
+                    and isinstance(child.args[0], ast.List)
+                    and len(child.args[0].elts) == 9
+                    and args[0].startswith("[1, ")
+                ):
+                    sites["SOF0 components"].append(fn)
+            if isinstance(child, ast.Constant) and child.value == b"fLaC":
+                sites['b"fLaC"'].append(fn)
+            visit(child, fn)
+
+    visit(ast.parse(inspect.getsource(multimodal)), "<module>")
+    assert sites == {
+        "mapInPandas": ["_synthesize", "_map_docs", "extract_features"],
+        "range(PPM_RESIZE_H)": ["_nn_sums"],
+        'b"fLaC"': ["_flac_stream"],
+        "SOF0 components": ["_jpeg_baseline"],
+    }, sites
