@@ -2,10 +2,26 @@
 
 Two implementations of the same math:
 
-- Catalyst expressions (``dot``, ``cosine``): JVM-side ``zip_with`` +
-  ``aggregate`` folds — whole-stage codegen, zero Python transfer.
-  Used by the oracle-checked similarity/dedup operators (deterministic
-  sequential fold order).
+- Catalyst expressions (``dot``, ``norm``, ``cosine``, ``l2sq``,
+  ``as_double_array``): JVM-side ``zip_with`` + ``aggregate`` folds —
+  whole-stage codegen, zero Python transfer. The embedding operators
+  (``operators/similarity.py``, ``operators/dedup.py``) and the
+  streaming ANN/drift entries build every vector expression from these,
+  and every oracle-checked result stays bit-exact against its DuckDB
+  twin under three conditions:
+
+  1. **In-order fold.** ``dot`` sums the products left to right from
+     0.0, the same sequence of IEEE operations DuckDB's
+     ``list_dot_product`` performs, so the two agree to the last ulp
+     (a tree or pairwise reduction would not).
+  2. **6-dp floor.** Scores are compared, ranked and tie-broken only
+     after ``fround(x, 6)`` (``floor(x * 1e6 + 0.5) / 1e6``, identical
+     in both engines), so a last-ulp difference elsewhere in a
+     pipeline cannot flip an ordering.
+  3. **Commutative product.** IEEE multiplication commutes exactly, so
+     ``dot(a, b)`` and ``dot(b, a)`` and either operand order of
+     ``norm(a) * norm(b)`` give the same bits; sums do not commute
+     bit-exactly, which is why ``l2sq`` keeps its term order.
 - Arrow-batched Pandas UDF (``cosine_to_query_udf``): numpy dot over
   a whole Arrow batch — wins when scoring against a fixed query at
   high throughput (BLAS beats per-row codegen for wide vectors).
@@ -34,6 +50,14 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def l2sq(a: Column, b: Column) -> Column:
+    """Squared L2 as in-order dot products, dot(a,a) - 2 dot(a,b) +
+    dot(b,b) — the float computation a ``list_dot_product`` SQL twin
+    can spell term for term (a zip_with squared-difference fold
+    computes different float ops than any SQL twin could)."""
+    return dot(a, a) - 2 * dot(a, b) + dot(b, b)
 
 
 def as_double_array(col: Column | str) -> Column:

@@ -289,9 +289,9 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
+    from .similarity import load_embeddings
+
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
 
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vec_id"].to_numpy()
@@ -336,11 +336,9 @@ def q_dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .similarity import _as_double_array, assign_ivf_cells
+    from .similarity import assign_ivf_cells, load_embeddings
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
     cells = assign_ivf_cells(emb)
     blocked = emb.join(cells, "vec_id").select("vec_id", "cell", "v")
 
@@ -392,11 +390,9 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .similarity import _as_double_array, assign_ivf_cells_scored
+    from .similarity import assign_ivf_cells_scored, load_embeddings
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
     assigned = assign_ivf_cells_scored(emb)
     blocked = emb.join(assigned, "vec_id").select("vec_id", "cell", "ccos", "v")
 

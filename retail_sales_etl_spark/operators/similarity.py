@@ -1,28 +1,55 @@
-"""Similarity search over the embeddings table (array<float> column).
+"""Similarity search, clustering and embedding QC over the embeddings
+table (vec_id, label, embedding array<float>).
 
-- ``ann_topk``: exact brute-force cosine top-k against a query vector —
-  the correctness baseline. One scan, distributed TakeOrdered; no O(n^2).
-- ``ann_lsh_topk``: random-hyperplane LSH — the scale path. Hyperplane
-  weights are deterministic +-1 vectors derived from md5 in Python and
-  embedded as literals, so Spark and DuckDB share the exact planes. Each
-  vector lands in a signature bucket; search touches only the query's
-  bucket (at 100 TB: bucket-partitioned layout makes this a pruned scan).
+Every entry is a body plus calls to one helper per mechanism, and all
+vector math goes through the kernels of ``functions/vectors.py``
+(in-order fold dots, so each DuckDB twin's ``list_dot_product`` agrees
+to the last bit). The helpers:
 
-Vector math is JVM-side ``zip_with``/``aggregate`` (codegen'd, no Python
-row transfer); ``functions/vectors.py`` also ships an Arrow-batched
-Pandas-UDF kernel for wide-batch scoring where numpy BLAS wins.
+- ``load_embeddings``: the table scan as ``(…, v array<double>)``.
+- ``_cos6`` / ``_l2sq6``: the 6-dp floor-rounded cosine / squared L2
+  every ranking, routing and assignment step compares.
+- ``_with_cosine`` + ``_rank``: one query scored against candidate
+  rows, and the (cosine desc, vec_id) top-k tail with its 1-based
+  rank (distributed TakeOrdered); ``_top_per_query`` is the same cut
+  per ``q_id`` for a query batch (a window per query).
+- ``_means`` / ``_assemble``: decimal-exact per-dimension means in long
+  form (the IVF centroids and every Lloyd M-step) and their dim-ordered
+  array assembly; ``_cent_arr`` is the per-label coarse quantizer
+  built from them and ``_route_probes`` routes one query to its
+  nearest cells.
+- ``_nearest_cell`` / ``_nearest_code``: a vector's nearest centroid
+  (highest cosine, lowest cell on ties) and a PQ subvector's nearest
+  codeword (lowest squared L2, lowest code on ties) — one broadcast of
+  the centroids and one map-combinable argmax on vec_id, no window.
+- ``_lloyd`` (k-means) and ``_pq_train`` (per-subspace PQ codebooks):
+  the two Lloyd chains, seeded by ``_seeds`` (the k lowest vec_ids)
+  and trained on the corpus or on ``_hash_sample``'s fixed-size md5
+  sample; ``_pq_subs`` splits vectors into PQ subvectors and
+  ``_pq_retrieve`` is the ADC scan plus exact re-rank.
+- ``_power_step`` / ``_normalize6``: one staged power-iteration pass
+  and its 6-dp normalisation (top PC, anisotropy, PC2).
+- ``_dim_moments``: decimal-exact per-dimension moments (dim stats,
+  whitening QC).
+
+Each ``ORACLE`` entry is an independent DuckDB twin written out in
+full; no helper here builds SQL.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..catalog import load_table
 from ..functions.rounding import fround
+from ..functions.vectors import as_double_array, cosine, dot, l2sq
 
 DIM = 64
 N_PLANES = 8
@@ -30,54 +57,76 @@ TOP_K = 10
 QUERY_VEC_ID = 0
 
 
-def plane_weights(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[float]]:
+def plane_weights() -> list[list[float]]:
     """Deterministic +-1 hyperplanes from md5(plane|dim) — reproducible
     everywhere with no RNG state."""
-    planes = []
-    for p in range(n_planes):
-        row = []
-        for i in range(dim):
-            h = hashlib.md5(f"{p}|{i}".encode()).hexdigest()
-            row.append(1.0 if int(h[0], 16) >= 8 else -1.0)
-        planes.append(row)
-    return planes
+    return [
+        [
+            1.0 if int(hashlib.md5(f"{p}|{i}".encode()).hexdigest()[0], 16) >= 8
+            else -1.0
+            for i in range(DIM)
+        ]
+        for p in range(N_PLANES)
+    ]
 
 
-def _dot(a: F.Column, b: F.Column) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+def load_embeddings(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
+    """The embeddings table as ``(*cols, v array<double>)``."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        *cols, as_double_array("embedding").alias("v")
     )
 
 
-def _as_double_array(col: str) -> F.Column:
-    return F.col(col).cast("array<double>")
+def _cos6(a: str, b: str) -> F.Column:
+    """Cosine of two array columns, floor-rounded to 6 dp."""
+    return fround(cosine(F.col(a), F.col(b)), 6)
+
+
+def _l2sq6(a: str, b: str) -> F.Column:
+    """Squared L2 of two array columns, floor-rounded to 6 dp."""
+    return fround(l2sq(F.col(a), F.col(b)), 6)
+
+
+def _query(emb: DataFrame, vec_id: int) -> DataFrame:
+    """The 1-row query frame ``(qv)`` holding vector ``vec_id``."""
+    return emb.filter(F.col("vec_id") == vec_id).select(F.col("v").alias("qv"))
 
 
 def _with_cosine(emb: DataFrame, query: DataFrame) -> DataFrame:
-    """Cross-join candidates with the (single-row, broadcast) query and
-    compute cosine rounded to 6 dp (engine-portable)."""
-    dot = _dot(F.col("v"), F.col("qv"))
-    na = F.sqrt(_dot(F.col("v"), F.col("v")))
-    nq = F.sqrt(_dot(F.col("qv"), F.col("qv")))
+    """Cross-join candidates with the (single-row, broadcast) query:
+    ``(vec_id, label, cosine)``."""
     return emb.crossJoin(broadcast(query)).select(
-        "vec_id",
-        "label",
-        fround(dot / (na * nq), 6).alias("cosine"),
+        "vec_id", "label", _cos6("v", "qv").alias("cosine")
+    )
+
+
+def _rank(scored: DataFrame, top_k: int) -> DataFrame:
+    """The ``top_k`` rows of ``scored`` by (cosine desc, vec_id) with
+    their 1-based ``rank`` — a distributed TakeOrdered, then a window
+    over k rows."""
+    order = (F.col("cosine").desc(), F.col("vec_id"))
+    return scored.orderBy(*order).limit(top_k).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order))
+    )
+
+
+def _top_per_query(
+    frame: DataFrame, score: str, tie: str, k: int, name: str
+) -> DataFrame:
+    """Per ``q_id``, the ``k`` rows by (score desc, tie), numbered in
+    column ``name``."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score).desc(), F.col(tie))
+    return frame.withColumn(name, F.row_number().over(w)).filter(
+        F.col(name) <= k
     )
 
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-10 for the query vector (vec_id=0)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
-    query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qv")
-    )
-    scored = _with_cosine(emb, query).filter(F.col("vec_id") != QUERY_VEC_ID)
-    top = scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(TOP_K)
-    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return top.withColumn("rank", F.row_number().over(w))
+    """Exact cosine top-10 for the query vector (vec_id=0): one scan,
+    distributed TakeOrdered, no O(n^2)."""
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
+    scored = _with_cosine(emb, _query(emb, QUERY_VEC_ID))
+    return _rank(scored.filter(F.col("vec_id") != QUERY_VEC_ID), TOP_K)
 
 
 def _bucket_expr(vcol: str) -> F.Column:
@@ -86,16 +135,18 @@ def _bucket_expr(vcol: str) -> F.Column:
     for plane in plane_weights():
         wlit = F.array(*[F.lit(x) for x in plane])
         bits.append(
-            F.when(_dot(F.col(vcol), wlit) > 0, F.lit("1")).otherwise(F.lit("0"))
+            F.when(dot(F.col(vcol), wlit) > 0, F.lit("1")).otherwise(F.lit("0"))
         )
     return F.concat(*bits)
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH ANN: top-10 within the query's hyperplane-signature bucket."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
+    """LSH ANN: top-10 within the query's hyperplane-signature bucket.
+    Hyperplane weights are deterministic +-1 vectors derived from md5
+    in Python and embedded as literals, so Spark and DuckDB share the
+    exact planes; search touches only the query's bucket (at 100 TB a
+    bucket-partitioned layout makes this a pruned scan)."""
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
     emb = emb.withColumn("bucket", _bucket_expr("v"))
     query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("v").alias("qv"), F.col("bucket").alias("qbucket")
@@ -103,40 +154,45 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         emb.crossJoin(broadcast(query))
         .filter((F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != QUERY_VEC_ID))
-        .select(
-            "vec_id",
-            "label",
-            "bucket",
-            fround(
-                _dot(F.col("v"), F.col("qv"))
-                / (F.sqrt(_dot(F.col("v"), F.col("v"))) * F.sqrt(_dot(F.col("qv"), F.col("qv")))), 6).alias("cosine"),
+        .select("vec_id", "label", "bucket", _cos6("v", "qv").alias("cosine"))
+    )
+    return _rank(scored, TOP_K)
+
+
+def _means(rows: DataFrame, vcol: str, *keys: str) -> DataFrame:
+    """Per-key mean of array column ``vcol`` in long form ``(*keys,
+    dim_idx, centroid)``: posexplode, then a decimal-exact sum over the
+    count — one shuffle on (keys, dim)."""
+    return (
+        rows.select(*keys, F.posexplode(vcol).alias("dim_idx", "val"))
+        .groupBy(*keys, "dim_idx")
+        .agg(
+            (
+                F.sum(F.col("val").cast("decimal(25,6)")).cast("double")
+                / F.count(F.lit(1))
+            ).alias("centroid")
         )
     )
-    top = scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(TOP_K)
-    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return top.withColumn("rank", F.row_number().over(w))
 
 
-def _centroids_long(emb: DataFrame) -> DataFrame:
-    """Per-label centroid in long form (label, dim_idx, centroid).
-
-    posexplode -> (label, dim) grouped mean with decimal-exact sums:
-    the IVF coarse-quantizer build as one shuffle on (label, dim).
-    """
-    exploded = emb.select(
-        "label", F.posexplode(F.col("v")).alias("dim_idx", "val")
-    )
-    return exploded.groupBy("label", "dim_idx").agg(
-        (F.sum(F.col("val").cast("decimal(25,6)")).cast("double") / F.count(F.lit(1)))
-        .alias("centroid")
+def _assemble(long: DataFrame, *keys: str) -> DataFrame:
+    """``(*keys, dim_idx, centroid)`` long form -> ``(*keys, cv)``
+    arrays in dim order — also the assembly of a maintained centroid
+    grid (the streaming IVF index sink's additive sums)."""
+    return long.groupBy(*keys).agg(
+        F.transform(
+            F.sort_array(
+                F.collect_list(F.struct(F.col("dim_idx"), F.col("centroid")))
+            ),
+            lambda s: s.centroid,
+        ).alias("cv")
     )
 
 
 def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "label", _as_double_array("embedding").alias("v")
-    )
-    return _centroids_long(emb)
+    """Per-label centroid in long form (label, dim_idx, centroid): the
+    IVF coarse-quantizer build as one shuffle on (label, dim)."""
+    return _means(load_embeddings(spark, sf_dir, "label"), "v", "label")
 
 
 def ivf_topk(
@@ -154,9 +210,7 @@ def ivf_topk(
     second-nearest cluster is silently missed. ``emb`` must carry
     (vec_id, label, v) where label is the cluster id.
     """
-    query = emb.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("v").alias("qv")
-    )
+    query = _query(emb, query_vec_id)
     probes = _route_probes(_cent_arr(emb), query, nprobe).select(
         F.col("cell").alias("probe_label")
     )
@@ -169,82 +223,62 @@ def ivf_topk(
 def _ivf_rank(candidates: DataFrame, query: DataFrame, top_k: int) -> DataFrame:
     """Exact cosine top-k over an externally-supplied candidate set —
     the scoring tail of ``ivf_topk``, shared with the maintained-index
-    serving path so the two can never drift on rounding/tie-break."""
-    scored = candidates.crossJoin(broadcast(query)).select(
-        "vec_id",
-        "label",
-        fround(
-            _dot(F.col("v"), F.col("qv"))
-            / (F.sqrt(_dot(F.col("v"), F.col("v"))) * F.sqrt(_dot(F.col("qv"), F.col("qv")))), 6).alias("cosine"),
-    )
-    top = scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(top_k)
-    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return top.withColumn("rank", F.row_number().over(w))
-
-
-def _cent_arr_from_long(centroids_long: DataFrame) -> DataFrame:
-    """(label, dim_idx, centroid) long form -> centroid array rows
-    ``(cell, cv)`` — split out so a MAINTAINED centroid grid (the
-    streaming IVF index sink's additive sums) assembles through the
-    same sort/collect conventions as the batch build."""
-    return (
-        centroids_long.groupBy("label")
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("dim_idx"), F.col("centroid")))
-                ),
-                lambda s: s.centroid,
-            ).alias("cv")
-        )
-        .select(F.col("label").alias("cell"), "cv")
-    )
+    serving path."""
+    return _rank(_with_cosine(candidates, query), top_k)
 
 
 def _cent_arr(emb: DataFrame) -> DataFrame:
-    """Per-label mean centroids as array rows ``(cell, cv)`` — the ONE
-    builder behind every coarse-quantizer consumer (cell assignment,
-    IVF probe routing, IVFPQ): the 6-dp rounding and array assembly
-    conventions live here so Spark plans and oracle twins cannot
-    drift apart per call site."""
-    return _cent_arr_from_long(_centroids_long(emb))
+    """Per-label mean centroids as array rows ``(cell, cv)`` — the
+    coarse quantizer behind cell assignment, IVF probe routing and
+    IVFPQ."""
+    return _assemble(_means(emb, "v", "label"), "label").withColumnRenamed(
+        "label", "cell"
+    )
 
 
 def _route_probes(cent_arr: DataFrame, query: DataFrame, nprobe: int) -> DataFrame:
     """Coarse routing: the ``nprobe`` cells nearest the (1-row,
-    broadcast) query by 6-dp cosine, (ccos desc, cell) tie-break —
-    shared by ivf_topk and the IVFPQ composition."""
+    broadcast) query, by (ccos desc, cell)."""
     return (
         cent_arr.crossJoin(broadcast(query))
-        .select(
-            "cell",
-            fround(
-                _dot(F.col("cv"), F.col("qv"))
-                / (
-                    F.sqrt(_dot(F.col("cv"), F.col("cv")))
-                    * F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                ), 6).alias("ccos"),
-        )
+        .select("cell", _cos6("cv", "qv").alias("ccos"))
         .orderBy(F.col("ccos").desc(), F.col("cell"))
         .limit(nprobe)
         .select("cell")
     )
 
 
+def _nearest_cell(emb: DataFrame, cent_arr: DataFrame, *carry: str) -> DataFrame:
+    """``(vec_id, cell, ccos, *carry)``: every vector of ``emb``
+    (vec_id, v, …) routed to its nearest centroid of ``cent_arr``
+    (cell, cv) by (ccos desc, lowest cell). The centroid table is tiny
+    and broadcast; assignment is one map-side cosine per (vector,
+    centroid) and a partial-aggregatable ``max_by`` — no window sort,
+    one shuffle on vec_id. ``carry`` columns are constant per vec_id
+    and ride along through the aggregate."""
+    best = (
+        emb.crossJoin(broadcast(cent_arr))
+        .select("vec_id", "cell", *carry, _cos6("v", "cv").alias("ccos"))
+        .groupBy("vec_id")
+        .agg(
+            F.expr(
+                "max_by(named_struct('cell', cell, 'ccos', ccos),"
+                " named_struct('c', ccos, 'l', -cell)) AS best"
+            ),
+            *[F.expr(f"any_value({c}) AS {c}") for c in carry],
+        )
+    )
+    return best.select("vec_id", "best.cell", "best.ccos", *carry)
+
+
 def assign_ivf_cells(emb: DataFrame) -> DataFrame:
     """Route every vector to its nearest centroid: (vec_id, cell).
 
     The IVF coarse-quantizer ASSIGNMENT step — the computed-cell
-    replacement for trusting a metadata label as the block key. The
-    centroid table is tiny (n_cells x dims) and broadcast; assignment
-    is one map-side cosine per (vector, centroid) followed by a
-    partial-aggregatable ``max_by`` argmax per vector — no window sort,
-    one shuffle on vec_id. Cosines rounded to 6 dp before the argmax
-    (ties broken by lowest cell id) so Spark and the DuckDB oracle pick
-    identical cells. ``emb`` must carry (vec_id, label, v); at 100 TB
-    the centroids would come from sampled k-means, here from the
-    per-label means (``embedding_centroids``) — assignment is computed
-    either way.
+    replacement for trusting a metadata label as the block key.
+    ``emb`` must carry (vec_id, label, v); at 100 TB the centroids
+    would come from sampled k-means, here from the per-label means
+    (``embedding_centroids``) — assignment is computed either way.
     """
     return assign_ivf_cells_scored(emb).select("vec_id", "cell")
 
@@ -254,26 +288,7 @@ def assign_ivf_cells_scored(emb: DataFrame) -> DataFrame:
     (vec_id, cell, ccos). The centroid distance is the priority signal
     semantic dedup ranks by, so the assignment argmax carries it along
     instead of recomputing it downstream."""
-    cent_arr = _cent_arr(emb)
-    scored = emb.crossJoin(broadcast(cent_arr)).select(
-        "vec_id",
-        "cell",
-        fround(
-            _dot(F.col("v"), F.col("cv"))
-            / (
-                F.sqrt(_dot(F.col("v"), F.col("v")))
-                * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-            ), 6).alias("ccos"),
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.expr(
-            "max_by(named_struct('cell', cell, 'ccos', ccos),"
-            " named_struct('c', ccos, 'l', -cell)) AS best"
-        )
-    )
-    return best.select(
-        "vec_id", F.col("best.cell").alias("cell"), F.col("best.ccos").alias("ccos")
-    )
+    return _nearest_cell(emb, _cent_arr(emb))
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -283,9 +298,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data; here clusters are the label column and centroids are
     computed exactly (decimal means).
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
     return ivf_topk(emb, QUERY_VEC_ID, nprobe=2, top_k=TOP_K)
 
 
@@ -293,59 +306,27 @@ KMEANS_K = 10
 KMEANS_ITERS = 3
 
 
-def _lloyd(emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS):
-    """The shared deterministic Lloyd chain over ``emb`` (vec_id, v):
-    init from the k lowest vec_ids (distributed TakeOrdered), cosine
-    assignment with 6-dp rounding and lowest-cell tie-break,
-    decimal-exact means. Returns (cent_arr: cell, cv; cent_long: cell,
-    dim_idx, centroid; assigned: vec_id, cell, v) after ``iters``
-    rounds — bit-reproducible, so a DuckDB twin can unroll the same
-    rounds as CTEs."""
-    wi = Window.orderBy("vec_id")
-    cent_arr = (
-        emb.orderBy("vec_id")
-        .limit(k)
-        .select(
-            (F.row_number().over(wi) - 1).cast("int").alias("cell"),
-            F.col("v").alias("cv"),
-        )
+def _seeds(emb: DataFrame, k: int, name: str) -> DataFrame:
+    """The ``k`` lowest-vec_id rows of ``emb``, numbered 0..k-1 in
+    column ``name`` — a distributed TakeOrdered, then a window over k
+    rows."""
+    return emb.orderBy("vec_id").limit(k).withColumn(
+        name, (F.row_number().over(Window.orderBy("vec_id")) - 1).cast("int")
     )
-    assigned = None
-    cent_long = None
-    for _ in range(iters):
-        scored = emb.crossJoin(broadcast(cent_arr)).select(
-            "vec_id",
-            "cell",
-            "v",
-            fround(
-                _dot(F.col("v"), F.col("cv"))
-                / (
-                    F.sqrt(_dot(F.col("v"), F.col("v")))
-                    * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-                ), 6).alias("ccos"),
-        )
-        assigned = scored.groupBy("vec_id").agg(
-            F.expr("max_by(cell, named_struct('c', ccos, 'l', -cell)) AS cell"),
-            # v is constant within the vec_id group; any_value avoids a
-            # re-join against emb per round
-            F.expr("any_value(v) AS v"),
-        )
-        cent_long = assigned.select(
-            "cell", F.posexplode("v").alias("dim_idx", "val")
-        ).groupBy("cell", "dim_idx").agg(
-            (
-                F.sum(F.col("val").cast("decimal(25,6)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("centroid")
-        )
-        cent_arr = cent_long.groupBy("cell").agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("dim_idx"), F.col("centroid")))
-                ),
-                lambda s: s.centroid,
-            ).alias("cv")
-        )
+
+
+def _lloyd(emb: DataFrame):
+    """The deterministic k-means chain over ``emb`` (vec_id, v): seeds
+    are the KMEANS_K lowest vec_ids, then KMEANS_ITERS rounds of
+    ``_nearest_cell`` and ``_means``. Returns (cent_arr: cell, cv;
+    cent_long: cell, dim_idx, centroid; assigned: vec_id, cell, ccos,
+    v) — bit-reproducible, so a DuckDB twin can unroll the same rounds
+    as CTEs."""
+    cent_arr = _seeds(emb, KMEANS_K, "cell").select("cell", F.col("v").alias("cv"))
+    for _ in range(KMEANS_ITERS):
+        assigned = _nearest_cell(emb, cent_arr, "v")
+        cent_long = _means(assigned, "v", "cell")
+        cent_arr = _assemble(cent_long, "cell")
     return cent_arr, cent_long, assigned
 
 
@@ -354,22 +335,17 @@ def q_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     build for IVF/SemDeDup (the other entries bootstrap centroids from
     the label column; unlabeled corpora need this).
 
-    Fixed ``KMEANS_ITERS`` Lloyd rounds, deterministic init (the K
-    lowest vec_ids), cosine assignment with 6-dp rounding and
-    lowest-cell tie-break, decimal-exact means — so the whole iterative
-    algorithm is bit-reproducible and oracle-checkable (the DuckDB twin
-    unrolls the same rounds as CTEs). Each round is one broadcast of
-    the K x dim centroid table + one shuffle on (cell, dim): per-round
-    cost is linear in vectors, round count is fixed — at 100 TB the
-    standard practice this mirrors is running exactly this plan on a
-    uniform sample, then one final assignment pass over the corpus.
-    Empty cells drop out (their id simply stops appearing), as in any
-    Lloyd implementation without re-seeding.
+    Fixed ``KMEANS_ITERS`` rounds from a deterministic init, so the
+    whole iterative algorithm is bit-reproducible and oracle-checkable
+    (the DuckDB twin unrolls the same rounds as CTEs). Each round is
+    one broadcast of the K x dim centroid table + one shuffle on (cell,
+    dim): per-round cost is linear in vectors, round count is fixed —
+    at 100 TB the standard practice this mirrors is running exactly
+    this plan on a uniform sample, then one final assignment pass over
+    the corpus. Empty cells drop out (their id simply stops
+    appearing), as in any Lloyd implementation without re-seeding.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_array("embedding").alias("v")
-    )
-    _, cent_long, assigned = _lloyd(emb)
+    _, cent_long, assigned = _lloyd(load_embeddings(spark, sf_dir, "vec_id"))
     counts = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_members"))
     return cent_long.join(counts, "cell").select(
         "cell", "dim_idx", "centroid", "n_members"
@@ -385,9 +361,19 @@ KMEANS_SAMPLE_N = 256
 _KMEANS_SALT = "kmeans|"
 
 
-def _kmeans_sample_key(col: F.Column) -> F.Column:
-    return F.substring(
-        F.md5(F.concat(F.lit(_KMEANS_SALT), col.cast("string"))), 1, 8
+def _hash_sample(emb: DataFrame, salt: str, n: int) -> DataFrame:
+    """The ``n`` vectors of ``emb`` (vec_id, v) with the smallest
+    md5(salt || vec_id) keys: a distributed TakeOrdered (map-side
+    partial top-N per partition), no RNG, the same sample on any engine
+    or partitioning."""
+    key = F.substring(
+        F.md5(F.concat(F.lit(salt), F.col("vec_id").cast("string"))), 1, 8
+    )
+    return (
+        emb.withColumn("__sk", key)
+        .orderBy("__sk", "vec_id")
+        .limit(n)
+        .select("vec_id", "v")
     )
 
 
@@ -396,50 +382,21 @@ def q_kmeans_sampled_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit, per the scale story documented on ``q_kmeans_centroids``:
 
     1. TRAIN on a fixed-size deterministic sample: the KMEANS_SAMPLE_N
-       vectors with the smallest md5('kmeans|'||vec_id) keys
-       (distributed TakeOrdered — map-side partial top-N per
-       partition, no RNG, same sample on any engine/partitioning).
-       Training cost is CONSTANT in the corpus size.
+       vectors with the smallest md5('kmeans|'||vec_id) keys. Training
+       cost is CONSTANT in the corpus size.
     2. ASSIGN the full corpus in ONE broadcast pass against the
        trained K x dim centroid table (KBs) — the only linear stage,
        and it is map-side until the final per-cell rollup.
 
     Output is the per-cell census of the full-corpus assignment
     (cell, n_members, avg_ccos): small, hash-checkable, and pinning
-    both stages end-to-end. Deterministic throughout (6-dp cosines,
-    lowest-cell tie-break, decimal-exact mean), so the DuckDB twin
-    unrolls the same sample + rounds + assignment.
+    both stages end-to-end; the DuckDB twin unrolls the same sample +
+    rounds + assignment.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_array("embedding").alias("v")
-    )
-    sample = (
-        emb.withColumn("__sk", _kmeans_sample_key(F.col("vec_id")))
-        .orderBy("__sk", "vec_id")
-        .limit(KMEANS_SAMPLE_N)
-        .select("vec_id", "v")
-    )
-    cent_arr, _, _ = _lloyd(sample)
-    scored = emb.crossJoin(broadcast(cent_arr)).select(
-        "vec_id",
-        "cell",
-        fround(
-            _dot(F.col("v"), F.col("cv"))
-            / (
-                F.sqrt(_dot(F.col("v"), F.col("v")))
-                * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-            ), 6).alias("ccos"),
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.expr(
-            "max_by(named_struct('cell', cell, 'ccos', ccos),"
-            " named_struct('c', ccos, 'l', -cell)) AS best"
-        )
-    )
+    emb = load_embeddings(spark, sf_dir, "vec_id")
+    cent_arr, _, _ = _lloyd(_hash_sample(emb, _KMEANS_SALT, KMEANS_SAMPLE_N))
     return (
-        best.select(
-            F.col("best.cell").alias("cell"), F.col("best.ccos").alias("ccos")
-        )
+        _nearest_cell(emb, cent_arr)
         .groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
@@ -589,92 +546,50 @@ PQ_DSUB = DIM // PQ_M
 PQ_RERANK = 100
 
 
-def _l2sq(a: F.Column, b: F.Column) -> F.Column:
-    """Squared L2 as in-order dot products (dot(a,a) - 2 dot(a,b) +
-    dot(b,b)) — the same sequential-fold float computation DuckDB's
-    list_dot_product performs, so both engines agree to the last ulp
-    (a zip_with squared-diff fold would compute DIFFERENT float ops
-    than any SQL twin could)."""
-    return _dot(a, a) - 2 * _dot(a, b) + _dot(b, b)
+def _pq_subs(vcol: str, name: str) -> F.Column:
+    """The PQ_M contiguous PQ_DSUB-wide subvectors of array column
+    ``vcol`` as posexplode rows ``(sub, name)``."""
+    return F.posexplode(
+        F.array(*[F.slice(vcol, m * PQ_DSUB + 1, PQ_DSUB) for m in range(PQ_M)])
+    ).alias("sub", name)
+
+
+def _nearest_code(subs: DataFrame, codebook: DataFrame, *carry: str) -> DataFrame:
+    """``(vec_id, sub, code, *carry)``: every subvector of ``subs``
+    (vec_id, sub, sv, …) coded to its nearest codeword of the broadcast
+    ``codebook`` (sub, code, cv) by (6-dp squared L2, lowest code) —
+    ``_nearest_cell``'s argmax shape, per subspace."""
+    return (
+        subs.join(broadcast(codebook), "sub")
+        .select("vec_id", "sub", "code", *carry, _l2sq6("sv", "cv").alias("d2"))
+        .groupBy("vec_id", "sub")
+        .agg(
+            F.expr("min_by(code, named_struct('d', d2, 'c', code)) AS code"),
+            *[F.expr(f"any_value({c}) AS {c}") for c in carry],
+        )
+    )
 
 
 def _pq_train(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Train per-subspace codebooks and assign codes.
+    """Train per-subspace codebooks on ``emb`` (vec_id, v) and assign
+    codes. Returns (codebook: sub, code, cv; codes: vec_id, sub, code).
 
-    Returns (codebook: sub, code, cv; codes: vec_id, sub, code).
     One Lloyd chain handles ALL subspaces at once — 'sub' is just an
     extra group key, so each round is one broadcast of the M*K codebook
     rows plus one shuffle on (sub, code, dim); no per-subspace jobs.
-    Deterministic throughout: init from the K lowest vec_ids per
-    subspace, 6-dp rounded distances, lowest-code tie-break,
-    decimal-exact means — bit-reproducible and oracle-checkable (the
-    DuckDB twin unrolls the same rounds as CTEs).
+    Init: every vec_id appears in ALL M subspaces, so the K lowest
+    vec_ids per subspace ARE the K lowest vec_ids globally — one
+    distributed TakeOrdered (``_seeds``) picks them, never a window
+    over the exploded corpus grid (that would sort the whole corpus
+    inside each of the M window partitions). The DuckDB twins unroll
+    the same rounds as CTEs.
     """
-    subs = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[F.slice("v", m * PQ_DSUB + 1, PQ_DSUB) for m in range(PQ_M)]
-            )
-        ).alias("sub", "sv"),
-    )
-    # Init: every vec_id appears in ALL M subspaces, so the K lowest
-    # vec_ids per subspace ARE the K lowest vec_ids globally — take
-    # them once with a distributed TakeOrdered (orderBy+limit, same as
-    # q_kmeans_centroids' init) and slice the M subvectors from those K
-    # rows. The previous form (row_number over an M-partition window on
-    # the full exploded grid) sorted the ENTIRE corpus inside each of
-    # the M window partitions — a hot-partition global sort at scale,
-    # just to pick K seeds. Identical rows out, so the oracle's init
-    # CTE is untouched.
-    seed = (
-        emb.orderBy("vec_id")
-        .limit(PQ_K)
-        .withColumn("rn", F.row_number().over(Window.orderBy("vec_id")))
-    )
-    codebook = seed.select(
-        (F.col("rn") - 1).cast("int").alias("code"),
-        F.posexplode(
-            F.array(
-                *[F.slice("v", m * PQ_DSUB + 1, PQ_DSUB) for m in range(PQ_M)]
-            )
-        ).alias("sub", "cv"),
-    ).select("sub", "code", "cv")
-    assigned = None
+    subs = emb.select("vec_id", _pq_subs("v", "sv"))
+    codebook = _seeds(emb, PQ_K, "code").select("code", _pq_subs("v", "cv"))
     for _ in range(PQ_ITERS):
-        scored = subs.join(broadcast(codebook), "sub").select(
-            "vec_id",
-            "sub",
-            "code",
-            "sv",
-            fround(_l2sq(F.col("sv"), F.col("cv")), 6).alias("d2"),
-        )
-        assigned = scored.groupBy("vec_id", "sub").agg(
-            F.expr("min_by(code, named_struct('d', d2, 'c', code)) AS code"),
-            F.expr("any_value(sv) AS sv"),
-        )
-        cent_long = (
-            assigned.select(
-                "sub", "code", F.posexplode("sv").alias("dim_idx", "val")
-            )
-            .groupBy("sub", "code", "dim_idx")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(25,6)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("centroid")
-            )
-        )
-        codebook = cent_long.groupBy("sub", "code").agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("dim_idx"), F.col("centroid")))
-                ),
-                lambda s: s.centroid,
-            ).alias("cv")
-        )
-    codes = assigned.select("vec_id", "sub", "code")
-    return codebook, codes
+        assigned = _nearest_code(subs, codebook, "sv")
+        codebook = _assemble(_means(assigned, "sv", "sub", "code"), "sub", "code")
+    return codebook, assigned.select("vec_id", "sub", "code")
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -688,11 +603,8 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderBy+limit (distributed TakeOrdered). Recall vs the exact
     baseline is pytest-pinned; the ranking itself is deterministic and
     oracle-exact."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_array("embedding").alias("v")
-    )
-    codebook, codes = _pq_train(emb)
-    return _pq_retrieve(emb, codebook, codes)
+    emb = load_embeddings(spark, sf_dir, "vec_id")
+    return _pq_retrieve(emb, *_pq_train(emb))
 
 
 def _pq_retrieve(emb: DataFrame, codebook: DataFrame, codes: DataFrame) -> DataFrame:
@@ -700,20 +612,11 @@ def _pq_retrieve(emb: DataFrame, codebook: DataFrame, codes: DataFrame) -> DataF
     table against ``codebook`` (one tiny broadcast), rank every coded
     corpus vector by table-lookup sums, exact-L2 re-rank the PQ_RERANK
     shortlist."""
-    query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qv")
-    )
-    qsubs = query.select(
-        F.posexplode(
-            F.array(
-                *[F.slice("qv", m * PQ_DSUB + 1, PQ_DSUB) for m in range(PQ_M)]
-            )
-        ).alias("sub", "qsv"),
-    )
-    table = qsubs.join(codebook, "sub").select(
-        "sub",
-        "code",
-        fround(_l2sq(F.col("qsv"), F.col("cv")), 6).alias("d"),
+    query = _query(emb, QUERY_VEC_ID)
+    table = (
+        query.select(_pq_subs("qv", "qsv"))
+        .join(codebook, "sub")
+        .select("sub", "code", _l2sq6("qsv", "cv").alias("d"))
     )
     shortlist = (
         codes.filter(F.col("vec_id") != QUERY_VEC_ID)
@@ -727,11 +630,7 @@ def _pq_retrieve(emb: DataFrame, codebook: DataFrame, codes: DataFrame) -> DataF
     return (
         shortlist.join(emb, "vec_id")
         .crossJoin(broadcast(query))
-        .select(
-            "vec_id",
-            "adc_dist",
-            fround(_l2sq(F.col("v"), F.col("qv")), 6).alias("l2_dist"),
-        )
+        .select("vec_id", "adc_dist", _l2sq6("v", "qv").alias("l2_dist"))
         .orderBy(F.col("l2_dist").asc(), F.col("vec_id"))
         .limit(TOP_K)
     )
@@ -754,97 +653,18 @@ def q_ann_pq_sampled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     training drops from O(corpus x iters) to O(sample x iters +
     corpus). Deterministic end-to-end; the DuckDB twin unrolls the
     sampled rounds plus the full-corpus coding pass."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_array("embedding").alias("v")
-    )
-    codebook, codes = _pq_train_sampled(emb)
-    return _pq_retrieve(emb, codebook, codes)
-
-
-def _pq_train_sampled(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Sampled PQ training: Lloyd over the fixed-size hash sample,
-    then ONE broadcast coding pass over the full corpus against the
-    final codebooks. Returns (codebook, codes) with the same shapes as
-    ``_pq_train`` — shared by ``ann_pq_sampled_topk`` and the sampled
-    IVFPQ compositions (batch and streaming-served)."""
+    emb = load_embeddings(spark, sf_dir, "vec_id")
     codebook = _pq_codebook_sampled(emb)
-    return codebook, _pq_code(emb, codebook)
+    return _pq_retrieve(emb, codebook, _pq_code(emb, codebook))
 
 
 def _pq_codebook_sampled(emb: DataFrame) -> DataFrame:
-    """The sampled codebook trainer alone: Lloyd over the PQ_SAMPLE_N
-    hash sample of ``emb`` (vec_id, v) — constant training cost at any
-    corpus size. Split out of ``_pq_train_sampled`` so a serving path
-    can code a RESTRICTED vector set (e.g. only the probed IVF cells
-    read file-pruned from a maintained index) against corpus-trained
-    codebooks."""
-    sample = (
-        emb.withColumn(
-            "__sk",
-            F.substring(
-                F.md5(F.concat(F.lit(_PQ_SALT), F.col("vec_id").cast("string"))),
-                1,
-                8,
-            ),
-        )
-        .orderBy("__sk", "vec_id")
-        .limit(PQ_SAMPLE_N)
-        .select("vec_id", "v")
-    )
-    ssubs = sample.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[F.slice("v", m * PQ_DSUB + 1, PQ_DSUB) for m in range(PQ_M)]
-            )
-        ).alias("sub", "sv"),
-    )
-    seed = (
-        sample.orderBy("vec_id")
-        .limit(PQ_K)
-        .withColumn("rn", F.row_number().over(Window.orderBy("vec_id")))
-    )
-    codebook = seed.select(
-        (F.col("rn") - 1).cast("int").alias("code"),
-        F.posexplode(
-            F.array(
-                *[F.slice("v", m * PQ_DSUB + 1, PQ_DSUB) for m in range(PQ_M)]
-            )
-        ).alias("sub", "cv"),
-    ).select("sub", "code", "cv")
-    for _ in range(PQ_ITERS):
-        scored = ssubs.join(broadcast(codebook), "sub").select(
-            "vec_id",
-            "sub",
-            "code",
-            "sv",
-            fround(_l2sq(F.col("sv"), F.col("cv")), 6).alias("d2"),
-        )
-        assigned = scored.groupBy("vec_id", "sub").agg(
-            F.expr("min_by(code, named_struct('d', d2, 'c', code)) AS code"),
-            F.expr("any_value(sv) AS sv"),
-        )
-        cent_long = (
-            assigned.select(
-                "sub", "code", F.posexplode("sv").alias("dim_idx", "val")
-            )
-            .groupBy("sub", "code", "dim_idx")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(25,6)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("centroid")
-            )
-        )
-        codebook = cent_long.groupBy("sub", "code").agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("dim_idx"), F.col("centroid")))
-                ),
-                lambda s: s.centroid,
-            ).alias("cv")
-        )
-    return codebook
+    """``_pq_train``'s codebook over the PQ_SAMPLE_N hash sample of
+    ``emb`` (vec_id, v) — constant training cost at any corpus size. A
+    serving path can then code a RESTRICTED vector set (e.g. only the
+    probed IVF cells read file-pruned from a maintained index) against
+    corpus-trained codebooks with ``_pq_code``."""
+    return _pq_train(_hash_sample(emb, _PQ_SALT, PQ_SAMPLE_N))[0]
 
 
 def _pq_code(emb: DataFrame, codebook: DataFrame) -> DataFrame:
@@ -853,25 +673,7 @@ def _pq_code(emb: DataFrame, codebook: DataFrame) -> DataFrame:
     and per-vector independent, so coding any SUBSET of the corpus
     (a probed cell's members) bit-equals the full pass restricted to
     that subset. Returns codes (vec_id, sub, code)."""
-    fsubs = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[F.slice("v", m * PQ_DSUB + 1, PQ_DSUB) for m in range(PQ_M)]
-            )
-        ).alias("sub", "sv"),
-    )
-    return (
-        fsubs.join(broadcast(codebook), "sub")
-        .select(
-            "vec_id",
-            "sub",
-            "code",
-            fround(_l2sq(F.col("sv"), F.col("cv")), 6).alias("d2"),
-        )
-        .groupBy("vec_id", "sub")
-        .agg(F.expr("min_by(code, named_struct('d', d2, 'c', code)) AS code"))
-    )
+    return _nearest_code(emb.select("vec_id", _pq_subs("v", "sv")), codebook)
 
 
 def _pq_sampled_oracle(
@@ -1104,12 +906,7 @@ def q_knn_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     block must be an ANN cell sized to worker memory; the blocked join
     never materializes cross-block pairs.
     """
-    import numpy as np
-    import pandas as pd
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
 
     def _topk(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vec_id"].to_numpy()
@@ -1153,63 +950,23 @@ def q_ann_batch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     |Q| times. At 100 TB the corpus is partitioned by cell, so each
     query batch touches nprobe/K of the data.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
-    cent_arr = (
-        _centroids_long(emb)
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("dim_idx"), F.col("centroid")))
-                ),
-                lambda s: s.centroid,
-            ).alias("cv")
-        )
-    )
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
     queries = emb.filter(F.col("vec_id").isin(*BATCH_QUERY_IDS)).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
-    routed = cent_arr.crossJoin(broadcast(queries)).select(
-        "q_id",
-        "qv",
-        "label",
-        fround(
-            _dot(F.col("cv"), F.col("qv"))
-            / (
-                F.sqrt(_dot(F.col("cv"), F.col("cv")))
-                * F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            ), 6).alias("ccos"),
+    routed = _cent_arr(emb).crossJoin(broadcast(queries)).select(
+        "q_id", "qv", "cell", _cos6("cv", "qv").alias("ccos")
     )
-    wr = Window.partitionBy("q_id").orderBy(
-        F.col("ccos").desc(), F.col("label")
-    )
-    probes = (
-        routed.withColumn("r", F.row_number().over(wr))
-        .filter(F.col("r") <= 2)
-        .select("q_id", "qv", F.col("label").alias("probe_label"))
+    probes = _top_per_query(routed, "ccos", "cell", 2, "r").select(
+        "q_id", "qv", F.col("cell").alias("probe_label")
     )
     cands = emb.join(
         broadcast(probes), F.col("label") == F.col("probe_label")
     ).filter(F.col("vec_id") != F.col("q_id"))
     scored = cands.select(
-        "q_id",
-        "vec_id",
-        "label",
-        fround(
-            _dot(F.col("v"), F.col("qv"))
-            / (
-                F.sqrt(_dot(F.col("v"), F.col("v")))
-                * F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            ), 6).alias("cosine"),
+        "q_id", "vec_id", "label", _cos6("v", "qv").alias("cosine")
     )
-    wk = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(wk)).filter(
-        F.col("rank") <= BATCH_TOP_K
-    )
+    return _top_per_query(scored, "cosine", "vec_id", BATCH_TOP_K, "rank")
 
 
 HN_K = 5  # hard negatives kept per query
@@ -1231,47 +988,20 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     One corpus join regardless of |Q|; candidates are negative by
     construction (foreign cell), so no post-filter rescans anything.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
-    cent_arr = (
-        _centroids_long(emb)
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("dim_idx"), F.col("centroid")))
-                ),
-                lambda s: s.centroid,
-            ).alias("cv")
-        )
-    )
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
     queries = emb.filter(F.col("vec_id").isin(*BATCH_QUERY_IDS)).select(
         F.col("vec_id").alias("q_id"),
         F.col("label").alias("q_label"),
         F.col("v").alias("qv"),
     )
     routed = (
-        cent_arr.crossJoin(broadcast(queries))
-        .filter(F.col("label") != F.col("q_label"))
-        .select(
-            "q_id",
-            "q_label",
-            "qv",
-            "label",
-            fround(
-                _dot(F.col("cv"), F.col("qv"))
-                / (
-                    F.sqrt(_dot(F.col("cv"), F.col("cv")))
-                    * F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                ), 6).alias("ccos"),
-        )
+        _cent_arr(emb)
+        .crossJoin(broadcast(queries))
+        .filter(F.col("cell") != F.col("q_label"))
+        .select("q_id", "q_label", "qv", "cell", _cos6("cv", "qv").alias("ccos"))
     )
-    wr = Window.partitionBy("q_id").orderBy(F.col("ccos").desc(), F.col("label"))
-    probes = (
-        routed.withColumn("r", F.row_number().over(wr))
-        .filter(F.col("r") <= HN_NPROBE)
-        .select("q_id", "q_label", "qv", F.col("label").alias("probe_label"))
+    probes = _top_per_query(routed, "ccos", "cell", HN_NPROBE, "r").select(
+        "q_id", "q_label", "qv", F.col("cell").alias("probe_label")
     )
     scored = emb.join(
         broadcast(probes), F.col("label") == F.col("probe_label")
@@ -1280,19 +1010,9 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_label",
         "vec_id",
         F.col("label").alias("neg_label"),
-        fround(
-            _dot(F.col("v"), F.col("qv"))
-            / (
-                F.sqrt(_dot(F.col("v"), F.col("v")))
-                * F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            ), 6).alias("cosine"),
+        _cos6("v", "qv").alias("cosine"),
     )
-    wk = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return scored.withColumn(
-        "rank", F.row_number().over(wk).cast("int")
-    ).filter(F.col("rank") <= HN_K)
+    return _top_per_query(scored, "cosine", "vec_id", HN_K, "rank")
 
 
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1360,8 +1080,6 @@ RP_IN_DIM = 64
 
 
 def _rp_sign(i: int, j: int) -> int:
-    import hashlib
-
     h = hashlib.md5(f"rp|{i}|{j}".encode()).hexdigest()
     return 1 if int(h[0], 16) < 8 else -1
 
@@ -1386,11 +1104,7 @@ def q_embedding_rp_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims are scalar COLUMNS p0..p7 (driver canonicalizer contract:
     scalars, never arrays).
     """
-    import math
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
     inv = F.lit(math.sqrt(RP_OUT_DIM))
     cols = []
     for j in range(RP_OUT_DIM):
@@ -1404,8 +1118,6 @@ def q_embedding_rp_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rp_oracle() -> str:
-    import math
-
     outs = []
     for j in range(RP_OUT_DIM):
         terms = " + ".join(
@@ -1421,54 +1133,56 @@ def _rp_oracle() -> str:
     )
 
 
-def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension feature QC over the embedding corpus: n, mean,
-    std, min, max for each of the 64 dimensions — the report that
-    catches dead dimensions (std≈0), scale drift between embedding
-    model versions, and clipping (hard min/max walls) before vectors
-    enter ANN indexes or quantizers.
+def _dims(emb: DataFrame, *keep: str) -> DataFrame:
+    """``emb``'s v flattened to ``(*keep, dim, x)`` rows, dim 1-based."""
+    return emb.select(*keep, F.posexplode("v").alias("dim0", "x")).select(
+        *keep, (F.col("dim0") + 1).cast("bigint").alias("dim"), "x"
+    )
 
-    One posexplode -> 64-group aggregate (map-side combinable; the
-    shuffle carries 64 keys x partial rows). Portability: the
-    variance uses the decimal-exact parallel sum/sum-of-squares
-    formula (the q_events_anomaly discipline — built-in stddev is
-    float-accumulation-order dependent, this is not).
-    """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_array("embedding").alias("v")
-    )
-    dims = emb.select(
-        F.posexplode("v").alias("dim0", "x")
-    ).select((F.col("dim0") + 1).cast("bigint").alias("dim"), "x")
-    xd = fround(F.col("x"), 9).cast("decimal(30,9)")
-    x2d = fround(F.col("x") * F.col("x"), 12).cast("decimal(30,12)")
-    stats = dims.groupBy("dim").agg(
+
+def _dim_moments(dims: DataFrame, *extra: F.Column) -> DataFrame:
+    """Per-dimension moments of ``dims`` (dim, x): count ``n``,
+    decimal-exact sums ``s`` / ``s2`` of the 9-dp x and the 12-dp x²
+    (the q_events_anomaly discipline — built-in stddev depends on the
+    float accumulation order, this parallel sum/sum-of-squares formula
+    does not), the 6-dp ``mean`` and ``std``, plus ``extra``
+    aggregates. One map-combinable 64-group aggregate."""
+    x, n, s, s2 = F.col("x"), F.col("n"), F.col("s"), F.col("s2")
+    return dims.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(xd).cast("double").alias("s"),
-        F.sum(x2d).cast("double").alias("s2"),
-        fround(F.min("x"), 6).alias("vmin"),
-        fround(F.max("x"), 6).alias("vmax"),
-    )
-    return stats.select(
-        "dim",
-        "n",
-        fround(F.col("s") / F.col("n"), 6).alias("mean"),
+        F.sum(fround(x, 9).cast("decimal(30,9)")).cast("double").alias("s"),
+        F.sum(fround(x * x, 12).cast("decimal(30,12)")).cast("double").alias("s2"),
+        *extra,
+    ).select(
+        "*",
+        fround(s / n, 6).alias("mean"),
         # greatest(0, ·): for a dead (constant) dimension the rounding
         # error of the 9-dp term dominates the 12-dp square's, so the
         # parallel-formula variance can come out ~-1e-10 — exactly the
         # input this report exists to catch. Clamp instead of NaN
         # (Spark) / hard sqrt-of-negative error (DuckDB).
         fround(
-            F.sqrt(
-                F.greatest(
-                    F.lit(0.0),
-                    (F.col("s2") - F.col("s") * F.col("s") / F.col("n"))
-                    / (F.col("n") - 1),
-                )
-            ), 6).alias("std"),
-        "vmin",
-        "vmax",
+            F.sqrt(F.greatest(F.lit(0.0), (s2 - s * s / n) / (n - 1))), 6
+        ).alias("std"),
     )
+
+
+def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-dimension feature QC over the embedding corpus: n, mean,
+    std, min, max for each of the 64 dimensions — the report that
+    catches dead dimensions (std≈0), scale drift between embedding
+    model versions, and clipping (hard min/max walls) before vectors
+    enter ANN indexes or quantizers. One posexplode -> 64-group
+    aggregate (map-side combinable; the shuffle carries 64 keys x
+    partial rows).
+    """
+    dims = _dims(load_embeddings(spark, sf_dir, "vec_id"))
+    stats = _dim_moments(
+        dims,
+        fround(F.min("x"), 6).alias("vmin"),
+        fround(F.max("x"), 6).alias("vmax"),
+    )
+    return stats.select("dim", "n", "mean", "std", "vmin", "vmax")
 
 
 QUERIES = {
@@ -1905,14 +1619,9 @@ def q_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; here it is an explicit vec_id semi-join so the plan is
     visible and oracle-checkable.
     """
-    emb3 = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
+    emb3 = load_embeddings(spark, sf_dir, "vec_id", "label")
     emb = emb3.select("vec_id", "v")
-    query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qv")
-    )
-    probes = _route_probes(_cent_arr(emb3), query, IVFPQ_NPROBE)
+    probes = _route_probes(_cent_arr(emb3), _query(emb, QUERY_VEC_ID), IVFPQ_NPROBE)
     members = (
         assign_ivf_cells(emb3)
         .join(broadcast(probes), "cell")
@@ -2039,44 +1748,18 @@ def q_ann_ivf_pq_sampled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end; the DuckDB twin composes the two sampled oracle
     chains through the same member hooks as the full-corpus IVFPQ.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_array("embedding").alias("v")
-    )
-    ksample = (
-        emb.withColumn("__sk", _kmeans_sample_key(F.col("vec_id")))
-        .orderBy("__sk", "vec_id")
-        .limit(KMEANS_SAMPLE_N)
-        .select("vec_id", "v")
-    )
-    cent_arr, _, _ = _lloyd(ksample)
-    query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qv")
-    )
-    probes = _route_probes(cent_arr, query, IVFPQ_NPROBE)
+    emb = load_embeddings(spark, sf_dir, "vec_id")
+    cent_arr, _, _ = _lloyd(_hash_sample(emb, _KMEANS_SALT, KMEANS_SAMPLE_N))
+    probes = _route_probes(cent_arr, _query(emb, QUERY_VEC_ID), IVFPQ_NPROBE)
     # full-corpus cell assignment: ONE broadcast pass, map-combinable
-    # argmax (ccos desc, lowest cell) — no window sort
-    fassign = (
-        emb.crossJoin(broadcast(cent_arr))
-        .select(
-            "vec_id",
-            "cell",
-            fround(
-                _dot(F.col("v"), F.col("cv"))
-                / (
-                    F.sqrt(_dot(F.col("v"), F.col("v")))
-                    * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-                ),
-                6,
-            ).alias("ccos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.expr("max_by(cell, named_struct('c', ccos, 'l', -cell)) AS cell")
-        )
+    # argmax — no window sort
+    members = (
+        _nearest_cell(emb, cent_arr)
+        .join(broadcast(probes), "cell")
+        .select("vec_id")
     )
-    members = fassign.join(broadcast(probes), "cell").select("vec_id")
-    codebook, codes = _pq_train_sampled(emb)
-    pcodes = codes.join(members, "vec_id", "left_semi")
+    codebook = _pq_codebook_sampled(emb)
+    pcodes = _pq_code(emb, codebook).join(members, "vec_id", "left_semi")
     return _pq_retrieve(emb, codebook, pcodes)
 
 
@@ -2180,40 +1863,15 @@ def q_embedding_whiten_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE they poison centroids, codebooks, or int8 scales; the
     row-grain companion of the column-grain ``embedding_dim_stats``.
 
-    Plan: the same posexplode -> 64-group decimal-exact stats
-    aggregate as dim_stats (map-combinable), broadcast back onto the
+    Plan: dim_stats' ``_dim_moments`` aggregate, broadcast back onto the
     (vec, dim) grid (64 rows — KBs at any corpus size), z computed
     map-side on 6-dp-rounded mean/std (both engines agree at the
     outlier boundary), one map-combinable per-vector aggregate. Dead
     dimensions (std=0) contribute z=0 by convention.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_array("embedding").alias("v")
-    )
-    dims = emb.select("vec_id", F.posexplode("v").alias("dim0", "x")).select(
-        "vec_id", (F.col("dim0") + 1).cast("bigint").alias("dim"), "x"
-    )
-    xd = fround(F.col("x"), 9).cast("decimal(30,9)")
-    x2d = fround(F.col("x") * F.col("x"), 12).cast("decimal(30,12)")
-    stats = (
-        dims.groupBy("dim")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(xd).cast("double").alias("s"),
-            F.sum(x2d).cast("double").alias("s2"),
-        )
-        .select(
-            "dim",
-            fround(F.col("s") / F.col("n"), 6).alias("mu"),
-            fround(
-                F.sqrt(
-                    F.greatest(
-                        F.lit(0.0),
-                        (F.col("s2") - F.col("s") * F.col("s") / F.col("n"))
-                        / (F.col("n") - 1),
-                    )
-                ), 6).alias("sd"),
-        )
+    dims = _dims(load_embeddings(spark, sf_dir, "vec_id"), "vec_id")
+    stats = _dim_moments(dims).select(
+        "dim", F.col("mean").alias("mu"), F.col("std").alias("sd")
     )
     z = F.when(
         F.col("sd") > 0, fround((F.col("x") - F.col("mu")) / F.col("sd"), 6)
@@ -2298,17 +1956,16 @@ def q_embedding_matryoshka_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     a = emb.filter(F.col("vec_id") % 2 == 0).select(
         (F.col("vec_id") / 2).cast("bigint").alias("pair_id"),
-        _as_double_array("embedding").alias("va"),
+        as_double_array("embedding").alias("va"),
     )
     b = emb.filter(F.col("vec_id") % 2 == 1).select(
         ((F.col("vec_id") - 1) / 2).cast("bigint").alias("pair_id"),
-        _as_double_array("embedding").alias("vb"),
+        as_double_array("embedding").alias("vb"),
     )
 
     def _cos(x: F.Column, y: F.Column) -> F.Column:
-        dot = _dot(x, y)
-        den = F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y))
-        return F.when(den > 0, fround(dot / den, 6)).otherwise(F.lit(0.0))
+        den = F.sqrt(dot(x, x)) * F.sqrt(dot(y, y))
+        return F.when(den > 0, fround(dot(x, y) / den, 6)).otherwise(F.lit(0.0))
 
     pairs = a.join(b, "pair_id").withColumn(
         "cos_full", _cos(F.col("va"), F.col("vb"))
@@ -2413,76 +2070,78 @@ def _pc_assemble(frame: DataFrame, dim_col: str, val_col: str) -> DataFrame:
     )
 
 
+def _sum9(x: F.Column) -> F.Column:
+    """Decimal-exact sum of ``x`` staged to 9 dp, as a double."""
+    return F.sum(fround(x, 9).cast("decimal(28,9)")).cast("double")
+
+
+def _power_step(cent: DataFrame, vec: DataFrame) -> DataFrame:
+    """One staged power-iteration pass s = X_cᵀ(X_c v) over the
+    centered rows ``cent`` (xc) against the 64-row iterate ``vec``
+    (dim, val): the iterate is collapsed to a 1-row array and
+    BROADCAST, each row's projection is one in-order fold dot staged to
+    6 dp, and the per-term products are 9-dp staged into a 64-group
+    map-combinable DECIMAL(28,9) sum. Returns (dim, s6) on the 6-dp
+    grid; nothing shuffles on vec_id."""
+    va = _pc_assemble(vec, "dim", "val")
+    proj = cent.crossJoin(F.broadcast(va)).select(
+        "xc", fround(dot(F.col("xc"), F.col("arr")), 6).alias("p")
+    )
+    return (
+        proj.select(F.posexplode("xc").alias("dim", "xcv"), "p")
+        .groupBy("dim")
+        .agg(_sum9(F.col("p") * F.col("xcv")).alias("s"))
+        .select("dim", fround(F.col("s"), 6).alias("s6"))
+    )
+
+
+def _normalize6(frame: DataFrame, col: str) -> tuple[DataFrame, DataFrame]:
+    """``frame`` (dim, col) scaled to unit norm on the 6-dp grid:
+    returns (iterate (dim, val), 1-row nrm)."""
+    # DECIMAL(18,6) so the square stays at precision 37: at (25,6)
+    # the product needs 51 digits and DuckDB silently falls back to
+    # order-dependent DOUBLE summation (found by bitcheck: 1-ulp nrm
+    # drift -> a 6-dp boundary flip in round 2)
+    c = F.col(col).cast("decimal(18,6)")
+    nrm = frame.agg(F.sqrt(F.sum(c * c).cast("double")).alias("nrm"))
+    # zero-variance corpus (all rows identical): nrm = 0 would put
+    # 0/0 NaN into fround, whose floor() is 0 on Spark but NaN in
+    # DuckDB — guard to a zero iterate in both engines
+    vec = frame.crossJoin(F.broadcast(nrm)).select(
+        "dim",
+        F.when(F.col("nrm") > 0, fround(F.col(col) / F.col("nrm"), 6))
+        .otherwise(F.lit(0.0))
+        .alias("val"),
+    )
+    return vec, nrm
+
+
 def _power_iterate(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Shared centering + PCA_POWER_ROUNDS staged power-iteration chain:
     returns (centered rows, final v frame, final nrm 1-row, n 1-row).
-    Used by q_embedding_top_pc (loadings) and q_embedding_anisotropy_qc
-    (explained-variance share)."""
+    Used by q_embedding_top_pc (loadings), q_embedding_anisotropy_qc
+    (explained-variance share) and q_embedding_pc2 (deflation basis)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
-            _as_double_array("embedding"), lambda x: fround(x, 6)
+            as_double_array("embedding"), lambda x: fround(x, 6)
         ).alias("x6"),
     )
     n1 = emb.agg(F.count(F.lit(1)).cast("bigint").alias("n_vectors"))
-    dims = emb.select(F.posexplode("x6").alias("dim", "x"))
-    mu = dims.groupBy("dim").agg(
-        fround(
-            F.sum(F.col("x").cast("decimal(25,6)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("m")
+    mu = _means(emb, "x6").select(
+        "dim_idx", fround(F.col("centroid"), 6).alias("m")
     )
-    mua = _pc_assemble(mu, "dim", "m")
+    mua = _pc_assemble(mu, "dim_idx", "m")
     cent = emb.crossJoin(F.broadcast(mua)).select(
         "vec_id", F.zip_with("x6", "arr", lambda a, b: a - b).alias("xc")
     )
     v = spark.range(DIM).select(
         F.col("id").cast("int").alias("dim"), F.lit(0.125).alias("val")
     )
-    nrm = None
     for _ in range(PCA_POWER_ROUNDS):
-        va = _pc_assemble(v, "dim", "val")
-        proj = cent.crossJoin(F.broadcast(va)).select(
-            "xc", fround(_dot(F.col("xc"), F.col("arr")), 6).alias("p")
-        )
-        terms = proj.select(F.posexplode("xc").alias("dim", "xcv"), "p")
-        s6 = (
-            terms.groupBy("dim")
-            .agg(
-                F.sum(
-                    fround(F.col("p") * F.col("xcv"), 9).cast("decimal(28,9)")
-                )
-                .cast("double")
-                .alias("s")
-            )
-            .select("dim", fround(F.col("s"), 6).alias("s6"))
-        )
-        # DECIMAL(18,6) so the square stays at precision 37: at (25,6)
-        # the product needs 51 digits and DuckDB silently falls back to
-        # order-dependent DOUBLE summation (found by bitcheck: 1-ulp nrm
-        # drift -> a 6-dp boundary flip in round 2)
-        nrm = s6.agg(
-            F.sqrt(
-                F.sum(
-                    F.col("s6").cast("decimal(18,6)")
-                    * F.col("s6").cast("decimal(18,6)")
-                ).cast("double")
-            ).alias("nrm")
-        )
-        # zero-variance corpus (all rows identical): nrm = 0 would put
-        # 0/0 NaN into fround, whose floor() is 0 on Spark but NaN in
-        # DuckDB — guard to a zero iterate in both engines
-        v = s6.crossJoin(F.broadcast(nrm)).select(
-            "dim",
-            F.when(
-                F.col("nrm") > 0, fround(F.col("s6") / F.col("nrm"), 6)
-            )
-            .otherwise(F.lit(0.0))
-            .alias("val"),
-        )
+        v, nrm = _normalize6(_power_step(cent, v), "s6")
     return cent, v, nrm, n1
 
 
@@ -2500,18 +2159,15 @@ def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding_whiten_qc's per-dim z-scores cannot see it because it
     lives OFF-axis).
 
-    Scale shape: per round, the v vector is a 64-row frame collapsed
-    to a 1-row array and BROADCAST — the corpus pass is map-side (one
-    in-order fold dot per row, the engine-portable _dot), followed by
-    a 64-group map-combinable aggregate; nothing shuffles on vec_id,
-    no round's cost exceeds one scan + a KB-sized exchange. Mean
-    centering is one posexplode aggregate staged to the 6-dp grid.
-    Determinism: inputs 6-dp floor-staged, projection 6-dp, per-term
-    products 9-dp into DECIMAL(28,9) sums, the iterate re-staged to
-    the 6-dp grid each round (engine-portable like the logistic
-    trainer's coefficients); deterministic all-ones/8 init (unit norm:
-    64 dims), so the sign is pinned. Eigenvalue = ||X_cᵀX_c v||/n, the
-    Rayleigh estimate of the top covariance eigenvalue.
+    Scale shape: each round is one ``_power_step`` corpus pass plus a
+    ``_normalize6`` on the 64-row grid — no round's cost exceeds one
+    scan + a KB-sized exchange. Mean centering is one posexplode
+    aggregate staged to the 6-dp grid. Inputs are 6-dp floor-staged
+    and the iterate is re-staged to the 6-dp grid each round
+    (engine-portable like the logistic trainer's coefficients);
+    deterministic all-ones/8 init (unit norm: 64 dims), so the sign is
+    pinned. Eigenvalue = ||X_cᵀX_c v||/n, the Rayleigh estimate of the
+    top covariance eigenvalue.
     """
     cent, v, nrm, n1 = _power_iterate(spark, sf_dir)
     return (
@@ -2534,7 +2190,7 @@ QUERIES["embedding_top_pc"] = q_embedding_top_pc
 def _top_pc_oracle() -> str:
     """DuckDB twin: the same power-iteration rounds unrolled as CTEs
     (the _kmeans_oracle discipline), list_dot_product == the in-order
-    fold of _dot."""
+    fold of vectors.dot."""
     ctes = [
         """emb AS (
             SELECT vec_id,
@@ -2630,7 +2286,7 @@ def q_embedding_anisotropy_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cent, _v, nrm, n1 = _power_iterate(spark, sf_dir)
     tr = cent.select(
-        fround(_dot(F.col("xc"), F.col("xc")), 6).alias("q")
+        fround(dot(F.col("xc"), F.col("xc")), 6).alias("q")
     ).agg(
         F.sum(F.col("q").cast("decimal(25,6)")).cast("double").alias("sq")
     )
@@ -2713,9 +2369,8 @@ def q_embedding_pc2(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-row flat. The centered corpus is deliberately NOT cached (the
     top_pc posture: re-scanning beats materializing |corpus| x 64
     doubles at scale).
-    Determinism: every stage mirrors the v1 chain (6-dp projections,
-    9-dp products into DECIMAL(28,9), DECIMAL(18,6) norm squares,
-    re-staged iterate), the deflation coefficient and subtraction are
+    Determinism: each round runs the v1 chain's ``_power_step`` and
+    ``_normalize6``, the deflation coefficient and subtraction are
     6-dp staged, init is the alternating ±1/8 unit vector (orthogonal
     to v1's all-ones/8 init, sign pinned). Output: the 64 loadings,
     the Rayleigh eigenvalue2 = ||deflated s||/n, and dot_v1_v2 — the
@@ -2732,64 +2387,22 @@ def q_embedding_pc2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(-0.125))
         .alias("val"),
     )
-    nrm2 = None
     for _ in range(PCA_POWER_ROUNDS):
-        ua = _pc_assemble(u, "dim", "val")
-        proj = cent.crossJoin(F.broadcast(ua)).select(
-            "xc", fround(_dot(F.col("xc"), F.col("arr")), 6).alias("p")
-        )
-        terms = proj.select(F.posexplode("xc").alias("dim", "xcv"), "p")
-        s6 = (
-            terms.groupBy("dim")
-            .agg(
-                F.sum(
-                    fround(F.col("p") * F.col("xcv"), 9).cast("decimal(28,9)")
-                )
-                .cast("double")
-                .alias("s")
-            )
-            .select("dim", fround(F.col("s"), 6).alias("s6"))
-            .localCheckpoint(eager=True)
-        )
+        s6 = _power_step(cent, u).localCheckpoint(eager=True)
         j = s6.join(v1r, "dim")
-        c1 = j.agg(
-            F.sum(
-                fround(F.col("s6") * F.col("v1"), 9).cast("decimal(28,9)")
-            )
-            .cast("double")
-            .alias("c")
-        ).select(fround(F.col("c"), 6).alias("c1"))
+        c1 = j.agg(_sum9(F.col("s6") * F.col("v1")).alias("c")).select(
+            fround(F.col("c"), 6).alias("c1")
+        )
         d6 = j.crossJoin(F.broadcast(c1)).select(
             "dim",
             fround(
                 F.col("s6") - fround(F.col("c1") * F.col("v1"), 6), 6
             ).alias("d6"),
         )
-        nrm2 = d6.agg(
-            F.sqrt(
-                F.sum(
-                    F.col("d6").cast("decimal(18,6)")
-                    * F.col("d6").cast("decimal(18,6)")
-                ).cast("double")
-            ).alias("nrm")
-        )
-        u = d6.crossJoin(F.broadcast(nrm2)).select(
-            "dim",
-            F.when(
-                F.col("nrm") > 0, fround(F.col("d6") / F.col("nrm"), 6)
-            )
-            .otherwise(F.lit(0.0))
-            .alias("val"),
-        )
+        u, nrm2 = _normalize6(d6, "d6")
     ortho = (
         u.join(v1r, "dim")
-        .agg(
-            F.sum(
-                fround(F.col("val") * F.col("v1"), 9).cast("decimal(28,9)")
-            )
-            .cast("double")
-            .alias("c")
-        )
+        .agg(_sum9(F.col("val") * F.col("v1")).alias("c"))
         .select(fround(F.col("c"), 6).alias("dot_v1_v2"))
     )
     return (
@@ -2972,9 +2585,7 @@ def q_embedding_ivf_balance_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one double division from exact integers, fround-staged. The QC
     output is grid-sized at any corpus scale.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
-    )
+    emb = load_embeddings(spark, sf_dir, "vec_id", "label")
     counts = (
         assign_ivf_cells(emb)
         .groupBy("cell")
@@ -3220,9 +2831,8 @@ def q_embedding_drift_mmd(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE expressions on exact-sum-derived doubles re-floored to 12 dp
     and DECIMAL-summed, so the 4160-term reductions are
     order-independent; 6-dp floor on the published statistics."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("label").cast("bigint").alias("label"),
-        _as_double_array("embedding").alias("v"),
+    emb = load_embeddings(
+        spark, sf_dir, F.col("label").cast("bigint").alias("label")
     )
     return _drift_mmd_from_moments(_drift_moment_grid(emb))
 

@@ -4427,13 +4427,10 @@ def maintain_ivf_index(
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings table as the streaming ANN/drift sinks take it:
     (vec_id, label bigint, v array<double>)."""
-    from ..catalog import load_table
-    from ..operators.similarity import _as_double_array
+    from ..operators.similarity import load_embeddings
 
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("label").cast("bigint").alias("label"),
-        _as_double_array("embedding").alias("v"),
+    return load_embeddings(
+        spark, sf_dir, "vec_id", F.col("label").cast("bigint").alias("label")
     )
 
 
@@ -4456,24 +4453,20 @@ def _replayed_ivf_index(spark: SparkSession, sf_dir: str) -> str | None:
 def _maintained_ivf_probe(spark: SparkSession, work: str, nprobe: int):
     """Serve-side coarse routing off the MAINTAINED index: assemble
     centroid arrays from the additive grid through the shared
-    ``_cent_arr_from_long``, read the query vector, route ``nprobe``
-    cells through the shared ``_route_probes``. Returns (vectors
-    lakehouse table, 1-row query df, probed cell-id list)."""
+    ``_assemble``, read the query vector, route ``nprobe`` cells
+    through the shared ``_route_probes``. Returns (vectors lakehouse
+    table, 1-row query df, probed cell-id list)."""
     from ..load.lakehouse import LakehouseTable
-    from ..operators.similarity import (
-        QUERY_VEC_ID,
-        _cent_arr_from_long,
-        _route_probes,
-    )
+    from ..operators.similarity import QUERY_VEC_ID, _assemble, _route_probes
 
     vectors = LakehouseTable(spark, f"{work}/vectors")
     grid = _cent_grid_totals(spark, f"{work}/cents")
     cent_long = grid.select(
-        "label",
+        F.col("label").alias("cell"),
         "dim_idx",
         (F.col("s").cast("double") / F.col("n")).alias("centroid"),
     )
-    cent_arr = _cent_arr_from_long(cent_long)
+    cent_arr = _assemble(cent_long, "cell")
     # read_where_in is exact (residual semi-join), not a superset read
     query = vectors.read_where_in("vec_id", [QUERY_VEC_ID]).select(
         F.col("v").alias("qv")
@@ -4489,7 +4482,7 @@ def q_streaming_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay the embeddings table in 4 vec_id-range micro-batches
     through ``maintain_ivf_index`` (with a mid-stream Z-order cycle),
     then SERVE the standard query — derive the centroid arrays from
-    the MAINTAINED grid via the shared ``_cent_arr_from_long``
+    the MAINTAINED grid via the shared ``_assemble``
     assembly, route nprobe=2 through the shared ``_route_probes``,
     read ONLY the probed cells from the maintained vector table via
     file-pruned ``read_where_in``, and rank through the shared

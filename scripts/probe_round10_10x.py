@@ -40,17 +40,19 @@ def _time(fn):
 
 
 def probe_sampled_ivfpq(spark) -> None:
+    from retail_sales_etl_spark.functions.vectors import as_double_array
     from retail_sales_etl_spark.operators.similarity import (
+        _KMEANS_SALT,
         KMEANS_SAMPLE_N,
-        _as_double_array,
-        _kmeans_sample_key,
+        _hash_sample,
         _lloyd,
+        _pq_code,
+        _pq_codebook_sampled,
         _pq_train,
-        _pq_train_sampled,
     )
 
     emb1 = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", _as_double_array("embedding").alias("v")
+        "vec_id", as_double_array("embedding").alias("v")
     )
     n1 = emb1.count()
     copies = spark.range(COPIES).select(F.col("id").alias("copy"))
@@ -70,16 +72,9 @@ def probe_sampled_ivfpq(spark) -> None:
     n10 = emb10.count()
 
     def train_both(emb):
-        sample = (
-            emb.withColumn("__sk", _kmeans_sample_key(F.col("vec_id")))
-            .orderBy("__sk", "vec_id")
-            .limit(KMEANS_SAMPLE_N)
-            .select("vec_id", "v")
-        )
-        cent_arr, _, _ = _lloyd(sample)
+        cent_arr, _, _ = _lloyd(_hash_sample(emb, _KMEANS_SALT, KMEANS_SAMPLE_N))
         coarse = cent_arr.collect()  # K x dim — KBs
-        codebook, _codes = _pq_train_sampled(emb)
-        pq = codebook.collect()  # M x K x dsub — KBs
+        pq = _pq_codebook_sampled(emb).collect()  # M x K x dsub — KBs
         return len(coarse), len(pq)
 
     def train_full_pq(emb):
@@ -107,38 +102,15 @@ def probe_sampled_ivfpq(spark) -> None:
         query = emb.filter(F.col("vec_id") == S.QUERY_VEC_ID).select(
             F.col("v").alias("qv")
         )
-        ksample = (
-            emb.withColumn("__sk", _kmeans_sample_key(F.col("vec_id")))
-            .orderBy("__sk", "vec_id")
-            .limit(KMEANS_SAMPLE_N)
-            .select("vec_id", "v")
-        )
-        cent_arr, _, _ = _lloyd(ksample)
+        cent_arr, _, _ = _lloyd(_hash_sample(emb, _KMEANS_SALT, KMEANS_SAMPLE_N))
         probes = S._route_probes(cent_arr, query, S.IVFPQ_NPROBE)
-        fassign = (
-            emb.crossJoin(F.broadcast(cent_arr))
-            .select(
-                "vec_id",
-                "cell",
-                S.fround(
-                    S._dot(F.col("v"), F.col("cv"))
-                    / (
-                        F.sqrt(S._dot(F.col("v"), F.col("v")))
-                        * F.sqrt(S._dot(F.col("cv"), F.col("cv")))
-                    ),
-                    6,
-                ).alias("ccos"),
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.expr(
-                    "max_by(cell, named_struct('c', ccos, 'l', -cell)) AS cell"
-                )
-            )
+        members = (
+            S._nearest_cell(emb, cent_arr)
+            .join(F.broadcast(probes), "cell")
+            .select("vec_id")
         )
-        members = fassign.join(F.broadcast(probes), "cell").select("vec_id")
-        codebook, codes = _pq_train_sampled(emb)
-        pcodes = codes.join(members, "vec_id", "left_semi")
+        codebook = _pq_codebook_sampled(emb)
+        pcodes = _pq_code(emb, codebook).join(members, "vec_id", "left_semi")
         return S._pq_retrieve(emb, codebook, pcodes).collect()
 
     r1, t_q1 = _time(lambda: retrieve(emb1))

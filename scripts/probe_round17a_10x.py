@@ -59,10 +59,10 @@ def main() -> None:
     spark = get_spark(app_name="probe-round17a-10x")
     spark.sparkContext.setLogLevel("ERROR")
     from retail_sales_etl_spark.catalog import load_table
+    from retail_sales_etl_spark.functions.vectors import as_double_array
     from retail_sales_etl_spark.operators.similarity import (
         IVFPQ_NPROBE,
         QUERY_VEC_ID,
-        _as_double_array,
         _cent_arr,
         _pq_code,
         _pq_codebook_sampled,
@@ -84,7 +84,7 @@ def main() -> None:
         emb3 = load_table(spark, d10, "embeddings").select(
             "vec_id",
             F.col("label").cast("bigint").alias("label"),
-            _as_double_array("embedding").alias("v"),
+            as_double_array("embedding").alias("v"),
         )
         emb = emb3.select("vec_id", "v")
         query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(

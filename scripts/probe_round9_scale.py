@@ -39,16 +39,17 @@ def _time(fn):
 
 
 def probe_sampled_kmeans(spark) -> None:
+    from retail_sales_etl_spark.functions.vectors import as_double_array
     from retail_sales_etl_spark.operators.similarity import (
+        _KMEANS_SALT,
         KMEANS_SAMPLE_N,
-        _as_double_array,
-        _kmeans_sample_key,
+        _hash_sample,
         _lloyd,
         q_kmeans_sampled_assign,
     )
 
     emb1 = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", _as_double_array("embedding").alias("v")
+        "vec_id", as_double_array("embedding").alias("v")
     )
     n1 = emb1.count()
     copies = spark.range(COPIES).select(F.col("id").alias("copy"))
@@ -66,13 +67,7 @@ def probe_sampled_kmeans(spark) -> None:
     n10 = emb10.count()
 
     def train(emb):
-        sample = (
-            emb.withColumn("__sk", _kmeans_sample_key(F.col("vec_id")))
-            .orderBy("__sk", "vec_id")
-            .limit(KMEANS_SAMPLE_N)
-            .select("vec_id", "v")
-        )
-        cent_arr, _, _ = _lloyd(sample)
+        cent_arr, _, _ = _lloyd(_hash_sample(emb, _KMEANS_SALT, KMEANS_SAMPLE_N))
         return cent_arr.collect()  # K x dim — KBs
 
     _, t_train1 = _time(lambda: train(emb1))

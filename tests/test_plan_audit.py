@@ -387,13 +387,13 @@ def test_pq_codebook_init_is_takeordered_not_corpus_window_sort(spark, sf_dir):
     — that shape sorts the whole corpus inside each of the M window
     partitions before training even starts."""
     from retail_sales_etl_spark.catalog import load_table
+    from retail_sales_etl_spark.functions.vectors import as_double_array
     from retail_sales_etl_spark.operators.similarity import (
-        _as_double_array,
         _pq_train,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_array("embedding").alias("v")
+        "vec_id", as_double_array("embedding").alias("v")
     )
     codebook, _ = _pq_train(emb)
     plan = _formatted_plan(codebook)

@@ -193,3 +193,37 @@ def test_rows_only_entries_count_as_proven(tmp_path):
     proven, ever_green, _forced = registry._proof_sets_in(str(tmp_path))
     assert no_oracle_name in ever_green and no_oracle_name in proven
     assert oracle_name not in ever_green
+
+
+def test_script_package_imports_resolve():
+    """Every ``from retail_sales_etl_spark… import name`` in
+    ``scripts/*.py`` names something the package still has, so a
+    rename or removal in the package cannot silently break a script
+    (the scripts only fail when run, and no test runs them)."""
+    import ast
+    import glob
+    import importlib
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    missing = []
+    for path in sorted(glob.glob(os.path.join(root, "scripts", "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.module
+                and node.module.split(".")[0] == "retail_sales_etl_spark"
+            ):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                if hasattr(mod, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ImportError:
+                    missing.append(
+                        f"{os.path.basename(path)}: {node.module}.{alias.name}"
+                    )
+    assert not missing, missing

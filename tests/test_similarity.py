@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from retail_sales_etl_spark.operators import similarity
 from retail_sales_etl_spark.operators.similarity import ivf_topk
 
 
@@ -48,13 +49,13 @@ def test_query_cluster_centroid_is_nearest(boundary_emb):
 def test_assign_ivf_cells_is_total_and_single(spark, sf_dir):
     """Every vector gets exactly one computed cell."""
     from retail_sales_etl_spark.catalog import load_table
+    from retail_sales_etl_spark.functions.vectors import as_double_array
     from retail_sales_etl_spark.operators.similarity import (
-        _as_double_array,
         assign_ivf_cells,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
+        "vec_id", "label", as_double_array("embedding").alias("v")
     )
     cells = assign_ivf_cells(emb).collect()
     assert len(cells) == emb.count()
@@ -113,19 +114,19 @@ def test_pq_codes_shape_and_adc_recall(spark, sf_dir):
     import numpy as np
 
     from retail_sales_etl_spark.catalog import load_table
+    from retail_sales_etl_spark.functions.vectors import as_double_array
     from retail_sales_etl_spark.operators.similarity import (
         PQ_K,
         PQ_M,
         QUERY_VEC_ID,
         TOP_K,
-        _as_double_array,
         _pq_train,
         q_ann_pq_topk,
     )
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_array("embedding").alias("v")
+        "vec_id", as_double_array("embedding").alias("v")
     )
     n_vecs = emb.count()
     _, codes = _pq_train(emb)
@@ -182,9 +183,9 @@ def test_rp_project_preserves_norms_on_average(spark, sf_dir):
     per-vector range ~[0.15, 2.94] on the deterministic matrix)."""
     import numpy as np
 
+    from retail_sales_etl_spark.functions.vectors import as_double_array
     from retail_sales_etl_spark.operators.similarity import (
         RP_OUT_DIM,
-        _as_double_array,
         q_embedding_rp_project,
     )
 
@@ -195,7 +196,7 @@ def test_rp_project_preserves_norms_on_average(spark, sf_dir):
     emb = {
         r["vec_id"]: np.array(r["v"])
         for r in spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select("vec_id", _as_double_array("embedding").alias("v"))
+        .select("vec_id", as_double_array("embedding").alias("v"))
         .collect()
     }
     ratios = [
@@ -278,6 +279,7 @@ def test_ivf_pq_candidates_stay_in_probed_cells(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from retail_sales_etl_spark.catalog import load_table
+    from retail_sales_etl_spark.functions.vectors import as_double_array
     from retail_sales_etl_spark.operators.similarity import (
         IVFPQ_NPROBE,
         QUERY_VEC_ID,
@@ -285,11 +287,10 @@ def test_ivf_pq_candidates_stay_in_probed_cells(spark, sf_dir):
         assign_ivf_cells,
         q_ann_ivf_pq_topk,
         q_ann_topk,
-        _as_double_array,
     )
 
     emb3 = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_array("embedding").alias("v")
+        "vec_id", "label", as_double_array("embedding").alias("v")
     )
     cells = {
         r["vec_id"]: r["cell"] for r in assign_ivf_cells(emb3).collect()
@@ -660,3 +661,135 @@ def test_embedding_drift_mmd_crafted_shift_and_identity(spark, tmp_path):
     # identical distributions: exactly zero on both kernels
     assert got[(0, 2)].mmd2_linear == 0.0
     assert got[(0, 2)].mmd2_quadratic == 0.0
+
+
+@pytest.fixture(scope="module")
+def empty_corpus_dir(spark, tmp_path_factory):
+    """A 0-row ``embeddings`` table (the generator's schema) and a 0-row
+    ``documents`` table for the hybrid lexical member."""
+    d = str(tmp_path_factory.mktemp("empty_embeddings"))
+    spark.createDataFrame(
+        [], "vec_id long, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    spark.createDataFrame(
+        [], "doc_id long, text string, lang string, source string, "
+            "n_chars long"
+    ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+    return d
+
+
+@pytest.mark.parametrize("name", sorted(similarity.QUERIES))
+def test_similarity_entry_on_empty_corpus(spark, empty_corpus_dir, name):
+    """Every similarity entry over 0-row tables returns the same
+    columns and rows as its DuckDB oracle over the same tables — the
+    vector helpers' empty-input path (most entries return no rows; the
+    recall report keeps one NULL-hit row per method and the anisotropy
+    QC one row of NULL moments)."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("embeddings", "documents"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{empty_corpus_dir}/{t}.parquet/*.parquet')"
+        )
+    got = similarity.QUERIES[name](spark, empty_corpus_dir)
+    want = con.execute(similarity.ORACLE[name])
+    cols = sorted(got.columns)
+    want_cols = [c[0] for c in want.description]
+    assert cols == sorted(want_cols)
+    order = [want_cols.index(c) for c in cols]
+    got_rows = sorted((tuple(r[c] for c in cols) for r in got.collect()), key=repr)
+    want_rows = sorted(
+        (tuple(r[i] for i in order) for r in want.fetchall()), key=repr
+    )
+    assert got_rows == want_rows
+
+
+def test_one_vector_kernel_site():
+    """Each vector mechanism has one home: the in-order dot fold lives
+    only in ``functions/vectors.py`` (across the whole package), and in
+    ``similarity.py`` the centroid array assembly, the PQ subvector
+    split, the md5 hash sample and the nearest-centroid / nearest-code
+    argmaxes each sit in one helper; the only hand-built cosine left is
+    matryoshka's zero-norm-guarded ``_cos``."""
+    import ast
+    import inspect
+    import pathlib
+
+    import retail_sales_etl_spark
+
+    def calls(tree):
+        """(enclosing function, Call node) for every call in ``tree``."""
+        out = []
+
+        def visit(node, fn):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, ast.FunctionDef):
+                    visit(child, child.name)
+                    continue
+                if isinstance(child, ast.Call):
+                    out.append((fn, child))
+                visit(child, fn)
+
+        visit(tree, "<module>")
+        return out
+
+    def name(call):
+        return ast.unparse(call.func)
+
+    pkg = pathlib.Path(retail_sales_etl_spark.__file__).parent
+    folds = []
+    for path in sorted(pkg.rglob("*.py")):
+        for fn, c in calls(ast.parse(path.read_text())):
+            if (
+                name(c).endswith("aggregate")
+                and c.args
+                and isinstance(c.args[0], ast.Call)
+                and name(c.args[0]).endswith("zip_with")
+            ):
+                folds.append((path.relative_to(pkg).as_posix(), fn))
+    assert folds == [("functions/vectors.py", "dot")], folds
+
+    tree = ast.parse(inspect.getsource(similarity))
+    defined = {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+    assert not defined & {"_dot", "_as_double_array"}
+    assert not hasattr(similarity, "_dot")
+    assert not hasattr(similarity, "_as_double_array")
+
+    sites = {
+        "sqrt(dot(": set(),
+        "sort_array": set(),
+        "PQ slice": set(),
+        "md5": set(),
+        "max_by/min_by": set(),
+    }
+    for fn, c in calls(tree):
+        called = name(c)
+        if (
+            called == "F.sqrt"
+            and c.args
+            and isinstance(c.args[0], ast.Call)
+            and name(c.args[0]) in ("dot", "_dot")
+        ):
+            sites["sqrt(dot("].add(fn)
+        if called == "F.sort_array":
+            sites["sort_array"].add(fn)
+        if called == "F.slice" and "PQ_DSUB" in ast.unparse(c):
+            sites["PQ slice"].add(fn)
+        if called == "F.md5":
+            sites["md5"].add(fn)
+        if called in ("F.max_by", "F.min_by") or any(
+            isinstance(a, ast.Constant)
+            and isinstance(a.value, str)
+            and ("max_by(" in a.value or "min_by(" in a.value)
+            for a in c.args
+        ):
+            sites["max_by/min_by"].add(fn)
+    assert sites == {
+        "sqrt(dot(": {"_cos"},
+        "sort_array": {"_assemble"},
+        "PQ slice": {"_pq_subs"},
+        "md5": {"_hash_sample"},
+        "max_by/min_by": {"_nearest_cell", "_nearest_code"},
+    }, sites
