@@ -820,11 +820,13 @@ def q_multimodal_phash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_ppm(load_table(spark, sf_dir, "documents"))
     ).select("phash")
     n_bits = PHASH_W * PHASH_H
-    # Persisted because BOTH join inputs consume it: a shuffle-side
-    # and a broadcast-side exchange cannot be unified by ReuseExchange,
-    # so without the cache the corpus decode + census would run twice.
-    # The cached frame is <= 4096 rows — negligible for any session.
-    grid = hashed.groupBy("phash").agg(F.count(F.lit(1)).alias("n")).persist()
+    # BOTH join inputs consume the census: a shuffle-side and a
+    # broadcast-side exchange cannot be unified by ReuseExchange, so a
+    # lazy grid would run the corpus decode + census twice. It is
+    # <= 4096 rows, so it is collected once and re-enters as a local
+    # relation — nothing stays cached after the call.
+    census = hashed.groupBy("phash").agg(F.count(F.lit(1)).alias("n"))
+    grid = spark.createDataFrame(census.collect(), census.schema)
     # 13 probe directions per bucket: mask 0 is the identity probe
     # (d=0, within-bucket), masks 2^i the bit flips (d=1). A bit flip
     # is probed only from the bit-UNSET side — the partner has it set

@@ -2586,18 +2586,24 @@ def q_embedding_ivf_balance_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is grid-sized at any corpus scale.
     """
     emb = load_embeddings(spark, sf_dir, "vec_id", "label")
+    cent = _cent_arr(emb)
     counts = (
-        assign_ivf_cells(emb)
+        _nearest_cell(emb, cent)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_assigned"))
     )
     # n_cells comes from the CENTROID table, not the assigned cells: a
     # cell the argmax never routes to is exactly the dead cell this QC
     # exists to expose (emitted with n_vectors = 0), and counting only
-    # occupied cells would flatter load_factor toward 1.0.
-    grid = (
-        _cent_arr(emb)
-        .select("cell")
+    # occupied cells would flatter load_factor toward 1.0. The totals
+    # are a window over the n_cells-row grid: a separate aggregate
+    # joined back would plan the whole assignment a second time.
+    everything = Window.partitionBy()
+    n_vectors = F.col("n_vectors").cast("double")
+    n_cells = F.count(F.lit(1)).over(everything).cast("double")
+    n_total = F.sum("n_vectors").over(everything).cast("double")
+    return (
+        cent.select("cell")
         .join(F.broadcast(counts), "cell", "left")
         .select(
             "cell",
@@ -2605,24 +2611,12 @@ def q_embedding_ivf_balance_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_vectors"),
         )
-    )
-    tot = grid.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-        F.sum("n_vectors").cast("bigint").alias("n_total"),
-    )
-    return grid.join(F.broadcast(tot)).select(
-        "cell",
-        "n_vectors",
-        fround(
-            F.col("n_vectors").cast("double") / F.col("n_total").cast("double"),
-            6,
-        ).alias("share"),
-        fround(
-            F.col("n_vectors").cast("double")
-            * F.col("n_cells").cast("double")
-            / F.col("n_total").cast("double"),
-            6,
-        ).alias("load_factor"),
+        .select(
+            "cell",
+            "n_vectors",
+            fround(n_vectors / n_total, 6).alias("share"),
+            fround(n_vectors * n_cells / n_total, 6).alias("load_factor"),
+        )
     )
 
 

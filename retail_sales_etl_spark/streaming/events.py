@@ -5439,32 +5439,65 @@ _SESS_TAILS_SCHEMA = "user_id bigint, open_first_s bigint, open_last_s bigint"
 _SESS_GRID_SCHEMA = "dur bigint, n_death bigint"
 
 
-def _batch_sessions(batch_df: DataFrame) -> DataFrame:
-    """Within-batch sessionization under the batch gap rule
-    (``operators/events._km_curve``: split on integer-second gap >
-    SESSION_GAP_SEC): one row per within-batch session — (user_id,
-    seq, first_s, last_s, n_sess). The lag window is bounded by one
-    user's batch activity; tie order on equal ts is irrelevant to the
-    extents (gap 0 never splits, min/max are order-free)."""
+def _seeded_sessions(rows: DataFrame, batch_id: int) -> DataFrame:
+    """The one sessionize pass of a micro-batch. ``rows`` holds a SEED
+    row per stored tail (user_id, lo=open_first_s, hi=open_last_s,
+    b=0) and a row per batch event (user_id, lo=hi=s, b=1). Per user,
+    ordered by (b, lo), a row opens a new session when lo - lag(hi) >
+    SESSION_GAP_SEC — the batch gap rule (``operators/events._km_curve``
+    splits on integer-second gap > SESSION_GAP_SEC), so a tail within
+    one gap of the batch's first event merges with it and a tail
+    further away closes. A batch event before the stored
+    ``open_last_s`` (lo < lag(hi), only possible on the seed's
+    successor) breaks the in-order contract and RAISES via
+    ``raise_error``.
+
+    Returns one row per session — (user_id, seq, first_s, last_s,
+    n_sess) — for the users with a batch row (a whole-table tail read
+    also seeds users the batch never touched). Every window is per
+    user, bounded by one user's batch activity plus one seed row; tie
+    order on equal lo is irrelevant (gap 0 never splits, min/max are
+    order-free)."""
     from pyspark.sql import Window
 
-    by_user = Window.partitionBy("user_id").orderBy("ts")
+    by_user = Window.partitionBy("user_id").orderBy("b", "lo")
     run = by_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ev = batch_df.select(
-        "user_id", "ts", F.unix_timestamp("ts").cast("bigint").alias("s")
+    prev = F.lag("hi").over(by_user)
+    out_of_order = F.raise_error(
+        F.concat(
+            F.lit(
+                f"session_tails_sink: out-of-order micro-batch {batch_id} "
+                "— events for user_id="
+            ),
+            F.col("user_id").cast("string"),
+            F.lit(" precede the stored open_last_s ("),
+            F.col("lo").cast("string"),
+            F.lit(" < "),
+            prev.cast("string"),
+            F.lit(
+                "); the in-order delivery contract is broken — refusing "
+                "to fold"
+            ),
+        )
     )
-    flagged = ev.withColumn(
+    flagged = rows.withColumn(
         "new_session",
-        F.when(
-            F.col("s") - F.lag("s").over(by_user) > SESSION_GAP_SEC, 1
-        ).otherwise(0),
+        F.when(F.col("lo") < prev, out_of_order.cast("int"))
+        .when(F.col("lo") - prev > SESSION_GAP_SEC, 1)
+        .otherwise(0),
     ).withColumn("seq", F.sum("new_session").over(run) + 1)
-    sess = flagged.groupBy("user_id", "seq").agg(
-        F.min("s").cast("bigint").alias("first_s"),
-        F.max("s").cast("bigint").alias("last_s"),
-    )
-    return sess.withColumn(
-        "n_sess", F.max("seq").over(Window.partitionBy("user_id"))
+    user = Window.partitionBy("user_id")
+    return (
+        flagged.groupBy("user_id", "seq")
+        .agg(
+            F.min("lo").alias("first_s"),
+            F.max("hi").alias("last_s"),
+            F.max("b").alias("has_batch"),
+        )
+        .withColumn("n_sess", F.max("seq").over(user))
+        .withColumn("has_batch", F.max("has_batch").over(user))
+        .filter(F.col("has_batch") == 1)
+        .drop("has_batch")
     )
 
 
@@ -5477,31 +5510,35 @@ def session_tails_sink(
     """Fold one micro-batch of events into the maintained session-
     survival state — the IVM form of the ``session_km_survival`` /
     ``session_weibull_fit`` duration grid, under the SEAM PROTOCOL:
+    each batch user's stored open tail re-enters as a seed row ahead
+    of the user's batch events, and ONE sessionize pass
+    (``_seeded_sessions``) splits the lot under the batch gap rule.
 
-    - Within-batch sessions 1..n-1 close in-batch (a later same-batch
-      event > gap after them exists) — their durations go to the grid.
-    - The stored tail either MERGES with the batch's first session
-      (first batch event within one gap of the stored last event: the
-      tail's duration was provisional, it keeps growing) or CLOSES
-      (the batch's first event is > gap later — THAT event is the
-      proof the session ended, so only now does its final duration
-      enter the additive grid).
-    - The batch's last session becomes the new tail; its duration
-      stays OUT of the grid until a later batch proves it over.
+    - A tail within one gap of the user's first batch event merges
+      with it: its duration was provisional, it keeps growing.
+    - A tail further away closes — that first batch event is the proof
+      the session ended, so only now does its final duration enter the
+      additive grid. Within-batch sessions before the last close the
+      same way (a later same-batch event > gap after them exists).
+    - Every session but the user's last goes to the grid as
+      ``last_s - first_s``; the last becomes the new tail, its duration
+      OUT of the grid until a later batch proves it over.
 
     CONTRACT (enforced): batches arrive in event-time order (the
     user_gaps discipline) — a batch whose first event for a user
-    precedes the stored ``open_last_s`` RAISES from inside the combine
-    via ``raise_error``; out-of-order delivery can never silently
-    split or double-count a session.
+    precedes the stored ``open_last_s`` RAISES from inside the pass via
+    ``raise_error``, before any commit; out-of-order delivery can never
+    silently split or double-count a session.
 
-    Scale shape: the batch collapses map-side to one row per within-
-    batch session; prior-tail reads go through the file-pruned
+    Scale shape: prior-tail reads go through the file-pruned
     ``read_where_in`` on the batch's bounded user set (Z-ordered by
-    user_id on the optimize cycle) and the tails MERGE rewrites only
-    touched files; the closed-duration grid is purely additive, so
-    its delta lands APPEND-ONLY (no probe, no rewrite — totals fold
-    on read, the maintenance cycle compacts by aggregation).
+    user_id on the optimize cycle), so the pass sees one seed row per
+    batch user plus the batch's events and is cached once; the grid
+    delta and the new tails are both filters of it. The tails MERGE
+    rewrites only touched files; the closed-duration grid is purely
+    additive, so its delta lands APPEND-ONLY (no probe, no rewrite —
+    totals fold on read, the maintenance cycle compacts by
+    aggregation).
 
     Exactly-once across TWO tables where the GRID delta READS the
     tails table (unlike the rake grids, which are independent): the
@@ -5515,11 +5552,14 @@ def session_tails_sink(
     skipping the commit is idempotent)."""
     if batch_df.isEmpty():
         return False
-    sess = _batch_sessions(batch_df).cache()
-    probe = _ProbeRead(
-        sess.select("user_id"), "user_id", batch_id, "session_tails_sink"
+    s = F.unix_timestamp("ts").cast("bigint")
+    events = batch_df.select(
+        "user_id", s.alias("lo"), s.alias("hi"), F.lit(1).alias("b")
     )
-    cached = [sess]
+    probe = _ProbeRead(
+        events.select("user_id"), "user_id", batch_id, "session_tails_sink"
+    )
+    cached = []
 
     def stage(grid, tails):
         # Retirement boundary enforcement (the r17 pattern: enforced,
@@ -5533,7 +5573,7 @@ def session_tails_sink(
             else None
         )
         if cut is not None:
-            lo = sess.agg(F.min("first_s")).first()[0]
+            lo = events.agg(F.min("lo")).first()[0]
             if lo is not None and int(lo) < int(cut):
                 raise ValueError(
                     f"session_tails_sink: micro-batch {batch_id} "
@@ -5543,90 +5583,25 @@ def session_tails_sink(
                     "the in-order delivery contract is broken at the "
                     "retirement boundary — refusing to fold"
                 )
-        prior = probe.read(tails.table, tails.version, _SESS_TAILS_SCHEMA)
-        # one decision row per batch user: does the stored tail
-        # merge with the batch's first session, or close? An
-        # out-of-order batch must fail LOUD here — a mis-split
-        # session would poison the long-lived grid forever.
-        firsts = sess.filter(F.col("seq") == 1).select(
-            "user_id", F.col("first_s").alias("b_first_s")
-        )
-        dec = (
-            firsts.join(prior.alias("c"), "user_id", "left")
-            .select(
-                "user_id",
-                "b_first_s",
-                F.col("c.open_first_s").alias("p_first"),
-                F.col("c.open_last_s").alias("p_last"),
-            )
-            .withColumn(
-                "merged",
-                F.when(F.col("p_last").isNull(), F.lit(False)).when(
-                    F.col("b_first_s") < F.col("p_last"),
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "session_tails_sink: out-of-order "
-                                f"micro-batch {batch_id} — events for "
-                                "user_id="
-                            ),
-                            F.col("user_id").cast("string"),
-                            F.lit(" precede the stored open_last_s ("),
-                            F.col("b_first_s").cast("string"),
-                            F.lit(" < "),
-                            F.col("p_last").cast("string"),
-                            F.lit(
-                                "); the in-order delivery contract is "
-                                "broken — refusing to fold"
-                            ),
-                        )
-                    ).cast("boolean"),
-                ).otherwise(
-                    F.col("b_first_s") - F.col("p_last")
-                    <= SESSION_GAP_SEC
-                ),
-            )
-        )
-        joined = sess.join(dec, "user_id")
-        closed_batch = joined.filter(
-            F.col("seq") < F.col("n_sess")
-        ).select(
-            (
-                F.col("last_s")
-                - F.when(
-                    (F.col("seq") == 1) & F.col("merged"),
-                    F.col("p_first"),
-                ).otherwise(F.col("first_s"))
-            )
-            .cast("bigint")
-            .alias("dur")
-        )
-        closed_tails = dec.filter(
-            F.col("p_last").isNotNull() & ~F.col("merged")
-        ).select(
-            (F.col("p_last") - F.col("p_first"))
-            .cast("bigint")
-            .alias("dur")
-        )
-        delta = (
-            closed_batch.unionByName(closed_tails)
-            .groupBy("dur")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_death"))
-            .cache()
-        )
-        cached.append(delta)
-        new_tails = joined.filter(
-            F.col("seq") == F.col("n_sess")
+        seeds = probe.read(
+            tails.table, tails.version, _SESS_TAILS_SCHEMA
         ).select(
             "user_id",
-            F.when(
-                (F.col("n_sess") == 1) & F.col("merged"),
-                F.col("p_first"),
-            )
-            .otherwise(F.col("first_s"))
-            .cast("bigint")
-            .alias("open_first_s"),
-            F.col("last_s").cast("bigint").alias("open_last_s"),
+            F.col("open_first_s").alias("lo"),
+            F.col("open_last_s").alias("hi"),
+            F.lit(0).alias("b"),
+        )
+        sess = _seeded_sessions(seeds.unionByName(events), batch_id).cache()
+        cached.append(sess)
+        delta = (
+            sess.filter(F.col("seq") < F.col("n_sess"))
+            .groupBy((F.col("last_s") - F.col("first_s")).alias("dur"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_death"))
+        )
+        new_tails = sess.filter(F.col("seq") == F.col("n_sess")).select(
+            "user_id",
+            F.col("first_s").alias("open_first_s"),
+            F.col("last_s").alias("open_last_s"),
         )
         # closed-duration counts are purely additive: the batch delta
         # lands APPEND-ONLY (no prior probe, no MERGE rewrite); totals

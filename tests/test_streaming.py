@@ -3438,6 +3438,84 @@ def test_streaming_weibull_serve_matches_batch_wherever_seams_fall(
         assert [tuple(r) for r in got] == [tuple(r) for r in want], layout
 
 
+def test_session_tails_served_km_matches_batch_at_random_seams(
+    spark, tmp_path
+):
+    """Seeded seam property: split random events at random ts cuts,
+    fold them in event-time order, and the served KM curve equals the
+    batch session_km_survival on the same events. Every layout also
+    holds, at its first cut, a seam gap of exactly SESSION_GAP_SEC
+    (merges), one of SESSION_GAP_SEC + 1 (closes), an equal-second
+    arrival across the seam (sub-second timestamps either side) and a
+    user whose tail closes and who opens three sessions in the next
+    batch."""
+    import random
+    from datetime import datetime, timedelta
+
+    from pyspark.sql import Row
+
+    from retail_sales_etl_spark.operators.events import (
+        SESSION_GAP_SEC as GAP,
+        _km_curve_from_grid,
+        q_session_km_survival,
+    )
+
+    t0 = datetime(2024, 1, 1)
+    for seed in (3, 17):
+        rng = random.Random(seed)
+        k = rng.randrange(2_000, 10_000)
+        cuts = [k + 0.5] + sorted(
+            rng.uniform(k + 4 * GAP + 1_000, 43_200)
+            for _ in range(rng.randrange(0, 3))
+        )
+        ev = {  # user -> event offsets in seconds
+            101: [k - 60, k, k + GAP],  # seam gap == GAP: merges
+            102: [k - 5, k, k + GAP + 1],  # seam gap == GAP + 1: closes
+            103: [k - 30, k + 0.2, k + 0.7],  # same second across the cut
+            104: [k - 100, k, k + GAP + 10, k + GAP + 20,
+                  k + 2 * GAP + 100, k + 3 * GAP + 500],
+        }
+        for u in range(1, 9):
+            at, offs = rng.uniform(0, 20_000), []
+            while at < 43_200:
+                offs.append(at)
+                at += rng.choice([0, 1, 60, 600, GAP - 1, GAP, GAP + 1,
+                                  3_000, 7_200])
+            ev[u] = offs
+        rows = [
+            Row(event_id=i, ts=t0 + timedelta(seconds=o), user_id=u,
+                event_type="c", value=1.0, props="{}")
+            for i, (u, o) in enumerate(
+                (u, o) for u, offs in sorted(ev.items()) for o in offs
+            )
+        ]
+        sf = str(tmp_path / f"sf{seed}")
+        spark.createDataFrame(rows).write.parquet(f"{sf}/events.parquet")
+        want = sorted(
+            tuple(r) for r in q_session_km_survival(spark, sf).collect()
+        )
+
+        tails = str(tmp_path / f"tails{seed}")
+        grid = str(tmp_path / f"grid{seed}")
+        edges = [float("-inf")] + cuts + [float("inf")]
+        for b in range(len(edges) - 1):
+            part = sorted(
+                (r.user_id, r.ts) for r in rows
+                if edges[b] <= (r.ts - t0).total_seconds() < edges[b + 1]
+            )
+            batch = spark.createDataFrame(part, "user_id bigint, ts timestamp")
+            assert streaming_events.session_tails_sink(
+                batch, b, tails, grid
+            ) is bool(part)
+        got = sorted(
+            tuple(r)
+            for r in _km_curve_from_grid(
+                streaming_events._served_km_grid(spark, tails, grid)
+            ).collect()
+        )
+        assert got == want, (seed, cuts)
+
+
 # ---------------------------------------------------------------------------
 # co-purchase grid IVM (streaming_affinity)
 # ---------------------------------------------------------------------------

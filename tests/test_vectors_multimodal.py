@@ -208,6 +208,20 @@ def test_phash_hamming_reconciles_with_buckets(spark, sf_dir):
     assert set(ham) <= {0, 1}
 
 
+def test_phash_hamming_leaves_nothing_cached(spark, sf_dir):
+    """The Hamming census holds its bucket grid only for the call: once
+    the entry's result is collected, the session has no persisted RDD
+    it did not have before."""
+    from retail_sales_etl_spark.operators.multimodal import (
+        q_multimodal_phash_hamming,
+    )
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    assert q_multimodal_phash_hamming(spark, sf_dir).collect()
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
 def _craft_bmp(width, height, pixels, pad=b"\x00"):
     """Hand-assemble an uncompressed 24-bpp bottom-up BMP from a
     pixels[y][x] = (r, g, b) grid — independent of synthesize_bmp so
