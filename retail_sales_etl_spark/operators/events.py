@@ -2255,14 +2255,7 @@ def q_events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     by_user = Window.partitionBy("user_id").orderBy("ts")
-    # ts is TIMESTAMP_NTZ; unix_micros needs TIMESTAMP — the cast is
-    # identity under the session's pinned UTC zone
-    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    gap = F.floor(
-        (us(F.col("ts")) - us(F.lag("ts").over(by_user)))
-        / F.lit(1_000_000)
-    ).cast("bigint")
-    gaps = ev.select("user_id", gap.alias("g")).filter(
+    gaps = ev.select("user_id", _lag_gap_s(by_user).alias("g")).filter(
         F.col("g").isNotNull()
     )
     agg = gaps.groupBy("user_id").agg(
@@ -2270,6 +2263,34 @@ def q_events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("g").cast("bigint").alias("_s"),
         F.sum(F.col("g") * F.col("g")).cast("bigint").alias("_s2"),
     ).filter(F.col("n_gaps") >= 2)
+    return _burstiness_from_moments(agg)
+
+
+def _gap_s(later_us, earlier_us) -> F.Column:
+    """The integer-second gap between two epoch-microsecond columns:
+    floor of the microsecond difference, so sub-second timestamps
+    cannot round differently across engines — the one gap definition
+    of ``events_burstiness``, ``events_gap_memory`` and the streaming
+    gap-moment sink (within a batch and across its seam)."""
+    return F.floor((later_us - earlier_us) / F.lit(1_000_000)).cast("bigint")
+
+
+def _lag_gap_s(by_user) -> F.Column:
+    """Each event's ``_gap_s`` to the previous event in ``by_user``'s
+    ts order (NULL for a user's first event). ts is TIMESTAMP_NTZ;
+    unix_micros needs TIMESTAMP — the cast is identity under the
+    session's pinned UTC zone."""
+    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
+    return _gap_s(us(F.col("ts")), us(F.lag("ts").over(by_user)))
+
+
+def _burstiness_from_moments(agg: DataFrame) -> DataFrame:
+    """The (mu, sigma, B) tail over per-user exact BIGINT gap moments:
+    ``agg`` holds ``user_id``, ``n_gaps`` (>= 2) and the gap sum /
+    sum-of-squares ``_s`` / ``_s2``. Shared by the batch
+    ``events_burstiness`` and ``streaming_burstiness`` (which serves it
+    off the maintained moments), so both emit the same IEEE double
+    expressions on the same integers."""
     n = F.col("n_gaps").cast("double")
     mu = F.col("_s").cast("double") / n
     var = F.greatest(
@@ -2357,12 +2378,7 @@ def q_events_gap_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded partitions), one map-combinable user-grid aggregate."""
     ev = load_table(spark, sf_dir, "events")
     by_user = Window.partitionBy("user_id").orderBy("ts")
-    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    gap = F.floor(
-        (us(F.col("ts")) - us(F.lag("ts").over(by_user)))
-        / F.lit(1_000_000)
-    ).cast("bigint")
-    gaps = ev.select("user_id", "ts", gap.alias("b")).filter(
+    gaps = ev.select("user_id", "ts", _lag_gap_s(by_user).alias("b")).filter(
         F.col("b").isNotNull()
     )
     pairs = gaps.select(

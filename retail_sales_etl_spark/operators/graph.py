@@ -30,13 +30,29 @@ MIN_COPURCHASE = 2
 def copurchase_edges(li: DataFrame) -> DataFrame:
     """Undirected part-part edges weighted by co-occurrence count."""
     baskets = li.select("l_orderkey", "l_partkey").distinct()
+    return basket_pairs(baskets).filter(F.col("n_orders") >= MIN_COPURCHASE)
+
+
+def basket_pairs(baskets: DataFrame) -> DataFrame:
+    """(a_part, b_part, n_orders): the un-gated pair grid of distinct
+    (l_orderkey, l_partkey) baskets — each order's C(k, 2) part pairs
+    with a_part < b_part, counted. Shared by ``copurchase_edges`` and
+    the streaming ``copurchase_sink`` (which stores it per batch)."""
     a = baskets.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("a_part"))
     b = baskets.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("b_part"))
     return (
         a.join(b, (F.col("o") == F.col("o2")) & (F.col("a_part") < F.col("b_part")))
         .groupBy("a_part", "b_part")
         .agg(F.count(F.lit(1)).alias("n_orders"))
-        .filter(F.col("n_orders") >= MIN_COPURCHASE)
+    )
+
+
+def basket_items(baskets: DataFrame) -> DataFrame:
+    """(pk, n_item): the per-part basket count of distinct
+    (l_orderkey, l_partkey) baskets — shared by ``part_affinity_lift``
+    and the streaming ``copurchase_sink``."""
+    return baskets.groupBy(F.col("l_partkey").alias("pk")).agg(
+        F.count(F.lit(1)).alias("n_item")
     )
 
 
@@ -290,9 +306,7 @@ def q_part_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     baskets = li.select("l_orderkey", "l_partkey").distinct()
     pair = copurchase_edges(li)
-    item = baskets.groupBy(F.col("l_partkey").alias("pk")).agg(
-        F.count(F.lit(1)).alias("n_item")
-    )
+    item = basket_items(baskets)
     total = baskets.select("l_orderkey").distinct().agg(
         F.count(F.lit(1)).alias("n_baskets")
     )
@@ -756,23 +770,15 @@ def q_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("internal_edges"),
             "degree_sum",
-            # floor(x*1e6 + 0.5)/1e6, not round(x, 6): singleton
-            # communities yield a -epsilon term that round() maps to
-            # -0.0 in one engine and 0.0 in the other (107/349 rows at
-            # sf0.01); floor arithmetic is bit-identical in both.
-            (
-                F.floor(
-                    (
-                        F.coalesce("internal_edges", F.lit(0)) / F.col("m")
-                        - F.pow(
-                            F.col("degree_sum") / (2.0 * F.col("m")),
-                            F.lit(2.0),
-                        )
-                    )
-                    * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
+            # fround, not round(x, 6): singleton communities yield a
+            # -epsilon term that round() maps to -0.0 in one engine and
+            # 0.0 in the other (107/349 rows at sf0.01).
+            fround(
+                F.coalesce("internal_edges", F.lit(0)) / F.col("m")
+                - F.pow(
+                    F.col("degree_sum") / (2.0 * F.col("m")), F.lit(2.0)
+                ),
+                6,
             ).alias("modularity_term"),
         )
     )

@@ -1453,18 +1453,30 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     end. Cost is the sum of the member queries — an eval op, not a
     serving path.
     """
-    exact = q_ann_topk(spark, sf_dir).select(
-        "vec_id", F.lit(1).alias("hit")
+    return _recall_report(
+        q_ann_topk(spark, sf_dir),
+        [
+            ("lsh", q_ann_lsh_topk(spark, sf_dir)),
+            ("ivf", q_ann_ivf_topk(spark, sf_dir)),
+            ("pq", q_ann_pq_topk(spark, sf_dir)),
+        ],
     )
-    methods = [
-        ("lsh", q_ann_lsh_topk),
-        ("ivf", q_ann_ivf_topk),
-        ("pq", q_ann_pq_topk),
-    ]
+
+
+def _recall_report(
+    exact: DataFrame, members: list[tuple[str, DataFrame]]
+) -> DataFrame:
+    """One (method, n_retrieved, n_hits, recall_at_k) row per
+    ``(method, frame)`` member: how many of the member's ``vec_id``s
+    are in the ``exact`` top-k (broadcast). A member with no rows
+    reads (method, 0, NULL, NULL), as in SQL. Shared by the batch
+    ``ann_recall_report`` and ``streaming_ann_recall``."""
+    truth = exact.select("vec_id", F.lit(1).alias("hit"))
     parts = []
-    for name, fn in methods:
-        approx = fn(spark, sf_dir).select("vec_id")
-        agg = approx.join(F.broadcast(exact), "vec_id", "left").agg(
+    for name, approx in members:
+        agg = approx.select("vec_id").join(
+            F.broadcast(truth), "vec_id", "left"
+        ).agg(
             F.count(F.lit(1)).alias("n_retrieved"),
             F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias(
                 "n_hits"

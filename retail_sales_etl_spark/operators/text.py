@@ -285,7 +285,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUZZY_PREFIX_LEN = 32
 FUZZY_BLOCK_LEN = 4
 FUZZY_MAX_DIST = 3
-FUZZY_PERSIST_PREFIXES = True  # cache the prefix projection across branches
 
 
 def _fuzzy_segments() -> list[tuple[int, int, int]]:
@@ -368,15 +367,12 @@ def q_fuzzy_prefix_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # safe at corpus scale. Lifetime: the returned frame is lazy, so
     # there is no in-function unpersist point — the cache lives until
     # the caller's `spark.catalog.clearCache()` (bench.py issues one
-    # after every query) or session end; long-lived sessions that call
-    # this repeatedly should clear or set FUZZY_PERSIST_PREFIXES off.
+    # after every query) or session end.
     pref = docs.select(
         "doc_id",
         F.substring(canonical, 1, FUZZY_PREFIX_LEN).alias("prefix"),
         F.substring(canonical, 1, FUZZY_BLOCK_LEN).alias("block"),
-    )
-    if FUZZY_PERSIST_PREFIXES:
-        pref = pref.persist()
+    ).persist()
     longs = pref.filter(F.length("prefix") == FUZZY_PREFIX_LEN)
     shorts = pref.filter(F.length("prefix") < FUZZY_PREFIX_LEN)
 
@@ -578,25 +574,45 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled exactly once, on doc_id, for the final per-doc counts.
     """
     docs = load_table(spark, sf_dir, "documents")
-    w = F.split("text", " ")
-    grams = docs.select(
-        "doc_id", F.explode(F.array_distinct(_word_ngrams(w, DECON_N))).alias("gram")
-    )
+    grams = _distinct_grams(docs, DECON_N)
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
-    eval_grams = (
-        grams.filter(is_eval).select("gram").distinct().withColumn("hit", F.lit(1))
+    return _decon_verdicts(
+        grams.filter(~is_eval),
+        grams.filter(is_eval).select("gram").distinct(),
+        docs.filter(~is_eval).select("doc_id"),
     )
+
+
+def _distinct_grams(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, gram): each doc's distinct whitespace word n-grams,
+    deduped map-side (``array_distinct`` before the explode) — the
+    gram grid of both decontamination screens, batch and streaming."""
+    w = F.split("text", " ")
+    return docs.select(
+        "doc_id", F.explode(F.array_distinct(_word_ngrams(w, n))).alias("gram")
+    )
+
+
+def _decon_verdicts(
+    train_grams: DataFrame, eval_set: DataFrame, train_ids: DataFrame
+) -> DataFrame:
+    """The per-doc contamination verdict: ``train_grams`` (doc_id,
+    gram) judged against the distinct eval ``gram`` set (broadcast),
+    one row per ``train_ids`` doc — a doc without grams reads 0 of 0.
+    Shared by the batch ``decontaminate_ngram`` and the streaming
+    ``decon_sink`` (which judges each batch against the pinned eval
+    index plus the batch's own eval grams)."""
     hits = (
-        grams.filter(~is_eval)
-        .join(F.broadcast(eval_grams), "gram", "left")
+        train_grams.join(
+            F.broadcast(eval_set.withColumn("hit", F.lit(1))), "gram", "left"
+        )
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.count("hit").alias("n_contaminated"),
         )
     )
-    train = docs.filter(~is_eval).select("doc_id")
-    out = train.join(hits, "doc_id", "left")
+    out = train_ids.join(hits, "doc_id", "left")
     n_grams = F.coalesce(F.col("n_grams"), F.lit(0)).cast("bigint")
     n_cont = F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("bigint")
     frac = F.when(n_grams > 0, n_cont.cast("double") / n_grams).otherwise(F.lit(0.0))
@@ -629,11 +645,7 @@ def q_decontaminate_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     |pairs sharing a gram|, bounded by eval size, never corpus^2.
     """
     docs = load_table(spark, sf_dir, "documents")
-    w = F.split("text", " ")
-    grams = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(_word_ngrams(w, CONTAIN_N))).alias("gram"),
-    )
+    grams = _distinct_grams(docs, CONTAIN_N)
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
     eval_grams = grams.filter(is_eval).select(
         F.col("doc_id").alias("eval_id"), "gram"
@@ -648,6 +660,15 @@ def q_decontaminate_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .join(F.broadcast(eval_sizes), "eval_id")
     )
+    return _containment_pairs(pairs)
+
+
+def _containment_pairs(pairs: DataFrame) -> DataFrame:
+    """The containment score tail over (doc_id, eval_id, n_shared,
+    eval_grams) pair counts: the 6-dp share of the eval item's distinct
+    grams the doc contains, kept at >= CONTAIN_THRESH. Shared by the
+    batch ``decontaminate_containment`` and the streaming
+    ``containment_sink``."""
     containment = fround(
         F.col("n_shared").cast("double") / F.col("eval_grams"), 6)
     return pairs.select(
@@ -741,8 +762,16 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
     )
     wc = words.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
+    return _doc_entropy(wc, ["doc_id"])
+
+
+def _doc_entropy(wc: DataFrame, keys: list[str]) -> DataFrame:
+    """Per-doc (``keys``, n_words, n_distinct, entropy_nats) from a
+    (``keys``, w, c) word-count grid — the ``text_entropy`` formula,
+    shared with the streaming corpus-health partial (which carries the
+    doc's source/lang/n_chars as extra keys)."""
     term = fround(F.col("c") * F.log(F.col("c")), 6).cast("decimal(25,6)")
-    per_doc = wc.groupBy("doc_id").agg(
+    per_doc = wc.groupBy(*keys).agg(
         F.sum("c").cast("bigint").alias("n_words"),
         F.count(F.lit(1)).alias("n_distinct"),
         F.sum(term).alias("_clogc"),
@@ -751,7 +780,7 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("n_words"))
         - F.col("_clogc").cast("double") / F.col("n_words"), 6)
     return per_doc.select(
-        "doc_id",
+        *keys,
         "n_words",
         "n_distinct",
         entropy.alias("entropy_nats"),
@@ -833,14 +862,17 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Adjacent-token-pair grid, shared by the bigram-LM and PMI operators
-# (one tokenization fix must hit both): Spark expression over a token
-# array column `w`, and its SQL twin over a CTE named `words`.
-_ADJ_PAIRS_EXPR = (
-    "transform(sequence(1, size(w) - 1),"
-    " i -> struct(element_at(w, i) AS w1,"
-    " element_at(w, i + 1) AS w2))"
-)
+def _adj_pairs_expr(arr: str) -> str:
+    """Adjacent-pair grid as a Spark SQL expression over the array
+    column ``arr``: (w1, w2) structs for positions (i, i + 1). Shared
+    by the bigram-LM and PMI operators over token arrays and by BPE
+    over symbol arrays (one tokenization fix must hit all three); the
+    SQL twin over a CTE named `words` is ``_adj_pairs_sql``."""
+    return (
+        f"transform(sequence(1, size({arr}) - 1),"
+        f" i -> struct(element_at({arr}, i) AS w1,"
+        f" element_at({arr}, i + 1) AS w2))"
+    )
 
 
 def _adj_pairs_sql(with_doc_id: bool) -> str:
@@ -879,7 +911,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grid = (
         toks.filter(F.size("w") >= 2)
-        .select("doc_id", F.explode(F.expr(_ADJ_PAIRS_EXPR)).alias("p"))
+        .select("doc_id", F.explode(F.expr(_adj_pairs_expr("w"))).alias("p"))
         .groupBy("doc_id", "p.w1", "p.w2")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -908,17 +940,12 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_doc.select(
         "doc_id",
         "n_bigrams",
-        # floor(x*1e6 + 0.5)/1e6, not round(x, 6): when the decimal
-        # term-sum divides to an exact half at 6 dp (hit at sf0.1),
-        # Spark and DuckDB round() disagree on the same double; floor
-        # arithmetic is bit-identical in both engines.
-        (
-            F.floor(
-                -F.col("_s").cast("double") / F.col("n_bigrams") * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("avg_neg_logprob"),
+        # fround, not round(x, 6): when the decimal term-sum divides to
+        # an exact half at 6 dp (hit at sf0.1), Spark and DuckDB round()
+        # disagree on the same double.
+        fround(-F.col("_s").cast("double") / F.col("n_bigrams"), 6).alias(
+            "avg_neg_logprob"
+        ),
     )
 
 
@@ -948,7 +975,7 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.split(F.lower("text"), " ").alias("w"))
     pairs = toks.filter(F.size("w") >= 2).select(
-        F.explode(F.expr(_ADJ_PAIRS_EXPR)).alias("p")
+        F.explode(F.expr(_adj_pairs_expr("w"))).alias("p")
     ).select("p.w1", "p.w2")
     pair_counts = pairs.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("n_ab")
@@ -1161,14 +1188,9 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_doc.select(
         "doc_id",
         "n_words",
-        # same portable half-up floor rounding as bigram_logprob
-        (
-            F.floor(
-                -F.col("_s").cast("double") / F.col("n_words") * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("avg_neg_logprob"),
+        fround(-F.col("_s").cast("double") / F.col("n_words"), 6).alias(
+            "avg_neg_logprob"
+        ),
     )
 
 
@@ -2041,17 +2063,13 @@ def _bpe_chain(docs: DataFrame):
         ).alias("seq"),
         "c",
     )
-    pair_expr = (
-        "transform(sequence(1, size(s) - 1),"
-        " i -> struct(element_at(s, i) AS w1, element_at(s, i + 1) AS w2))"
-    )
     rounds = []
     for r in range(1, BPE_ROUNDS + 1):
         syms = cur.withColumn(
             "s", F.filter(F.split("seq", "[|]"), lambda x: x != F.lit(""))
         )
         pairs = syms.filter(F.size("s") >= 2).select(
-            F.explode(F.expr(pair_expr)).alias("p"), "c"
+            F.explode(F.expr(_adj_pairs_expr("s"))).alias("p"), "c"
         )
         cnt = pairs.groupBy("p.w1", "p.w2").agg(
             F.sum("c").cast("bigint").alias("pair_count")
@@ -4214,26 +4232,29 @@ def novelty_grams(docs: DataFrame) -> DataFrame:
     the shared gram core of ``doc_novelty`` and the streaming novelty
     sink (one expression, so the batch oracle and the maintained grid
     can never drift on tokenization). Docs shorter than the gram
-    width contribute NOTHING (guarded: Spark's sequence(0, n-3) turns
-    DESCENDING for n < 3 and the 0-start slice it feeds is an error,
-    not an empty list); dedup happens map-side via array_distinct
-    BEFORE the explode."""
+    width contribute NOTHING (``_word_ngrams``' guard); dedup happens
+    map-side via array_distinct BEFORE the explode."""
     toks = F.split(F.lower("text"), " ")
-    n = F.size(toks)
-    gs = F.when(
-        n >= NOVELTY_NGRAM,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), n - F.lit(NOVELTY_NGRAM)),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.slice(toks, i + 1, F.lit(NOVELTY_NGRAM)),
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    gs = F.array_distinct(_word_ngrams(toks, NOVELTY_NGRAM))
     return docs.select("doc_id", gs.alias("gs")).select(
         "doc_id", F.explode("gs").alias("g")
+    )
+
+
+def _novelty_ratio(per_doc: DataFrame) -> DataFrame:
+    """The novelty tail over a (doc_id, n_grams, n_novel) frame of
+    exact BIGINT counts — shared by the batch ``doc_novelty`` and
+    ``streaming_novelty`` (which serves it off the maintained doc
+    counters)."""
+    return per_doc.select(
+        "doc_id",
+        "n_grams",
+        "n_novel",
+        fround(
+            F.col("n_novel").cast("double")
+            / F.col("n_grams").cast("double"),
+            6,
+        ).alias("novelty"),
     )
 
 
@@ -4272,16 +4293,7 @@ def q_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("n_novel"),
         )
     )
-    return per_doc.select(
-        "doc_id",
-        "n_grams",
-        "n_novel",
-        fround(
-            F.col("n_novel").cast("double")
-            / F.col("n_grams").cast("double"),
-            6,
-        ).alias("novelty"),
-    )
+    return _novelty_ratio(per_doc)
 
 
 QUERIES["doc_novelty"] = q_doc_novelty

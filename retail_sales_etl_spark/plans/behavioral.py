@@ -27,15 +27,6 @@ RFM_BAND_FREQ = 4  # frequency band width (orders)
 RFM_BAND_MONEY = 25_000.0  # monetary band width (currency)
 
 
-# Cache the banded customer aggregate across the grid/rank branches.
-# Lifetime: the returned frame is lazy, so the cache is released by the
-# caller's `spark.catalog.clearCache()` (bench.py issues one per query)
-# or at session end — long-lived sessions calling q_customer_rfm
-# repeatedly should clear, or set this off to trade one shuffle for
-# re-aggregation per branch.
-RFM_PERSIST_PER_CUST = True
-
-
 def _band_offsets(grid: DataFrame, band_col: str) -> DataFrame:
     """Cumulative count of customers in HIGHER-valued bands — the
     phase-1 table of the two-phase banded global rank (the
@@ -79,7 +70,7 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded band grids.
 
     Single-fact-pass shape (r12): the banded customer aggregate is
-    computed ONCE and persisted (`RFM_PERSIST_PER_CUST`), all three
+    computed ONCE and persisted, all three
     band-count grids come from one grouping-sets pass over it (n_cust
     rides along as the sum of any one grid), and the three rank
     windows CHAIN on the same frame — no customer-grain joins, no
@@ -120,8 +111,11 @@ def _rfm_rank(b: DataFrame) -> DataFrame:
         .cast("bigint")
         .alias("m_band"),
     )
-    if RFM_PERSIST_PER_CUST:
-        b = b.persist()
+    # Cached across the grid/rank branches. The returned frame is lazy,
+    # so there is no in-function unpersist point: the cache lives until
+    # the caller's `spark.catalog.clearCache()` (bench.py issues one per
+    # query) or session end.
+    b = b.persist()
     grids = b.groupingSets(
         [["r_band"], ["f_band"], ["m_band"]], "r_band", "f_band", "m_band"
     ).agg(
@@ -333,11 +327,21 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("rev").alias("rev_dec"),
         )
     )
+    return _cohort_ltv_from_grid(grid, "rev_dec")
+
+
+def _cohort_ltv_from_grid(grid: DataFrame, rev: str) -> DataFrame:
+    """The LTV tail over a (cohort_m, months_since, n_active, ``rev``)
+    cohort grid with exact-DECIMAL revenue: the running cumulative
+    revenue, the cohort size (its month-0 actives), the cohort month
+    as a date and ltv = cumulative revenue / size. Shared by the batch
+    ``cohort_ltv`` and ``streaming_cohort_ltv`` (which serves it off
+    the maintained matrix)."""
     wg = Window.partitionBy("cohort_m")
     wcum = wg.orderBy("months_since").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    cum = F.sum("rev_dec").over(wcum)
+    cum = F.sum(rev).over(wcum)
     size = F.max(
         F.when(F.col("months_since") == 0, F.col("n_active"))
     ).over(wg)
@@ -350,7 +354,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "months_since",
         "n_active",
         size.cast("bigint").alias("cohort_size"),
-        F.col("rev_dec").cast("double").alias("revenue"),
+        F.col(rev).cast("double").alias("revenue"),
         cum.cast("double").alias("cum_revenue"),
         fround(cum.cast("double") / size.cast("double"), 6).alias("ltv"),
     )

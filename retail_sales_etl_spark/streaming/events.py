@@ -43,7 +43,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.events import SESSION_GAP_SEC
+from ..operators.events import SESSION_GAP_SEC, _gap_s
 from ..functions.rounding import fround
 from ..operators.profiling import HH_DENOM
 
@@ -2873,17 +2873,15 @@ def q_streaming_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     in date order — the in-order contract under which acquisition
     cohorts never retract — fold each through ``maintain_cohort_ltv``
     (with a mid-stream Z-order cycle so the customer-probe pruning
-    path is covered), then read the maintained matrix and emit the
-    same cohort_month / months_since / n_active / cohort_size /
-    revenue / cum_revenue / ltv surface as the batch ``cohort_ltv`` —
+    path is covered), then read the maintained matrix through the
+    batch ``cohort_ltv``'s own tail (``_cohort_ltv_from_grid``) —
     hash-checked against the SAME oracle SQL, proving the maintained
     matrix equals a from-scratch cohort pass over everything
     delivered."""
     import datetime as dt
 
-    from pyspark.sql import Window
-
     from ..catalog import load_table
+    from ..plans.behavioral import _cohort_ltv_from_grid
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
@@ -2905,34 +2903,14 @@ def q_streaming_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grid = (
         _cohort_matrix_totals(spark, f"{work}/matrix")
-        if work is not None  # empty fact: the batch twin returns empty
+        if work is not None  # empty fact: the tail over an empty matrix
         else spark.createDataFrame(
             [],
             "cohort_m bigint, months_since int, n_active bigint, "
             f"rev {_IVM_DEC}",
         )
     )
-    wg = Window.partitionBy("cohort_m")
-    wcum = wg.orderBy("months_since").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = F.sum("rev").over(wcum)
-    size = F.max(
-        F.when(F.col("months_since") == 0, F.col("n_active"))
-    ).over(wg)
-    return grid.select(
-        F.make_date(
-            F.floor(F.col("cohort_m") / F.lit(12)).cast("int"),
-            (F.col("cohort_m") % F.lit(12) + F.lit(1)).cast("int"),
-            F.lit(1),
-        ).alias("cohort_month"),
-        "months_since",
-        "n_active",
-        size.cast("bigint").alias("cohort_size"),
-        F.col("rev").cast("double").alias("revenue"),
-        cum.cast("double").alias("cum_revenue"),
-        fround(cum.cast("double") / size.cast("double"), 6).alias("ltv"),
-    )
+    return _cohort_ltv_from_grid(grid, "rev")
 
 
 QUERIES["streaming_cohort_ltv"] = q_streaming_cohort_ltv
@@ -2955,39 +2933,20 @@ ORACLE["streaming_cohort_ltv"] = _BEHAVIORAL_ORACLE["cohort_ltv"]
 def _corpus_health_partial(batch_df: DataFrame) -> DataFrame:
     """One micro-batch's (source, lang) corpus-health partial: doc
     counts, char totals/extrema, word totals, and the SUM of per-doc
-    6-dp word-unigram entropies (the ``text_entropy`` recipe — each
-    doc's entropy is computed once, at arrival, so the per-source mean
-    entropy is maintainable without ever re-reading text). Every
+    6-dp word-unigram entropies (``operators.text._doc_entropy``, the
+    ``text_entropy`` formula — each doc's entropy is computed once, at
+    arrival, so the per-source mean entropy is maintainable without ever re-reading text). Every
     column is additive or a min/max lattice, so merging batch partials
     in ANY order equals the from-scratch aggregate — the property the
     exactly-once replay proof leans on."""
+    from ..operators.text import _doc_entropy
+
+    keys = ["source", "lang", "doc_id", "n_chars"]
     words = batch_df.select(
-        "source", "lang", "doc_id", "n_chars",
-        F.explode(F.split(F.lower("text"), " ")).alias("w"),
+        *keys, F.explode(F.split(F.lower("text"), " ")).alias("w")
     )
-    wc = words.groupBy("source", "lang", "doc_id", "n_chars", "w").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    term = F.floor(
-        F.col("c") * F.log(F.col("c")) * 1e6 + F.lit(0.5)
-    ) / F.lit(1e6)
-    per_doc = wc.groupBy("source", "lang", "doc_id", "n_chars").agg(
-        F.sum("c").cast("bigint").alias("n_words"),
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
-        F.sum(term.cast(_IVM_DEC)).alias("_clogc"),
-    )
-    ent = F.floor(
-        (
-            F.log(F.col("n_words"))
-            - F.col("_clogc").cast("double") / F.col("n_words")
-        )
-        * 1e6
-        + F.lit(0.5)
-    ) / F.lit(1e6)
-    docs = per_doc.select(
-        "source", "lang", "n_chars", "n_words", "n_distinct",
-        ent.alias("ent"),
-    )
+    wc = words.groupBy(*keys, "w").agg(F.count(F.lit(1)).alias("c"))
+    docs = _doc_entropy(wc, keys)
     return docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -2995,7 +2954,7 @@ def _corpus_health_partial(batch_df: DataFrame) -> DataFrame:
         F.max("n_chars").cast("bigint").alias("max_chars"),
         F.sum("n_words").cast("bigint").alias("total_words"),
         F.sum("n_distinct").cast("bigint").alias("total_distinct"),
-        F.sum(F.col("ent").cast(_IVM_DEC)).cast(_IVM_DEC).alias(
+        F.sum(F.col("entropy_nats").cast(_IVM_DEC)).cast(_IVM_DEC).alias(
             "entropy_sum"
         ),
     )
@@ -3237,32 +3196,30 @@ def q_streaming_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever re-scanning the fact."""
     from ..operators.profiling import _periodogram_spectrum
 
-    work = _replayed_daily_revenue(spark, sf_dir)
-    daily = (
-        _day_grid_totals(spark, f"{work}/daily", "v")
-        if work is not None  # empty fact: the batch twin's empty grid
-        else spark.createDataFrame([], "d int, v bigint")
-    )
-    return _periodogram_spectrum(daily)
+    return _periodogram_spectrum(_replayed_revenue_grid(spark, sf_dir))
 
 
-def _replayed_daily_revenue(spark: SparkSession, sf_dir: str) -> str | None:
+def _replayed_revenue_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the orders table in 4 o_custkey-range micro-batches
     (any order: cents add exactly) through ``maintain_daily_revenue``
-    (mid-stream aggregating compaction); returns the work dir holding
-    the ``daily`` grid, or None on an empty fact. Shared by the
-    periodogram and Mann-Kendall serve entries."""
+    (mid-stream aggregating compaction) and return the maintained
+    (d, v) grid summed on read — an empty grid on an empty fact, so
+    the day-grid tails derive the batch twins' empty-source rows.
+    Shared by the periodogram and Mann-Kendall serve entries."""
     from ..catalog import load_table
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
-    return _replay(
+    work = _replay(
         spark, orders, "o_custkey", _open_quarters("o_custkey"),
         lambda stream, w: maintain_daily_revenue(
             stream, f"{w}/daily", f"{w}/ckpt", optimize_every=3
         ),
     )
+    if work is None:
+        return spark.createDataFrame([], "d int, v bigint")
+    return _day_grid_totals(spark, f"{work}/daily", "v")
 
 
 QUERIES["streaming_periodogram"] = q_streaming_periodogram
@@ -3292,12 +3249,12 @@ _GAP_STATE_SCHEMA = (
 def _gap_stats_partial(batch_df: DataFrame) -> DataFrame:
     """One micro-batch's per-user gap partial: event count, first/last
     event time (microseconds), and the sum / sum-of-squares of the
-    WITHIN-batch integer-second gaps (the ``events_burstiness``
-    recipe: floor of the microsecond difference, so sub-second
-    timestamps can't round differently across engines). The carry
-    columns (first_us/last_us) are what lets the combine add the ONE
-    boundary gap each batch seam hides — per-user lag window bounded
-    by one user's batch activity, then a map-combinable aggregate."""
+    WITHIN-batch integer-second gaps (``operators.events._gap_s``, the
+    gap ``events_burstiness`` aggregates; the seam gap uses it too).
+    The carry columns (first_us/last_us) are what lets the combine add
+    the ONE boundary gap each batch seam hides — per-user lag window
+    bounded by one user's batch activity, then a map-combinable
+    aggregate."""
     from pyspark.sql import Window
 
     by_user = Window.partitionBy("user_id").orderBy("ts")
@@ -3306,9 +3263,7 @@ def _gap_stats_partial(batch_df: DataFrame) -> DataFrame:
         "ts",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
     )
-    g = F.floor(
-        (F.col("us") - F.lag("us").over(by_user)) / F.lit(1_000_000)
-    ).cast("bigint")
+    g = _gap_s(F.col("us"), F.lag("us").over(by_user))
     return (
         ev.select("user_id", "us", g.alias("g"))
         .groupBy("user_id")
@@ -3390,12 +3345,7 @@ def user_gaps_sink(
                     ),
                 )
             ).cast("bigint"),
-        ).otherwise(
-            F.floor(
-                (F.col("p.first_us") - F.col("c.last_us"))
-                / F.lit(1_000_000)
-            ).cast("bigint")
-        )
+        ).otherwise(_gap_s(F.col("p.first_us"), F.col("c.last_us")))
         upd = (
             partial.alias("p")
             .join(prior.alias("c"), "user_id", "left")
@@ -3503,12 +3453,14 @@ def q_streaming_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     seam hides exactly one boundary gap per user — fold each through
     ``maintain_user_gaps`` (with a mid-stream Z-order cycle so the
     user-probe pruning path is covered), then derive the Goh-Barabási
-    (mu, sigma, B) surface from the MAINTAINED moments — hash-checked
-    against the SAME oracle as the batch ``events_burstiness``,
-    proving a 100 TB pipeline can serve the burstiness screen without
-    ever re-scanning events."""
+    (mu, sigma, B) surface from the MAINTAINED moments through the
+    batch tail ``_burstiness_from_moments`` — hash-checked against the
+    SAME oracle as the batch ``events_burstiness``, proving a 100 TB
+    pipeline can serve the burstiness screen without ever re-scanning
+    events."""
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
+    from ..operators.events import _burstiness_from_moments
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
     work = _replay(
@@ -3517,35 +3469,18 @@ def q_streaming_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, f"{w}/state", f"{w}/ckpt", optimize_every=3
         ),
     )
-    if work is None:  # empty stream: the batch twin returns empty
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, n_gaps bigint, mean_gap_s double, "
-            "std_gap_s double, burstiness double",
-        )
-    st = LakehouseTable(spark, f"{work}/state").read()
+    st = (
+        LakehouseTable(spark, f"{work}/state").read()
+        if work is not None  # empty stream: the tail over empty state
+        else spark.createDataFrame([], _GAP_STATE_SCHEMA)
+    )
     agg = st.filter(F.col("n_events") >= 3).select(
         "user_id",
         (F.col("n_events") - F.lit(1)).cast("bigint").alias("n_gaps"),
-        "sum_g",
-        "sum_g2",
+        F.col("sum_g").alias("_s"),
+        F.col("sum_g2").alias("_s2"),
     )
-    # identical IEEE double expressions to the batch operator, on the
-    # same exact BIGINT moments — bit-identical output
-    n = F.col("n_gaps").cast("double")
-    mu = F.col("sum_g").cast("double") / n
-    var = F.greatest(
-        F.col("sum_g2").cast("double") / n - mu * mu, F.lit(0.0)
-    )
-    sigma = F.sqrt(var)
-    b = F.when(sigma + mu > 0, fround((sigma - mu) / (sigma + mu), 6))
-    return agg.select(
-        "user_id",
-        "n_gaps",
-        fround(mu, 6).alias("mean_gap_s"),
-        fround(sigma, 6).alias("std_gap_s"),
-        b.alias("burstiness"),
-    )
+    return _burstiness_from_moments(agg)
 
 
 QUERIES["streaming_burstiness"] = q_streaming_burstiness
@@ -3697,14 +3632,13 @@ def q_streaming_rake_by_source(
             optimize_every=3,
         ),
     )
-    if work is None:  # empty corpus: the batch twin returns empty
-        return spark.createDataFrame(
-            [],
-            "source string, rank int, phrase string, n_words bigint, "
-            "freq bigint, score double",
+    wordstats, uniq = (
+        _rake_grid_totals(spark, f"{work}/words", f"{work}/phrases")
+        if work is not None  # empty corpus: the scoring over empty grids
+        else (
+            spark.createDataFrame([], _RAKE_WORDS_SCHEMA),
+            spark.createDataFrame([], _RAKE_PHRASES_SCHEMA),
         )
-    wordstats, uniq = _rake_grid_totals(
-        spark, f"{work}/words", f"{work}/phrases"
     )
     scored = _rake_score_phrases(uniq, wordstats, ("source",))
     rk = Window.partitionBy("source").orderBy(
@@ -3958,14 +3892,11 @@ def q_streaming_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, f"{w}/daily", f"{w}/ckpt", optimize_every=3
         ),
     )
-    if work is None:  # empty stream: the batch twin returns empty
-        return spark.createDataFrame(
-            [],
-            "peak_date date, n_events bigint, prev_n bigint, "
-            "next_n bigint, vs_mean double",
-        )
-    daily = _day_grid_totals(spark, f"{work}/daily", "c")
-    return _daily_peaks(daily)
+    return _daily_peaks(
+        _day_grid_totals(spark, f"{work}/daily", "c")
+        if work is not None  # empty stream: the peaks of an empty grid
+        else spark.createDataFrame([], "d date, c bigint")
+    )
 
 
 QUERIES["streaming_daily_peaks"] = q_streaming_daily_peaks
@@ -4144,12 +4075,14 @@ def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the correction path: later-arriving smaller doc_ids steal first
     occurrences and decrement the earlier holders — with a mid-stream
     Z-order cycle covering the clustered gram-probe path, then derive
-    (n_grams, n_novel, novelty) from the MAINTAINED doc table —
-    hash-checked against the SAME oracle as the batch ``doc_novelty``,
-    proving the maintained counters bit-equal a from-scratch pass over
-    everything delivered regardless of arrival order."""
+    (n_grams, n_novel, novelty) from the MAINTAINED doc table through
+    the batch tail ``_novelty_ratio`` — hash-checked against the SAME
+    oracle as the batch ``doc_novelty``, proving the maintained
+    counters bit-equal a from-scratch pass over everything delivered
+    regardless of arrival order."""
     from ..catalog import load_table
     from ..load.lakehouse import LakehouseTable
+    from ..operators.text import _novelty_ratio
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
@@ -4170,21 +4103,10 @@ def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             optimize_every=3,
         ),
     )
-    if work is None:  # empty corpus: the batch twin returns empty
-        return spark.createDataFrame(
-            [], "doc_id bigint, n_grams bigint, n_novel bigint, "
-            "novelty double"
-        )
-    out = LakehouseTable(spark, f"{work}/docs").read()
-    return out.select(
-        "doc_id",
-        "n_grams",
-        "n_novel",
-        fround(
-            F.col("n_novel").cast("double")
-            / F.col("n_grams").cast("double"),
-            6,
-        ).alias("novelty"),
+    return _novelty_ratio(
+        LakehouseTable(spark, f"{work}/docs").read()
+        if work is not None  # empty corpus: the tail over empty counters
+        else spark.createDataFrame([], _NOV_DOCS_SCHEMA)
     )
 
 
@@ -4283,12 +4205,13 @@ def q_streaming_drift_mmd(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         cols=["label", "v"],
     )
-    if work is None:  # empty corpus: no pairs to report
-        return spark.createDataFrame(
-            [], "label_a bigint, label_b bigint, n_a bigint, "
-            "n_b bigint, mmd2_linear double, mmd2_quadratic double"
+    return _drift_mmd_from_moments(
+        _drift_grid_totals(spark, f"{work}/grid")
+        if work is not None  # empty corpus: the report of an empty grid
+        else spark.createDataFrame(
+            [], "label bigint, i int, j int, s decimal(38,12)"
         )
-    return _drift_mmd_from_moments(_drift_grid_totals(spark, f"{work}/grid"))
+    )
 
 
 QUERIES["streaming_drift_mmd"] = q_streaming_drift_mmd
@@ -4313,14 +4236,7 @@ def q_streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scanning the fact."""
     from ..operators.profiling import _mann_kendall_from_daily
 
-    work = _replayed_daily_revenue(spark, sf_dir)
-    if work is None:  # empty fact: nothing to test
-        return spark.createDataFrame(
-            [], "n_days bigint, s_stat bigint, var_s double, "
-            "z double, tau_b double"
-        )
-    daily = _day_grid_totals(spark, f"{work}/daily", "v")
-    return _mann_kendall_from_daily(daily)
+    return _mann_kendall_from_daily(_replayed_revenue_grid(spark, sf_dir))
 
 
 QUERIES["streaming_mann_kendall"] = q_streaming_mann_kendall
@@ -4759,6 +4675,10 @@ ORACLE["streaming_ann_ivf_pq_stored"] = _pq_sampled_oracle(
 # ---------------------------------------------------------------------------
 
 
+_BM25_POSTINGS_SCHEMA = "w string, doc_id bigint, tf bigint, dl int"
+_BM25_STATS_SCHEMA = "kind string, w string, v bigint, v2 bigint"
+
+
 def bm25_index_sink(
     batch_df: DataFrame,
     batch_id: int,
@@ -4879,20 +4799,20 @@ def q_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             optimize_every=3,
         ),
     )
-    if work is None:  # empty corpus: nothing to retrieve
-        return spark.createDataFrame(
-            [], "doc_id bigint, bm25_score double, n_terms_matched bigint"
+    if work is None:  # empty corpus: the scoring tail over an empty index
+        sgrid = spark.createDataFrame([], _BM25_STATS_SCHEMA)
+        wc_dl = spark.createDataFrame([], _BM25_POSTINGS_SCHEMA)
+    else:
+        sgrid = _bm25_stats_totals(spark, f"{work}/stats")
+        wc_dl = LakehouseTable(spark, f"{work}/postings").read_where_in(
+            "w", list(BM25_QUERY)
         )
-    sgrid = _bm25_stats_totals(spark, f"{work}/stats")
     dfreq = sgrid.where(
         (F.col("kind") == "df") & F.col("w").isin(*BM25_QUERY)
     ).select("w", F.col("v").alias("df"))
     stats = sgrid.where(F.col("kind") == "corpus").select(
         F.col("v").alias("n_docs"),
         (F.col("v2") / F.col("v")).alias("avgdl"),
-    )
-    wc_dl = LakehouseTable(spark, f"{work}/postings").read_where_in(
-        "w", list(BM25_QUERY)
     )
     return _bm25_rank(wc_dl, dfreq, stats)
 
@@ -4921,8 +4841,9 @@ def q_streaming_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings replay; doc_id == vec_id pairs the corpora, the
     ``hybrid_rrf_retrieval`` convention — its recall against the
     COSINE truth is the semantic-coverage-of-lexical-serving signal a
-    hybrid-search owner monitors). Oracle nests the member CTEs
-    exactly like the batch report. Cost is the members' replay cost —
+    hybrid-search owner monitors). The members score through the
+    batch report's ``_recall_report``, and the oracle nests the member
+    CTEs exactly like the batch report's. Cost is the members' replay cost —
     an eval op, not a serving path."""
     from ..operators.similarity import (
         IVFPQ_NPROBE,
@@ -4932,16 +4853,16 @@ def q_streaming_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq_code,
         _pq_codebook_sampled,
         _pq_retrieve,
+        _recall_report,
         _with_cosine,
     )
 
-    schema = (
-        "method string, n_retrieved bigint, n_hits bigint, "
-        "recall_at_k double"
-    )
     work = _replayed_ivf_index(spark, sf_dir)
-    if work is None:  # empty corpus: nothing to evaluate
-        return spark.createDataFrame([], schema)
+    if work is None:  # empty corpus: every member retrieves nothing
+        none = spark.createDataFrame([], "vec_id bigint")
+        return _recall_report(
+            none, [(name, none) for name in ("ivf", "pq", "bm25")]
+        )
     from ..load.lakehouse import LakehouseTable
 
     vectors = LakehouseTable(spark, f"{work}/vectors")
@@ -4954,7 +4875,6 @@ def q_streaming_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != QUERY_VEC_ID)
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(TOP_K)
-        .select("vec_id", F.lit(1).alias("hit"))
     )
 
     # ONE routing pass serves both approximate members: _route_probes
@@ -4990,29 +4910,7 @@ def q_streaming_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm25 = q_streaming_bm25(spark, sf_dir).select(
         F.col("doc_id").alias("vec_id")
     )
-
-    parts = []
-    for name, approx in (("ivf", ivf), ("pq", pq), ("bm25", bm25)):
-        agg = approx.join(F.broadcast(exact), "vec_id", "left").agg(
-            F.count(F.lit(1)).alias("n_retrieved"),
-            F.sum(F.coalesce("hit", F.lit(0)))
-            .cast("bigint")
-            .alias("n_hits"),
-        )
-        parts.append(
-            agg.select(
-                F.lit(name).alias("method"),
-                "n_retrieved",
-                "n_hits",
-                fround(F.col("n_hits") / F.lit(float(TOP_K)), 6).alias(
-                    "recall_at_k"
-                ),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+    return _recall_report(exact, [("ivf", ivf), ("pq", pq), ("bm25", bm25)])
 
 
 QUERIES["streaming_ann_recall"] = q_streaming_ann_recall
@@ -5091,8 +4989,9 @@ def decon_sink(
     (the ``doc_id % DECON_EVAL_MOD`` slice standing in for a
     registered benchmark) contribute their distinct 5-grams to the
     maintained eval-gram index, and the batch's TRAINING docs are
-    judged on arrival — per doc, how many of its distinct 5-grams
-    appear in the eval set known so far.
+    judged on arrival through the batch verdict (``_decon_verdicts``)
+    — per doc, how many of its distinct 5-grams appear in the eval set
+    known so far.
 
     Contract (the production shape): benchmarks REGISTER BEFORE
     ingest — an eval gram arriving after a training doc does NOT
@@ -5119,16 +5018,12 @@ def decon_sink(
     full replay is a no-op on both (the gram table is the marker)."""
     from ..operators.text import (
         DECON_EVAL_MOD,
-        DECON_FRAC_THRESH,
         DECON_N,
-        _word_ngrams,
+        _decon_verdicts,
+        _distinct_grams,
     )
 
-    w = F.split("text", " ")
-    grams = batch_df.select(
-        "doc_id",
-        F.explode(F.array_distinct(_word_ngrams(w, DECON_N))).alias("gram"),
-    )
+    grams = _distinct_grams(batch_df, DECON_N)
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
     batch_eval = grams.filter(is_eval).select("gram").distinct().cache()
     train_grams = grams.filter(~is_eval).cache()
@@ -5140,32 +5035,10 @@ def decon_sink(
 
     def stage(verd, idx):
         stored = probe.read(idx.table, idx.version, "gram string")
-        eval_all = (
-            stored.select("gram")
-            .unionAll(batch_eval)
-            .distinct()
-            .withColumn("hit", F.lit(1))
-        )
-        hits = (
-            train_grams.join(F.broadcast(eval_all), "gram", "left")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_grams"),
-                F.count("hit").alias("n_contaminated"),
-            )
-        )
-        out = train_ids.join(hits, "doc_id", "left")
-        n_grams = F.coalesce(F.col("n_grams"), F.lit(0)).cast("bigint")
-        n_cont = F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("bigint")
-        frac = F.when(
-            n_grams > 0, n_cont.cast("double") / n_grams
-        ).otherwise(F.lit(0.0))
-        verdicts = out.select(
-            "doc_id",
-            n_grams.alias("n_grams"),
-            n_cont.alias("n_contaminated"),
-            frac.alias("contamination_frac"),
-            (frac >= F.lit(DECON_FRAC_THRESH)).alias("is_contaminated"),
+        verdicts = _decon_verdicts(
+            train_grams,
+            stored.select("gram").unionAll(batch_eval).distinct(),
+            train_ids,
         )
         # the gram table stays a SET: only grams the pinned index does
         # not already hold append (stored is already the
@@ -5241,6 +5114,7 @@ def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit per-doc leakage flags at arrival from file-pruned eval-gram
     probes, never a corpus re-scan."""
     from ..load.lakehouse import LakehouseTable
+    from ..operators.text import _decon_verdicts
 
     work = _replayed_docs_eval_first(
         spark, sf_dir,
@@ -5249,11 +5123,10 @@ def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             optimize_every=3,
         ),
     )
-    if work is None:  # empty corpus: nothing to judge
-        return spark.createDataFrame(
-            [],
-            "doc_id bigint, n_grams bigint, n_contaminated bigint, "
-            "contamination_frac double, is_contaminated boolean",
+    if work is None:  # empty corpus: the verdict tail over no grams
+        grams = spark.createDataFrame([], "doc_id bigint, gram string")
+        return _decon_verdicts(
+            grams, grams.select("gram"), grams.select("doc_id")
         )
     return LakehouseTable(spark, f"{work}/verdicts").read().select(
         "doc_id",
@@ -5285,7 +5158,8 @@ def containment_sink(
     INLINE on every row, the bm25 norms-inline trick, so the probe
     never joins a second size table — and every arriving training doc
     emits, at arrival, the (doc_id, eval_id) pairs whose containment
-    (shared grams / eval item's grams) clears CONTAIN_THRESH: the
+    (shared grams / eval item's grams, the batch ``_containment_pairs``
+    tail) clears CONTAIN_THRESH: the
     leaked benchmark ITEM, not just a leakage flag, so the item can
     be dropped from eval or the doc from training.
 
@@ -5301,16 +5175,12 @@ def containment_sink(
 
     from ..operators.text import (
         CONTAIN_N,
-        CONTAIN_THRESH,
         DECON_EVAL_MOD,
-        _word_ngrams,
+        _containment_pairs,
+        _distinct_grams,
     )
 
-    w = F.split("text", " ")
-    grams = batch_df.select(
-        "doc_id",
-        F.explode(F.array_distinct(_word_ngrams(w, CONTAIN_N))).alias("gram"),
-    )
+    grams = _distinct_grams(batch_df, CONTAIN_N)
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
     wsz = Window.partitionBy("doc_id")
     batch_eval = (
@@ -5340,17 +5210,7 @@ def containment_sink(
                 F.expr("any_value(eval_grams)").cast("bigint").alias("eval_grams"),
             )
         )
-        containment = fround(
-            F.col("n_shared").cast("double") / F.col("eval_grams"), 6
-        )
-        pairs = hits.select(
-            "doc_id",
-            "eval_id",
-            "n_shared",
-            "eval_grams",
-            containment.alias("containment"),
-        ).filter(F.col("containment") >= CONTAIN_THRESH)
-        return [_append(pairs), _append(batch_eval)]
+        return [_append(_containment_pairs(hits)), _append(batch_eval)]
 
     try:
         return _commit_batch(
@@ -5396,6 +5256,7 @@ def q_streaming_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``streaming_decontaminate``) says A DOC leaks, this says WHICH
     benchmark item it leaks."""
     from ..load.lakehouse import LakehouseTable
+    from ..operators.text import _containment_pairs
 
     work = _replayed_docs_eval_first(
         spark, sf_dir,
@@ -5404,12 +5265,12 @@ def q_streaming_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             optimize_every=3,
         ),
     )
-    if work is None:  # empty corpus: nothing to judge
-        return spark.createDataFrame(
+    if work is None:  # empty corpus: the score tail over no pairs
+        return _containment_pairs(spark.createDataFrame(
             [],
             "doc_id bigint, eval_id bigint, n_shared bigint, "
-            "eval_grams bigint, containment double",
-        )
+            "eval_grams bigint",
+        ))
     return LakehouseTable(spark, f"{work}/pairs").read().select(
         "doc_id", "eval_id", "n_shared", "eval_grams", "containment"
     )
@@ -5866,8 +5727,9 @@ def copurchase_sink(
     batch RAISES before any commit (a split basket would silently
     under-count its pairs forever).
 
-    Scale shape: the pair explode is per-order C(k,2) — bounded by
-    basket size exactly like the batch operator (TPC-H baskets are
+    Scale shape: the pair explode is the batch operator's own
+    ``basket_pairs`` — per-order C(k,2), bounded by basket size (TPC-H
+    baskets are
     ≤7 items; a corpus with mega-baskets would add a df-cap with
     LOUD truncation accounting, the dedup discipline — not applied
     here because the batch oracle is uncapped); both grids collapse
@@ -5889,28 +5751,11 @@ def copurchase_sink(
     on full replay or an empty batch."""
     if batch_df.isEmpty():
         return False
+    from ..operators.graph import basket_items, basket_pairs
+
     baskets = batch_df.select("l_orderkey", "l_partkey").distinct().cache()
-    a = baskets.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("a_part")
-    )
-    b = baskets.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("b_part")
-    )
-    p_pairs = (
-        a.join(
-            b,
-            (F.col("o") == F.col("o2"))
-            & (F.col("a_part") < F.col("b_part")),
-        )
-        .groupBy("a_part", "b_part")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-        .cache()
-    )
-    p_items = (
-        baskets.groupBy(F.col("l_partkey").alias("pk"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_item"))
-        .cache()
-    )
+    p_pairs = basket_pairs(baskets).cache()
+    p_items = basket_items(baskets).cache()
     o_min, o_max, n_orders_batch = baskets.agg(
         F.min("l_orderkey"), F.max("l_orderkey"),
         F.countDistinct("l_orderkey"),
@@ -6018,18 +5863,18 @@ def q_streaming_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
             optimize_every=3,
         ),
     )
-    if work is None:  # empty fact: the batch twin returns empty
-        return spark.createDataFrame(
-            [],
-            "a_part bigint, b_part bigint, n_ab bigint, lift double, "
-            "conf_a_to_b double",
+    if work is None:  # empty fact: the ranking tail over empty grids
+        pair_tot = spark.createDataFrame([], _COPUR_PAIRS_SCHEMA)
+        item_tot = spark.createDataFrame([], _COPUR_ITEMS_SCHEMA)
+        n_baskets = 0
+    else:
+        pair_tot, item_tot = _copurchase_grid_totals(
+            spark, f"{work}/pairs", f"{work}/items"
         )
-    items_t = LakehouseTable(spark, f"{work}/items")
-    pair_tot, item_tot = _copurchase_grid_totals(
-        spark, f"{work}/pairs", f"{work}/items"
-    )
+        n_baskets = LakehouseTable(spark, f"{work}/items").latest_value(
+            "n_baskets_total"
+        )
     pair = pair_tot.filter(F.col("n_orders") >= MIN_COPURCHASE)
-    n_baskets = items_t.latest_value("n_baskets_total")
     total = spark.createDataFrame(
         [(int(n_baskets),)], "n_baskets bigint"
     )
@@ -6113,14 +5958,14 @@ def pmi_grids_sink(
     Exactly-once across the two independent tables through
     ``_commit_batch``: pairs, then unigrams (the marker). Returns False
     on full replay or an empty batch."""
-    from ..operators.text import _ADJ_PAIRS_EXPR
+    from ..operators.text import _adj_pairs_expr
 
     if batch_df.isEmpty():
         return False
     toks = batch_df.select(F.split(F.lower("text"), " ").alias("w"))
     p_pairs = (
         toks.filter(F.size("w") >= 2)
-        .select(F.explode(F.expr(_ADJ_PAIRS_EXPR)).alias("p"))
+        .select(F.explode(F.expr(_adj_pairs_expr("w"))).alias("p"))
         .groupBy("p.w1", "p.w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
     )
@@ -6251,12 +6096,13 @@ def q_streaming_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             optimize_every=3,
         ),
     )
-    if work is None:  # empty corpus: the batch twin returns empty
-        return spark.createDataFrame(
-            [], "w1 string, w2 string, n_ab bigint, pmi double"
-        )
     return _pmi_from_grids(
         *_pmi_grid_totals(spark, f"{work}/pairs", f"{work}/uni")
+        if work is not None  # empty corpus: the ranking over empty grids
+        else (
+            spark.createDataFrame([], _PMI_PAIRS_SCHEMA),
+            spark.createDataFrame([], _PMI_UNI_SCHEMA),
+        )
     )
 
 
