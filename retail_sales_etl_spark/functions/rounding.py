@@ -46,3 +46,18 @@ def fround(col: Column | str, scale: int = 6) -> Column:
         col = F.col(col)
     p = F.lit(float(10**scale))
     return F.floor(col * p + F.lit(0.5)) / p
+
+
+def stage9(col: Column) -> Column:
+    """9-dp floor-stage then DECIMAL(28,9): the staging of every
+    product or term that enters an order-independent sum, so a float
+    never re-enters the sum.
+
+    Oracle twin: ``CAST(floor((x) * 1e9 + 0.5) / 1e9 AS DECIMAL(28,9))``.
+    """
+    return fround(col, 9).cast("decimal(28,9)")
+
+
+def sum9(col: Column) -> Column:
+    """Decimal-exact sum of ``col`` staged by ``stage9``, as a double."""
+    return F.sum(stage9(col)).cast("double")

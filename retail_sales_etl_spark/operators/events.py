@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ols import ols_fit, ols_sums
 from ..functions.rounding import fround
 
 SESSION_GAP_SEC = 1800
@@ -117,14 +118,15 @@ def q_events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization: a >30-min silence starts a new session."""
-    ev = load_table(spark, sf_dir, "events")
+def _gap_sessions(ev: DataFrame) -> DataFrame:
+    """The gap sessionizer: (user_id, ts, event_id, new_session,
+    session_seq), where a whole-second gap > SESSION_GAP_SEC from the
+    user's previous event ((ts, event_id) order) flags a new session
+    and the running sum of the flags numbers it. Shared by
+    ``events_sessionize`` and the Kaplan-Meier core ``_km_curve``."""
     by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    with_flag = ev.select(
+    run = by_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return ev.select(
         "user_id",
         "ts",
         "event_id",
@@ -136,8 +138,14 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("new_session"),
     ).withColumn("session_seq", F.sum("new_session").over(run) + 1)
+
+
+def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-based sessionization: a >30-min silence starts a new session."""
+    ev = load_table(spark, sf_dir, "events")
     return (
-        with_flag.groupBy("user_id", "session_seq")
+        _gap_sessions(ev)
+        .groupBy("user_id", "session_seq")
         .agg(
             F.date_format(F.min("ts"), _FMT_SPARK).alias("session_start"),
             F.date_format(F.max("ts"), _FMT_SPARK).alias("session_end"),
@@ -302,6 +310,24 @@ def q_events_cohort_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _native_sessions(ev: DataFrame) -> DataFrame:
+    """The native session aggregate: one ``session_window`` group per
+    user with the formatted start/end and the event count. Batch
+    ``events_session_native`` calls it on the table, the streaming
+    twin ``session_windows_native`` on its watermarked stream."""
+    return (
+        ev.groupBy(
+            "user_id", F.session_window("ts", f"{SESSION_GAP_SEC} seconds")
+        )
+        .agg(
+            F.date_format(F.min("ts"), _FMT_SPARK).alias("session_start"),
+            F.date_format(F.max("ts"), _FMT_SPARK).alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+        .select("user_id", "session_start", "session_end", "n_events")
+    )
+
+
 def q_events_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap sessionization via Spark's NATIVE ``session_window`` operator
     (the scale path: a single partial-merging aggregate, no window
@@ -314,18 +340,7 @@ def q_events_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the window version compares whole-second unix_timestamps. The
     oracle below mirrors the native (epoch_us, >=) semantics.
     """
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            "user_id", F.session_window("ts", f"{SESSION_GAP_SEC} seconds")
-        )
-        .agg(
-            F.date_format(F.min("ts"), _FMT_SPARK).alias("session_start"),
-            F.date_format(F.max("ts"), _FMT_SPARK).alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events")
-    )
+    return _native_sessions(load_table(spark, sf_dir, "events"))
 
 
 _SESSION_NATIVE_SESS_SQL = f"""
@@ -1241,29 +1256,14 @@ ORACLE["events_hour_dow_heatmap"] = f"""
 
 def _km_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared Kaplan-Meier derivation core: sessionize by the
-    ``events_sessionize`` gap rule, censor sessions still within one
-    idle gap of the observation end, and build the KM curve on the
-    bounded distinct-duration grid — consumed by the curve entry
-    (``session_km_survival``) and the parametric fit over it
+    ``events_sessionize`` gap rule (``_gap_sessions``), censor sessions
+    still within one idle gap of the observation end, and build the KM
+    curve on the bounded distinct-duration grid — consumed by the curve
+    entry (``session_km_survival``) and the parametric fit over it
     (``session_weibull_fit``), so the two can never drift on
     censoring or rounding."""
     ev = load_table(spark, sf_dir, "events")
-    by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = by_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    flagged = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            F.unix_timestamp("ts")
-            - F.unix_timestamp(F.lag("ts").over(by_user))
-            > SESSION_GAP_SEC,
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    ).withColumn("session_seq", F.sum("new_session").over(run) + 1)
-    sess = flagged.groupBy("user_id", "session_seq").agg(
+    sess = _gap_sessions(ev).groupBy("user_id", "session_seq").agg(
         (
             F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))
         ).alias("dur"),
@@ -1339,8 +1339,8 @@ def q_session_km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     them dead) is the classic churn-analysis bias this estimator
     exists to fix.
 
-    Sessions come from the same gap rule as ``events_sessionize``.
-    Everything after the per-session rollup lives on the bounded
+    Sessions come from ``_gap_sessions``, the ``events_sessionize``
+    gap rule. Everything after the per-session rollup lives on the bounded
     distinct-duration grid (``_km_curve``): deaths/censored per
     duration (one aggregate), at-risk via a reverse cumulative sum,
     and the KM product as exp of a cumulative DECIMAL sum of 6-dp ln
@@ -1369,10 +1369,11 @@ def q_session_weibull_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fit runs entirely on the bounded distinct-
     duration grid — the corpus collapses in ``_km_curve``'s one
     session rollup; the OLS is one aggregate over grid rows.
-    Determinism: the zipf-fit log-staging discipline — every
-    transcendental 6-dp floor-staged (ln t; -ln S staged before the
-    outer ln), products 9-dp staged, DECIMAL sums, the closed form in
-    mirrored double arithmetic, guarded degenerate denominators.
+    Determinism: every transcendental 6-dp floor-staged (ln t; -ln S
+    staged before the outer ln), then the shared staged OLS kernel
+    (``functions/ols.py``: 9-dp staged products, DECIMAL sums, the
+    closed form in mirrored double arithmetic), guarded degenerate
+    denominators.
     Fit points exclude dur=0 (ln undefined), survival pinned to 0
     (the all-die tail), and censor-only grid rows (no death at that
     duration ⇒ no plotting position)."""
@@ -1383,7 +1384,8 @@ def _weibull_fit_from_curve(curve: DataFrame) -> DataFrame:
     """Weibull probability-plot OLS over a KM curve DataFrame — the
     fit tail of ``session_weibull_fit``, split out so the streaming
     serve path regresses over a maintained-state curve through the
-    IDENTICAL staged-log / DECIMAL-sum expression chain."""
+    IDENTICAL staged-log / DECIMAL-sum expression chain (the shared
+    OLS kernel ``functions/ols.py``)."""
     pts = curve.filter(
         (F.col("n_death") > 0)
         & (F.col("duration_sec") > 0)
@@ -1393,23 +1395,10 @@ def _weibull_fit_from_curve(curve: DataFrame) -> DataFrame:
     x6 = fround(F.log(F.col("duration_sec").cast("double")), 6)
     y6 = fround(F.log(fround(-F.log(F.col("survival")), 6)), 6)
 
-    def _p9(c: F.Column) -> F.Column:
-        return fround(c, 9).cast("decimal(28,9)")
-
     sums = pts.select(x6.alias("x6"), y6.alias("y6")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_points"),
-        F.sum(F.col("x6").cast("decimal(25,6)")).cast("double").alias("sx"),
-        F.sum(F.col("y6").cast("decimal(25,6)")).cast("double").alias("sy"),
-        F.sum(_p9(F.col("x6") * F.col("x6"))).cast("double").alias("sxx"),
-        F.sum(_p9(F.col("x6") * F.col("y6"))).cast("double").alias("sxy"),
-        F.sum(_p9(F.col("y6") * F.col("y6"))).cast("double").alias("syy"),
+        F.count(F.lit(1)).cast("bigint").alias("n_points"), *ols_sums()
     )
-    n_d = F.col("n_points").cast("double")
-    cov = n_d * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = n_d * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = n_d * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = cov / varx
-    intercept = (F.col("sy") - slope * F.col("sx")) / n_d
+    cov, varx, vary, slope, intercept = ols_fit("n_points")
     return sums.select(
         "n_points",
         F.when(varx > 0, fround(slope, 6)).otherwise(F.lit(0.0)).alias(
@@ -1670,6 +1659,32 @@ ORACLE["events_ab_test"] = f"""
 # Markov transition matrix over within-session event sequences.
 
 
+def _transitions(ev: DataFrame, *keep: str) -> DataFrame:
+    """The within-session transition pairs (``keep`` columns, from_type,
+    to_type): each event and the user's next one ((ts, event_id)
+    order) whose whole-second gap keeps them in one session
+    (<= SESSION_GAP_SEC, the complement of the sessionizer's > split).
+    Shared by ``events_markov_chain``, ``markov_next_event_eval`` (which
+    keeps ``user_id`` for its holdout split) and
+    ``events_entropy_rate``."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        ev.select(
+            *keep,
+            F.col("event_type").alias("from_type"),
+            F.lead("event_type").over(w).alias("to_type"),
+            (
+                F.lead(F.unix_timestamp("ts")).over(w)
+                - F.unix_timestamp("ts")
+            ).alias("gap"),
+        )
+        .filter(
+            F.col("to_type").isNotNull() & (F.col("gap") <= SESSION_GAP_SEC)
+        )
+        .select(*keep, "from_type", "to_type")
+    )
+
+
 def q_events_markov_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of event types WITHIN
     sessions: P(next_type | type) over adjacent event pairs whose gap
@@ -1687,17 +1702,7 @@ def q_events_markov_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor form. No self-joins, no global windows; per-user partitions
     bounded by user activity.
     """
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-        (
-            F.lead(F.unix_timestamp("ts")).over(w) - F.unix_timestamp("ts")
-        ).alias("gap"),
-    ).filter(
-        F.col("to_type").isNotNull() & (F.col("gap") <= SESSION_GAP_SEC)
-    )
+    pairs = _transitions(load_table(spark, sf_dir, "events"))
     counts = pairs.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_transitions")
     )
@@ -1986,29 +1991,13 @@ def q_markov_next_event_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     on its own training data. The eval half of
     ``events_markov_chain``'s fitted model.
 
-    Plan: the same single per-user window pass over events emits
+    Plan: the one per-user window pass of ``_transitions`` emits
     adjacent in-session pairs ONCE; both halves then reduce to
     (from, to) count grids (|types|^2), so training argmax, eval
     totals, and the hit join all run on broadcast-size frames — the
     fact shuffles once regardless of corpus size.
     """
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            "user_id",
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-            (
-                F.lead(F.unix_timestamp("ts")).over(w)
-                - F.unix_timestamp("ts")
-            ).alias("gap"),
-        )
-        .filter(
-            F.col("to_type").isNotNull() & (F.col("gap") <= SESSION_GAP_SEC)
-        )
-        .select("user_id", "from_type", "to_type")
-    )
+    pairs = _transitions(load_table(spark, sf_dir, "events"), "user_id")
     train = (
         pairs.filter(F.col("user_id") % 2 == 0)
         .groupBy("from_type", "to_type")
@@ -2103,8 +2092,8 @@ def q_events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     clickstream actually is (0 = deterministic next-event, ln S =
     uniform chaos), plus the normalized form and its complement.
 
-    Plan: the same one-window-pass pair grid as the markov operator,
-    collapsed to the |types|² count grid; every downstream quantity
+    Plan: the markov operator's pair grid (``_transitions``, one
+    window pass), collapsed to the |types|² count grid; every downstream quantity
     lives on that bounded grid — ln terms 6-dp floor-staged into a
     DECIMAL sum (even a 25-row double sum is partition-order-
     dependent), marginals and N exact integers, the normalizing ln S
@@ -2112,17 +2101,7 @@ def q_events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     purpose: exp() is not correctly-rounded libm and would break
     cross-engine exactness for zero analytic gain.
     """
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-        (
-            F.lead(F.unix_timestamp("ts")).over(w) - F.unix_timestamp("ts")
-        ).alias("gap"),
-    ).filter(
-        F.col("to_type").isNotNull() & (F.col("gap") <= SESSION_GAP_SEC)
-    )
+    pairs = _transitions(load_table(spark, sf_dir, "events"))
     counts = pairs.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )

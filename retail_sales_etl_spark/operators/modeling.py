@@ -94,15 +94,14 @@ def build_supplier_dim(
     )
 
 
-def build_date_dim(orders: DataFrame) -> DataFrame:
-    """Calendar spine over the fact's date range (modeling.py:191).
-
-    Aggregate to one row (min/max), explode a date sequence, derive
-    calendar attributes. The only wide op is the 1-row agg.
-    """
-    bounds = orders.agg(
-        F.min(F.to_date("o_orderdate")).alias("mn"),
-        F.max(F.to_date("o_orderdate")).alias("mx"),
+def date_spine(df: DataFrame, date_col: str) -> DataFrame:
+    """Calendar spine over ``df``'s ``date_col`` range: aggregate to one
+    row (min/max), explode a date sequence, derive calendar attributes.
+    The only wide op is the 1-row agg. ``build_date_dim`` runs it over
+    the orders, ``retail_compat.build_date_dim`` over the sale dates."""
+    bounds = df.agg(
+        F.min(F.to_date(date_col)).alias("mn"),
+        F.max(F.to_date(date_col)).alias("mx"),
     )
     spine = bounds.select(F.explode(F.sequence("mn", "mx")).alias("date"))
     return spine.select(
@@ -114,6 +113,12 @@ def build_date_dim(orders: DataFrame) -> DataFrame:
         weekday_mon0(F.col("date")).isin(5, 6).alias("is_weekend"),
         F.quarter("date").alias("quarter"),
     )
+
+
+def build_date_dim(orders: DataFrame) -> DataFrame:
+    """Calendar spine over the fact's date range (modeling.py:191):
+    ``date_spine`` over ``o_orderdate``."""
+    return date_spine(orders, "o_orderdate")
 
 
 def build_sales_fact(lineitem: DataFrame) -> DataFrame:

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..catalog import load_table
-from ..functions.rounding import fround
+from ..functions.rounding import fround, sum9
 from ..functions.vectors import as_double_array, cosine, dot, l2sq
 
 DIM = 64
@@ -2082,11 +2082,6 @@ def _pc_assemble(frame: DataFrame, dim_col: str, val_col: str) -> DataFrame:
     )
 
 
-def _sum9(x: F.Column) -> F.Column:
-    """Decimal-exact sum of ``x`` staged to 9 dp, as a double."""
-    return F.sum(fround(x, 9).cast("decimal(28,9)")).cast("double")
-
-
 def _power_step(cent: DataFrame, vec: DataFrame) -> DataFrame:
     """One staged power-iteration pass s = X_cᵀ(X_c v) over the
     centered rows ``cent`` (xc) against the 64-row iterate ``vec``
@@ -2102,7 +2097,7 @@ def _power_step(cent: DataFrame, vec: DataFrame) -> DataFrame:
     return (
         proj.select(F.posexplode("xc").alias("dim", "xcv"), "p")
         .groupBy("dim")
-        .agg(_sum9(F.col("p") * F.col("xcv")).alias("s"))
+        .agg(sum9(F.col("p") * F.col("xcv")).alias("s"))
         .select("dim", fround(F.col("s"), 6).alias("s6"))
     )
 
@@ -2402,7 +2397,7 @@ def q_embedding_pc2(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(PCA_POWER_ROUNDS):
         s6 = _power_step(cent, u).localCheckpoint(eager=True)
         j = s6.join(v1r, "dim")
-        c1 = j.agg(_sum9(F.col("s6") * F.col("v1")).alias("c")).select(
+        c1 = j.agg(sum9(F.col("s6") * F.col("v1")).alias("c")).select(
             fround(F.col("c"), 6).alias("c1")
         )
         d6 = j.crossJoin(F.broadcast(c1)).select(
@@ -2414,7 +2409,7 @@ def q_embedding_pc2(spark: SparkSession, sf_dir: str) -> DataFrame:
         u, nrm2 = _normalize6(d6, "d6")
     ortho = (
         u.join(v1r, "dim")
-        .agg(_sum9(F.col("val") * F.col("v1")).alias("c"))
+        .agg(sum9(F.col("val") * F.col("v1")).alias("c"))
         .select(fround(F.col("c"), 6).alias("dot_v1_v2"))
     )
     return (

@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.rounding import fround
+from ..functions.ols import ols_fit, ols_sums
+from ..functions.rounding import fround, stage9
 
 # marker tokens per language for the n-gram/stopword scoring heuristic
 LANG_MARKERS = {
@@ -2650,11 +2651,6 @@ def _logi_p(z: F.Column) -> F.Column:
     return F.lit(0.5) + F.lit(0.5) * (z / (F.lit(1.0) + F.abs(z)))
 
 
-def _logi_stage(c: F.Column) -> F.Column:
-    """9-dp floor-stage then DECIMAL — floats never re-enter a sum."""
-    return fround(c, 9).cast("decimal(28,9)")
-
-
 def _logi_step(feats: DataFrame, beta: DataFrame | None) -> DataFrame:
     """One Newton step: corpus-wide gradient/Hessian sums (staged
     decimal — order-independent), then the 2x2 closed-form solve as
@@ -2672,11 +2668,11 @@ def _logi_step(feats: DataFrame, beta: DataFrame | None) -> DataFrame:
         d.select(
             "b0",
             "b1",
-            _logi_stage(F.col("y") - p).alias("tg0"),
-            _logi_stage((F.col("y") - p) * F.col("x")).alias("tg1"),
-            _logi_stage(w).alias("tw"),
-            _logi_stage(w * F.col("x")).alias("twx"),
-            _logi_stage((w * F.col("x")) * F.col("x")).alias("twxx"),
+            stage9(F.col("y") - p).alias("tg0"),
+            stage9((F.col("y") - p) * F.col("x")).alias("tg1"),
+            stage9(w).alias("tw"),
+            stage9(w * F.col("x")).alias("twx"),
+            stage9((w * F.col("x")) * F.col("x")).alias("twxx"),
         )
         .groupBy("b0", "b1")
         .agg(
@@ -2737,7 +2733,7 @@ def q_quality_logistic_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         z = F.col(f"b0_{i}") + F.col(f"b1_{i}") * F.col("x")
         p = _logi_p(z)
         err = F.col("y") - p
-        terms.append(_logi_stage(err * err).alias(f"tb_{i}"))
+        terms.append(stage9(err * err).alias(f"tb_{i}"))
         terms.append(
             F.when((z >= F.lit(0.0)) == (F.col("y") == F.lit(1.0)), 1)
             .otherwise(0)
@@ -2908,9 +2904,10 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune one reducer would still sort it; the head filter then
     bounds everything downstream at ZIPF_MAX_RANK rows.
     Determinism: ln values 6-dp floor-staged (libm ln differs by ulps
-    across engines; the unigram_logprob discipline), their products
-    9-dp staged, DECIMAL sums, the OLS closed form in mirrored double
-    arithmetic, guarded degenerate denominators.
+    across engines; the unigram_logprob discipline), then the shared
+    staged OLS kernel (``functions/ols.py``: 9-dp staged products,
+    DECIMAL sums, the closed form in mirrored double arithmetic),
+    guarded degenerate denominators.
     """
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
@@ -2937,24 +2934,10 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     x6 = fround(F.log(F.col("r").cast("double")), 6)
     y6 = fround(F.log(F.col("cw").cast("double")), 6)
 
-    def _p9(c: F.Column) -> F.Column:
-        return fround(c, 9).cast("decimal(28,9)")
-
-    sums = head.select(
-        x6.alias("x6"), y6.alias("y6")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_head"),
-        F.sum(F.col("x6").cast("decimal(25,6)")).cast("double").alias("sx"),
-        F.sum(F.col("y6").cast("decimal(25,6)")).cast("double").alias("sy"),
-        F.sum(_p9(F.col("x6") * F.col("x6"))).cast("double").alias("sxx"),
-        F.sum(_p9(F.col("x6") * F.col("y6"))).cast("double").alias("sxy"),
-        F.sum(_p9(F.col("y6") * F.col("y6"))).cast("double").alias("syy"),
+    sums = head.select(x6.alias("x6"), y6.alias("y6")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_head"), *ols_sums()
     )
-    n_d = F.col("n_head").cast("double")
-    cov = n_d * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = n_d * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = n_d * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = cov / varx
+    cov, varx, vary, slope, intercept = ols_fit("n_head")
     return sums.crossJoin(F.broadcast(totals)).select(
         "n_types",
         "n_tokens",
@@ -2962,9 +2945,7 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(varx > 0, fround(slope, 6)).otherwise(F.lit(0.0)).alias(
             "zipf_slope"
         ),
-        F.when(
-            varx > 0, fround((F.col("sy") - slope * F.col("sx")) / n_d, 6)
-        )
+        F.when(varx > 0, fround(intercept, 6))
         .otherwise(F.lit(0.0))
         .alias("zipf_intercept"),
         F.when(
@@ -3294,10 +3275,9 @@ def q_text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals -> exclusive prefix offsets windowed over the small band
     grid and broadcast back, intra-band running sums windowed within
     each band — never a corpus-wide single-reducer window (the
-    text_zipf_fit banded-rank discipline). The OLS block mirrors
-    text_zipf_fit exactly: 6-dp floor-staged ln values, 9-dp staged
-    products, DECIMAL sums, closed form in mirrored double arithmetic,
-    guarded degenerate denominators.
+    text_zipf_fit banded-rank discipline). The OLS is text_zipf_fit's:
+    6-dp floor-staged ln values into the shared staged OLS kernel
+    (``functions/ols.py``), guarded degenerate denominators.
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -3343,26 +3323,13 @@ def q_text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     x6 = fround(F.log(F.col("n").cast("double")), 6)
     y6 = fround(F.log(F.col("v").cast("double")), 6)
 
-    def _p9(c: F.Column) -> F.Column:
-        return fround(c, 9).cast("decimal(28,9)")
-
-    sums = curve.select(
-        x6.alias("x6"), y6.alias("y6"), "n", "v"
-    ).agg(
+    sums = curve.select(x6.alias("x6"), y6.alias("y6"), "n", "v").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.max("n").cast("bigint").alias("n_tokens"),
         F.max("v").cast("bigint").alias("n_types"),
-        F.sum(F.col("x6").cast("decimal(25,6)")).cast("double").alias("sx"),
-        F.sum(F.col("y6").cast("decimal(25,6)")).cast("double").alias("sy"),
-        F.sum(_p9(F.col("x6") * F.col("x6"))).cast("double").alias("sxx"),
-        F.sum(_p9(F.col("x6") * F.col("y6"))).cast("double").alias("sxy"),
-        F.sum(_p9(F.col("y6") * F.col("y6"))).cast("double").alias("syy"),
+        *ols_sums(),
     )
-    n_d = F.col("n_docs").cast("double")
-    cov = n_d * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = n_d * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = n_d * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = cov / varx
+    cov, varx, vary, slope, intercept = ols_fit("n_docs")
     return sums.select(
         "n_docs",
         "n_tokens",
@@ -3370,9 +3337,7 @@ def q_text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(varx > 0, fround(slope, 6)).otherwise(F.lit(0.0)).alias(
             "heaps_beta"
         ),
-        F.when(
-            varx > 0, fround((F.col("sy") - slope * F.col("sx")) / n_d, 6)
-        )
+        F.when(varx > 0, fround(intercept, 6))
         .otherwise(F.lit(0.0))
         .alias("heaps_intercept"),
         F.when(

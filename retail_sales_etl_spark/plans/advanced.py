@@ -69,6 +69,62 @@ def q_asof_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 INTERVAL_JOIN_WINDOW_SEC = 1800
 
 
+def _click_purchase_pairs(
+    clicks_src: DataFrame,
+    purchases_src: DataFrame,
+    watermark: str | None = None,
+    outer: bool = False,
+) -> DataFrame:
+    """The click→purchase interval join: every click by the same user
+    at most INTERVAL_JOIN_WINDOW_SEC before a purchase, one
+    (purchase, click) row with the formatted times and the gap.
+
+    ``q_events_interval_join`` and both stream-stream twins
+    (``streaming/events.py`` ``interval_join_clicks_purchases`` and
+    ``_outer``) build their pairs here. The streaming twins add only
+    their ``watermark`` (on both projected sides, which bounds join
+    state) and, for ``outer``, the join type: the outer join preserves
+    purchases, the inner join is clicks ⋈ purchases.
+    """
+    clicks = clicks_src.filter(F.col("event_type") == "click").select(
+        F.col("user_id").alias("c_user"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    purchases = purchases_src.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user"),
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    if watermark is not None:
+        clicks = clicks.withWatermark("click_ts", watermark)
+        purchases = purchases.withWatermark("purchase_ts", watermark)
+    band = (
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("click_ts") <= F.col("purchase_ts"))
+        & (
+            F.col("click_ts")
+            >= F.col("purchase_ts")
+            - F.expr(f"INTERVAL {INTERVAL_JOIN_WINDOW_SEC} SECONDS")
+        )
+    )
+    pairs = (
+        purchases.join(clicks, band, "leftOuter")
+        if outer
+        else clicks.join(purchases, band)
+    )
+    return pairs.select(
+        "purchase_id",
+        "click_id",
+        F.col("p_user").alias("user_id"),
+        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
+        (
+            F.unix_timestamp("purchase_ts") - F.unix_timestamp("click_ts")
+        ).alias("gap_sec"),
+    )
+
+
 def q_events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time interval join: every click within 30 minutes before a
     purchase by the same user (attribution candidate set — the as-of
@@ -76,44 +132,13 @@ def q_events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Executes as an equi-join on user_id with the time band as a join
     filter: shuffle is keyed on user, pair volume is bounded by per-user
-    activity inside the window, never all-pairs. The streaming twin
-    (streaming/events.py interval_join_clicks_purchases) runs the same
-    predicate as a watermarked stream-stream join; tests pin batch ==
-    streaming.
+    activity inside the window, never all-pairs. The pairs come from
+    ``_click_purchase_pairs``, which the streaming twin
+    (streaming/events.py interval_join_clicks_purchases) also calls
+    under its watermarks; tests pin batch == streaming.
     """
     ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return (
-        clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (
-                F.col("click_ts")
-                >= F.col("purchase_ts")
-                - F.expr(f"INTERVAL {INTERVAL_JOIN_WINDOW_SEC} SECONDS")
-            ),
-        )
-        .select(
-            "purchase_id",
-            "click_id",
-            F.col("p_user").alias("user_id"),
-            F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
-            F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-            (
-                F.unix_timestamp("purchase_ts") - F.unix_timestamp("click_ts")
-            ).alias("gap_sec"),
-        )
-    )
+    return _click_purchase_pairs(ev, ev)
 
 
 def q_user_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..catalog import load_table
+from ..functions.ols import ols_fit, ols_sums
 from ..functions.rounding import fround
 
 # Per-row cast target for float aggregation: exact decimal sums.
@@ -1580,8 +1581,9 @@ def q_brand_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: lineitem joins the part dim broadcast (brand lookup
     only — two columns pruned from the dim scan), per-row ln() values
     are 6-dp floor-staged doubles (libm vs java.lang.Math differ by
-    ulps — the zipf/unigram discipline), their products 9-dp staged
-    into DECIMAL(28,9) sums, and the whole regression reduces to one
+    ulps — the zipf/unigram discipline), and the shared staged OLS
+    kernel (``functions/ols.py``) stages their products to 9 dp into
+    DECIMAL(28,9) sums, so the whole regression reduces to one
     map-combinable groupBy over ~25 brand rows: n, Σx, Σy, Σxx, Σxy,
     Σyy. The closed forms run on the tiny brand grid; guarded
     degenerate denominators (zero x-variance → slope/intercept/r2 all
@@ -1602,35 +1604,21 @@ def q_brand_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     y6 = fround(F.log(F.col("l_quantity")), 6)
 
-    def _p9(c: F.Column) -> F.Column:
-        return fround(c, 9).cast("decimal(28,9)")
-
     sums = (
         li.join(broadcast(brands), "l_partkey")
         .select("p_brand", x6.alias("x6"), y6.alias("y6"))
         .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_obs"),
-            F.sum(F.col("x6").cast("decimal(25,6)")).cast("double").alias("sx"),
-            F.sum(F.col("y6").cast("decimal(25,6)")).cast("double").alias("sy"),
-            F.sum(_p9(F.col("x6") * F.col("x6"))).cast("double").alias("sxx"),
-            F.sum(_p9(F.col("x6") * F.col("y6"))).cast("double").alias("sxy"),
-            F.sum(_p9(F.col("y6") * F.col("y6"))).cast("double").alias("syy"),
-        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"), *ols_sums())
         .where(F.col("n_obs") >= ELASTICITY_MIN_OBS)
     )
-    n_d = F.col("n_obs").cast("double")
-    cov = n_d * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = n_d * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = n_d * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = cov / varx
+    cov, varx, vary, slope, intercept = ols_fit("n_obs")
     return sums.select(
         "p_brand",
         "n_obs",
         F.when(varx > 0, fround(slope, 6)).otherwise(F.lit(0.0)).alias(
             "elasticity"
         ),
-        F.when(varx > 0, fround((F.col("sy") - slope * F.col("sx")) / n_d, 6))
+        F.when(varx > 0, fround(intercept, 6))
         .otherwise(F.lit(0.0))
         .alias("intercept"),
         F.when((varx > 0) & (vary > 0), fround((cov * cov) / (varx * vary), 6))

@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .functions.retail import price_band, tenure_bucket, weekday_mon0, year_month
-from .operators import cleaning
+from .functions.retail import price_band, tenure_bucket, year_month
+from .operators import cleaning, modeling
 
 # Schema contracts — reference runner/pipeline_config.py:49-161 verbatim.
 EXPECTED_COLUMNS = {
@@ -190,18 +190,6 @@ def build_sales_fact(df: DataFrame) -> DataFrame:
 
 
 def build_date_dim(sales_fact: DataFrame) -> DataFrame:
-    """date_dim over the sale-date range (transform_data_modeling.py:191)."""
-    bounds = sales_fact.agg(
-        F.min(F.to_date("sale_date")).alias("mn"),
-        F.max(F.to_date("sale_date")).alias("mx"),
-    )
-    spine = bounds.select(F.explode(F.sequence("mn", "mx")).alias("date"))
-    return spine.select(
-        "date",
-        F.year("date").alias("year"),
-        F.month("date").alias("month"),
-        year_month(F.col("date")).alias("year_month"),
-        weekday_mon0(F.col("date")).alias("day_of_week"),
-        weekday_mon0(F.col("date")).isin(5, 6).alias("is_weekend"),
-        F.quarter("date").alias("quarter"),
-    )
+    """date_dim over the sale-date range (transform_data_modeling.py:191):
+    the modeling calendar spine over ``sale_date``."""
+    return modeling.date_spine(sales_fact, "sale_date")

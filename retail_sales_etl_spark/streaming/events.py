@@ -43,7 +43,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.events import SESSION_GAP_SEC, _gap_s
+from ..operators.events import SESSION_GAP_SEC, _gap_s, _native_sessions
 from ..functions.rounding import fround
 from ..operators.profiling import HH_DENOM
 
@@ -120,6 +120,16 @@ SESSION_SCHEMA = StructType(
 )
 
 
+WINDOWED_WATERMARK = "10 minutes"
+"""Event-time watermark of ``windowed_counts``: later events are dropped
+and window state is bounded by it."""
+
+WATERMARK = "30 minutes"
+"""Event-time watermark of the session, dedup and interval-join
+operators: one session gap, which the replay oracles' final-watermark
+predicates (max ts - 30 min) encode."""
+
+
 def read_events_stream(
     spark: SparkSession, events_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
@@ -149,13 +159,14 @@ def read_events_stream(
     return raw
 
 
-def windowed_counts(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def windowed_counts(stream: DataFrame) -> DataFrame:
     """Watermarked tumbling-window aggregate (streaming q_events_windowed).
 
-    Same 5-minute buckets as the batch operator; watermark bounds state.
+    Same 5-minute buckets as the batch operator; ``WINDOWED_WATERMARK``
+    bounds state.
     """
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", WINDOWED_WATERMARK)
         .groupBy(F.window("ts", "5 minutes"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -298,9 +309,7 @@ def stateful_sessions(stream: DataFrame) -> DataFrame:
     )
 
 
-def stateful_sessions_event_timeout(
-    stream: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
+def stateful_sessions_event_timeout(stream: DataFrame) -> DataFrame:
     """Production stateful sessionization: EventTimeTimeout flush.
 
     A user whose session has gone quiet is emitted as soon as the
@@ -312,7 +321,7 @@ def stateful_sessions_event_timeout(
     """
     return (
         stream.select("user_id", "ts")
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             _session_func_event_timeout,
@@ -331,23 +340,18 @@ def q_streaming_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``events_windowed`` is the oracle-checked equivalent; tests assert
     the two agree.
     """
-    import uuid
-
-    from ..catalog import table_path
-
-    stream = read_events_stream(spark, table_path(sf_dir, "events"))
-    name = f"stream_win_{uuid.uuid4().hex[:8]}"
-    return run_to_memory(
-        windowed_counts(stream), name, spark, output_mode="complete"
+    return _events_to_memory(
+        spark, sf_dir, "stream_win", lambda events: windowed_counts(events()),
+        max_files_per_trigger=1, output_mode="complete",
     )
 
 
-def dedupe_stream(stream: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+def dedupe_stream(stream: DataFrame) -> DataFrame:
     """Exactly-once ingestion dedup: drop replayed event_ids within the
     watermark horizon. State holds one key per event inside the horizon
     and is purged as the watermark advances — the standard guard in
     front of an at-least-once source."""
-    return stream.withWatermark("ts", watermark).dropDuplicates(["event_id"])
+    return stream.withWatermark("ts", WATERMARK).dropDuplicates(["event_id"])
 
 
 _OPTIMIZE_FILES = 8
@@ -1534,68 +1538,26 @@ def apply_changes_stream(
 
 
 def interval_join_clicks_purchases(
-    clicks_stream: DataFrame,
-    purchases_stream: DataFrame,
-    watermark: str = "30 minutes",
+    clicks_stream: DataFrame, purchases_stream: DataFrame
 ) -> DataFrame:
     """Stream-stream inner join with an event-time range bound.
 
-    Same predicate as the batch q_events_interval_join (plans/
-    advanced.py): clicks within INTERVAL_JOIN_WINDOW_SEC before a
-    purchase by the same user. Watermarks on BOTH inputs plus the time
-    band let Spark bound join state: a buffered click is purged once
-    the purchase-side watermark passes click_ts + window, so state is
+    The pairs come from ``plans/advanced.py`` ``_click_purchase_pairs``,
+    the builder of the batch q_events_interval_join: clicks within
+    INTERVAL_JOIN_WINDOW_SEC before a purchase by the same user.
+    Watermarks on BOTH inputs (``WATERMARK``) plus the time band let
+    Spark bound join state: a buffered click is purged once the
+    purchase-side watermark passes click_ts + window, so state is
     O(events inside the horizon), not O(stream). This is the pattern
     for streaming attribution at scale — the batch twin is the oracle.
     """
-    from ..plans.advanced import INTERVAL_JOIN_WINDOW_SEC
+    from ..plans.advanced import _click_purchase_pairs
 
-    clicks = (
-        clicks_stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        purchases_stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return (
-        clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (
-                F.col("click_ts")
-                >= F.col("purchase_ts")
-                - F.expr(f"INTERVAL {INTERVAL_JOIN_WINDOW_SEC} SECONDS")
-            ),
-        )
-        .select(
-            "purchase_id",
-            "click_id",
-            F.col("p_user").alias("user_id"),
-            F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
-            F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-            (
-                F.unix_timestamp("purchase_ts") - F.unix_timestamp("click_ts")
-            ).alias("gap_sec"),
-        )
-    )
+    return _click_purchase_pairs(clicks_stream, purchases_stream, WATERMARK)
 
 
 def interval_join_clicks_purchases_outer(
-    clicks_stream: DataFrame,
-    purchases_stream: DataFrame,
-    watermark: str = "30 minutes",
+    clicks_stream: DataFrame, purchases_stream: DataFrame
 ) -> DataFrame:
     """Stream-stream LEFT OUTER interval join: every purchase emits,
     attribution columns null-padded when no qualifying click exists.
@@ -1606,52 +1568,15 @@ def interval_join_clicks_purchases_outer(
     rows arrive; an UNMATCHED purchase emits null-padded only once the
     watermark passes purchase_ts + window (before that a matching click
     could still arrive), so purchases near the head of the stream stay
-    buffered in state, unemitted. Same state-retention bound as the
-    inner form: the time band + both watermarks purge buffered rows at
-    the horizon.
+    buffered in state, unemitted. Same pairs (``_click_purchase_pairs``
+    with purchases as the preserved side) and the same state-retention
+    bound as the inner form: the time band + both watermarks purge
+    buffered rows at the horizon.
     """
-    from ..plans.advanced import INTERVAL_JOIN_WINDOW_SEC
+    from ..plans.advanced import _click_purchase_pairs
 
-    clicks = (
-        clicks_stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        purchases_stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return (
-        purchases.join(
-            clicks,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (
-                F.col("click_ts")
-                >= F.col("purchase_ts")
-                - F.expr(f"INTERVAL {INTERVAL_JOIN_WINDOW_SEC} SECONDS")
-            ),
-            "leftOuter",
-        )
-        .select(
-            "purchase_id",
-            "click_id",
-            F.col("p_user").alias("user_id"),
-            F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
-            F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-            (
-                F.unix_timestamp("purchase_ts") - F.unix_timestamp("click_ts")
-            ).alias("gap_sec"),
-        )
+    return _click_purchase_pairs(
+        clicks_stream, purchases_stream, WATERMARK, outer=True
     )
 
 
@@ -1682,15 +1607,9 @@ def q_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution path); tests pin closed-session equality against the
     oracle-checked batch ``events_sessionize``.
     """
-    import uuid
-
-    from ..catalog import table_path
-
-    stream = read_events_stream(
-        spark, table_path(sf_dir, "events"), max_files_per_trigger=10
+    return _events_to_memory(
+        spark, sf_dir, "stream_sess", lambda events: stateful_sessions(events())
     )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    return run_to_memory(stateful_sessions(stream), name, spark)
 
 
 def q_streaming_interval_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1704,44 +1623,21 @@ def q_streaming_interval_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying click (click_ts <= purchase_ts) can still arrive. The
     oracle SQL encodes exactly that set.
     """
-    import uuid
-
-    from ..catalog import table_path
-
-    path = table_path(sf_dir, "events")
-    joined = interval_join_clicks_purchases_outer(
-        read_events_stream(spark, path, max_files_per_trigger=10),
-        read_events_stream(spark, path, max_files_per_trigger=10),
+    return _events_to_memory(
+        spark, sf_dir, "stream_outer",
+        lambda events: interval_join_clicks_purchases_outer(events(), events()),
     )
-    name = f"stream_outer_{uuid.uuid4().hex[:8]}"
-    return run_to_memory(joined, name, spark)
 
 
-def session_windows_native(
-    stream: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
+def session_windows_native(stream: DataFrame) -> DataFrame:
     """Gap sessionization with Spark's BUILT-IN streaming session_window
-    (vs the applyInPandasWithState custom operator): one watermarked
-    aggregate, state merged inside the operator, sessions emitted in
-    append mode once the watermark passes session_end + gap.
+    (vs the applyInPandasWithState custom operator): the batch
+    ``events_session_native`` aggregate (``operators/events.py``
+    ``_native_sessions``) over the ``WATERMARK``-ed stream, state merged
+    inside the operator, sessions emitted in append mode once the
+    watermark passes session_end + gap.
     """
-    from ..operators.events import SESSION_GAP_SEC
-
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", f"{SESSION_GAP_SEC} seconds"))
-        .agg(
-            F.min("ts").alias("s"),
-            F.max("ts").alias("e"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            "user_id",
-            F.date_format("s", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("e", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-        )
-    )
+    return _native_sessions(stream.withWatermark("ts", WATERMARK))
 
 
 def q_streaming_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1752,15 +1648,10 @@ def q_streaming_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     its close boundary (session_end + gap) — which the oracle encodes
     exactly, so this streams to a hash-exact SQL check.
     """
-    import uuid
-
-    from ..catalog import table_path
-
-    stream = read_events_stream(
-        spark, table_path(sf_dir, "events"), max_files_per_trigger=10
+    return _events_to_memory(
+        spark, sf_dir, "stream_sessnat",
+        lambda events: session_windows_native(events()),
     )
-    name = f"stream_sessnat_{uuid.uuid4().hex[:8]}"
-    return run_to_memory(session_windows_native(stream), name, spark)
 
 
 def q_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2187,6 +2078,31 @@ def run_to_memory(
     return spark.table(query_name)
 
 
+def _events_to_memory(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    query,
+    max_files_per_trigger: int = 10,
+    output_mode: str = "append",
+) -> DataFrame:
+    """The memory-sink replay of the events table: ``query(events)``
+    builds the streaming frame, calling ``events()`` once per stream
+    input for a fresh file-source stream over the table, and
+    ``run_to_memory`` runs it to completion under a unique
+    ``{prefix}_<hex>`` query name."""
+    import uuid
+
+    from ..catalog import table_path
+
+    path = table_path(sf_dir, "events")
+    frame = query(
+        lambda: read_events_stream(spark, path, max_files_per_trigger)
+    )
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    return run_to_memory(frame, name, spark, output_mode)
+
+
 # ---------------------------------------------------------------------------
 # Streaming per-source MinHash sketch maintenance (mergeable-min IVM).
 
@@ -2318,17 +2234,10 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the replayed result is precisely the batch interval join and
     hash-checks against the same SQL.
     """
-    import uuid
-
-    from ..catalog import table_path
-
-    path = table_path(sf_dir, "events")
-    joined = interval_join_clicks_purchases(
-        read_events_stream(spark, path, max_files_per_trigger=10),
-        read_events_stream(spark, path, max_files_per_trigger=10),
+    return _events_to_memory(
+        spark, sf_dir, "stream_ijoin",
+        lambda events: interval_join_clicks_purchases(events(), events()),
     )
-    name = f"stream_ijoin_{uuid.uuid4().hex[:8]}"
-    return run_to_memory(joined, name, spark)
 
 
 def q_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2383,16 +2292,14 @@ def q_streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup at scale). Stateless, so emission is exactly one enriched
     row per event and hash-checks against the batch LEFT JOIN.
     """
-    import uuid
+    from ..catalog import load_table
 
-    from ..catalog import load_table, table_path
-
-    stream = read_events_stream(
-        spark, table_path(sf_dir, "events"), max_files_per_trigger=10
+    return _events_to_memory(
+        spark, sf_dir, "stream_enrich",
+        lambda events: enrich_with_customers(
+            events(), load_table(spark, sf_dir, "customer")
+        ),
     )
-    customer = load_table(spark, sf_dir, "customer")
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    return run_to_memory(enrich_with_customers(stream, customer), name, spark)
 
 
 def q_streaming_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:

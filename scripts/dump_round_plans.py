@@ -4,11 +4,20 @@ Usage: python scripts/dump_round_plans.py ROUND before|after query [query ...]
 ROUND names the directory under plans/ (for example r20). Plan claims
 are checked against these files; regenerate the "after" files whenever
 a touched query's plan changes.
+
+An entry that runs jobs while it is built (a ``localCheckpoint``
+round, a bounds ``first()``) numbers its AQE exchanges and its
+expression ids differently on every run, so the dump normalizes both:
+AQE exchange ids are written as ``plan_id=N``, and expression ids
+(``name#123``) are renumbered in order of first appearance, which keeps
+which reference points at which attribute. Two dumps of one commit
+then compare byte-identical.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -16,6 +25,14 @@ sys.path.insert(0, REPO)
 
 from retail_sales_etl_spark.plans import registry  # noqa: E402
 from retail_sales_etl_spark.session import get_spark  # noqa: E402
+
+
+def _normalized(plan: str) -> str:
+    ids: dict[str, int] = {}
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    return re.sub(
+        r"#(\d+)", lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", plan
+    )
 
 
 def main() -> None:
@@ -33,6 +50,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
+        plan = _normalized(plan)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w", encoding="utf-8") as f:
             f.write(plan)

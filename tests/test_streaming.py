@@ -2461,11 +2461,37 @@ def test_one_derivation_per_twin():
     burstiness sigma, the per-doc entropy and the cohort month live in
     ``operators/events.py``, ``operators/text.py`` and
     ``plans/behavioral.py``), and ``operators/text.py`` builds word
-    n-grams in one place (``_word_ngrams``)."""
+    n-grams in one place (``_word_ngrams``). The formulas outside the
+    twins live once too: the native session aggregate
+    (``_native_sessions``), the transition pairs (``_transitions``),
+    the click→purchase band (``plans/advanced.py``
+    ``_click_purchase_pairs``) and the 9-dp staging of the log-log OLS
+    (``functions/rounding.py`` ``stage9``)."""
     import ast
     import inspect
+    import pathlib
 
+    import retail_sales_etl_spark
+    from retail_sales_etl_spark.operators import events as batch_events
     from retail_sales_etl_spark.operators import text
+    from retail_sales_etl_spark.plans import advanced
+
+    pkg = pathlib.Path(retail_sales_etl_spark.__file__).parent
+    product = {
+        str(p.relative_to(pkg)): p.read_text(encoding="utf-8")
+        for p in sorted(pkg.rglob("*.py"))
+    }
+    windows = {k: v.count("F.session_window(") for k, v in product.items()}
+    assert sum(windows.values()) == 1, {k: n for k, n in windows.items() if n}
+    assert inspect.getsource(batch_events).count('F.lead("event_type")') == 1
+    band = 'F.expr(f"INTERVAL {INTERVAL_JOIN_WINDOW_SEC} SECONDS")'
+    assert (
+        inspect.getsource(advanced).count(band)
+        + inspect.getsource(streaming_events).count(band)
+    ) == 1
+    for stager in ("def _p9", "def _logi_stage", "def _sum9"):
+        hits = [k for k, v in product.items() if stager in v]
+        assert not hits, (stager, hits)
 
     src = inspect.getsource(streaming_events)
     for spelled in ("F.sqrt(", "F.make_date(", "F.log("):
